@@ -78,40 +78,68 @@ def cosine_expr(a: Column, b: Column) -> Column:
 # a last-ulp drift could flip a threshold or rank boundary on adversarial
 # near-ties, which the determinism contracts here forbid; the sequential
 # kernel keeps every "bit-identical" claim in this module literally true.
-# All cosine-producing operators go through this ONE routine, so
-# cross-operator bit-identity (indexed vs batch vs knn_join serving)
-# holds by construction.
+# Every numpy dot product, norm and cosine in this module goes through ONE
+# routine, :func:`_fold`, so cross-operator bit-identity (indexed vs batch
+# vs knn_join serving) holds by construction.
+#
+# Memory: a grouped kernel never holds a whole group's q x m cosine
+# matrix.  :func:`_sims_blocks` yields it at most ``_ROW_BLOCK`` query
+# rows at a time, so per-task memory is O(_ROW_BLOCK x m) doubles —
+# bounded by construction, whatever the group size (a degenerate-heavy
+# band bucket included).  Chunking rows never reorders any single pair's
+# reduction, so the blocked doubles equal the unchunked ones bit for bit.
 # ---------------------------------------------------------------------------
+
+# Query rows per cosine block: a kernel holds a few (_ROW_BLOCK x m)
+# float64 arrays for an m-row group, ~2 MB each per 1,000 rows of m.
+# Kernels read it when they are built and carry that value to the
+# Python workers.
+_ROW_BLOCK = 256
+
+
+def _fold(a, b):
+    """Sequential-dimension dot product over the last axis, with numpy
+    broadcasting: ``_fold(ma, mb)`` gives row-wise dots and
+    ``_fold(q[:, None], c[None])`` the q x c matrix — acc = a0*b0;
+    acc = acc + a1*b1; ..., the rounding sequence of cosine_expr's fold.
+    The only dimension loop in this module."""
+    import numpy as np
+
+    if a.shape[-1] == 0:
+        return np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    acc = a[..., 0] * b[..., 0]
+    for i in range(1, a.shape[-1]):
+        acc = acc + a[..., i] * b[..., i]
+    return acc
 
 
 def _pairwise_cosine(ma, mb):
-    """Row-wise cosine of two (n, d) float64 matrices -> (values, null_mask).
-
-    ONE routine for every caller — a constant query is broadcast to (n, d)
-    first, so single-query and pair paths reduce in the identical order.
-    Accumulation is sequential over dimensions (see block comment): the
-    same doubles as cosine_expr, bit for bit.
-    """
+    """Row-wise cosine of two (n, d) float64 matrices (``mb`` may be a
+    single (d,) query, broadcast); non-finite where the pair degrades
+    to NULL."""
     import numpy as np
 
-    d = ma.shape[1]
-    if d == 0:
-        num = np.zeros(ma.shape[0])
-        na = np.zeros(ma.shape[0])
-        nb = np.zeros(ma.shape[0])
-    else:
-        num = ma[:, 0] * mb[:, 0]
-        na = ma[:, 0] * ma[:, 0]
-        nb = mb[:, 0] * mb[:, 0]
-        for i in range(1, d):
-            num = num + ma[:, i] * mb[:, i]
-            na = na + ma[:, i] * ma[:, i]
-            nb = nb + mb[:, i] * mb[:, i]
-    den = np.sqrt(na) * np.sqrt(nb)
+    den = np.sqrt(_fold(ma, ma)) * np.sqrt(_fold(mb, mb))
     with np.errstate(divide="ignore", invalid="ignore"):
-        vals = num / den
-    nulls = ~np.isfinite(vals)
-    return vals, nulls
+        return _fold(ma, mb) / den
+
+
+def _sims_blocks(q, c, rows=None):
+    """Yield ``(lo, block)``: the cosines of query rows ``lo:lo+len(block)``
+    of the (nq, d) matrix ``q`` against every row of the (m, d) matrix
+    ``c``, at most ``rows`` (default ``_ROW_BLOCK``) query rows per block.
+    EXACT cosine_expr doubles; a pair whose divisor is zero (try_divide's
+    NULL) comes out -inf, any other degraded pair NaN — never finite."""
+    import numpy as np
+
+    rows = rows or _ROW_BLOCK
+    cn = np.sqrt(_fold(c, c))
+    for lo in range(0, len(q), rows):
+        qb = q[lo : lo + rows]
+        den = np.sqrt(_fold(qb, qb))[:, None] * cn[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = np.where(den == 0.0, -np.inf, _fold(qb[:, None], c[None]) / den)
+        yield lo, sims
 
 
 def _series_to_matrix(s):
@@ -128,38 +156,146 @@ def _series_to_matrix(s):
     return m.astype(np.float64, copy=False)
 
 
+def _by_dim(*cols):
+    """Group the rows of aligned array columns (pandas Series) by their
+    common valid dimension: ``{d: (row indices, one (len, d) float64
+    matrix per column)}``.  A row is left out when any column holds a
+    NULL, non-1-D, empty or differently sized array there — exactly
+    the rows whose cosines are NULL (zip_with null-pads)."""
+    import numpy as np
+
+    mats = [_series_to_matrix(c) for c in cols]
+    if all(m is not None for m in mats) and len({m.shape[1] for m in mats}) == 1:
+        d = mats[0].shape[1]
+        return {d: (np.arange(len(mats[0])), *mats)} if d else {}
+    arrs = [
+        [None if v is None else np.asarray(v, dtype=np.float64) for v in c]
+        for c in cols
+    ]
+    rows: dict[int, list[int]] = {}
+    for i, vs in enumerate(zip(*arrs)):
+        dims = {v.shape[0] if v is not None and v.ndim == 1 else 0 for v in vs}
+        if len(dims) == 1 and 0 not in dims:
+            rows.setdefault(dims.pop(), []).append(i)
+    return {
+        d: (np.asarray(ix), *(np.stack([a[i] for i in ix]) for a in arrs))
+        for d, ix in rows.items()
+    }
+
+
+def _group_blocks(qg, cg, nq, rows):
+    """Cosine blocks between two :func:`_by_dim` groupings — ``nq``
+    query rows and a corpus: yield ``(qi, ci, sims)``, query row
+    indices ``qi``, same-dimension corpus row indices ``ci`` and their
+    (len(qi), len(ci)) :func:`_sims_blocks` cosines.  Every query row
+    is yielded exactly once; one without a same-dimension corpus row
+    comes with an empty ``ci``."""
+    import numpy as np
+
+    seen = np.zeros(nq, dtype=bool)
+    for d, (qi, qm) in qg.items():
+        if d in cg:
+            ci, cm = cg[d]
+            for lo, sims in _sims_blocks(qm, cm, rows):
+                yield qi[lo : lo + len(sims)], ci, sims
+            seen[qi] = True
+    rest = np.nonzero(~seen)[0]
+    for lo in range(0, len(rest), rows):
+        qi = rest[lo : lo + rows]
+        yield qi, rest[:0], np.empty((len(qi), 0))
+
+
+def _threshold_pairs(blocks, threshold, keep=None):
+    """Every (query row, corpus row) pair of :func:`_group_blocks`
+    output whose cosine is finite and ``>= threshold`` (NULL is never
+    >= anything) and that ``keep(qi, ci)`` admits (elementwise over
+    row-index arrays; every pair when None) -> (q rows, c rows,
+    cosines)."""
+    import numpy as np
+
+    q, c, v = [np.empty(0, np.intp)], [np.empty(0, np.intp)], [np.empty(0)]
+    for qi, ci, sims in blocks:
+        with np.errstate(invalid="ignore"):
+            r, j = np.nonzero(np.isfinite(sims) & (sims >= threshold))
+        if keep is not None:
+            ok = keep(qi[r], ci[j])
+            r, j = r[ok], j[ok]
+        q.append(qi[r])
+        c.append(ci[j])
+        v.append(sims[r, j])
+    return np.concatenate(q), np.concatenate(c), np.concatenate(v)
+
+
+def _local_topk(blocks, c_ids, k, keep=None):
+    """Each query row's top ``k`` corpus rows among the candidates
+    ``keep(qi, ci)`` admits (every corpus row when None), by the
+    serving order: finite cosine desc, then NULL cosines, ties by
+    corpus id VALUE asc (the per-partition top-k of REPOSE, ICDE'21 —
+    the global window over the union of local top-ks is exact by
+    selection).  ``blocks`` is :func:`_group_blocks` output against a
+    corpus with ids ``c_ids``; corpus rows outside a block's ``ci``
+    are NULL-cosine candidates.  Per block, memory is O(block x m).
+    -> (q rows, c rows, cosines; non-finite = NULL)."""
+    import numpy as np
+
+    cj = np.arange(len(c_ids))
+    q, c, v = [np.empty(0, np.intp)], [np.empty(0, np.intp)], [np.empty(0)]
+    for qi, ci, sims in blocks:
+        neg = np.full((len(qi), len(cj)), np.inf)
+        neg[:, ci] = np.where(np.isfinite(sims), -sims, np.inf)
+        if keep is None:
+            drop = np.zeros(neg.shape, dtype=bool)
+        else:
+            drop = ~keep(qi[:, None], cj[None, :])
+        ids = np.broadcast_to(c_ids, neg.shape)
+        order = np.lexsort((ids, neg, drop))[:, :k]
+        r = np.broadcast_to(np.arange(len(qi))[:, None], order.shape)
+        ok = ~drop[r, order]
+        q.append(qi[r[ok]])
+        c.append(order[ok])
+        v.append(-neg[r[ok], order[ok]])
+    return np.concatenate(q), np.concatenate(c), np.concatenate(v)
+
+
+def _nullable(vals):
+    """float64 cosines -> Series, non-finite values as NULL (None in an
+    object Series; a plain float64 Series when every value is finite)."""
+    import numpy as np
+
+    ok = np.isfinite(vals)
+    if ok.all():
+        return pd.Series(vals)
+    out = vals.astype(object)
+    out[~ok] = None
+    return pd.Series(out, dtype="object")
+
+
+def _result_frame(cols, cosine=None):
+    """Kernel output frame.  ``cols`` maps each output column to
+    ``(input column, row positions)``, so every id column keeps the
+    dtype of the input column it is taken from — the type of the
+    declared applyInPandas schema field, empty frames included.
+    ``cosine`` becomes a nullable double column (:func:`_nullable`)."""
+    out = pd.DataFrame(
+        {
+            name: col.iloc[pos].reset_index(drop=True)
+            for name, (col, pos) in cols.items()
+        }
+    )
+    if cosine is not None:
+        out["cosine"] = _nullable(cosine)
+    return out
+
+
 def _batch_pair_cosine(va, vb):
     """Worker-side body of :func:`cosine_arrow` (module-level so the
     pickled closure stays tiny and worker reuse caches the import)."""
     import numpy as np
-    import pandas as pd
 
-    if len(va) == 0:
-        return pd.Series([], dtype="float64")
-    ma = _series_to_matrix(va)
-    mb = _series_to_matrix(vb)
-    if ma is None or mb is None or ma.shape != mb.shape:
-        # slow path: null / ragged rows present — per-row with NULL
-        # degrade exactly where zip_with would null-pad
-        out = []
-        for a, b in zip(va, vb):
-            if a is None or b is None:
-                out.append(None)
-                continue
-            aa = np.asarray(a, dtype=np.float64)
-            bb = np.asarray(b, dtype=np.float64)
-            if aa.shape != bb.shape or aa.ndim != 1:
-                out.append(None)
-                continue
-            v, nul = _pairwise_cosine(aa[None, :], bb[None, :])
-            out.append(None if nul[0] else float(v[0]))
-        return pd.Series(out, dtype="object")
-    vals, nulls = _pairwise_cosine(ma, mb)
-    if not nulls.any():
-        return pd.Series(vals)
-    out = vals.astype(object)
-    out[nulls] = None
-    return pd.Series(out, dtype="object")
+    out = np.full(len(va), np.nan)
+    for idx, ma, mb in _by_dim(va, vb).values():
+        out[idx] = _pairwise_cosine(ma, mb)
+    return _nullable(out)
 
 
 _COS_PAIR_UDF = None
@@ -171,7 +307,6 @@ def cosine_arrow(a: Column, b: Column) -> Column:
     in this module."""
     global _COS_PAIR_UDF
     if _COS_PAIR_UDF is None:
-        import pandas as pd
 
         @F.pandas_udf("double")
         def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
@@ -184,67 +319,103 @@ def cosine_arrow(a: Column, b: Column) -> Column:
 def cosine_vs_const_arrow(vec: Column, query: list[float]) -> Column:
     """Cosine against a CONSTANT query vector: the query is captured in
     the UDF closure (shipped once per task, never per row) and broadcast
-    to the batch shape so the reduction order — hence the produced
-    doubles — is identical to :func:`cosine_arrow` on a query column."""
+    over the batch rows by :func:`_fold`, so the reduction order — hence
+    the produced doubles — is identical to :func:`cosine_arrow` on a
+    query column."""
     import numpy as np
-    import pandas as pd
 
     q = np.asarray([float(x) for x in query], dtype=np.float64)
 
     @F.pandas_udf("double")
     def _cos_q(va: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        ma = _series_to_matrix(va)
-        if ma is None or ma.shape[1] != q.shape[0]:
-            return _batch_pair_cosine(
-                va, pd.Series([q] * len(va), dtype="object")
-            )
-        vals, nulls = _pairwise_cosine(ma, np.broadcast_to(q, ma.shape))
-        if not nulls.any():
-            return pd.Series(vals)
-        out = vals.astype(object)
-        out[nulls] = None
-        return pd.Series(out, dtype="object")
+        out = np.full(len(va), np.nan)
+        hit = _by_dim(va).get(len(q))
+        if hit is not None:
+            out[hit[0]] = _pairwise_cosine(hit[1], q)
+        return _nullable(out)
 
     return _cos_q(vec)
 
 
-def _assign_rows(m, cids, cmat, cnorm):
-    """(n, d) row block -> argmax-cosine cell id per row, with the
+def _argmax_cell(sims, cids):
+    """Cosine block -> (rows, 1) argmax-cosine cell id, with the
     kmeans/ivf tie-break (ties -> smallest cid) and degrade policy
-    (zero-norm pair -> that cell scores -inf, the coalesce(-inf) posture;
-    a NaN cosine ranks greatest, Spark's double ordering).  num/na
-    accumulate sequentially over dimensions — the identical rounding
-    sequence to cosine_expr's fold, see _pairwise_cosine."""
+    (a zero-divisor pair scores -inf, the coalesce(-inf) posture; a NaN
+    cosine ranks greatest, Spark's double ordering)."""
     import numpy as np
 
-    d = m.shape[1]
-    num = m[:, 0:1] * cmat[None, :, 0]
-    na = m[:, 0] * m[:, 0]
-    for i in range(1, d):
-        num = num + m[:, i : i + 1] * cmat[None, :, i]
-        na = na + m[:, i] * m[:, i]
-    den = np.sqrt(na)[:, None] * cnorm[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = num / den
     sims = np.where(np.isnan(sims), np.inf, sims)
-    sims = np.where(den == 0.0, -np.inf, sims)
-    best = sims.max(axis=1, keepdims=True)
-    cand = sims == best
-    sentinel = np.iinfo(np.int64).max
-    return np.where(cand, cids[None, :], sentinel).min(axis=1)
+    best = sims == sims.max(axis=1, keepdims=True)
+    big = np.iinfo(np.int64).max
+    return np.where(best, cids[None, :], big).min(axis=1, keepdims=True)
 
 
-def _cell_norms(cmat):
-    """Per-centroid norms with the norm_expr fold order (sequential x*x
-    adds from the first component, then sqrt)."""
+def _ranked_cells(sims, cids):
+    """Cosine block -> (rows, cells) ranked cell ids, reproducing the
+    retired per-vector window's ``ORDER BY sim DESC NULLS LAST, cid``:
+    finite cosines descending first, NULL-cosine cells (zero-norm side,
+    non-finite math) last, ties and null-ranking both breaking to the
+    smallest cid (stable argsort over cid-sorted centroids)."""
     import numpy as np
 
-    nc = cmat[:, 0] * cmat[:, 0]
-    for i in range(1, cmat.shape[1]):
-        nc = nc + cmat[:, i] * cmat[:, i]
-    return np.sqrt(nc)
+    neg = np.where(np.isfinite(sims), -sims, np.inf)
+    return cids[np.argsort(neg, axis=1, kind="stable")]
+
+
+def _centroid_matrix(centroids):
+    """(cid, vector) list -> (cid-sorted int64 ids, float64 matrix)."""
+    import numpy as np
+
+    ordered = sorted(centroids, key=lambda c: int(c[0]))
+    cids = np.asarray([int(c) for c, _ in ordered], dtype=np.int64)
+    cmat = np.asarray(
+        [[float(x) for x in v] for _, v in ordered], dtype=np.float64
+    )
+    return cids, cmat
+
+
+def _rank_cells(va, cids, cmat, take, rank, rows=None):
+    """Each vector's top ``take`` cell ids (an (n, take) matrix) for a
+    batch ``va`` against the cid-sorted centroid matrix, by the block
+    policy ``rank`` (:func:`_argmax_cell` / :func:`_ranked_cells`).  A
+    NULL / ragged / wrong-dim vector has every cosine NULL, so it gets
+    the ``take`` smallest cids — the retired expression and window
+    forms' behavior."""
+    import numpy as np
+
+    out = np.tile(cids[:take], (len(va), 1))
+    hit = _by_dim(va).get(cmat.shape[1])
+    if hit is not None:
+        idx, m = hit
+        for lo, sims in _sims_blocks(m, cmat, rows):
+            out[idx[lo : lo + len(sims)]] = rank(sims, cids)[:, :take]
+    return out
+
+
+def _centroid_udf(vec, centroids, take, spark, via_broadcast, rank, scalar):
+    """Shared shell of :func:`nearest_cid_arrow` / :func:`probe_cids_arrow`:
+    one Arrow batch op ranking cells with :func:`_rank_cells`, returning
+    the top cell (``scalar``, ``long``) or the ranked list
+    (``array<long>``).  The centroid matrix rides the UDF closure, or a
+    SparkContext broadcast with ``via_broadcast`` (the ~100k-cell
+    regime, where a pickled closure would re-ship per task)."""
+    cids, cmat = _centroid_matrix(centroids)
+    take, rows = int(min(take, len(cids))), _ROW_BLOCK
+    bc = None
+    if via_broadcast:
+        if spark is None:
+            raise ValueError("via_broadcast requires the SparkSession")
+        bc = spark.sparkContext.broadcast((cids, cmat))
+
+    @F.pandas_udf("long" if scalar else "array<long>")
+    def _cells(va: pd.Series) -> pd.Series:
+        ids, mat = bc.value if bc is not None else (cids, cmat)
+        out = _rank_cells(va, ids, mat, take, rank, rows)
+        if scalar:
+            return pd.Series(out[:, 0])
+        return pd.Series(list(out), dtype="object")
+
+    return _cells(vec)
 
 
 def nearest_cid_arrow(
@@ -262,73 +433,11 @@ def nearest_cid_arrow(
     matrix as a SparkContext broadcast (the >limit regime, ~100k cells —
     a pickled closure would re-ship per task); below the limit the
     closure is cheaper.  Tie-break, zero-norm and NaN semantics are the
-    _assign_rows contract — identical to the retired expression forms."""
-    import numpy as np
-    import pandas as pd
-
-    cids = np.asarray([int(c) for c, _ in centroids], dtype=np.int64)
-    cmat = np.asarray(
-        [[float(x) for x in v] for _, v in centroids], dtype=np.float64
+    :func:`_argmax_cell` contract — identical to the retired expression
+    forms."""
+    return _centroid_udf(
+        vec, centroids, 1, spark, via_broadcast, _argmax_cell, True
     )
-    cnorm = _cell_norms(cmat)
-
-    bc = None
-    if via_broadcast:
-        if spark is None:
-            raise ValueError("via_broadcast requires the SparkSession")
-        bc = spark.sparkContext.broadcast((cids, cmat, cnorm))
-
-    def _batch(va: pd.Series) -> pd.Series:
-        ids, mat, nrm = bc.value if bc is not None else (cids, cmat, cnorm)
-        if len(va) == 0:
-            return pd.Series([], dtype="int64")
-        m = _series_to_matrix(va)
-        if m is None or m.shape[1] != mat.shape[1]:
-            out = []
-            for v in va:
-                if v is None:
-                    # every cell's cosine is NULL -> coalesce(-inf) ties
-                    # -> smallest cid, the expression form's behavior
-                    out.append(int(ids.min()))
-                    continue
-                vv = np.asarray(v, dtype=np.float64)
-                if vv.ndim != 1 or vv.shape[0] != mat.shape[1]:
-                    out.append(int(ids.min()))
-                    continue
-                out.append(int(_assign_rows(vv[None, :], ids, mat, nrm)[0]))
-            return pd.Series(out, dtype="int64")
-        return pd.Series(_assign_rows(m, ids, mat, nrm))
-
-    @F.pandas_udf("long")
-    def _assign(va: pd.Series) -> pd.Series:
-        return _batch(va)
-
-    return _assign(vec)
-
-
-def _probe_rows(m, cids, cmat, cnorm, nprobe):
-    """(n, d) row block -> (n, min(nprobe, k)) matrix of ranked cell
-    ids, reproducing the retired per-vector window's
-    ``ORDER BY sim DESC NULLS LAST, cid``: finite cosines descending
-    first, NULL-cosine cells (zero-norm side, non-finite math) last,
-    ties and null-ranking both breaking to the smallest cid (stable
-    argsort over a cid-sorted centroid list).  num/na accumulate
-    sequentially over dimensions — the identical doubles to
-    cosine_expr's fold, see :func:`_pairwise_cosine`."""
-    import numpy as np
-
-    d = m.shape[1]
-    num = m[:, 0:1] * cmat[None, :, 0]
-    na = m[:, 0] * m[:, 0]
-    for i in range(1, d):
-        num = num + m[:, i : i + 1] * cmat[None, :, i]
-        na = na + m[:, i] * m[:, i]
-    den = np.sqrt(na)[:, None] * cnorm[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = num / den
-    neg = np.where(np.isfinite(sims) & (den != 0.0), -sims, np.inf)
-    order = np.argsort(neg, axis=1, kind="stable")[:, :nprobe]
-    return cids[order]
 
 
 def probe_cids_arrow(
@@ -344,73 +453,14 @@ def probe_cids_arrow(
     fan-out + per-vector row_number window (guide §4.2): no corpus x
     n_cells intermediate, no window Exchange, one narrow map.
     Ordering semantics match the retired window exactly (see
-    :func:`_probe_rows`); a NULL / ragged / wrong-dim vector has every
+    :func:`_ranked_cells`); a NULL / ragged / wrong-dim vector has every
     cosine NULL, so it probes the ``nprobe`` smallest cids — the
     window's NULLS LAST behavior.  Shipping mirrors
     :func:`nearest_cid_arrow`: closure pickle by default,
     SparkContext broadcast for huge centroid sets."""
-    import numpy as np
-
-    ordered = sorted(centroids, key=lambda c: int(c[0]))
-    cids = np.asarray([int(c) for c, _ in ordered], dtype=np.int64)
-    cmat = np.asarray(
-        [[float(x) for x in v] for _, v in ordered], dtype=np.float64
+    return _centroid_udf(
+        vec, centroids, nprobe, spark, via_broadcast, _ranked_cells, False
     )
-    cnorm = _cell_norms(cmat)
-    take = int(min(nprobe, len(ordered)))
-
-    bc = None
-    if via_broadcast:
-        if spark is None:
-            raise ValueError("via_broadcast requires the SparkSession")
-        bc = spark.sparkContext.broadcast((cids, cmat, cnorm))
-
-    def _batch(va: pd.Series) -> pd.Series:
-        ids, mat, nrm = bc.value if bc is not None else (cids, cmat, cnorm)
-        if len(va) == 0:
-            return pd.Series([], dtype="object")
-        m = _series_to_matrix(va)
-        if m is None or m.shape[1] != mat.shape[1]:
-            out = []
-            first = ids[:take]
-            for v in va:
-                if v is None:
-                    out.append(first)
-                    continue
-                vv = np.asarray(v, dtype=np.float64)
-                if vv.ndim != 1 or vv.shape[0] != mat.shape[1]:
-                    out.append(first)
-                    continue
-                out.append(_probe_rows(vv[None, :], ids, mat, nrm, take)[0])
-            return pd.Series(out, dtype="object")
-        ranked = _probe_rows(m, ids, mat, nrm, take)
-        return pd.Series(list(ranked), dtype="object")
-
-    @F.pandas_udf("array<long>")
-    def _probe(va: pd.Series) -> pd.Series:
-        return _batch(va)
-
-    return _probe(vec)
-
-
-def _qc_sims_block(qm, cm):
-    """(nq, d) query block x (m, d) corpus block -> (nq, m) cosine matrix
-    with the EXACT doubles of cosine_expr on every (q, c) pair: num and
-    na accumulate sequentially over dimensions (see
-    :func:`_pairwise_cosine`), norms multiply as sqrt(na_q) * sqrt(nb_c)
-    (:func:`_cell_norms` is the same fold).  Zero-norm / non-finite
-    pairs come out non-finite (the NULL-degrade posture)."""
-    import numpy as np
-
-    d = qm.shape[1]
-    num = qm[:, 0:1] * cm[None, :, 0]
-    na = qm[:, 0] * qm[:, 0]
-    for i in range(1, d):
-        num = num + qm[:, i : i + 1] * cm[None, :, i]
-        na = na + qm[:, i] * qm[:, i]
-    den = np.sqrt(na)[:, None] * _cell_norms(cm)[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return num / den
 
 
 def _cell_topk_kernel(
@@ -424,82 +474,24 @@ def _cell_topk_kernel(
     """Factory for the per-cell top-k cogroup kernel of
     :func:`ivf_knn_join` (module-level so the pickled closure carries
     only scalars).  For one cell it receives the queries probing the
-    cell and the corpus rows living in it, computes the q x m cosine
-    block (bit-identical to cosine_arrow — one matching-dimension block
-    at a time; cross-dim / NULL / ragged pairs stay NULL, exactly
-    zip_with's null-pad degrade), and emits each query's local top-k by
-    the serving order (cosine desc NULLS LAST, id asc).  NULL-cosine
-    candidates are kept and rank last — the window form's behavior when
-    a query has fewer than k finite candidates."""
-    import numpy as np
-
-    kk = int(k)
+    cell and the corpus rows living in it and emits each query's local
+    top-k (:func:`_local_topk`, cosines bit-identical to cosine_arrow;
+    cross-dim / NULL / ragged pairs stay NULL, exactly zip_with's
+    null-pad degrade, and rank last — the window form's behavior when
+    a query has fewer than k finite candidates).  ``exclude_self``
+    drops candidates whose id VALUE equals the query id."""
+    kk, rows = int(k), _ROW_BLOCK
 
     def _topk(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                query_id_col: pd.Series([], dtype="int64"),
-                id_col: pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="object"),
-            }
+        q_ids, c_ids = qpdf[query_id_col], cpdf[id_col]
+        qv, cv = q_ids.to_numpy(), c_ids.to_numpy()
+        blocks = _group_blocks(
+            _by_dim(qpdf[query_vec_col]), _by_dim(cpdf[vec_col]), len(qv), rows
         )
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return empty
-        c_ids = cpdf[id_col].to_numpy()
-        q_ids = qpdf[query_id_col].to_numpy()
-        c_arrs = [
-            None if v is None else np.asarray(v, dtype=np.float64)
-            for v in cpdf[vec_col]
-        ]
-        q_arrs = [
-            None if v is None else np.asarray(v, dtype=np.float64)
-            for v in qpdf[query_vec_col]
-        ]
-        nq, m = len(q_ids), len(c_ids)
-        sims = np.full((nq, m), np.nan)
-        c_bydim: dict[int, list[int]] = {}
-        q_bydim: dict[int, list[int]] = {}
-        for j, a in enumerate(c_arrs):
-            if a is not None and a.ndim == 1 and a.shape[0] > 0:
-                c_bydim.setdefault(a.shape[0], []).append(j)
-        for i, a in enumerate(q_arrs):
-            if a is not None and a.ndim == 1 and a.shape[0] > 0:
-                q_bydim.setdefault(a.shape[0], []).append(i)
-        for d, qidx in q_bydim.items():
-            cidx = c_bydim.get(d)
-            if not cidx:
-                continue
-            qm = np.stack([q_arrs[i] for i in qidx])
-            cm = np.stack([c_arrs[j] for j in cidx])
-            sims[np.ix_(qidx, cidx)] = _qc_sims_block(qm, cm)
-        sel_q, sel_i, sel_v = [], [], []
-        for r in range(nq):
-            row = sims[r]
-            with np.errstate(invalid="ignore"):
-                neg = np.where(np.isfinite(row), -row, np.inf)
-            if exclude_self:
-                keep = c_ids != q_ids[r]
-                ids_r, neg_r, val_r = c_ids[keep], neg[keep], row[keep]
-            else:
-                ids_r, neg_r, val_r = c_ids, neg, row
-            if len(ids_r) == 0:
-                continue
-            order = np.lexsort((ids_r, neg_r))[:kk]
-            sel_q.append(np.full(len(order), q_ids[r], dtype=q_ids.dtype))
-            sel_i.append(ids_r[order])
-            sel_v.append(val_r[order])
-        if not sel_q:
-            return empty
-        vals = np.concatenate(sel_v)
-        out_c = vals.astype(object)
-        with np.errstate(invalid="ignore"):
-            out_c[~np.isfinite(vals)] = None
-        return pd.DataFrame(
-            {
-                query_id_col: pd.Series(np.concatenate(sel_q)),
-                id_col: pd.Series(np.concatenate(sel_i)),
-                "cosine": pd.Series(out_c, dtype="object"),
-            }
+        keep = (lambda a, b: qv[a] != cv[b]) if exclude_self else None
+        qi, ci, vals = _local_topk(blocks, cv, kk, keep)
+        return _result_frame(
+            {query_id_col: (q_ids, qi), id_col: (c_ids, ci)}, vals
         )
 
     return _topk
@@ -508,13 +500,13 @@ def _cell_topk_kernel(
 def hyperplane_band_keys_arrow(
     vec: Column, planes: list[list[float]], n_bands: int
 ) -> Column:
-    """Arrow twin of :func:`hyperplane_band_keys_expr` (r18, guide
-    §4.2): the expression form evaluates one interpreted
-    ``aggregate(zip_with(...))`` HOF fold PER PLANE per row (32 folds
-    at 4 bands x 8 bits) and its ~2k-node literal tree is a py4j /
-    plan-size tax on every consumer; this kernel computes all
-    projections as d sequential numpy steps per Arrow batch and builds
-    the same ``'<band>|<bits>'`` strings.
+    """Array of ``n_bands`` LSH band keys ``'<band>|<bits>'``, the sign
+    bits of ``len(planes)/n_bands`` random-hyperplane projections per
+    band (minhash-style OR-amplification: near-identical vectors agree
+    on ALL bits of at least one band almost surely).  All projections
+    run as d sequential numpy steps per Arrow batch instead of one
+    interpreted ``aggregate(zip_with(...))`` SQL fold per plane per
+    row.
 
     Bit-identity argument: only the SIGN of each projection reaches the
     key, and the kernel accumulates products in the identical index
@@ -528,7 +520,7 @@ def hyperplane_band_keys_arrow(
     indistinguishable from data NaN, so the null-element case is
     detected JVM-side (one ``exists`` over the array) and shipped as a
     boolean alongside the vector.  Parity is pytest-pinned against the
-    expression form on adversarial rows."""
+    SQL expression form on adversarial rows."""
     import numpy as np
 
     W = np.asarray([[float(x) for x in p] for p in planes], dtype=np.float64)
@@ -536,94 +528,54 @@ def hyperplane_band_keys_arrow(
     per_band = n_planes // n_bands
     zero_keys = ["%d|%s" % (b, "0" * per_band) for b in range(n_bands)]
 
-    def _proj_bits(m):
-        # sequential fold over dimensions — the SQL aggregate's order
-        num = m[:, 0:1] * W[None, :, 0]
-        for i in range(1, dim):
-            num = num + m[:, i : i + 1] * W[None, :, i]
-        with np.errstate(invalid="ignore"):
-            return np.isnan(num) | (num >= 0.0)
-
-    def _keys_of(bits_row):
-        return [
-            "%d|%s" % (
-                b,
-                "".join(
-                    "1" if bits_row[b * per_band + j] else "0"
-                    for j in range(per_band)
-                ),
-            )
-            for b in range(n_bands)
-        ]
-
     @F.pandas_udf("array<string>")
     def _keys(va: pd.Series, has_null: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(va) == 0:
-            return pd.Series([], dtype="object")
-        hn = has_null.fillna(False).to_numpy(dtype=bool)
-        m = _series_to_matrix(va)
-        out: list = [None] * len(va)
-        if m is not None and m.shape[1] == dim:
-            bits = _proj_bits(m)
-            for r in range(len(va)):
-                out[r] = zero_keys if hn[r] else _keys_of(bits[r])
-            return pd.Series(out, dtype="object")
-        for r, v in enumerate(va):
-            if v is None or hn[r]:
-                out[r] = zero_keys
-                continue
-            vv = np.asarray(v, dtype=np.float64)
-            if vv.ndim != 1 or vv.shape[0] != dim:
-                out[r] = zero_keys
-                continue
-            out[r] = _keys_of(_proj_bits(vv[None, :])[0])
+        hn = has_null.to_numpy(dtype=bool, na_value=False)
+        out = [zero_keys] * len(va)
+        hit = _by_dim(va).get(dim)
+        if hit is not None:
+            num = _fold(hit[1][:, None], W[None])
+            with np.errstate(invalid="ignore"):
+                bits = np.where(np.isnan(num) | (num >= 0.0), "1", "0")
+            for r, row in zip(hit[0], bits):
+                if not hn[r]:
+                    out[r] = [
+                        "%d|%s" % (b, "".join(row[b * per_band : (b + 1) * per_band]))
+                        for b in range(n_bands)
+                    ]
         return pd.Series(out, dtype="object")
 
     return _keys(vec, F.exists(vec, lambda x: x.isNull()))
 
 
-def _band_group_sims(pdf, id_col: str, vec_col: str):
-    """Shared per-band-bucket pair machinery for the banded-LSH grouped
-    kernels (r18): given one band bucket's rows (same ``band_key`` —
-    keys embed the band index, so one bucket = one band), return
-    ``(ids, sims, valid)`` where ``sims`` is the m x m cosine matrix
-    with the EXACT doubles of cosine_expr (per-dimension blocks through
-    :func:`_pair_sims_block`; NULL / ragged / cross-dimension pairs
-    stay NaN — the zip_with null-pad degrade) and ``valid`` is the
-    first-matching-band mask (True where NO band before this one also
-    matched — the :func:`_first_match_cond` predicate, evaluated
-    vectorized over the bucket's ``_bks`` arrays).  Diagonal pairs are
-    marked invalid."""
+def _band_bucket(pdf, id_col: str, vec_col: str, rows: int):
+    """Shared set-up of the banded-LSH grouped kernels for one band
+    bucket's rows (same ``band_key`` — keys embed the band index, so
+    one bucket = one band) -> ``(ids, blocks, first)``: the id values,
+    the bucket's :func:`_group_blocks` against itself, and
+    ``first(a, b)``, true where NO band before this one also matched
+    between rows a and b — the retired join's first-match predicate, so
+    every pair surfaces from exactly one bucket (band keys are
+    concat-built strings, never NULL, so != is exact)."""
     import numpy as np
 
     ids = pdf[id_col].to_numpy()
-    m = len(ids)
-    arrs = [
-        None if v is None else np.asarray(v, dtype=np.float64)
-        for v in pdf[vec_col]
-    ]
-    sims = np.full((m, m), np.nan)
-    by_dim: dict[int, list[int]] = {}
-    for i, a in enumerate(arrs):
-        if a is not None and a.ndim == 1 and a.shape[0] > 0:
-            by_dim.setdefault(a.shape[0], []).append(i)
-    for _, idx in by_dim.items():
-        if len(idx) < 2:
-            continue
-        block = _pair_sims_block(np.stack([arrs[i] for i in idx]))
-        sims[np.ix_(idx, idx)] = block
-    # first-match validity: every band BEFORE this bucket's band must
-    # differ between the two sides (band keys are concat-built strings,
-    # never NULL, so != is exact — same as _first_match_cond)
+    g = _by_dim(pdf[vec_col])
+    blocks = _group_blocks(g, g, len(ids), rows)
     band = int(pdf["_band"].iloc[0])
-    valid = ~np.eye(m, dtype=bool)
     bks = list(pdf["_bks"])
-    for q in range(band):
-        kq = np.array([b[q] for b in bks], dtype=object)
-        valid &= kq[:, None] != kq[None, :]
-    return ids, sims, valid
+    codes = [
+        np.unique(np.array([b[q] for b in bks]), return_inverse=True)[1]
+        for q in range(band)
+    ]
+
+    def first(a, b):
+        ok = np.ones(np.broadcast_shapes(np.shape(a), np.shape(b)), dtype=bool)
+        for code in codes:
+            ok &= code[a] != code[b]
+        return ok
+
+    return ids, blocks, first
 
 
 def _band_pair_drops_kernel(threshold: float, id_col: str, vec_col: str):
@@ -633,38 +585,15 @@ def _band_pair_drops_kernel(threshold: float, id_col: str, vec_col: str):
     >= threshold), first-match uniqueness preserved (a pair is emitted
     only from the lowest band whose keys agree, so it appears in
     exactly one bucket's output)."""
-    import numpy as np
-
-    thr = float(threshold)
+    thr, rows = float(threshold), _ROW_BLOCK
 
     def _drops(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series([], dtype="int64"),
-                "id_b": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
+        ids, blocks, first = _band_bucket(pdf, id_col, vec_col, rows)
+        qi, ci, vals = _threshold_pairs(
+            blocks, thr, lambda a, b: (ids[a] < ids[b]) & first(a, b)
         )
-        if len(pdf) < 2:
-            return empty
-        ids, sims, valid = _band_group_sims(pdf, id_col, vec_col)
-        with np.errstate(invalid="ignore"):
-            hit = (
-                valid
-                & (ids[:, None] < ids[None, :])
-                & np.isfinite(sims)
-                & (sims >= thr)
-            )
-        ii, jj = np.nonzero(hit)
-        if len(ii) == 0:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": pd.Series(ids[ii]),
-                "id_b": pd.Series(ids[jj]),
-                "cosine": pd.Series(sims[ii, jj]),
-            }
-        )
+        col = pdf[id_col]
+        return _result_frame({"id_a": (col, qi), "id_b": (col, ci)}, vals)
 
     return _drops
 
@@ -672,75 +601,23 @@ def _band_pair_drops_kernel(threshold: float, id_col: str, vec_col: str):
 def _band_knn_kernel(k: int, id_col: str, vec_col: str):
     """Factory for the k-NN grouped kernel: one band bucket in, each
     member's LOCAL top-k among its first-match candidates in the bucket
-    out (both directions — k-NN is asymmetric).  Ordering reproduces
-    the serving window exactly (cosine desc NULLS LAST, neighbor id
-    asc; NULL-cosine candidates kept and ranked last), so the global
-    top-k window over the union of local top-ks is exact by
-    selection."""
-    import numpy as np
-
-    kk = int(k)
+    out (both directions — k-NN is asymmetric; a member never ranks a
+    row with its own id VALUE, the retired join's ``_qid != _nid``).
+    Ordering reproduces the serving window exactly (cosine desc NULLS
+    LAST, neighbor id asc; NULL-cosine candidates kept and ranked
+    last), so the global top-k window over the union of local top-ks is
+    exact by selection."""
+    kk, rows = int(k), _ROW_BLOCK
 
     def _knn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "_qid": pd.Series([], dtype="int64"),
-                "_nid": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="object"),
-            }
+        ids, blocks, first = _band_bucket(pdf, id_col, vec_col, rows)
+        qi, ci, vals = _local_topk(
+            blocks, ids, kk, lambda a, b: (ids[a] != ids[b]) & first(a, b)
         )
-        if len(pdf) < 2:
-            return empty
-        ids, sims, valid = _band_group_sims(pdf, id_col, vec_col)
-        sel_q, sel_n, sel_v = [], [], []
-        for r in range(len(ids)):
-            cand = np.nonzero(valid[r])[0]
-            if len(cand) == 0:
-                continue
-            row = sims[r, cand]
-            with np.errstate(invalid="ignore"):
-                neg = np.where(np.isfinite(row), -row, np.inf)
-            order = np.lexsort((ids[cand], neg))[:kk]
-            take = cand[order]
-            sel_q.append(np.full(len(take), ids[r], dtype=ids.dtype))
-            sel_n.append(ids[take])
-            sel_v.append(sims[r, take])
-        if not sel_q:
-            return empty
-        vals = np.concatenate(sel_v)
-        out_c = vals.astype(object)
-        with np.errstate(invalid="ignore"):
-            out_c[~np.isfinite(vals)] = None
-        return pd.DataFrame(
-            {
-                "_qid": pd.Series(np.concatenate(sel_q)),
-                "_nid": pd.Series(np.concatenate(sel_n)),
-                "cosine": pd.Series(out_c, dtype="object"),
-            }
-        )
+        col = pdf[id_col]
+        return _result_frame({"_qid": (col, qi), "_nid": (col, ci)}, vals)
 
     return _knn
-
-
-def _pair_sims_block(m):
-    """(m, d) block -> (m, m) cosine matrix with the EXACT doubles of
-    cosine_expr on every (i, j) pair: num and na accumulate
-    sequentially over dimensions (see :func:`_pairwise_cosine`), norms
-    multiply as sqrt(na_i) * sqrt(na_j).  Zero-norm / non-finite pairs
-    come out NaN (the NULL-degrade posture of cosine_arrow)."""
-    import numpy as np
-
-    d = m.shape[1]
-    num = m[:, 0:1] * m[None, :, 0]
-    na = m[:, 0] * m[:, 0]
-    for i in range(1, d):
-        num = num + m[:, i : i + 1] * m[None, :, i]
-        na = na + m[:, i] * m[:, i]
-    nrm = np.sqrt(na)
-    den = nrm[:, None] * nrm[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = num / den
-    return sims
 
 
 def semantic_pair_drops_grouped(
@@ -760,52 +637,32 @@ def semantic_pair_drops_grouped(
     pair (m^2 x 2d doubles — measured 4 GB/entry at sf0.1 nprobe=2,
     the whole regression).  Pair semantics are exact: cosines are
     bit-identical to cosine_expr (sequential fold — see
-    :func:`_pair_sims_block`), the drop rule compares actual id VALUES
-    (never row order), NULL/ragged vectors neither drop nor get
-    dropped (their cosines are NULL), and vectors of different
-    dimensions never pair (zip_with null-pads -> NULL cosine), handled
-    by running one block per distinct dimension.  Memory contract:
-    one cell's m^2 double matrix must fit in task memory — the same
-    cell-sizing policy SemDeDup already imposes (n_cells grows with
-    the corpus so cells stay bounded); the join form's only advantage
-    was graceful spill, which a cell sized to policy never needs.
-    Output may repeat an id across cells (nprobe > 1); callers
-    ``distinct()`` exactly as they did over the join form."""
+    :func:`_fold`), the drop rule compares actual id VALUES (never row
+    order), NULL/ragged vectors neither drop nor get dropped (their
+    cosines are NULL), and vectors of different dimensions never pair
+    (zip_with null-pads -> NULL cosine), handled by one block set per
+    distinct dimension.  Memory: the cell's cosines are built
+    ``_ROW_BLOCK`` rows at a time (:func:`_sims_blocks`), so a task
+    holds O(_ROW_BLOCK x m) doubles, not the cell's m^2 matrix — an
+    oversized cell costs time, never task memory.  Output may repeat
+    an id across cells (nprobe > 1); callers ``distinct()`` exactly as
+    they did over the join form."""
     import numpy as np
 
     from pyspark.sql import types as T
 
     out_schema = T.StructType([cellv.schema[id_col]])
-    thr = float(threshold)
+    thr, rows = float(threshold), _ROW_BLOCK
 
     def _drops(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids_out: list[int] = []
-        if len(pdf) > 1:
-            arrs = [
-                None
-                if v is None
-                else np.asarray(v, dtype=np.float64)
-                for v in pdf[vec_col]
-            ]
-            ids = pdf[id_col].to_numpy()
-            by_dim: dict[int, list[int]] = {}
-            for i, a in enumerate(arrs):
-                if a is not None and a.ndim == 1:
-                    by_dim.setdefault(a.shape[0], []).append(i)
-            for _, idx in by_dim.items():
-                if len(idx) < 2:
-                    continue
-                block_ids = ids[idx]
-                m = np.stack([arrs[i] for i in idx])
-                sims = _pair_sims_block(m)
-                with np.errstate(invalid="ignore"):
-                    hit = (
-                        (block_ids[:, None] < block_ids[None, :])
-                        & np.isfinite(sims)  # NULL-degrade: never drops
-                        & (sims >= thr)
-                    )
-                ids_out.extend(block_ids[hit.any(axis=0)].tolist())
-        return pd.DataFrame({id_col: pd.Series(ids_out, dtype="int64")})
+        ids = pdf[id_col].to_numpy()
+        g = _by_dim(pdf[vec_col])
+        _, ci, _ = _threshold_pairs(
+            _group_blocks(g, g, len(ids), rows),
+            thr,
+            lambda a, b: ids[a] < ids[b],
+        )
+        return _result_frame({id_col: (pdf[id_col], np.unique(ci))})
 
     return (
         cellv.select(cell_col, id_col, vec_col)
@@ -826,66 +683,23 @@ def flag_close_to_any_arrow(
     vector once PER benchmark row.  Cosines are bit-identical to
     cosine_expr (sequential fold); NULL / ragged / wrong-dim /
     zero-norm comparisons are NULL (never >= threshold), matching the
-    cosine_arrow degrade policy.  Benchmarks are small by contract
-    (eval suites); the matrix rides the UDF closure like
-    :func:`nearest_cid_arrow`'s centroid list."""
+    cosine_arrow degrade policy — a NULL or ragged benchmark row never
+    flags anything.  Benchmarks are small by contract (eval suites);
+    the matrices ride the UDF closure like :func:`nearest_cid_arrow`'s
+    centroid list."""
     import numpy as np
 
-    # One matrix per distinct benchmark dimension (a NULL or ragged
-    # benchmark row can never flag anything — its cosines are NULL —
-    # so it is exact to skip it); cross-dim comparisons are NULL too,
-    # so a corpus vector only scores against its own-dim matrix.
-    by_dim: dict[int, list[list[float]]] = {}
-    for v in bench:
-        if v is None:
-            continue
-        vv = [float(x) for x in v]
-        by_dim.setdefault(len(vv), []).append(vv)
-    mats = {
-        d: np.asarray(vs, dtype=np.float64) for d, vs in by_dim.items()
-    }
-    norms = {d: _cell_norms(m) for d, m in mats.items()}
-    thr = float(threshold)
-
-    def _score(m, mat, nrm):
-        d = m.shape[1]
-        num = m[:, 0:1] * mat[None, :, 0]
-        na = m[:, 0] * m[:, 0]
-        for i in range(1, d):
-            num = num + m[:, i : i + 1] * mat[None, :, i]
-            na = na + m[:, i] * m[:, i]
-        den = np.sqrt(na)[:, None] * nrm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = num / den
-        with np.errstate(invalid="ignore"):
-            # isfinite: a NULL-degrade cosine (zero-norm side, inf
-            # math) can never flag — the try_divide posture
-            return (np.isfinite(sims) & (sims >= thr)).any(axis=1)
-
-    def _one(vv):
-        mat = mats.get(vv.shape[0])
-        if mat is None:
-            return False
-        return bool(_score(vv[None, :], mat, norms[vv.shape[0]])[0])
+    bg = _by_dim(pd.Series(list(bench), dtype="object"))
+    thr, rows = float(threshold), _ROW_BLOCK
 
     @F.pandas_udf("boolean")
     def _flag(va: pd.Series) -> pd.Series:
-        if len(va) == 0 or not mats:
-            return pd.Series([False] * len(va), dtype="bool")
-        m = _series_to_matrix(va)
-        if m is not None and m.shape[1] in mats:
-            return pd.Series(_score(m, mats[m.shape[1]], norms[m.shape[1]]))
-        out = []
-        for v in va:
-            if v is None:
-                out.append(False)
-                continue
-            vv = np.asarray(v, dtype=np.float64)
-            if vv.ndim != 1:
-                out.append(False)
-                continue
-            out.append(_one(vv))
-        return pd.Series(out, dtype="bool")
+        qi, _, _ = _threshold_pairs(
+            _group_blocks(_by_dim(va), bg, len(va), rows), thr
+        )
+        flags = np.zeros(len(va), dtype=bool)
+        flags[qi] = True
+        return pd.Series(flags)
 
     return _flag(vec)
 
@@ -1088,21 +902,19 @@ def ivf_topk_indexed(
     ``cid IN (probes)`` — Spark prunes to exactly those partition
     directories (visible as PartitionFilters in the plan; pinned in
     tests), so the corpus read is proportional to the probed cells,
-    not the index.  Tie-break (max cosine, then smallest cid) matches
-    :func:`ivf_assign` exactly, so results are identical to running
-    :func:`ivf_topk` over the unindexed corpus."""
-    import math
-
+    not the index.  Probe cells are ranked by the same routine as
+    :func:`ivf_assign` (:func:`_rank_cells`: max cosine, then smallest
+    cid), so results are identical to running :func:`ivf_topk` over
+    the unindexed corpus."""
     q = [float(x) for x in query_vec]
-    qn = math.sqrt(sum(x * x for x in q))
-    scored = []
-    for row in centroids.select("cid", "cvec").collect():
-        cv = [float(x) for x in row["cvec"]]
-        num = sum(a * b for a, b in zip(q, cv))
-        den = qn * math.sqrt(sum(x * x for x in cv))
-        sim = (num / den) if den else float("-inf")
-        scored.append((sim, -int(row["cid"])))
-    probes = [-nc for _, nc in sorted(scored, reverse=True)[: int(nprobe)]]
+    cents = [(r[0], r[1]) for r in centroids.select("cid", "cvec").collect()]
+    probes = []
+    if cents:
+        cids, cmat = _centroid_matrix(cents)
+        ranked = _rank_cells(
+            pd.Series([q]), cids, cmat, min(int(nprobe), len(cids)), _ranked_cells
+        )
+        probes = [int(c) for c in ranked[0]]
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
         resolve_data_root,
     )
@@ -1181,11 +993,9 @@ def ivf_topk_batch(
         r[0] for r in probes.select("cid").distinct().collect()
     )
     # Scoring is ONE cosine_arrow batch op per Arrow batch of candidate
-    # pairs (guide §4.2).  The r15 norm-precompute pattern (hoist each
-    # side's norm out of the quadratic term) is retired with the HOF
-    # fold it was amortizing: in numpy the full cosine of a batch is one
-    # einsum pass, and using the SAME routine as every other serving
-    # operator keeps the indexed/batch/knn_join bit-identity contract.
+    # pairs — the same _fold as every other serving
+    # operator, which keeps the indexed/batch/knn_join bit-identity
+    # contract.
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
         resolve_data_root,
     )
@@ -1242,14 +1052,8 @@ def semantic_decontaminate(
     never shuffled end-to-end.  A forced broadcast of the flagged side
     is deliberately NOT used (the lexical twin's rationale: an
     adversarially contaminated corpus could flag a large fraction)."""
-    # Optimization r17 (guide §4.2): the benchmark is collected
-    # driver-side (it was already required to fit as a broadcast) and
-    # flag discovery becomes ONE Arrow batch op per corpus batch —
-    # each corpus vector crosses the Python boundary once and scores
-    # against the whole benchmark matrix in d numpy steps, instead of
-    # the corpus x |benchmark| crossJoin whose Arrow predicate shipped
-    # the vector once per benchmark row.  Same flags, bit-identical
-    # cosines (see flag_close_to_any_arrow).
+    # The benchmark is small by contract: it is collected and flag
+    # discovery is one Arrow batch op (flag_close_to_any_arrow).
     bench = [
         r[0] for r in benchmark.select(F.col(vec_col)).collect()
     ]
@@ -1280,69 +1084,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
         [round(float(x), 6) for x in rng.standard_normal(dim)]
         for _ in range(n_planes)
     ]
-
-
-def _projection_sql(vec_col: str, weights: list[float]) -> str:
-    """Literal dot product as ``aggregate(zip_with(...))`` SQL text.
-
-    Why THIS form and not an inlined ``w1*v[1] + w2*v[2] + ...`` chain:
-    16 planes x 64 dims inlines to a ~4096-node expression that (a) costs
-    seconds of py4j round-trips just to BUILD as Column objects, (b) fails
-    Janino codegen outright (interpreted fallback after a long compile
-    attempt), and (c) if any interpreted HOF sits upstream, projection
-    collapse re-inlines it into every element access — the same trap as
-    the round-2 minhash rewrite.  The HOF lambdas here are tiny, parse
-    JVM-side in one call, and evaluate the input array once per plane.
-
-    Determinism (the oracle contract): ``aggregate`` folds strictly left to
-    right from 0.0, so the float sum order is fixed — the DuckDB oracle
-    writes the identical left-associated chain and both engines produce
-    bit-for-bit equal IEEE doubles.
-    """
-    ws = ", ".join(f"{w!r}D" for w in weights)
-    return (
-        f"aggregate(zip_with({vec_col}, array({ws}), "
-        "(x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-
-
-def _first_match_cond(n_bands: int) -> Column:
-    """Predicate keeping a banded candidate row only when NO band before
-    the joined one also matched: for every prior band b', either the row
-    came from band <= b' or the two sides' b' keys differ.  Band keys
-    (``_bks_a`` / ``_bks_b`` arrays carried by the join sides) are
-    ``concat``-built strings — never NULL — so plain != is exact."""
-    cond = None
-    for b_prior in range(n_bands - 1):
-        c = (F.col("_band") <= F.lit(b_prior)) | (
-            F.element_at(F.col("_bks_a"), b_prior + 1)
-            != F.element_at(F.col("_bks_b"), b_prior + 1)
-        )
-        cond = c if cond is None else cond & c
-    return cond if cond is not None else F.lit(True)
-
-
-def hyperplane_band_keys_expr(
-    vec_col: str, planes: list[list[float]], n_bands: int
-) -> Column:
-    """Array of ``n_bands`` LSH band keys; each key is the band index plus
-    the sign bits of ``len(planes)/n_bands`` random-hyperplane projections.
-    Multi-band = minhash-style OR-amplification: near-identical vectors
-    (tiny angle) agree on ALL bits of at least one band almost surely.
-
-    ``vec_col`` is a column NAME (the keys are built as one SQL string —
-    see :func:`_projection_sql` for why)."""
-    per_band = len(planes) // n_bands
-    keys = []
-    for band in range(n_bands):
-        bits = ", ".join(
-            f"CASE WHEN ({_projection_sql(vec_col, p)}) >= 0 "
-            "THEN '1' ELSE '0' END"
-            for p in planes[band * per_band : (band + 1) * per_band]
-        )
-        keys.append(f"concat('{band}|', {bits})")
-    return F.expr("array(" + ", ".join(keys) + ")")
 
 
 def ivf_knn_join(
@@ -1381,29 +1122,21 @@ def ivf_knn_join(
     results) — and with ``nprobe == n_cells`` it provably recovers
     per-query brute force.  Returns (query_id_col, id_col, cosine),
     up to k rows per query, ordered within each query.
+
+    Memory: a cell's q x m cosines are built ``_ROW_BLOCK`` query rows
+    at a time (:func:`_sims_blocks`), so a task holds O(_ROW_BLOCK x m)
+    doubles, never the whole q x m block — a hot cell costs time, not
+    task memory.
     """
-    # r18 restructure (guide §4.2 + §8's move-bytes-once rule, VERDICT
-    # item #4): the retired shape joined both sides' (id, cid)
-    # assignments back to their vectors (two id-keyed self-join
-    # Exchanges) and shipped BOTH vectors of every candidate pair
-    # through one ArrowEvalPython cosine — at nprobe = n_cells (the
-    # recall evals' provably-brute-force ground truth) that is
-    # |queries| x |corpus| pair rows x 2d doubles across the Python
-    # boundary.  Now: cell ids are computed INLINE on each side's scan
-    # (one narrow Arrow map per side, no self-join — ids are key-unique
-    # by the operators' contract), the sides meet in ONE cogroup keyed
-    # on cid (each side's vectors cross the boundary once per cell),
-    # and the q x m cosine block runs as d vectorized numpy steps with
-    # each query's LOCAL top-k emitted (<= k rows per query per probed
-    # cell).  The global window then ranks <= nprobe * k rows per
-    # query — exact by selection: every global top-k row is in its
-    # cell's local top-k, and ordering (cosine desc NULLS LAST, id) is
-    # reproduced inside the kernel (bit-identical cosines — sequential
-    # dimension fold, see _qc_sims_block — so the batch/indexed/
-    # knn_join bit-identity contract holds unchanged).  Memory
-    # contract: one cell's q x m double block must fit in task memory —
-    # the IVF cell-sizing policy (n_cells grows with the corpus), same
-    # as semantic_pair_drops_grouped.
+    # Cell ids are computed inline on each side's scan (one narrow
+    # Arrow map per side, no self-join — ids are key-unique by the
+    # operators' contract); the sides meet in ONE cogroup keyed on cid,
+    # so each side's vectors cross the Python boundary once per cell,
+    # and the kernel emits each query's LOCAL top-k.
+    # The global window then ranks <= nprobe * k rows per query — exact
+    # by selection: every global top-k row is in its cell's local top-k,
+    # ranked in the same order (cosine desc NULLS LAST, id) from the
+    # same bit-identical cosines as the batch and indexed paths.
     from pyspark.sql import Window, types as T
 
     cents = [
@@ -1657,7 +1390,7 @@ def mmr_rerank(
         vecs = np.array(
             [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
         )
-        norms = np.linalg.norm(vecs, axis=1)
+        norms = np.sqrt(_fold(vecs, vecs))
         rel = pdf[score_col].to_numpy(dtype=np.float64)
         n = len(pdf)
         picked: list[int] = []
@@ -1672,7 +1405,7 @@ def mmr_rerank(
             avail[best] = False
             denom = norms * norms[best]
             with np.errstate(invalid="ignore", divide="ignore"):
-                sim = np.where(denom > 0.0, vecs @ vecs[best] / denom, 0.0)
+                sim = np.where(denom > 0.0, _fold(vecs, vecs[best]) / denom, 0.0)
             max_sim = np.maximum(max_sim, sim)
         out = pdf.iloc[picked][[query_id_col, id_col, score_col]].copy()
         out["mmr"] = picked_mmr
@@ -1741,6 +1474,50 @@ def ann_recall_at_k(
     )
 
 
+def _band_bucket_apply(
+    df: DataFrame,
+    dim: int,
+    n_bands: int,
+    bits_per_band: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+    kernel,
+    id_fields: tuple[str, str],
+) -> DataFrame:
+    """Shared band-bucket prelude of :func:`embedding_near_dup_pairs` and
+    :func:`knn_join`: each row — (id, band-key array, vector), one per
+    (id, band) — shuffles ONCE on its band key into the grouped
+    ``kernel``, whose output is the two ``id_fields`` (typed like
+    ``id_col``) plus a double ``cosine``, so every vector crosses the
+    Python boundary once per band instead of once per candidate pair.
+    Band keys come from :func:`hyperplane_band_keys_arrow`, and the
+    corpus has ONE consumer chain referencing the vector column once,
+    so no persist barrier is needed."""
+    from pyspark.sql import types as T
+
+    planes = hyperplanes(dim, n_bands * bits_per_band, seed)
+    base = df.select(id_col, vec_col)
+    bv = base.select(
+        F.col(id_col),
+        F.col(vec_col),
+        hyperplane_band_keys_arrow(F.col(vec_col), planes, n_bands).alias(
+            "_bks"
+        ),
+    ).select(
+        F.col(id_col),
+        F.col(vec_col),
+        "_bks",
+        F.posexplode("_bks").alias("_band", "band_key"),
+    )
+    id_type = base.schema[id_col].dataType
+    out_schema = T.StructType(
+        [T.StructField(name, id_type) for name in id_fields]
+        + [T.StructField("cosine", T.DoubleType())]
+    )
+    return bv.groupBy("band_key").applyInPandas(kernel, schema=out_schema)
+
+
 def embedding_near_dup_pairs(
     df: DataFrame,
     dim: int,
@@ -1763,53 +1540,22 @@ def embedding_near_dup_pairs(
     banding then recovers the recall a single longer signature would lose.
     Only candidates pay the exact cosine.  Returns (id_a, id_b, cosine)
     with ``id_a < id_b`` and ``cosine >= threshold``.
-    """
-    from pyspark.sql import types as T
 
-    planes = hyperplanes(dim, n_bands * bits_per_band, seed)
-    # r18 restructure (guide §4.2 + §8, the semantic_pair_drops_grouped
-    # shape): the r17 form still built the per-bucket-quadratic
-    # candidate-pair set (band self-join + first-match filter) and then
-    # shipped BOTH vectors of every candidate through two id-keyed
-    # verification joins and an ArrowEvalPython cosine.  Now each band
-    # bucket's rows — (id, band-key array, vector), one row per
-    # (id, band) — shuffle ONCE into a grouped kernel that computes the
-    # bucket's m x m cosines as d vectorized numpy steps (bit-identical
-    # sequential fold) and applies the SAME first-matching-band rule
-    # vectorized, emitting only thresholded (id_a < id_b, cosine) rows.
-    # Candidate uniqueness, tie/NULL semantics and the produced doubles
-    # are unchanged (pinned by the old-shape equivalence test).  Memory
-    # contract: one band bucket's m x m double block per task — random
-    # hyperplanes keep buckets near corpus/2^bits, the same sizing
-    # policy the join form relied on to bound its quadratic.
-    # Band keys are the Arrow kernel (hyperplane_band_keys_arrow) —
-    # projection-sign-identical to the expression form; the corpus now
-    # has ONE consumer chain referencing the vector column once, so
-    # r17's persist barrier (element-wise band-key SQL x projection
-    # collapse) has nothing left to guard and is dropped.
-    df = df.select(id_col, vec_col)
-    bv = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        hyperplane_band_keys_arrow(F.col(vec_col), planes, n_bands).alias(
-            "_bks"
-        ),
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        "_bks",
-        F.posexplode("_bks").alias("_band", "band_key"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", df.schema[id_col].dataType),
-            T.StructField("id_b", df.schema[id_col].dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    return bv.groupBy("band_key").applyInPandas(
+    Each band bucket is one grouped kernel call (:func:`_band_bucket_apply`)
+    that computes the bucket's pair cosines as d vectorized numpy steps
+    (bit-identical sequential fold) and applies the first-matching-band
+    rule vectorized, emitting only thresholded rows; candidate
+    uniqueness, tie/NULL semantics and the produced doubles match the
+    retired join shape (pinned by the old-shape equivalence test).
+    Memory: a bucket's cosines are built ``_ROW_BLOCK`` rows at a time,
+    so a task holds O(_ROW_BLOCK x m) doubles for an m-row bucket —
+    bounded by construction even for the hot bucket every NULL or
+    zero-norm vector shares.
+    """
+    return _band_bucket_apply(
+        df, dim, n_bands, bits_per_band, seed, id_col, vec_col,
         _band_pair_drops_kernel(threshold, id_col, vec_col),
-        schema=out_schema,
+        ("id_a", "id_b"),
     )
 
 
@@ -1829,13 +1575,18 @@ def knn_join(
     This is the all-rows variant of :func:`topk_cosine` (one query point)
     — the shape a training pipeline needs for corpus-wide retrieval
     augmentation or semantic-cluster labeling.  Candidate pairs come from
-    the same seeded random-hyperplane band join as
+    the same seeded random-hyperplane band buckets as
     :func:`embedding_near_dup_pairs`, kept in BOTH directions (k-NN is
-    asymmetric: b in knn(a) says nothing about a in knn(b)); each side
-    then ranks its candidates with one window partitioned by the query id
-    — a single shuffle keyed on a high-cardinality column, never a global
-    sort.  Complexity O(sum of per-band bucket^2), bounded by the random
-    hyperplanes keeping buckets near corpus/2^bits.
+    asymmetric: b in knn(a) says nothing about a in knn(b)).  Each bucket's
+    grouped kernel emits every member's LOCAL top-k among its first-match
+    candidates (NULL cosines ranked last exactly like the serving window;
+    a row never ranks one with its own id value), and one window
+    partitioned by the query id ranks <= n_bands * k rows per query —
+    exact by selection, a single shuffle keyed on a high-cardinality
+    column, never a global sort.  Complexity O(sum of per-band
+    bucket^2), bounded by the random hyperplanes keeping buckets near
+    corpus/2^bits; memory per task is O(_ROW_BLOCK x m) for an m-row
+    bucket, since its cosines are built ``_ROW_BLOCK`` rows at a time.
 
     Recall contract (approximate by design): a true neighbor sharing no
     band with its query is missed; near-identical vectors collide on some
@@ -1844,41 +1595,11 @@ def knn_join(
     neighbor id as the deterministic tie-break.
     """
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
-    planes = hyperplanes(dim, n_bands * bits_per_band, seed)
-    # r18: same grouped-kernel restructure as embedding_near_dup_pairs
-    # (one band-bucket shuffle of (id, _bks, vector) rows replaces the
-    # per-bucket-quadratic candidate join + two vector joins + per-pair
-    # Arrow cosine), directional: the kernel emits each bucket member's
-    # LOCAL top-k among its first-match candidates (both directions,
-    # NULL cosines ranked last exactly like the serving window), and the
-    # global window then ranks <= n_bands * k rows per query — exact by
-    # selection.  Band keys are the Arrow kernel; the single consumer
-    # chain references the vector once, so the r17 persist barrier is
-    # dropped (see embedding_near_dup_pairs).
-    base = df.select(id_col, vec_col)
-    bv = base.select(
-        F.col(id_col),
-        F.col(vec_col),
-        hyperplane_band_keys_arrow(F.col(vec_col), planes, n_bands).alias(
-            "_bks"
-        ),
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        "_bks",
-        F.posexplode("_bks").alias("_band", "band_key"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("_qid", base.schema[id_col].dataType),
-            T.StructField("_nid", base.schema[id_col].dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    scored = bv.groupBy("band_key").applyInPandas(
-        _band_knn_kernel(k, id_col, vec_col), schema=out_schema
+    scored = _band_bucket_apply(
+        df, dim, n_bands, bits_per_band, seed, id_col, vec_col,
+        _band_knn_kernel(k, id_col, vec_col),
+        ("_qid", "_nid"),
     )
     w = Window.partitionBy("_qid").orderBy(F.col("cosine").desc(), F.col("_nid"))
     return (
@@ -2196,13 +1917,8 @@ def semantic_dedup(
     # cellv feeds BOTH the drop-set discovery and the final anti-join:
     # persist so cell assignment runs once, not twice.
     cellv = _persist_tracked(corpus.join(assigned, id_col))
-    # Within-cell pair discovery is ONE grouped Arrow crossing per cell
-    # (optimization r17, guide §4.2 + §8): each cell's vectors cross
-    # the Python boundary once and the m^2 cosines run as d vectorized
-    # numpy steps — the retired cid-keyed self-join shipped both
-    # vectors per CANDIDATE PAIR through its Arrow predicate (~4 GB at
-    # sf0.1 nprobe=2).  Same drop set, bit-identical cosines (see
-    # semantic_pair_drops_grouped).
+    # Within-cell pair discovery: one grouped Arrow crossing per cell
+    # (see semantic_pair_drops_grouped).
     dropped = semantic_pair_drops_grouped(
         cellv, threshold, id_col, vec_col
     ).distinct()

@@ -746,7 +746,7 @@ def bm25_topk_batch(
     query whose terms array is NULL or empty contributes NO rows (the
     explode drops it — the batch analogue of the single-query path's
     non-empty-terms requirement, which still applies to the table as
-    a whole)."""
+    a whole), and a NULL term inside an array is dropped."""
     import os as _os
 
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
@@ -762,6 +762,7 @@ def bm25_topk_batch(
             F.explode(F.col(terms_col)).alias("term"),
         )
         .withColumn("term", F.lower(F.col("term")))
+        .where(F.col("term").isNotNull())  # a NULL term matches no posting
         .distinct()
     )
     terms = sorted(r[0] for r in pairs.select("term").distinct().collect())
@@ -772,7 +773,7 @@ def bm25_topk_batch(
         sql_cast_literals,
     )
 
-    lits = sql_cast_literals([t for t in terms if t is not None], "string")
+    lits = sql_cast_literals(terms, "string")
     if lits is not None:
         bprobe = spark.sql(
             f"SELECT DISTINCT pmod(xxhash64(v), {int(n_buckets)}L) AS b "

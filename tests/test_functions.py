@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from airflow_etl_minio_to_postgres_spark.functions.dedup import (
@@ -20,6 +21,73 @@ from airflow_etl_minio_to_postgres_spark.functions.similarity import (
     topk_cosine,
 )
 from airflow_etl_minio_to_postgres_spark.functions.text import add_text_stats
+
+
+# Expression-form references the Arrow band-key kernel and the grouped
+# band-bucket kernels are pinned against (no package callers).
+
+
+def _projection_sql(vec_col: str, weights: list[float]) -> str:
+    """Literal dot product as ``aggregate(zip_with(...))`` SQL text.
+
+    Why THIS form and not an inlined ``w1*v[1] + w2*v[2] + ...`` chain:
+    16 planes x 64 dims inlines to a ~4096-node expression that (a) costs
+    seconds of py4j round-trips just to BUILD as Column objects, (b) fails
+    Janino codegen outright (interpreted fallback after a long compile
+    attempt), and (c) if any interpreted HOF sits upstream, projection
+    collapse re-inlines it into every element access — the same trap as
+    the round-2 minhash rewrite.  The HOF lambdas here are tiny, parse
+    JVM-side in one call, and evaluate the input array once per plane.
+
+    Determinism (the oracle contract): ``aggregate`` folds strictly left to
+    right from 0.0, so the float sum order is fixed — the DuckDB oracle
+    writes the identical left-associated chain and both engines produce
+    bit-for-bit equal IEEE doubles.
+    """
+    ws = ", ".join(f"{w!r}D" for w in weights)
+    return (
+        f"aggregate(zip_with({vec_col}, array({ws}), "
+        "(x, y) -> CAST(x AS DOUBLE) * y), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    )
+
+
+def _first_match_cond(n_bands: int) -> Column:
+    """Predicate keeping a banded candidate row only when NO band before
+    the joined one also matched: for every prior band b', either the row
+    came from band <= b' or the two sides' b' keys differ.  Band keys
+    (``_bks_a`` / ``_bks_b`` arrays carried by the join sides) are
+    ``concat``-built strings — never NULL — so plain != is exact."""
+    cond = None
+    for b_prior in range(n_bands - 1):
+        c = (F.col("_band") <= F.lit(b_prior)) | (
+            F.element_at(F.col("_bks_a"), b_prior + 1)
+            != F.element_at(F.col("_bks_b"), b_prior + 1)
+        )
+        cond = c if cond is None else cond & c
+    return cond if cond is not None else F.lit(True)
+
+
+def hyperplane_band_keys_expr(
+    vec_col: str, planes: list[list[float]], n_bands: int
+) -> Column:
+    """Array of ``n_bands`` LSH band keys; each key is the band index plus
+    the sign bits of ``len(planes)/n_bands`` random-hyperplane projections.
+    Multi-band = minhash-style OR-amplification: near-identical vectors
+    (tiny angle) agree on ALL bits of at least one band almost surely.
+
+    ``vec_col`` is a column NAME (the keys are built as one SQL string —
+    see :func:`_projection_sql` for why)."""
+    per_band = len(planes) // n_bands
+    keys = []
+    for band in range(n_bands):
+        bits = ", ".join(
+            f"CASE WHEN ({_projection_sql(vec_col, p)}) >= 0 "
+            "THEN '1' ELSE '0' END"
+            for p in planes[band * per_band : (band + 1) * per_band]
+        )
+        keys.append(f"concat('{band}|', {bits})")
+    return F.expr("array(" + ", ".join(keys) + ")")
 
 
 def _docs(spark, rows):
@@ -264,7 +332,6 @@ def test_hyperplane_buckets_balanced_on_anisotropic_data(spark):
 
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
         add_sign_bucket,
-        hyperplane_band_keys_expr,
         hyperplanes,
     )
 
@@ -632,7 +699,6 @@ def test_hyperplane_band_keys_arrow_matches_expr(spark):
 
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
         hyperplane_band_keys_arrow,
-        hyperplane_band_keys_expr,
         hyperplanes,
     )
 
@@ -678,10 +744,8 @@ def test_banded_pair_kernel_matches_join_reference(spark):
         release_caches,
     )
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-        _first_match_cond,
         cosine_expr,
         embedding_near_dup_pairs,
-        hyperplane_band_keys_expr,
         hyperplanes,
         knn_join,
     )
@@ -1579,6 +1643,34 @@ def test_bm25_batch_matches_indexed_per_query_and_prunes(spark, tmp_path):
             path,
             spark.createDataFrame([], "qid long, terms array<string>"),
         )
+
+
+def test_bm25_batch_drops_null_terms(spark, tmp_path):
+    """A NULL term inside a query's terms array is dropped once, before
+    the distinct-terms collect (Python's sort cannot order None), so
+    both probe paths hash the same terms: a query scores exactly like
+    its NULL-free twin, and a table of only NULL terms has no terms."""
+    from airflow_etl_minio_to_postgres_spark.functions.text import (
+        bm25_topk_batch,
+        write_inverted_index,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"spark join doc{i}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "inv_null")
+    write_inverted_index(df, path, n_buckets=8)
+    schema = "qid long, terms array<string>"
+    queries = spark.createDataFrame(
+        [(10, ["spark", None]), (20, [None]), (30, ["spark"])], schema
+    )
+    got = {}
+    for q, doc, score in bm25_topk_batch(spark, path, queries).collect():
+        got.setdefault(q, set()).add((doc, score))
+    assert set(got) == {10, 30} and got[10] == got[30]
+    with pytest.raises(ValueError, match="no terms"):
+        bm25_topk_batch(spark, path, spark.createDataFrame([(1, [None])], schema))
 
 
 def test_rrf_fuse_grouped_matches_single_query_fusion(spark):
