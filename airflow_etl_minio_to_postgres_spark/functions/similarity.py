@@ -1641,98 +1641,6 @@ def ann_topk_sign_lsh(
     )
 
 
-def _nearest_centroid_expr(
-    vec: Column, centroids: list[tuple[int, list[float]]]
-) -> Column:
-    """Argmax-cosine cell id for ``vec`` against a LITERAL centroid list,
-    as one expression: max of (cosine, -cid) structs — highest cosine
-    wins, ties break to the smallest cid (the ivf_assign contract).
-
-    This is the scale-defining choice of :func:`kmeans_centroids`: with
-    centroids as plan literals the assignment is a narrow map — no
-    corpus crossJoin, no per-vector window shuffle — so one k-means
-    iteration touches the corpus exactly once."""
-    candidates = [
-        F.struct(
-            F.coalesce(
-                cosine_expr(vec, F.array(*[F.lit(float(x)) for x in cvec])),
-                F.lit(float("-inf")),  # zero-norm row: any cell, det.
-            ).alias("s"),
-            F.lit(-cid).alias("nc"),
-        )
-        for cid, cvec in centroids
-    ]
-    return (-F.array_max(F.array(*candidates))["nc"]).cast("long")
-
-
-def _assign_broadcast(
-    corpus: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Argmax-cosine cell assignment against a BROADCAST centroid
-    table — the large-``n_cells`` twin of :func:`_nearest_centroid_expr`.
-
-    The literal form embeds n_cells x dim constants in the plan; at
-    SemDeDup-paper scale (~100k cells) that explodes plan size and
-    codegen.  Here centroids travel as a broadcast table instead: a
-    constant-key equi-join (BroadcastHashJoin, never a nested-loop —
-    the build side is one bucket, the probe streams the corpus) fans
-    each vector out to n_cells scored rows, and a map-side-combinable
-    ``max(struct(sim, -cid))`` groupBy collapses them back to one row
-    per vector.  The fan-out rows of a vector never leave their
-    partition before the partial aggregate, so the shuffle carries ONE
-    row per vector — the assignment costs one corpus-sized exchange
-    per iteration, the price of not inlining the centroids.  Tie-break
-    and zero-norm semantics are IDENTICAL to the literal form (same
-    cosine_expr, same (sim, -cid) struct ordering), so both forms
-    assign bit-identically.  Returns (id, cid, vec)."""
-    spark = corpus.sparkSession
-    cent = spark.createDataFrame(
-        [(cid, [float(x) for x in cvec]) for cid, cvec in centroids],
-        "cid long, cvec array<double>",
-    )
-    # The fan-out key is constant-by-construction but written as
-    # pmod(col, 1) on BOTH sides: literal keys get constant-folded —
-    # Catalyst rewrites the equi-condition into a probe-side filter and
-    # the join degrades to BroadcastNestedLoopJoin.  Non-foldable keys
-    # keep a HashedRelation build + streamed probe (BroadcastHashJoin);
-    # the per-row pmod is noise.
-    scored = (
-        corpus.withColumn("_k", F.pmod(F.col(id_col), F.lit(1)))
-        .join(
-            F.broadcast(
-                cent.withColumn("_k", F.pmod(F.col("cid"), F.lit(1)))
-            ),
-            "_k",
-        )
-        .select(
-            id_col,
-            vec_col,
-            F.struct(
-                F.coalesce(
-                    cosine_expr(F.col(vec_col), F.col("cvec")),
-                    F.lit(float("-inf")),
-                ).alias("s"),
-                (-F.col("cid")).alias("nc"),
-            ).alias("_cand"),
-        )
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.max("_cand").alias("_m"),
-            F.first(vec_col).alias(vec_col),
-        )
-        .select(
-            id_col,
-            (-F.col("_m")["nc"]).cast("long").alias("cid"),
-            vec_col,
-        )
-    )
-
-
 def kmeans_centroids(
     df: DataFrame,
     n_cells: int = 4,
@@ -1754,8 +1662,8 @@ def kmeans_centroids(
       ``sha256('kmeans-init:' || id)`` (a seedless uniform sample;
       first-n-by-id would bias toward whatever the id order encodes),
       cid assigned in that same sha order;
-    * assignment — argmax cosine with cid as tie-break
-      (:func:`_nearest_centroid_expr`), a pure expression;
+    * assignment — argmax cosine with cid as tie-break, one numpy
+      scoring block per Arrow batch (:func:`nearest_cid_arrow`);
     * update — per-cell per-dim mean accumulated as EXACT bigint
       micro-units (``sum(round(x*1e6))::long / n / 1e6`` — the
       stable_sum policy), so the new centroids are bit-identical on any
@@ -1768,13 +1676,12 @@ def kmeans_centroids(
 
     Scale shape, per iteration: ONE corpus scan -> assignment ->
     map-side-combined groupBy collapsing to ``n_cells`` rows of ``dim``
-    integer sums.  Assignment has two bit-identical forms, selected by
-    ``literal_centroid_limit``: up to the limit, centroids are inlined
-    as plan literals (:func:`_nearest_centroid_expr` — a narrow map,
-    zero exchanges); above it, they travel as a broadcast table
-    (:func:`_assign_broadcast` — plan size stays O(1) in n_cells, one
-    corpus exchange per iteration), which is the SemDeDup-paper regime
-    of ~100k cells.  The driver holds only the centroid matrix
+    integer sums.  Assignment is a narrow Arrow map with zero
+    exchanges; ``literal_centroid_limit`` selects how the centroid
+    matrix ships to it: in the UDF closure up to the limit, as a
+    SparkContext broadcast above it (the SemDeDup-paper regime of
+    ~100k cells, where re-pickling the matrix per task would
+    dominate).  The driver holds only the centroid matrix
     (n_cells x dim — metadata, the Spark MLlib KMeans pattern); nothing
     data-sized ever reaches the driver.  The init top-k is a
     TakeOrdered (partial per-partition top-k), not a global sort."""

@@ -72,13 +72,11 @@ def quality_score_expr(text: Column) -> Column:
     """Deterministic [0,1] quality heuristic: stopword presence + length,
     penalized by symbol density.  Linear clamp only — no transcendentals, so
     the oracle reproduces it exactly."""
-    stop = stopword_ratio_expr(text, "en")
-    length_term = F.least(
-        F.lit(1.0), word_count_expr(text).cast("double") / F.lit(50.0)
+    return _quality_of(
+        stopword_ratio_expr(text, "en"),
+        word_count_expr(text).cast("double"),
+        punct_ratio_expr(text),
     )
-    penalty = punct_ratio_expr(text)
-    raw = F.lit(0.5) * stop + F.lit(0.5) * length_term - F.lit(0.25) * penalty
-    return F.least(F.lit(1.0), F.greatest(F.lit(0.0), raw))
 
 
 def lang_scores(text: Column) -> dict[str, Column]:
@@ -90,9 +88,27 @@ def lang_id_expr(text: Column) -> Column:
     (en > de > fr).  Scores are identical-operand double divisions, so both
     engines agree bit-for-bit."""
     s = lang_scores(text)
+    return _lang_of(s["en"], s["de"], s["fr"])
+
+
+def _quality_of(stop_en: Column, wc: Column, punct: Column) -> Column:
+    """The :func:`quality_score_expr` arithmetic over ALREADY-BOUND
+    operands (English stopword ratio, double word count, punctuation
+    ratio) — shared with the fused funnel predicate."""
+    raw = (
+        F.lit(0.5) * stop_en
+        + F.lit(0.5) * F.least(F.lit(1.0), wc / F.lit(50.0))
+        - F.lit(0.25) * punct
+    )
+    return F.least(F.lit(1.0), F.greatest(F.lit(0.0), raw))
+
+
+def _lang_of(en: Column, de: Column, fr: Column) -> Column:
+    """The :func:`lang_id_expr` argmax over ALREADY-BOUND per-language
+    stopword ratios, tie-break en > de > fr."""
     return (
-        F.when((s["en"] >= s["de"]) & (s["en"] >= s["fr"]), F.lit("en"))
-        .when(s["de"] >= s["fr"], F.lit("de"))
+        F.when((en >= de) & (en >= fr), F.lit("en"))
+        .when(de >= fr, F.lit("de"))
         .otherwise(F.lit("fr"))
     )
 
@@ -137,10 +153,11 @@ def quality_lang_pred_expr(
     values.
 
     Equivalence is by construction — the bound plan computes the SAME
-    operand expressions with the SAME operations (same doubles bit for
-    bit, same NULL/three-valued-logic behavior: a NULL text yields a
-    NULL predicate in both forms, which WHERE treats as false), pinned
-    by the adversarial parity test.  The predicate stays a narrow,
+    operand expressions and feeds them to the SAME arithmetic helpers
+    (``_quality_of``, ``_lang_of``) as the reference expressions (same
+    doubles bit for bit, same NULL/three-valued-logic behavior: a NULL
+    text yields a NULL predicate in both forms, which WHERE treats as
+    false), pinned by the adversarial parity test.  The predicate stays a narrow,
     deterministic, single-column filter — it pushes into the scan stage
     exactly like the reference form."""
     bound = F.array(
@@ -163,21 +180,9 @@ def quality_lang_pred_expr(
         )
 
         def _final(s: Column) -> Column:
-            raw = (
-                F.lit(0.5) * s["en"]
-                + F.lit(0.5) * F.least(F.lit(1.0), s["wc"] / F.lit(50.0))
-                - F.lit(0.25) * s["punct"]
-            )
-            q = F.least(F.lit(1.0), F.greatest(F.lit(0.0), raw))
-            lang_pred = (
-                F.when(
-                    (s["en"] >= s["de"]) & (s["en"] >= s["fr"]), F.lit("en")
-                )
-                .when(s["de"] >= s["fr"], F.lit("de"))
-                .otherwise(F.lit("fr"))
-            )
+            q = _quality_of(s["en"], s["wc"], s["punct"])
             return (q >= F.lit(float(quality_min))) & (
-                lang_pred == F.lit(lang)
+                _lang_of(s["en"], s["de"], s["fr"]) == F.lit(lang)
             )
 
         return F.exists(scores, _final)

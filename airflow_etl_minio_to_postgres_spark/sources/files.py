@@ -27,6 +27,7 @@ is configured on the session (``session.ObjectStoreConfig``).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,6 +63,54 @@ def _local_path(path: str) -> str:
             "object stores stage to a new prefix and flip the reader path"
         )
     return path
+
+
+_ASIDE = ".swap-old"
+
+
+def _aside(target: str) -> str:
+    """Where :func:`swap_dir` parks ``target``'s previous contents: a
+    sibling whose name starts with ``.``.  Spark's file listing skips
+    such names, so an aside inside a table directory (a partition swap)
+    is invisible to readers — ``kind=a.old`` would read as a second
+    partition and ``_kind=a.old`` fails every read with conflicting
+    partition columns."""
+    parent, name = os.path.split(target.rstrip("/"))
+    return os.path.join(parent, f".{name}{_ASIDE}")
+
+
+def _recover_swap(target: str) -> str:
+    """Finish or undo a :func:`swap_dir` that a crash interrupted.  Every
+    entry point runs this before it reads or tests ``target``:
+
+    * target missing, aside present — the crash fell between the aside
+      and the promote: restore the aside (the rerun restages);
+    * both present — the promote happened: delete the aside.
+
+    Returns ``target``."""
+    old = _aside(target)
+    if os.path.exists(old):
+        if os.path.exists(target):
+            shutil.rmtree(old)
+        else:
+            os.replace(old, target)
+    return target
+
+
+def swap_dir(staged: str, target: str) -> str:
+    """Replace directory ``target`` with ``staged``: move the old
+    contents aside, promote the staged copy, delete the aside last.
+    With :func:`_recover_swap` on entry (here and in every caller that
+    reads ``target`` first), a restart after a crash at any step
+    converges to the no-crash result.  Local FS only (``os.replace``).
+    Returns ``target``."""
+    _recover_swap(target)
+    old = _aside(target)
+    if os.path.exists(target):
+        os.replace(target, old)
+    os.replace(staged, target)
+    shutil.rmtree(old, ignore_errors=True)
+    return target
 
 
 def read_csv(
@@ -456,25 +505,10 @@ def write_zorder_parquet(
     :func:`zorder_rank_buckets` first (equal-mass quantile buckets, one
     sample aggregate; the bucket helper columns never land in the
     files)."""
-    helper_cols = ["_zval"]
-    if rank_bucket:
-        df, bucket_cols = zorder_rank_buckets(
-            df, zorder_cols, bits=bits, sample_rate=sample_rate
-        )
-        zorder_cols = bucket_cols
-        helper_cols += bucket_cols
-    z = F.expr(zorder_value_sql(zorder_cols, bits))
-    zdf = df.withColumn("_zval", z)
-    if n_files is not None:
-        ranged = zdf.repartitionByRange(n_files, F.col("_zval"))
-    else:
-        ranged = zdf.repartitionByRange(F.col("_zval"))
-    (
-        ranged.sortWithinPartitions("_zval")
-        .drop(*helper_cols)
-        .write.mode(mode)
-        .parquet(path)
+    staged = _zorder_staged(
+        df, zorder_cols, bits, n_files, rank_bucket, sample_rate
     )
+    staged.write.mode(mode).parquet(path)
     return path
 
 
@@ -498,19 +532,20 @@ def recluster_zorder_parquet(
 
     Same plan as the one-shot sink (one sampled range exchange on the
     curve value, in-partition sort, helpers dropped), staged and then
-    atomically swapped via :func:`_rewrite_in_place` — every failure
-    point leaves a complete copy.  Run between cleanly-terminated
-    ingest runs, like the other compaction helpers.  At 100 TB the
-    production form scopes the rewrite to partitions touched since the
-    last pass (re-sort only those directories under dynamic partition
-    overwrite) rather than the whole table; at any scale the read side
-    needs no change — pruning reads the same footer stats either way.
+    swapped in via :func:`_rewrite_in_place` — a restart after any
+    crash point converges to the no-crash result.  Run between
+    cleanly-terminated ingest runs, like the other compaction helpers.
+    At 100 TB the production form scopes the rewrite to partitions
+    touched since the last pass (re-sort only those directories under
+    dynamic partition overwrite) rather than the whole table; at any
+    scale the read side needs no change — pruning reads the same
+    footer stats either way.
     A hive-partitioned location is REFUSED: this rewrite stages flat,
     which would silently demote the partition columns to data columns
     and break every reader that relies on directory pruning — use
     :func:`recluster_zorder_partitions`, which re-sorts per partition
     and preserves the layout.  Returns ``path``."""
-    lpath = _local_path(path)
+    lpath = _recover_swap(_local_path(path))
     # guard only when the path exists as a directory — a missing path
     # falls through to the parquet read, whose AnalysisException is the
     # canonical missing-input error (not a bare FileNotFoundError here)
@@ -549,11 +584,14 @@ def _zorder_staged(
     n_files: int | None,
     rank_bucket: bool,
     sample_rate: float,
+    lead: str | None = None,
 ) -> DataFrame:
-    """The shared recluster plan (one sampled range exchange on the
+    """The shared Z-order plan (one sampled range exchange on the
     curve value, in-partition sort, helpers dropped) — identical for
-    the local-swap and manifest-committed variants, so they are
-    value-equal by construction."""
+    the one-shot sink and the local-swap, manifest-committed and
+    per-partition re-clusters, so they are value-equal by
+    construction.  ``lead`` puts a partition column in front of the
+    curve value in both the range and the sort keys."""
     helper_cols = ["_zval"]
     zcols = list(zorder_cols)
     if rank_bucket:
@@ -563,11 +601,12 @@ def _zorder_staged(
         zcols = bucket_cols
         helper_cols += bucket_cols
     zdf = df.withColumn("_zval", F.expr(zorder_value_sql(zcols, bits)))
+    keys = [lead, "_zval"] if lead else ["_zval"]
     if n_files is not None:
-        ranged = zdf.repartitionByRange(n_files, F.col("_zval"))
+        ranged = zdf.repartitionByRange(int(n_files), *map(F.col, keys))
     else:
-        ranged = zdf.repartitionByRange(F.col("_zval"))
-    return ranged.sortWithinPartitions("_zval").drop(*helper_cols)
+        ranged = zdf.repartitionByRange(*map(F.col, keys))
+    return ranged.sortWithinPartitions(*keys).drop(*helper_cols)
 
 
 def recluster_zorder_committed(
@@ -695,62 +734,36 @@ def recluster_zorder_partitions(
     One job reads the selected partitions through a partition-pruned
     scan, range-exchanges on (partition, curve value), sorts within
     tasks, and stages the result hive-partitioned to a sibling tmp;
-    each staged partition directory is then swapped in with the same
-    old-aside / promote / delete-last dance as
-    :func:`_rewrite_in_place` — per-partition atomic, every failure
-    point leaves a complete copy of each partition under its name or
-    a marked sibling.  Untouched partitions are never read, staged, or
+    each staged partition directory is then put in place with
+    :func:`swap_dir`, whose asides start with ``.`` so no reader lists
+    them.  Asides a crash left inside the table are recovered before
+    the read, so a restart after any crash point converges to the
+    no-crash result.  Untouched partitions are never read, staged, or
     replaced.  Local-FS only (directory swaps).  Returns the list of
     partition directory names swapped."""
-    import shutil
-
     path = _local_path(path)
+    if os.path.isdir(path):
+        for name in os.listdir(path):
+            if name.startswith(".") and name.endswith(_ASIDE):
+                _recover_swap(os.path.join(path, name[1:-len(_ASIDE)]))
     df = spark.read.parquet(path)
     if partitions is not None:
         df = df.where(F.col(partition_col).isin(list(partitions)))
-    helper_cols = ["_zval"]
-    zcols = list(zorder_cols)
-    if rank_bucket:
-        df, bucket_cols = zorder_rank_buckets(
-            df, zcols, bits=bits, sample_rate=sample_rate
-        )
-        zcols = bucket_cols
-        helper_cols += bucket_cols
-    zdf = df.withColumn("_zval", F.expr(zorder_value_sql(zcols, bits)))
     # explicit task count pins the file fan-out per touched partition
     # (without it AQE coalesces a small rewrite into one file, undoing
     # the multi-file hyper-rectangle layout the pass exists to restore)
-    if n_files is not None:
-        ranged = zdf.repartitionByRange(
-            int(n_files), F.col(partition_col), F.col("_zval")
-        )
-    else:
-        ranged = zdf.repartitionByRange(
-            F.col(partition_col), F.col("_zval")
-        )
-    staged = ranged.sortWithinPartitions(partition_col, "_zval").drop(
-        *helper_cols
+    staged = _zorder_staged(
+        df, zorder_cols, bits, n_files, rank_bucket, sample_rate,
+        lead=partition_col,
     )
     tmp = path.rstrip("/") + "__recluster_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        staged.write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(tmp)
+    staged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
+    swapped = sorted(
+        n for n in os.listdir(tmp) if n.startswith(f"{partition_col}=")
     )
-    swapped = []
-    for name in sorted(os.listdir(tmp)):
-        if not name.startswith(f"{partition_col}="):
-            continue
-        src = os.path.join(tmp, name)
-        dst = os.path.join(path, name)
-        old = dst + "__recluster_old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(dst):
-            os.replace(dst, old)
-        os.replace(src, dst)
-        shutil.rmtree(old, ignore_errors=True)
-        swapped.append(name)
+    for name in swapped:
+        swap_dir(os.path.join(tmp, name), os.path.join(path, name))
     shutil.rmtree(tmp, ignore_errors=True)
     return swapped
 
@@ -769,7 +782,7 @@ def upsert_parquet(
     rewriting 100 TB per upsert is not a plan.
     """
     spark = df.sparkSession
-    path = _local_path(path)
+    path = _recover_swap(_local_path(path))
     if os.path.exists(path):
         existing = spark.read.schema(df.schema).parquet(path)
         survivors = existing.join(
@@ -793,6 +806,7 @@ def compact_parquet(
     ``target_files`` files.  Streaming/incremental appends fragment
     locations into many tiny files; scans then pay per-file open + footer
     costs.  Run this as housekeeping on landing zones."""
+    _recover_swap(_local_path(path))
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
@@ -801,17 +815,20 @@ def compact_parquet(
 
 
 def _rewrite_in_place(
-    df: DataFrame, path: str, extra_files: dict[str, str] | None = None
+    df: DataFrame,
+    path: str,
+    extra_files: dict[str, str] | None = None,
+    partition_by: list[str] | None = None,
 ) -> str:
     """Overwriting a location the plan also READS would delete its own
-    input; stage to a sibling tmp location, then swap — fully distributed
-    (no driver-side collect), one extra rename on local FS / object copy on
-    stores without rename.
+    input; stage to a sibling tmp location, then :func:`swap_dir` — fully
+    distributed (no driver-side collect), one extra rename on local FS.
+    ``partition_by`` stages a hive-partitioned layout.
 
-    Crash safety: the old data is renamed aside (``__rewrite_old``) before
-    the staged copy is promoted, and deleted only last — every failure
-    point leaves at least one complete copy under the target name or a
-    clearly-marked sibling, never an empty target with orphaned data.
+    Crash safety: callers run :func:`_recover_swap` on ``path`` before
+    they plan the read of ``df``, so a restart after any crash point
+    converges to the no-crash result (an interrupted swap is undone or
+    finished before anything reads the target).
 
     ``extra_files`` (name -> text content) are written into the staged
     directory BEFORE the swap, so they become visible atomically with
@@ -819,13 +836,10 @@ def _rewrite_in_place(
     commit its replay marker in the same rename as the merged table.
     Names must start with ``_`` or ``.`` (Spark's parquet reader ignores
     such files; anything else would corrupt the table)."""
-    import shutil
-
     path = _local_path(path)
     tmp = path.rstrip("/") + "__rewrite_tmp"
-    old = path.rstrip("/") + "__rewrite_old"
     shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
+    write_parquet(df, tmp, partition_by=partition_by)
     for name, content in (extra_files or {}).items():
         if not name.startswith(("_", ".")):
             raise ValueError(
@@ -834,12 +848,7 @@ def _rewrite_in_place(
             )
         with open(os.path.join(tmp, name), "w", encoding="utf-8") as f:
             f.write(content)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(path):
-        os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return path
+    return swap_dir(tmp, path)
 
 
 def bronze_path(base: str, file_name: str, folder: str = "bronze-files") -> str:

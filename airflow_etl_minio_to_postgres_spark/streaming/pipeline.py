@@ -492,33 +492,22 @@ def migrate_legacy_silver(spark: SparkSession, out_path: str) -> int:
     mirroring :func:`migrate_legacy_rollup` /
     :func:`migrate_legacy_near_dup_store`.  Pre-migration rows carry
     commit id ``legacy-0`` (their batch lineage is unknowable).
-    Idempotent: an already-partitioned table is left untouched.
-    Local-FS only (the swap uses ``os.replace``), like the other two
-    migrations.  Returns the number of rows migrated (0 when already
-    migrated)."""
+    Idempotent: an already-partitioned table is left untouched, and a
+    restart after any crash point converges to the no-crash result.
+    Local-FS only (``files.swap_dir``), like the other two migrations.
+    Returns the number of rows migrated (0 when already migrated)."""
     from airflow_etl_minio_to_postgres_spark.sources.files import (
         _local_path,
+        _recover_swap,
+        _rewrite_in_place,
     )
 
-    out_path = _local_path(out_path)
+    out_path = _recover_swap(_local_path(out_path))
     df = spark.read.parquet(out_path)
     if "_commit_id" in df.columns:
         return 0
     migrated = df.withColumn("_commit_id", F.lit("legacy-0"))
-    import shutil
-
-    tmp = out_path.rstrip("/") + "__migrate_tmp"
-    old = out_path.rstrip("/") + "__migrate_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        migrated.write.mode("overwrite")
-        .partitionBy("_commit_id")
-        .parquet(tmp)
-    )
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(out_path, old)
-    os.replace(tmp, out_path)
-    shutil.rmtree(old, ignore_errors=True)
+    _rewrite_in_place(migrated, out_path, partition_by=["_commit_id"])
     return spark.read.parquet(out_path).count()
 
 
@@ -541,7 +530,7 @@ def streaming_rollup_upsert(
     partials double-counts), so the sink records the last-merged
     ``(checkpoint token, batch_id)`` in a ``_last_batch`` marker file
     written INSIDE the staged directory and promoted by the same
-    ``os.replace`` as the merged table — marker and data commit
+    directory swap as the merged table — marker and data commit
     atomically together.  A batch whose id is already covered by the
     marker (crash landed between the rewrite and the checkpoint
     commit) is a no-op on replay.  A legacy table without a marker
@@ -557,8 +546,7 @@ def streaming_rollup_upsert(
     # would be skipped, and the rewrite would REPLACE the rollup with
     # just this batch's partials — silent data loss.  _local_path
     # resolves file:// and refuses object-store URIs loudly (this sink
-    # is local-FS-only by construction: the rewrite swaps directories
-    # with os.replace).
+    # is local-FS-only by construction: the rewrite swaps directories).
     out_path = _local_path(out_path)
     token = _commit_token(checkpoint_path)
 
@@ -580,11 +568,14 @@ def _rollup_process_batch(
     the replay contract (an already-merged batch is a no-op) is directly
     testable.  ``out_path`` must already be local-FS-normalized."""
     from airflow_etl_minio_to_postgres_spark.sources.files import (
+        _recover_swap,
         _rewrite_in_place,
     )
 
     spark = batch_df.sparkSession
-    marker = os.path.join(out_path, "_last_batch")
+    # an interrupted swap would hide the table AND its marker: the batch
+    # would merge as a first write and drop every earlier total
+    marker = os.path.join(_recover_swap(out_path), "_last_batch")
     if os.path.exists(marker):
         with open(marker, encoding="utf-8") as f:
             last_token, _, last_id = f.read().strip().partition(":")
@@ -1104,17 +1095,20 @@ def migrate_legacy_near_dup_store(
     ``band_keys_expr`` the writer used), so the migrated store is
     band-for-band identical to one written natively; migrated rows
     carry commit id ``legacy-0``.  Idempotent: an already-migrated
-    store is left untouched.  Returns the number of store rows after
-    migration.  Local-FS only (the swap uses ``os.replace``), like
+    store is left untouched, and a restart after any crash point
+    converges to the no-crash result.  Returns the number of store rows
+    after migration.  Local-FS only (``files.swap_dir``), like
     :func:`migrate_legacy_rollup`."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
         band_keys_expr,
     )
     from airflow_etl_minio_to_postgres_spark.sources.files import (
         _local_path,
+        _recover_swap,
+        _rewrite_in_place,
     )
 
-    store_path = _local_path(store_path)
+    store_path = _recover_swap(_local_path(store_path))
     df = spark.read.parquet(store_path)
     if "band_key" in df.columns:
         return df.count()
@@ -1140,26 +1134,15 @@ def migrate_legacy_near_dup_store(
             ).cast("int"),
         )
         .withColumn("_commit_id", F.lit("legacy-0"))
-    )
-    import shutil
-
-    tmp = store_path.rstrip("/") + "__migrate_tmp"
-    old = store_path.rstrip("/") + "__migrate_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
         # one writer task per bucket — without this every shuffle task
         # writes a sliver into every bucket dir (up to shuffle_partitions
         # x store_partitions tiny files, the fragmentation the streaming
         # sink's own repartition exists to prevent)
-        migrated.repartition(int(store_partitions), "band_bucket")
-        .write.mode("overwrite")
-        .partitionBy("band_bucket", "_commit_id")
-        .parquet(tmp)
+        .repartition(int(store_partitions), "band_bucket")
     )
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(store_path, old)
-    os.replace(tmp, store_path)
-    shutil.rmtree(old, ignore_errors=True)
+    _rewrite_in_place(
+        migrated, store_path, partition_by=["band_bucket", "_commit_id"]
+    )
     return spark.read.parquet(store_path).count()
 
 
@@ -1326,31 +1309,33 @@ def _inv_index_process_batch(
         WHITESPACE,
     )
     from airflow_etl_minio_to_postgres_spark.sources.files import (
+        _local_path,
+        _recover_swap,
         _rewrite_in_place,
     )
-
-    spark = batch_df.sparkSession
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
         resolve_data_root,
     )
 
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        _local_path,
-    )
+    spark = batch_df.sparkSession
 
     # after a manifest-based compaction the postings AND the _stats
     # sidecar live under the current generation — resolve once per
     # batch (one listStatus; a never-compacted index resolves to root)
     index_path = resolve_data_root(spark, index_path)
     # the replay marker and the stats merge are read with local-FS
-    # calls and written via _rewrite_in_place (os.replace — local-FS
-    # only).  _local_path unwraps file:// URIs (so a scheme-qualified
+    # calls and written via _rewrite_in_place (a directory swap —
+    # local-FS only; an interrupted one is recovered first, or a
+    # missing sidecar would read as a first merge).  _local_path
+    # unwraps file:// URIs (so a scheme-qualified
     # resolve_data_root result still finds the marker instead of
     # silently treating it as absent and double-merging a replayed
     # batch) and raises LOUDLY for object-store schemes — the
     # documented 'Local-FS stats path' contract, enforced before any
     # write happens.
-    stats_path = os.path.join(_local_path(index_path), "_stats")
+    stats_path = _recover_swap(
+        os.path.join(_local_path(index_path), "_stats")
+    )
     marker = os.path.join(stats_path, "_last_batch")
     # Lineage guard BEFORE any write: the marker only disambiguates
     # replays within ONE checkpoint lineage.  A NEW checkpoint pointed
@@ -1692,12 +1677,16 @@ def migrate_legacy_rollup(spark: SparkSession, out_path: str) -> int:
     carry whatever float error they accumulated before migration; that
     error is frozen, not compounded, from here on).  Rollup tables are
     dimension-scale by construction, so the read-rewrite (and the
-    returned row count) is metadata-sized work.  Returns the number of
-    rows migrated (0 when already migrated)."""
+    returned row count) is metadata-sized work.  Local-FS only; a
+    restart after any crash point converges to the no-crash result.
+    Returns the number of rows migrated (0 when already migrated)."""
     from airflow_etl_minio_to_postgres_spark.sources.files import (
+        _local_path,
+        _recover_swap,
         _rewrite_in_place,
     )
 
+    out_path = _recover_swap(_local_path(out_path))
     df = spark.read.parquet(out_path)
     names = set(df.columns)
     if "sum_value_micros" in names:

@@ -9,12 +9,114 @@ tests so a refactor can't silently regress them.
 
 from __future__ import annotations
 
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
 from airflow_etl_minio_to_postgres_spark import queries as registry
+from airflow_etl_minio_to_postgres_spark.functions.similarity import (
+    cosine_expr,
+)
 from tests.conftest import SF_SMOKE
 
 
 def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+# Expression-form references of the k-means assignment that the Arrow
+# kernel (nearest_cid_arrow) is pinned against (no package callers).
+
+
+def _nearest_centroid_expr(
+    vec: Column, centroids: list[tuple[int, list[float]]]
+) -> Column:
+    """Argmax-cosine cell id for ``vec`` against a LITERAL centroid list,
+    as one expression: max of (cosine, -cid) structs — highest cosine
+    wins, ties break to the smallest cid (the ivf_assign contract).
+
+    This is the scale-defining choice of :func:`kmeans_centroids`: with
+    centroids as plan literals the assignment is a narrow map — no
+    corpus crossJoin, no per-vector window shuffle — so one k-means
+    iteration touches the corpus exactly once."""
+    candidates = [
+        F.struct(
+            F.coalesce(
+                cosine_expr(vec, F.array(*[F.lit(float(x)) for x in cvec])),
+                F.lit(float("-inf")),  # zero-norm row: any cell, det.
+            ).alias("s"),
+            F.lit(-cid).alias("nc"),
+        )
+        for cid, cvec in centroids
+    ]
+    return (-F.array_max(F.array(*candidates))["nc"]).cast("long")
+
+
+def _assign_broadcast(
+    corpus: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Argmax-cosine cell assignment against a BROADCAST centroid
+    table — the large-``n_cells`` twin of :func:`_nearest_centroid_expr`.
+
+    The literal form embeds n_cells x dim constants in the plan; at
+    SemDeDup-paper scale (~100k cells) that explodes plan size and
+    codegen.  Here centroids travel as a broadcast table instead: a
+    constant-key equi-join (BroadcastHashJoin, never a nested-loop —
+    the build side is one bucket, the probe streams the corpus) fans
+    each vector out to n_cells scored rows, and a map-side-combinable
+    ``max(struct(sim, -cid))`` groupBy collapses them back to one row
+    per vector.  The fan-out rows of a vector never leave their
+    partition before the partial aggregate, so the shuffle carries ONE
+    row per vector — the assignment costs one corpus-sized exchange
+    per iteration, the price of not inlining the centroids.  Tie-break
+    and zero-norm semantics are IDENTICAL to the literal form (same
+    cosine_expr, same (sim, -cid) struct ordering), so both forms
+    assign bit-identically.  Returns (id, cid, vec)."""
+    spark = corpus.sparkSession
+    cent = spark.createDataFrame(
+        [(cid, [float(x) for x in cvec]) for cid, cvec in centroids],
+        "cid long, cvec array<double>",
+    )
+    # The fan-out key is constant-by-construction but written as
+    # pmod(col, 1) on BOTH sides: literal keys get constant-folded —
+    # Catalyst rewrites the equi-condition into a probe-side filter and
+    # the join degrades to BroadcastNestedLoopJoin.  Non-foldable keys
+    # keep a HashedRelation build + streamed probe (BroadcastHashJoin);
+    # the per-row pmod is noise.
+    scored = (
+        corpus.withColumn("_k", F.pmod(F.col(id_col), F.lit(1)))
+        .join(
+            F.broadcast(
+                cent.withColumn("_k", F.pmod(F.col("cid"), F.lit(1)))
+            ),
+            "_k",
+        )
+        .select(
+            id_col,
+            vec_col,
+            F.struct(
+                F.coalesce(
+                    cosine_expr(F.col(vec_col), F.col("cvec")),
+                    F.lit(float("-inf")),
+                ).alias("s"),
+                (-F.col("cid")).alias("nc"),
+            ).alias("_cand"),
+        )
+    )
+    return (
+        scored.groupBy(id_col)
+        .agg(
+            F.max("_cand").alias("_m"),
+            F.first(vec_col).alias(vec_col),
+        )
+        .select(
+            id_col,
+            (-F.col("_m")["nc"]).cast("long").alias("cid"),
+            vec_col,
+        )
+    )
 
 
 def test_q1_filter_pushed_to_scan(spark):
@@ -307,10 +409,6 @@ def test_kmeans_iteration_is_one_exchange_no_python(spark):
     crossing."""
     from pyspark.sql import functions as F
 
-    from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-        _nearest_centroid_expr,
-    )
-
     emb = registry.load_table(spark, "embeddings", SF_SMOKE)
     cents = [(0, [0.1] * 64), (1, [-0.1] * 64)]
     stats = (
@@ -340,7 +438,6 @@ def test_kmeans_arrow_assignment_parity_and_plan(spark):
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-        _nearest_centroid_expr,
         nearest_cid_arrow,
     )
 
@@ -543,7 +640,6 @@ def test_kmeans_broadcast_assignment_parity_and_plan(spark):
     the broadcast form via literal_centroid_limit=0 against the default
     literal form."""
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-        _assign_broadcast,
         kmeans_centroids,
     )
 
