@@ -1119,6 +1119,15 @@ def commit_parquet_generation(
     ``bloom_cols`` does the same for the per-file ``_bloom``
     point-lookup filters (:func:`write_bloom_filters` /
     :func:`bloom_point_scan`, sized by ``bloom_bits``/``bloom_k``).
+    ``legacy_sidecars`` names directories of a self-describing table
+    (an inverted index's ``_stats``, a drift log's ``_ref``): each is
+    copied from the current data root into the staged generation
+    after the data and skip-index sidecars are written and before the
+    QA hook and the publish (:func:`copy_tree`; an absent one is
+    skipped), so one pointer flip publishes the whole table, and GC
+    drops the superseded root copy once the flat payload leaves the
+    grace window.  This is how the streamed-index compactors
+    (``streaming/pipeline.py compact_*``) commit.
 
     SCHEMA GUARD: a recommit whose frame DROPS columns the current
     generation carries breaks every downstream reader silently (the
@@ -1169,10 +1178,10 @@ def commit_parquet_generation(
             ).parameters.values()
         )
     got = latest_manifest(spark, root)
+    data_root = root if got is None else _join(root, str(got[1]["generation"]))
     if got is not None:
-        prev_root = _join(root, str(got[1]["generation"]))
         try:
-            prev_cols = set(spark.read.parquet(prev_root).columns)
+            prev_cols = set(spark.read.parquet(data_root).columns)
         except AnalysisException:
             # the EXPECTED degradation only: predecessor prefix absent
             # or schema-less (GC'd out from under a stale manifest, a
@@ -1243,6 +1252,8 @@ def commit_parquet_generation(
             bits=bloom_bits,
             k=bloom_k,
         )
+    for name in legacy_sidecars:
+        copy_tree(spark, _join(data_root, name), _join(root, gen, name))
     if pre_publish_validate is not None:
         try:
             if validate_takes_path:
@@ -1465,10 +1476,11 @@ def publish_generation(
 
 def copy_tree(spark: SparkSession, src: str, dst: str) -> bool:
     """Recursive copy through the paths' own filesystems (works across
-    schemes) — how a self-describing index's sidecar (``_stats`` with
-    its replay marker, ``_ref``) rides INTO a new generation so the
-    manifest flip publishes the WHOLE index atomically.  Returns False
-    if ``src`` does not exist (nothing to carry)."""
+    schemes) — how ``commit_parquet_generation`` carries a
+    self-describing index's sidecar (``_stats`` with its replay
+    marker, ``_ref``) INTO a new generation so the manifest flip
+    publishes the WHOLE index atomically.  Returns False if ``src``
+    does not exist (nothing to carry)."""
     jvm, fs_src = _fs_for(spark, src)
     _, fs_dst = _fs_for(spark, dst)
     spath = jvm.org.apache.hadoop.fs.Path(src)
@@ -1496,8 +1508,9 @@ def gc_generations(
     (``legacy_payload``) the pre-manifest flat hive partition
     directories at the root left behind by the FIRST manifest-based
     commit, and any named ``legacy_sidecars`` at the root (their live
-    copies now travel inside each generation).  Runs strictly after
-    the publish; a crash here costs storage, never correctness.
+    copies travel inside each generation: ``commit_parquet_generation``
+    copies them in before the publish).  Runs strictly after the
+    publish; a crash here costs storage, never correctness.
 
     ``keep_last`` is the GC GRACE WINDOW (Iceberg's
     ``expire_snapshots`` shape): retain the ``keep_last`` most recent

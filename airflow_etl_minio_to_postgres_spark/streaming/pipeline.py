@@ -36,6 +36,12 @@ from airflow_etl_minio_to_postgres_spark.sources.catalog import (
     raw_read_schema,
     restore_nanos_timestamps,
 )
+from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+    _fs_for,
+    _join,
+    commit_parquet_generation,
+    resolve_data_root,
+)
 
 _sink_counter = itertools.count()
 
@@ -82,12 +88,10 @@ class scaled_state_partitions:
         self._prev: str | None = None
 
     def _backlog_bytes(self) -> int:
-        jvm = self._spark.sparkContext._jvm
-        hconf = self._spark.sparkContext._jsc.hadoopConfiguration()
         total = 0
         for p in self._paths:
+            jvm, fs = _fs_for(self._spark, p)
             hpath = jvm.org.apache.hadoop.fs.Path(p)
-            fs = hpath.getFileSystem(hconf)
             if fs.exists(hpath):
                 total += int(fs.getContentSummary(hpath).getLength())
         return total
@@ -118,10 +122,8 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     "absent" — the silent-skip failure mode a dedup screen must not
     have (round-10 advisor finding).  This asks the exact question:
     does the path exist on the session's filesystem for that scheme."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    jvm, fs = _fs_for(spark, path)
+    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
 
 
 def _commit_token(checkpoint_path: str) -> str:
@@ -140,6 +142,47 @@ def _commit_token(checkpoint_path: str) -> str:
     import zlib
 
     return format(zlib.crc32(checkpoint_path.encode("utf-8")), "08x")
+
+
+def _write_batch_commit(
+    df: DataFrame,
+    path: str,
+    commit_id: str,
+    layout: str | None = None,
+    tasks: int | None = None,
+) -> None:
+    """Write one micro-batch as the ``_commit_id=<commit_id>``
+    partitions of ``path`` (under ``<layout>=<v>`` when given) with
+    dynamic partition overwrite — the streaming sinks' shared replay
+    mechanism: a crash-replayed batch rewrites exactly its own
+    partitions.  The commit id is stamped BEFORE the writer shuffle,
+    which sets the file count: with ``layout``, one repartition on it
+    (into ``tasks`` partitions when given), about one file per layout
+    value; without, ``tasks`` coalesces to that many files."""
+    df = df.withColumn("_commit_id", F.lit(commit_id))
+    if layout is not None:
+        df = df.repartition(*([int(tasks)] if tasks else []), layout)
+    elif tasks is not None:
+        df = df.coalesce(int(tasks))
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*([layout] if layout else []), "_commit_id")
+        .parquet(path)
+    )
+
+
+def _last_batch(path: str) -> tuple[str, int] | None:
+    """The ``(checkpoint token, batch_id)`` recorded by the
+    ``_last_batch`` marker a merging sink promotes with the table at
+    local ``path``, or ``None`` when there is no marker (a first merge
+    or a legacy table).  Each caller applies its own lineage policy."""
+    marker = os.path.join(path, "_last_batch")
+    if not os.path.exists(marker):
+        return None
+    with open(marker, encoding="utf-8") as f:
+        token, _, batch_id = f.read().strip().partition(":")
+    return token, int(batch_id)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,9 +493,8 @@ def _assert_not_legacy_silver(spark: SparkSession, out_path: str) -> None:
     check: fail with the migration pointer, never improvise.  One
     ``listStatus`` RPC on the session's filesystem (URI-correct, the
     ``_fs_exists`` precedent) — negligible per-batch cost."""
-    jvm = spark.sparkContext._jvm
+    jvm, fs = _fs_for(spark, out_path)
     hpath = jvm.org.apache.hadoop.fs.Path(out_path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     if not fs.exists(hpath):
         return
     for status in fs.listStatus(hpath):
@@ -474,13 +516,8 @@ def _silver_process_batch(
     from airflow_etl_minio_to_postgres_spark.plans.medallion import build_silver
 
     _assert_not_legacy_silver(batch_df.sparkSession, out_path)
-    (
-        build_silver(batch_df)
-        .withColumn("_commit_id", F.lit(f"{token}-{batch_id}"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_commit_id")
-        .parquet(out_path)
+    _write_batch_commit(
+        build_silver(batch_df), out_path, f"{token}-{batch_id}"
     )
 
 
@@ -575,12 +612,9 @@ def _rollup_process_batch(
     spark = batch_df.sparkSession
     # an interrupted swap would hide the table AND its marker: the batch
     # would merge as a first write and drop every earlier total
-    marker = os.path.join(_recover_swap(out_path), "_last_batch")
-    if os.path.exists(marker):
-        with open(marker, encoding="utf-8") as f:
-            last_token, _, last_id = f.read().strip().partition(":")
-        if last_token == token and batch_id <= int(last_id):
-            return  # crash-replayed batch: already merged, no-op
+    last = _last_batch(_recover_swap(out_path))
+    if last is not None and last[0] == token and batch_id <= last[1]:
+        return  # crash-replayed batch: already merged, no-op
     # The materialized rollup stores the value sum as EXACT bigint
     # micro-units: merge-summing double partials across restarts and
     # micro-batch splits would accumulate order-dependent float
@@ -750,10 +784,6 @@ def near_dup_store_scan(
     :func:`compact_near_dup_store` commit the store lives under the
     current generation (one ``listStatus`` to resolve; a
     never-compacted store reads as before)."""
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
-
     store = spark.read.parquet(resolve_data_root(spark, store_path))
     required = {"band_key", "band_bucket", "_commit_id"}
     if not required <= set(store.columns):
@@ -997,9 +1027,6 @@ def _near_dup_process_batch(
         _minhash_table,
         band_keys_expr,
     )
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
 
     spark = batch_df.sparkSession
     # post-compaction the store lives under the current generation; the
@@ -1043,29 +1070,22 @@ def _near_dup_process_batch(
     # incidental).  The drop set is id-only.
     dropped_ids = dropped.distinct().persist()
     dropped_ids.count()
-    (
-        batch_df.join(dropped_ids, id_col, "left_anti")
-        .withColumn("_commit_id", F.lit(commit_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_commit_id")
-        .parquet(out_path)
+    _write_batch_commit(
+        batch_df.join(dropped_ids, id_col, "left_anti"), out_path, commit_id
     )
-    (
+    # One writer task per band bucket: without the writer's shuffle
+    # every upstream task writes a sliver into every bucket directory —
+    # up to (shuffle partitions x store_partitions) tiny files PER
+    # BATCH (measured 2x the whole sink's wall-clock at sf0.1).  The
+    # shuffled rows are the batch's accepted signatures only.
+    _write_batch_commit(
         banded.join(dropped_ids, id_col, "left_anti")
         .join(sets, id_col)
-        .withColumn("band_bucket", bucket_of)
-        .withColumn("_commit_id", F.lit(commit_id))
-        # One writer task per band bucket: without this shuffle every
-        # upstream task writes a sliver into every bucket directory —
-        # up to (shuffle partitions x store_partitions) tiny files PER
-        # BATCH (measured 2x the whole sink's wall-clock at sf0.1).
-        # The shuffled rows are the batch's accepted signatures only.
-        .repartition(int(store_partitions), "band_bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("band_bucket", "_commit_id")
-        .parquet(store_path)
+        .withColumn("band_bucket", bucket_of),
+        store_path,
+        commit_id,
+        layout="band_bucket",
+        tasks=store_partitions,
     )
     dropped_ids.unpersist()
     sig.unpersist()
@@ -1207,22 +1227,16 @@ def _ivf_index_process_batch(
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
         ivf_assign,
     )
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
 
     assigned = ivf_assign(batch_df, centroids, id_col, vec_col)
-    (
-        batch_df.join(assigned, id_col)
-        .withColumn("_commit_id", F.lit(f"{token}-{batch_id}"))
-        .repartition("cid")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+    _write_batch_commit(
+        batch_df.join(assigned, id_col),
         # batches land in the index's CURRENT generation: after a
         # manifest-based compaction the root holds only the manifest
         # and generation prefixes, and serving resolves the same way
-        .partitionBy("cid", "_commit_id")
-        .parquet(resolve_data_root(batch_df.sparkSession, index_path))
+        resolve_data_root(batch_df.sparkSession, index_path),
+        f"{token}-{batch_id}",
+        layout="cid",
     )
 
 
@@ -1313,9 +1327,6 @@ def _inv_index_process_batch(
         _recover_swap,
         _rewrite_in_place,
     )
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
 
     spark = batch_df.sparkSession
 
@@ -1336,27 +1347,22 @@ def _inv_index_process_batch(
     stats_path = _recover_swap(
         os.path.join(_local_path(index_path), "_stats")
     )
-    marker = os.path.join(stats_path, "_last_batch")
     # Lineage guard BEFORE any write: the marker only disambiguates
     # replays within ONE checkpoint lineage.  A NEW checkpoint pointed
     # at an existing index would silently double-count BOTH the
     # postings (old _commit_id partitions are never overwritten by the
     # new token's commit ids) and the sidecar stats partials — refuse
     # loudly instead, the drift monitor's changed-reference stance.
-    last_id_merged = -1
-    if os.path.exists(marker):
-        with open(marker, encoding="utf-8") as f:
-            last_token, _, last_id = f.read().strip().partition(":")
-        if last_token != token:
-            raise ValueError(
-                f"inverted index at {index_path!r} was maintained under "
-                f"a different checkpoint lineage (marker token "
-                f"{last_token!r}, this stream's token {token!r}) — "
-                "merging would double-count postings and sidecar "
-                "stats.  Resume the original checkpoint, or rebuild "
-                "with write_inverted_index and a fresh checkpoint."
-            )
-        last_id_merged = int(last_id)
+    last_token, last_id_merged = _last_batch(stats_path) or (token, -1)
+    if last_token != token:
+        raise ValueError(
+            f"inverted index at {index_path!r} was maintained under "
+            f"a different checkpoint lineage (marker token "
+            f"{last_token!r}, this stream's token {token!r}) — "
+            "merging would double-count postings and sidecar "
+            "stats.  Resume the original checkpoint, or rebuild "
+            "with write_inverted_index and a fresh checkpoint."
+        )
     if batch_id <= last_id_merged:
         # crash-replayed batch: the marker is promoted atomically WITH
         # the stats, only after the postings commit — so both the
@@ -1376,21 +1382,16 @@ def _inv_index_process_batch(
         .groupBy(id_col, "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("_dl").alias("dl"))
     )
-    postings = (
-        tf.withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64(F.col("term")), F.lit(int(n_buckets))).cast(
-                "int"
-            ),
-        )
-        .withColumn("_commit_id", F.lit(f"{token}-{batch_id}"))
-        .repartition(int(n_buckets), "term_bucket")
+    postings = tf.withColumn(
+        "term_bucket",
+        F.pmod(F.xxhash64(F.col("term")), F.lit(int(n_buckets))).cast("int"),
     )
-    (
-        postings.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("term_bucket", "_commit_id")
-        .parquet(index_path)
+    _write_batch_commit(
+        postings,
+        index_path,
+        f"{token}-{batch_id}",
+        layout="term_bucket",
+        tasks=n_buckets,
     )
 
     partial = d.agg(
@@ -1424,6 +1425,48 @@ def _inv_index_process_batch(
     )
 
 
+def _fold_commits(
+    spark: SparkSession,
+    root: str,
+    df: DataFrame,
+    layout: str | None,
+    compact_seq: int,
+    keep_last: int,
+    sidecar: str | None = None,
+) -> int:
+    """The compactors' shared fold: rewrite ``df`` (the current
+    generation of ``root``) with its per-batch ``_commit_id``
+    partitions folded into ONE ``compact-<seq>`` commit, one writer
+    task (about one file) per ``layout`` partition — one file in all
+    when there is no layout column — and commit it as the next
+    generation through :func:`commit_parquet_generation`, carrying
+    ``sidecar`` into it.  A frame without ``_commit_id`` (a
+    batch-built layout) is simply refragmented.  Returns the compacted
+    row count."""
+    keys = [layout] if layout else []
+    compacted = df.select(
+        *[c for c in df.columns if c not in (*keys, "_commit_id")], *keys
+    )
+    part_cols = list(keys)
+    if "_commit_id" in df.columns:
+        compacted = compacted.withColumn(
+            "_commit_id", F.lit(f"compact-{int(compact_seq)}")
+        )
+        part_cols.append("_commit_id")
+    compacted = (
+        compacted.repartition(layout) if layout else compacted.coalesce(1)
+    )
+    seq = commit_parquet_generation(
+        spark,
+        compacted,
+        root,
+        keep_last=keep_last,
+        partition_by=tuple(part_cols),
+        legacy_sidecars=(sidecar,) if sidecar else (),
+    )
+    return spark.read.parquet(_join(root, f"_gen-{seq:06d}")).count()
+
+
 def compact_ivf_index(
     spark: SparkSession,
     index_path: str,
@@ -1450,61 +1493,28 @@ def compact_ivf_index(
     construction.  Also accepts a batch :func:`write_ivf_index` layout
     (no ``_commit_id``) and simply refragments it per cell.
 
-    OBJECT-STORE CAPABLE — the family's first manifest-committed
-    maintenance op (``sources/manifest.py``): the compacted layout
-    lands in a NEW immutable ``_gen-<seq>`` prefix, a versioned manifest
-    object is atomically PUBLISHED (single PUT, never a rename — the
-    Delta-log shape, so ``file://`` URIs, HDFS, and s3a all work with
-    no local-FS downgrade), and unreferenced generations are GC'd
-    strictly after the publish.  A crash at ANY point leaves a
-    servable index: pre-publish, readers resolve the old generation
-    (the orphan prefix is collected next run); post-publish/pre-GC,
-    readers already resolve the new one.  The serving paths
-    (``ivf_topk_indexed`` / ``ivf_topk_batch``) and the streaming
-    maintainer resolve the manifest on every call; an index that never
-    compacted has no manifest and reads exactly as before.
-    ``keep_last`` is the GC grace window (retain the N most recent
-    published generations for long-running readers; default 1).
-    Idempotent in content.  Returns the index row count."""
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        _join,
-        gc_generations,
-        next_seq,
-        publish_generation,
-        resolve_data_root,
-    )
-
-    data_root = resolve_data_root(spark, index_path)
-    df = spark.read.parquet(data_root)
+    OBJECT-STORE CAPABLE — the compacted layout is committed with
+    :func:`...sources.manifest.commit_parquet_generation` (``file://``
+    URIs, HDFS and s3a alike): it lands in a NEW immutable
+    ``_gen-<seq>`` prefix, a versioned manifest is atomically
+    published, and unreferenced generations are GC'd strictly after
+    the publish.  A crash at ANY point leaves a servable index:
+    pre-publish, readers resolve the old generation (the orphan prefix
+    is collected next run); post-publish/pre-GC, readers already
+    resolve the new one.  The serving paths (``ivf_topk_indexed`` /
+    ``ivf_topk_batch``) and the streaming maintainer resolve the
+    manifest on every call; an index that never compacted has no
+    manifest and reads exactly as before.  ``keep_last`` is the GC
+    grace window (retain the N most recent published generations for
+    long-running readers; default 1).  Idempotent in content.  Returns
+    the index row count."""
+    df = spark.read.parquet(resolve_data_root(spark, index_path))
     if "cid" not in df.columns:
         raise ValueError(
             f"index at {index_path!r} has columns {sorted(df.columns)} — "
             "not an IVF serving layout (no cid partition column)"
         )
-    has_commits = "_commit_id" in df.columns
-    data_cols = [
-        c for c in df.columns if c not in ("cid", "_commit_id")
-    ]
-    compacted = df.select(*data_cols, "cid")
-    part_cols = ["cid"]
-    if has_commits:
-        compacted = compacted.withColumn(
-            "_commit_id", F.lit(f"compact-{int(compact_seq)}")
-        )
-        part_cols.append("_commit_id")
-    # one shuffle keyed on the partition column -> one writer task
-    # (about one file) per cell
-    compacted = compacted.repartition("cid")
-    seq = next_seq(spark, index_path)
-    gen = f"_gen-{seq:06d}"
-    (
-        compacted.write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(_join(index_path, gen))
-    )
-    publish_generation(spark, index_path, seq, gen)
-    gc_generations(spark, index_path, seq, gen, keep_last=keep_last)
-    return spark.read.parquet(_join(index_path, gen)).count()
+    return _fold_commits(spark, index_path, df, "cid", compact_seq, keep_last)
 
 
 def compact_inverted_index(
@@ -1523,72 +1533,29 @@ def compact_inverted_index(
     :func:`...functions.text.write_inverted_index` layout (no
     ``_commit_id``) and simply refragments it per bucket.
 
-    OBJECT-STORE CAPABLE — the manifest protocol's second adopter
-    (``sources/manifest.py``; :func:`compact_ivf_index` is the dense
-    twin), with the adopter-specific wrinkle the RUNBOOK prescribes:
-    this index is SELF-DESCRIBING via its ``_stats`` sidecar (merged
+    OBJECT-STORE CAPABLE, committed like :func:`compact_ivf_index`.
+    This index is SELF-DESCRIBING via its ``_stats`` sidecar (merged
     corpus stats + the maintainer's replay/lineage marker), so the
-    sidecar is COPIED INTO the new ``_gen-<seq>`` prefix before the
-    manifest publish — one pointer flip commits postings and stats
-    together, and the serving/maintainer paths find both under the
-    resolved generation.  GC then also collects the superseded
-    root-level ``_stats`` left behind by the first commit.  Crash
-    windows identical to the dense twin: pre-publish, readers stay on
-    the old generation; post-publish/pre-GC, stale prefixes are
-    unreferenced storage for the next run.  ``keep_last`` is the GC
-    grace window (retain the N most recent published generations for
-    long-running readers; default 1).  Idempotent in content.
-    Returns the postings row count."""
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        _join,
-        copy_tree,
-        gc_generations,
-        next_seq,
-        publish_generation,
-        resolve_data_root,
-    )
-
-    data_root = resolve_data_root(spark, index_path)
-    df = spark.read.parquet(data_root)
+    commit carries the sidecar INTO the new ``_gen-<seq>`` prefix
+    before the manifest publish (``legacy_sidecars``) — one pointer
+    flip commits postings and stats together, and the serving and
+    maintainer paths find both under the resolved generation.  GC then
+    also collects the superseded root-level ``_stats`` left behind by
+    the first commit.  ``keep_last`` is the GC grace window (retain
+    the N most recent published generations for long-running readers;
+    default 1).  Idempotent in content.  Returns the postings row
+    count."""
+    df = spark.read.parquet(resolve_data_root(spark, index_path))
     if "term_bucket" not in df.columns:
         raise ValueError(
             f"index at {index_path!r} has columns {sorted(df.columns)} — "
             "not an inverted-index layout (no term_bucket partition "
             "column)"
         )
-    has_commits = "_commit_id" in df.columns
-    data_cols = [
-        c for c in df.columns if c not in ("term_bucket", "_commit_id")
-    ]
-    compacted = df.select(*data_cols, "term_bucket")
-    part_cols = ["term_bucket"]
-    if has_commits:
-        compacted = compacted.withColumn(
-            "_commit_id", F.lit(f"compact-{int(compact_seq)}")
-        )
-        part_cols.append("_commit_id")
-    compacted = compacted.repartition("term_bucket")
-
-    seq = next_seq(spark, index_path)
-    gen = f"_gen-{seq:06d}"
-    (
-        compacted.write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(_join(index_path, gen))
+    return _fold_commits(
+        spark, index_path, df, "term_bucket", compact_seq, keep_last,
+        sidecar="_stats",
     )
-    # the sidecar (merged stats + replay/lineage marker) rides INTO the
-    # generation, so the manifest flip publishes the whole index
-    copy_tree(
-        spark,
-        _join(data_root, "_stats"),
-        _join(index_path, gen, "_stats"),
-    )
-    publish_generation(spark, index_path, seq, gen)
-    gc_generations(
-        spark, index_path, seq, gen, legacy_sidecars=("_stats",),
-        keep_last=keep_last,
-    )
-    return spark.read.parquet(_join(index_path, gen)).count()
 
 
 def compact_near_dup_store(
@@ -1615,52 +1582,24 @@ def compact_near_dup_store(
     compacting.  ``availableNow`` runs terminate cleanly by
     construction, so the natural slot is between scheduled backfills.
 
-    OBJECT-STORE CAPABLE — the manifest protocol's fourth adopter
-    (``sources/manifest.py``): the compacted store lands in a new
-    ``_gen-<seq>`` prefix PRESERVING the ``band_bucket`` partition
-    level the screen prunes on, the versioned manifest is the atomic
-    publish, and GC runs strictly after (``keep_last`` = grace
-    window).  The store scan and the streaming sink resolve the
-    current generation per call; a never-compacted store has no
-    manifest and reads as before.  Idempotent in content:
-    re-compacting a compacted store rewrites the same rows.  Returns
-    the store row count."""
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        _join,
-        gc_generations,
-        next_seq,
-        publish_generation,
-        resolve_data_root,
-    )
-
-    data_root = resolve_data_root(spark, store_path)
-    df = spark.read.parquet(data_root)
-    required = {"band_key", "band_bucket", "_commit_id"}
-    if not required <= set(df.columns):
+    OBJECT-STORE CAPABLE, committed like :func:`compact_ivf_index`:
+    the compacted store lands in a new ``_gen-<seq>`` prefix
+    PRESERVING the ``band_bucket`` partition level the screen prunes
+    on, the versioned manifest is the atomic publish, and GC runs
+    strictly after (``keep_last`` = grace window).  The store scan and
+    the streaming sink resolve the current generation per call; a
+    never-compacted store has no manifest and reads as before.
+    Idempotent in content: re-compacting a compacted store rewrites
+    the same rows.  Returns the store row count."""
+    df = spark.read.parquet(resolve_data_root(spark, store_path))
+    if not {"band_key", "band_bucket", "_commit_id"} <= set(df.columns):
         raise ValueError(
             f"store at {store_path!r} is not the band-partitioned layout "
             "(run migrate_legacy_near_dup_store first)"
         )
-    data_cols = [
-        c for c in df.columns if c not in ("band_bucket", "_commit_id")
-    ]
-    compacted = (
-        df.select(*data_cols, "band_bucket")
-        .withColumn("_commit_id", F.lit(f"compact-{int(compact_seq)}"))
-        # one shuffle keyed on the partition column -> one writer task
-        # (one file) per band bucket
-        .repartition("band_bucket")
+    return _fold_commits(
+        spark, store_path, df, "band_bucket", compact_seq, keep_last
     )
-    seq = next_seq(spark, store_path)
-    gen = f"_gen-{seq:06d}"
-    (
-        compacted.write.mode("overwrite")
-        .partitionBy("band_bucket", "_commit_id")
-        .parquet(_join(store_path, gen))
-    )
-    publish_generation(spark, store_path, seq, gen)
-    gc_generations(spark, store_path, seq, gen, keep_last=keep_last)
-    return spark.read.parquet(_join(store_path, gen)).count()
 
 
 def migrate_legacy_rollup(spark: SparkSession, out_path: str) -> int:
@@ -1794,9 +1733,6 @@ def streaming_drift_monitor(
         psi_bucket_counts,
         psi_ref_cuts,
     )
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
 
     gcols = list(by or [])
     # manifest-aware (and scheme-agnostic — the whole monitor family
@@ -1871,10 +1807,6 @@ def _drift_process_batch(
         psi_bucket_counts,
     )
 
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
-
     gcols = list(by or [])
     spark = batch_df.sparkSession
     # identity for a pre-resolved generation path; resolves the current
@@ -1888,18 +1820,10 @@ def _drift_process_batch(
     c = batch_df.select(*gcols, F.col(value_col).alias("_v")).where(
         F.col("_v").isNotNull()
     )
-    counts = (
-        psi_bucket_counts(c, cuts, "_cc", group_cols=gcols or None)
-        .withColumn("_batch_id", F.lit(int(batch_id)))
-        .withColumn("_commit_id", F.lit(f"{token}-{batch_id}"))
-    )
-    (
-        counts.coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_commit_id")
-        .parquet(out_path)
-    )
+    counts = psi_bucket_counts(
+        c, cuts, "_cc", group_cols=gcols or None
+    ).withColumn("_batch_id", F.lit(int(batch_id)))
+    _write_batch_commit(counts, out_path, f"{token}-{batch_id}", tasks=1)
 
 
 def compact_drift_log(
@@ -1921,52 +1845,21 @@ def compact_drift_log(
     because a pending replay's dynamic overwrite would duplicate
     rather than replace rows folded into the compact commit.
 
-    OBJECT-STORE CAPABLE — the manifest protocol's third adopter
-    (``sources/manifest.py``; the ``compact_inverted_index`` sidecar
-    recipe: copy ``_ref`` into the ``_gen-<seq>`` prefix, publish the
-    manifest, GC the superseded root sidecar).  The monitor, the
-    per-batch sink, and :func:`drift_report` all resolve the current
-    generation per call; ``keep_last`` is the GC grace window.
-    Idempotent in content.  Returns the log row count."""
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        _join,
-        copy_tree,
-        gc_generations,
-        next_seq,
-        publish_generation,
-        resolve_data_root,
-    )
-
-    data_root = resolve_data_root(spark, out_path)
-    df = spark.read.parquet(data_root)
+    OBJECT-STORE CAPABLE, committed like :func:`compact_inverted_index`
+    (``_ref`` is carried into the ``_gen-<seq>`` prefix before the
+    publish, and GC collects the superseded root sidecar).  The
+    monitor, the per-batch sink, and :func:`drift_report` all resolve
+    the current generation per call; ``keep_last`` is the GC grace
+    window.  Idempotent in content.  Returns the log row count."""
+    df = spark.read.parquet(resolve_data_root(spark, out_path))
     if "_batch_id" not in df.columns or "_commit_id" not in df.columns:
         raise ValueError(
             f"compact_drift_log: {out_path!r} has columns "
             f"{sorted(df.columns)} — not a streaming_drift_monitor log"
         )
-    data_cols = [c for c in df.columns if c != "_commit_id"]
-    compacted = (
-        df.select(*data_cols)
-        .withColumn("_commit_id", F.lit(f"compact-{int(compact_seq)}"))
-        .coalesce(1)
+    return _fold_commits(
+        spark, out_path, df, None, compact_seq, keep_last, sidecar="_ref"
     )
-    seq = next_seq(spark, out_path)
-    gen = f"_gen-{seq:06d}"
-    (
-        compacted.write.mode("overwrite")
-        .partitionBy("_commit_id")
-        .parquet(_join(out_path, gen))
-    )
-    # the frozen reference rides INTO the generation the manifest flips
-    copy_tree(
-        spark, _join(data_root, "_ref"), _join(out_path, gen, "_ref")
-    )
-    publish_generation(spark, out_path, seq, gen)
-    gc_generations(
-        spark, out_path, seq, gen, legacy_sidecars=("_ref",),
-        keep_last=keep_last,
-    )
-    return spark.read.parquet(_join(out_path, gen)).count()
 
 
 def drift_report(
@@ -1997,17 +1890,11 @@ def drift_report(
     from airflow_etl_minio_to_postgres_spark.operators.audit import (
         psi_parts,
     )
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
 
     out_local = resolve_data_root(spark, out_path)
-    jvm = spark.sparkContext._jvm
-    gp = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(out_local, "_commit_id=*", "*")
-    )
-    fs = gp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    matches = fs.globStatus(gp)
+    glob = os.path.join(out_local, "_commit_id=*", "*")
+    jvm, fs = _fs_for(spark, glob)
+    matches = fs.globStatus(jvm.org.apache.hadoop.fs.Path(glob))
     if matches is None or len(matches) == 0:
         # a sidecar-only directory would otherwise fail schema
         # inference with an error pointing nowhere near the cause

@@ -2724,6 +2724,39 @@ def test_maintenance_cycle_compact_fsck_view_and_wedge_guard(spark, tmp_path):
         )
 
 
+def test_commit_carries_legacy_sidecars_into_generation(spark, tmp_path):
+    """``legacy_sidecars`` rides a table's sidecar directory INTO each
+    committed generation (copied from the current data root before the
+    publish), and the first commit's GC drops the superseded root copy
+    — the path every streamed-index compactor commits through."""
+    from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
+
+    root = str(tmp_path / "t")
+    spark.range(10).write.parquet(root)
+    spark.range(3).write.parquet(os.path.join(root, "_side"))
+
+    seq = mf.commit_parquet_generation(
+        spark, spark.read.parquet(root), root, legacy_sidecars=("_side",)
+    )
+    gen = os.path.join(root, f"_gen-{seq:06d}")
+    assert spark.read.parquet(os.path.join(gen, "_side")).count() == 3
+    assert "_side" not in os.listdir(root)
+    assert mf.read_resolved(spark, root).count() == 10
+
+    # the next commit (over a URI) copies from the CURRENT generation
+    seq2 = mf.commit_parquet_generation(
+        spark,
+        mf.read_resolved(spark, root),
+        "file://" + root,
+        legacy_sidecars=("_side",),
+    )
+    gen2 = os.path.join(root, f"_gen-{seq2:06d}")
+    assert spark.read.parquet(os.path.join(gen2, "_side")).count() == 3
+    assert sorted(n for n in os.listdir(root) if n.startswith("_gen-")) == [
+        f"_gen-{seq2:06d}"
+    ]
+
+
 def test_zone_map_scan_prunes_files_and_matches_full_scan(spark, tmp_path):
     """Per-file min/max sidecar (manifest.write_zone_maps) + the
     skipping reader (manifest.zone_map_scan): a range-clustered commit
@@ -3242,9 +3275,10 @@ def test_fsck_detects_kind_regression_to_generic(spark, tmp_path):
 
     # simulate the broken compaction: recommit the index WITHOUT its
     # layout column, previous (healthy) generation retained.
-    # allow_column_drop bypasses the commit-side schema guard — real
-    # index compactors publish through publish_generation directly,
-    # which has no such guard, so fsck is the net that must catch it
+    # allow_column_drop bypasses the commit-side schema guard that the
+    # index compactors also commit through (commit_parquet_generation)
+    # — a caller that passes it gets no such guard, so fsck is the net
+    # that must catch it
     broken = spark.read.parquet(
         mf.resolve_data_root(spark, idx)
     ).drop("term_bucket")
