@@ -82,6 +82,20 @@ def _fs_for(spark: SparkSession, path: str):
     return jvm, fs
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Existence probe on the filesystem SPARK writes to (Hadoop
+    FileSystem API of the path's own scheme), never the driver's local
+    one: ``os.path.exists`` on a URI path (``s3a://``, even
+    ``file://``) returns False forever, and a broad read-and-catch
+    treats ANY ``AnalysisException`` (schema corruption, a momentarily
+    unreadable dir, a misconfigured path) as "absent" — the silent-skip
+    failure mode a dedup screen or an fsck must not have.  This asks
+    the exact question: does the path exist on the session's
+    filesystem for that scheme."""
+    jvm, fs = _fs_for(spark, path)
+    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
+
+
 def _list_names(spark: SparkSession, path: str) -> list[str]:
     jvm, fs = _fs_for(spark, path)
     hpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -191,7 +205,6 @@ def snapshots(spark: SparkSession, root: str) -> list[dict]:
     manifest-dir listing plus one existence probe per retained
     manifest — metadata-sized.  Corrupt (crash-stranded) manifests are
     not snapshots; ``fsck_index`` reports those."""
-    jvm, fs = _fs_for(spark, root)
     out = []
     for seq in _manifest_seqs(spark, root):
         payload = _read_manifest(spark, root, seq)
@@ -202,11 +215,7 @@ def snapshots(spark: SparkSession, root: str) -> list[dict]:
             {
                 "seq": seq,
                 "generation": gen,
-                "exists": bool(
-                    fs.exists(
-                        jvm.org.apache.hadoop.fs.Path(_join(root, gen))
-                    )
-                ),
+                "exists": _exists(spark, _join(root, gen)),
             }
         )
     return out
@@ -247,8 +256,7 @@ def read_snapshot(spark: SparkSession, root: str, seq: int):
             f"known seqs: {known}{hint}"
         )
     gen = str(payload["generation"])
-    jvm, fs = _fs_for(spark, root)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(_join(root, gen))):
+    if not _exists(spark, _join(root, gen)):
         raise FileNotFoundError(
             f"snapshot seq {seq} of {root!r} was published but its "
             f"generation {gen!r} has been GC'd (outside the keep_last "
@@ -447,6 +455,38 @@ def _data_files(spark: SparkSession, path: str) -> set[str]:
     return out
 
 
+def _file_col(gen_path: str):
+    """The sidecars' ``file`` column: each row's data file, RELATIVE to
+    the generation root, from the scan's hidden file-path metadata.
+    Greedy prefix: the LAST occurrence of the generation dir bounds the
+    relative path (a root that itself contains the same segment
+    upstream must not shift the boundary; nothing INSIDE a generation
+    can collide — hive dirs carry '=', sidecars are '_'-prefixed)."""
+    from pyspark.sql import functions as F
+
+    gen_name = gen_path.rstrip("/").rsplit("/", 1)[-1]
+    return F.regexp_extract(
+        F.col("_metadata.file_path"),
+        ".*" + re.escape("/" + gen_name + "/") + "(.*)$",
+        1,
+    ).alias("file")
+
+
+def _files_relation(
+    spark: SparkSession, names: list[str], tail: str = "", cols: str = "file"
+):
+    """The data-file inventory ``names`` (non-empty — an empty VALUES
+    list is a parse error) as a SQL ``VALUES`` LocalRelation, one row
+    ``('<name>'<tail>)`` per file with columns ``cols`` — all JVM: a
+    Python-sourced DataFrame (``createDataFrame``) would drag a
+    Python-runner stage into the sidecar write and cost seconds of
+    worker spin-up for a handful of rows."""
+    values = ", ".join(
+        "('" + n.replace("'", "''") + "'" + tail + ")" for n in names
+    )
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
+
+
 def write_zone_maps(
     spark: SparkSession, gen_path: str, zone_map_cols: tuple[str, ...]
 ) -> str:
@@ -489,22 +529,12 @@ def write_zone_maps(
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(gen_path)
-    gen_name = gen_path.rstrip("/").rsplit("/", 1)[-1]
-    # greedy prefix: the LAST occurrence of the generation dir bounds
-    # the relative path (a root that itself contains the same segment
-    # upstream must not shift the boundary; nothing INSIDE a generation
-    # can collide — hive dirs carry '=', sidecars are '_'-prefixed)
-    rel = F.regexp_extract(
-        F.col("_metadata.file_path"),
-        ".*" + re.escape("/" + gen_name + "/") + "(.*)$",
-        1,
-    ).alias("file")
     aggs = []
     for c in zone_map_cols:
         aggs.append(F.min(c).alias(f"{c}__min"))
         aggs.append(F.max(c).alias(f"{c}__max"))
     stats = (
-        df.select(rel, *[F.col(c) for c in zone_map_cols])
+        df.select(_file_col(gen_path), *[F.col(c) for c in zone_map_cols])
         .groupBy("file")
         .agg(*aggs)
     )
@@ -515,15 +545,10 @@ def write_zone_maps(
     # (conservatively never skipped, harmlessly — they have no rows)
     # and fsck's inventory check stays exact, never a false positive.
     # The file list enters as a SQL VALUES LocalRelation and the pad
-    # is a left-anti join — all JVM: a Python-sourced DataFrame
-    # (createDataFrame) would drag a Python-runner stage into the
-    # write and cost seconds of worker spin-up for 8 rows.
+    # is a left-anti join — all JVM.
     names = sorted(_data_files(spark, gen_path))
     if names:
-        values = ", ".join(
-            "('" + n.replace("'", "''") + "')" for n in names
-        )
-        all_files = spark.sql(f"SELECT * FROM VALUES {values} AS t(file)")
+        all_files = _files_relation(spark, names)
         null_stats = [
             F.lit(None).cast(f.dataType).alias(f.name)
             for f in stats.schema.fields
@@ -547,10 +572,11 @@ def zone_map_scan(
     root: str,
     ranges: dict,
 ):
-    """File-skipping read of a manifest-committed table: resolve the
-    current generation, prune its file list by the ``_zonemap``
-    sidecar, scan only the surviving files — the query-side half of
-    :func:`write_zone_maps`.
+    """File-skipping read of a manifest-committed table by RANGES —
+    :func:`skipping_scan` with only the ``_zonemap`` predicate family:
+    resolve the current generation, prune its file list by the
+    ``_zonemap`` sidecar, scan only the surviving files — the
+    query-side half of :func:`write_zone_maps`.
 
     ``ranges`` maps column → ``(lo, hi)`` (either side ``None`` for a
     one-sided bound).  A file survives when every bounded column's
@@ -573,33 +599,7 @@ def zone_map_scan(
     set returns an empty DataFrame with the table's schema without
     touching any data file.  ``basePath`` keeps hive partition columns
     intact when the generation is partitioned."""
-    from pyspark.sql import functions as F
-
-    data_root = resolve_data_root(spark, root)
-    full = spark.read.option("basePath", data_root).parquet(data_root)
-    dtypes = dict(full.dtypes)
-    unknown = [c for c in ranges if c not in dtypes]
-    if unknown:
-        raise ValueError(
-            f"zone_map_scan: range column(s) {unknown} not in table "
-            f"schema {sorted(dtypes)}"
-        )
-    pred = F.lit(True)
-    for c, (lo, hi) in ranges.items():
-        if lo is not None:
-            pred = pred & (F.col(c) >= F.lit(lo).cast(dtypes[c]))
-        if hi is not None:
-            pred = pred & (F.col(c) <= F.lit(hi).cast(dtypes[c]))
-    kept = _zone_kept_files(spark, data_root, ranges, dtypes)
-    if kept is None:
-        return full.where(pred)
-    if not kept:
-        return full.where(F.lit(False))
-    return (
-        spark.read.option("basePath", data_root)
-        .parquet(*[_join(data_root, f) for f in sorted(kept)])
-        .where(pred)
-    )
+    return skipping_scan(spark, root, ranges=ranges)
 
 
 def _zone_kept_files(
@@ -608,14 +608,12 @@ def _zone_kept_files(
     """Survivor set of the ``_zonemap`` overlap test — ``None`` when
     the generation has no sidecar (no pruning information: the caller
     falls back to the full scan), else the set of relative file paths
-    whose [min, max] intervals overlap every bounded range.  The
-    shared planning core of :func:`zone_map_scan` and
-    :func:`skipping_scan`."""
+    whose [min, max] intervals overlap every bounded range — the range
+    half of :func:`skipping_scan`'s planning."""
     from pyspark.sql import functions as F
 
-    jvm, fs = _fs_for(spark, data_root)
     zm_path = _join(data_root, ZONE_MAP_DIR)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(zm_path)):
+    if not _exists(spark, zm_path):
         return None
     zm = spark.read.parquet(zm_path)
     zm_cols = set(zm.columns)
@@ -688,12 +686,7 @@ def write_bloom_filters(
             f"write_bloom_filters: column(s) {missing} not in generation "
             f"schema {sorted(df.columns)}"
         )
-    gen_name = gen_path.rstrip("/").rsplit("/", 1)[-1]
-    rel = F.regexp_extract(
-        F.col("_metadata.file_path"),
-        ".*" + re.escape("/" + gen_name + "/") + "(.*)$",
-        1,
-    ).alias("file")
+    rel = _file_col(gen_path)
     parts = []
     for c in bloom_cols:
         pos = F.explode(
@@ -731,13 +724,9 @@ def write_bloom_filters(
     )
     names = sorted(_data_files(spark, gen_path))
     if names:
-        inv_vals = ", ".join(
-            "('" + n.replace("'", "''") + "', '', -1L, 0L)" for n in names
-        )
         sentinels = sentinels.unionByName(
-            spark.sql(
-                f"SELECT * FROM VALUES {inv_vals} "
-                "AS t(file, col, word_idx, word)"
+            _files_relation(
+                spark, names, ", '', -1L, 0L", "file, col, word_idx, word"
             )
         )
     bl_path = _join(gen_path, BLOOM_DIR)
@@ -800,7 +789,8 @@ def bloom_point_scan(
     values: list,
 ):
     """Point-lookup read of a manifest-committed table through its
-    ``_bloom`` sidecar: resolve the current generation, keep only the
+    ``_bloom`` sidecar — :func:`skipping_scan` with one key column:
+    resolve the current generation, keep only the
     files whose Bloom filter claims AT LEAST ONE of ``values``, scan
     those, and RE-APPLY the ``isin`` predicate — the filter is a
     pruning hint with false positives, never the filter itself, so
@@ -815,8 +805,8 @@ def bloom_point_scan(
     ``xxhash64`` at the column's native type — hash identity with
     the writer is by construction, not convention.  The survivor
     list is collected driver-side (file-count-sized planning
-    metadata, the Delta add-file-replay shape).  Fallbacks mirror
-    :func:`zone_map_scan`: no sidecar, or no filter for ``column``
+    metadata, the Delta add-file-replay shape).  Fallbacks are
+    :func:`skipping_scan`'s: no sidecar, or no filter for ``column``
     (it wasn't in ``bloom_cols``) → full scan with the predicate; a
     column absent from the TABLE raises; ``None`` values are dropped
     (an equality probe never matches null — SQL semantics, and the
@@ -826,33 +816,7 @@ def bloom_point_scan(
     condition set (k conditions per value) — batches of key lookups
     are the use case, not semi-joins; join against the table for
     row-set-sized probes."""
-    from pyspark.sql import functions as F
-
-    data_root = resolve_data_root(spark, root)
-    full = spark.read.option("basePath", data_root).parquet(data_root)
-    dtypes = dict(full.dtypes)
-    if column not in dtypes:
-        raise ValueError(
-            f"bloom_point_scan: column {column!r} not in table schema "
-            f"{sorted(dtypes)}"
-        )
-    # None never matches an equality probe (SQL semantics: col = NULL
-    # is null, and the writer set no bits for null values) — drop it
-    # here rather than crash the position computation on a null hash
-    values = [v for v in values if v is not None]
-    pred = F.col(column).isin(values) if values else F.lit(False)
-    if not values:
-        return full.where(pred)
-    kept = _bloom_kept_files(spark, data_root, column, values, dtypes)
-    if kept is None:
-        return full.where(pred)
-    if not kept:
-        return full.where(F.lit(False))
-    return (
-        spark.read.option("basePath", data_root)
-        .parquet(*[_join(data_root, f) for f in sorted(kept)])
-        .where(pred)
-    )
+    return skipping_scan(spark, root, keys={column: values})
 
 
 def _bloom_kept_files(
@@ -872,17 +836,15 @@ def _bloom_kept_files(
     filtered scan (and row-set-sized lookups should be a join against
     the table, per the ``bloom_point_scan`` docs).  Else the set of
     relative file paths whose filters claim at least one of ``values``
-    (non-null, non-empty — the callers pre-clean).  The shared
-    planning core of :func:`bloom_point_scan` and
-    :func:`skipping_scan`."""
+    (non-null, non-empty — :func:`skipping_scan` pre-cleans): the key
+    half of its planning."""
     from pyspark.sql import functions as F
 
     if len(values) > BLOOM_PROBE_CAP:
         return None
 
-    jvm, fs = _fs_for(spark, data_root)
     bl_path = _join(data_root, BLOOM_DIR)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(bl_path)):
+    if not _exists(spark, bl_path):
         return None
     bl = spark.read.parquet(bl_path)
     meta = {
@@ -965,9 +927,11 @@ def skipping_scan(
     ranges: dict | None = None,
     keys: dict | None = None,
 ):
-    """COMBINED file-skipping read — the real query shape: range
+    """THE file-skipping read — the real query shape: range
     predicates AND key lookups in one pruned scan ("these users'
-    events in this date window").  ``ranges`` maps column →
+    events in this date window"); :func:`zone_map_scan` (ranges only)
+    and :func:`bloom_point_scan` (one key column) are this call with
+    one predicate family.  ``ranges`` maps column →
     ``(lo, hi)`` (the ``_zonemap`` test), ``keys`` maps column →
     list-of-values (the ``_bloom`` test, AND across columns, OR
     within a column's values); the survivor set is the INTERSECTION
@@ -1494,23 +1458,102 @@ def copy_tree(spark: SparkSession, src: str, dst: str) -> bool:
     return True
 
 
+def _gc_candidates(
+    spark: SparkSession,
+    root: str,
+    keep_seq: int,
+    keep_generation: str,
+    keep_last: int = 1,
+    legacy_sidecars: tuple[str, ...] = (),
+) -> tuple[list[str], set[str]]:
+    """THE retention rule — the one classifier :func:`gc_generations`
+    deletes by and :func:`fsck_index` reports GC debt by, so the two
+    can never disagree about the grace window.  Classifies the root
+    listing and the manifest listing against the commit ``keep_seq``
+    (naming ``keep_generation``) under retention ``keep_last``.
+
+    Returns ``(names, held)``: ``names`` is everything the retention
+    policy does not keep, in listing order, root names first, then
+    manifest-dir names prefixed ``_manifests/``; ``held`` is the subset
+    of ``_gen-*`` prefixes numbered ABOVE ``keep_seq`` — a later
+    maintainer's in-flight or published commit, never ours to delete
+    (deleting its data while its manifest stays would manufacture the
+    dangling-pointer unservable state), but storage debt all the
+    same."""
+    keep_last = max(1, int(keep_last))
+    # the grace window counts PARSEABLE manifests only: a reader can
+    # only be mid-scan on a generation it resolved, and corrupt
+    # (crash-stranded) manifests were never resolvable — their
+    # generations are orphans and their manifests superseded residue
+    published = [
+        s
+        for s in _manifest_seqs(spark, root)
+        if s <= keep_seq and _read_manifest(spark, root, s) is not None
+    ]
+    kept_seqs = set(published[-keep_last:]) | {keep_seq}
+    # our writers name generations _gen-<seq>; a payload using another
+    # convention keeps only the current generation (the safe floor)
+    kept_gens = {f"_gen-{s:06d}" for s in kept_seqs} | {keep_generation}
+    # the pre-manifest payload (flat part files, hive partition dirs,
+    # root copies of legacy sidecars) counts as the OLDEST generation
+    drop_flat = len(published) >= keep_last
+    names: list[str] = []
+    held: set[str] = set()
+    for n in _list_names(spark, root):
+        m = _GEN_RE.fullmatch(n)
+        if m is not None:
+            if int(m.group(1)) > keep_seq:
+                held.add(n)
+            # orphans (never published) are always collected
+            drop = n not in kept_gens or int(m.group(1)) not in kept_seqs
+        else:
+            drop = drop_flat and (
+                "=" in n
+                or n.startswith("part-")
+                or n == "_SUCCESS"
+                or n in legacy_sidecars
+            )
+        if drop:
+            names.append(n)
+    for n in _list_names(spark, _join(root, MANIFEST_DIR)):
+        m = _MANIFEST_RE.fullmatch(n)
+        # a named manifest at or below our commit that the grace window
+        # does not keep is superseded (this also collects corrupt
+        # crash-stranded manifests, which are never in kept_seqs);
+        # names ABOVE keep_seq are never touched.  Stranded .inprogress
+        # temps are a crashed publish's staging residue (our own temp
+        # was renamed away before GC runs).
+        superseded = (
+            m is not None
+            and int(m.group(1)) <= keep_seq
+            and int(m.group(1)) not in kept_seqs
+        )
+        stranded_tmp = n.startswith(".manifest-") and n.endswith(
+            ".inprogress"
+        )
+        if superseded or stranded_tmp:
+            names.append(f"{MANIFEST_DIR}/{n}")
+    return names, held
+
+
 def gc_generations(
     spark: SparkSession,
     root: str,
     keep_seq: int,
     keep_generation: str,
-    legacy_payload: bool = True,
     legacy_sidecars: tuple[str, ...] = (),
     keep_last: int = 1,
 ) -> list[str]:
     """Step 3 — collect everything the retention policy does not keep:
-    older/orphan ``_gen-*`` prefixes, superseded manifests,
-    (``legacy_payload``) the pre-manifest flat hive partition
-    directories at the root left behind by the FIRST manifest-based
-    commit, and any named ``legacy_sidecars`` at the root (their live
-    copies travel inside each generation: ``commit_parquet_generation``
-    copies them in before the publish).  Runs strictly after the
-    publish; a crash here costs storage, never correctness.
+    older/orphan ``_gen-*`` prefixes, superseded manifests, the
+    pre-manifest flat payload (hive partition directories, part files)
+    at the root left behind by the FIRST manifest-based commit, and any
+    named ``legacy_sidecars`` at the root (their live copies travel
+    inside each generation: ``commit_parquet_generation`` copies them
+    in before the publish).  Runs strictly after the publish; a crash
+    here costs storage, never correctness.  What to collect is decided
+    by :func:`_gc_candidates`, the same rule ``fsck_index`` reports
+    as GC debt; generations numbered above ``keep_seq`` are left alone.
 
     ``keep_last`` is the GC GRACE WINDOW (Iceberg's
     ``expire_snapshots`` shape): retain the ``keep_last`` most recent
@@ -1525,71 +1568,14 @@ def gc_generations(
     generation: it survives while fewer than ``keep_last`` generations
     have been published.  Returns deleted names."""
     jvm, fs = _fs_for(spark, root)
-    keep_last = max(1, int(keep_last))
-    # the grace window counts PARSEABLE manifests only: a reader can
-    # only be mid-scan on a generation it resolved, and corrupt
-    # (crash-stranded) manifests were never resolvable — their
-    # generations are orphans and their manifests superseded residue
-    published = [
-        s
-        for s in _manifest_seqs(spark, root)
-        if s <= keep_seq and _read_manifest(spark, root, s) is not None
-    ]
-    kept_seqs = set(published[-keep_last:]) | {keep_seq}
-    # our writers name generations gen-<seq>; a payload using another
-    # convention keeps only the current generation (the safe floor)
-    kept_gens = {f"_gen-{s:06d}" for s in kept_seqs} | {keep_generation}
-    drop_flat = legacy_payload and len(published) >= keep_last
-    deleted = []
-    for n in _list_names(spark, root):
-        drop = False
-        m = _GEN_RE.fullmatch(n)
-        if m is not None:
-            seq = int(m.group(1))
-            if seq > keep_seq:
-                # a LATER maintainer's in-flight or published commit —
-                # not ours to collect (same guard as the manifest loop;
-                # deleting the data while keeping its manifest would
-                # manufacture the dangling-pointer unservable state)
-                drop = False
-            else:
-                # orphans (never published) are always collected
-                drop = n not in kept_gens or seq not in kept_seqs
-        elif "=" in n:
-            drop = drop_flat  # pre-manifest hive partition dir
-        elif n.startswith("part-") or n == "_SUCCESS":
-            # pre-manifest FLAT parquet payload (a plain table adopted
-            # via commit_parquet_generation) — same retention as the
-            # hive dirs: it counts as the oldest generation
-            drop = drop_flat
-        elif n in legacy_sidecars:
-            drop = drop_flat  # root sidecar superseded by the gen copy
-        if drop:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(_join(root, n)), True)
-            deleted.append(n)
-    for n in _list_names(spark, _join(root, MANIFEST_DIR)):
-        m = _MANIFEST_RE.fullmatch(n)
-        stranded_tmp = n.startswith(".manifest-") and n.endswith(
-            ".inprogress"
-        )
-        # a named manifest at or below our commit that the grace window
-        # does not keep is superseded (this also collects corrupt
-        # crash-stranded manifests, which are never in kept_seqs);
-        # names ABOVE keep_seq are never touched — an out-of-contract
-        # future maintainer's commit is not ours to delete.  Stranded
-        # .inprogress temps are a crashed publish's staging residue
-        # (our own temp was renamed away before GC runs).
-        superseded = (
-            m is not None
-            and int(m.group(1)) <= keep_seq
-            and int(m.group(1)) not in kept_seqs
-        )
-        if superseded or stranded_tmp:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(_join(root, MANIFEST_DIR, n)),
-                False,
-            )
-            deleted.append(f"{MANIFEST_DIR}/{n}")
+    names, held = _gc_candidates(
+        spark, root, keep_seq, keep_generation, keep_last, legacy_sidecars
+    )
+    deleted = [n for n in names if n not in held]
+    for n in deleted:
+        # root entries are trees; manifests are single objects
+        recursive = not n.startswith(f"{MANIFEST_DIR}/")
+        fs.delete(jvm.org.apache.hadoop.fs.Path(_join(root, n)), recursive)
     return deleted
 
 
@@ -1608,6 +1594,74 @@ def _layout_kind(cols: set) -> str | None:
     if {"_batch_id", "bucket"} <= cols:
         return "drift_log"
     return None
+
+
+# per sidecar: the reads it prunes, its reader, its builder — the words
+# fsck's inventory issues name
+_SIDECAR_ROLES = {
+    ZONE_MAP_DIR: ("skipping reads", "zone_map_scan", "write_zone_maps"),
+    BLOOM_DIR: (
+        "point-lookup reads", "bloom_point_scan", "write_bloom_filters"
+    ),
+}
+
+
+def _check_sidecar_inventory(
+    spark: SparkSession,
+    data_root: str,
+    name: str,
+    actual: set[str],
+    issues: list[str],
+) -> int | None:
+    """``fsck_index``'s completeness check of one skip-index sidecar
+    (``_zonemap`` or ``_bloom``): its ``file`` inventory must equal the
+    generation's data files ``actual``.  A data file MISSING from the
+    sidecar is silently skipped by every pruned read (wrong results,
+    not an error — the worst failure class); a sidecar row naming a
+    gone file fails every skipping read far from the cause; an
+    unreadable sidecar is reported, never raised (an out-of-band
+    corruption is exactly the class this check exists for).  The
+    ``_bloom`` sidecar must also carry its (bits, k) meta rows
+    (``file=''`` sentinels, left out of its inventory).  Appends to
+    ``issues``; returns the number of files listed, ``None`` when the
+    sidecar is unreadable."""
+    from pyspark.sql import functions as F
+
+    reads, scan, builder = _SIDECAR_ROLES[name]
+    try:
+        side = spark.read.parquet(_join(data_root, name))
+        files, n_meta = side.select("file"), None
+        if name == BLOOM_DIR:
+            files = files.where(F.col("file") != "").distinct()
+            n_meta = side.where(F.col("file") == "").count()
+        listed = {r["file"] for r in files.collect()}
+    except Exception as exc:
+        issues.append(
+            f"{name} sidecar unreadable: {exc} — {reads} fall back to the "
+            "full scan only when the sidecar is ABSENT; rebuild it "
+            f"({builder}) or recommit"
+        )
+        return None
+    if n_meta == 0:
+        issues.append(
+            "_bloom sidecar has no meta rows (bits/k) — every "
+            "probe falls back to a full scan; rebuild the sidecar"
+        )
+    unmapped, gone = sorted(actual - listed), sorted(listed - actual)
+    if unmapped:
+        issues.append(
+            f"{len(unmapped)} data file(s) absent from {name} "
+            f"(e.g. {unmapped[:3]}) — every {scan} silently SKIPS them "
+            "(wrong results, not an error); rebuild the sidecar "
+            f"({builder}) or recommit the generation"
+        )
+    if gone:
+        issues.append(
+            f"{name} lists {len(gone)} file(s) that do not exist "
+            f"(e.g. {gone[:3]}) — {reads} fail far from the cause; "
+            "rebuild the sidecar or recommit the generation"
+        )
+    return len(listed)
 
 
 def fsck_index(
@@ -1634,7 +1688,9 @@ def fsck_index(
       when they hide a NEWER commit than the one being served, and the
       GC debt is counted (orphan/stale generations + superseded
       manifests awaiting the next run's collection — storage, not
-      corruption).  ``keep_last`` mirrors ``gc_generations``' grace
+      corruption) by the classifier ``gc_generations`` deletes by,
+      plus generations above the served seq, which GC leaves alone.
+      ``keep_last`` is ``gc_generations``' grace
       window: generations/manifests a retention-``keep_last``
       deployment deliberately keeps are NOT debt — without it a
       healthy grace-window deployment is perpetually reported dirty;
@@ -1687,11 +1743,10 @@ def fsck_index(
         "warnings": [],
         "gc_debt": [],
     }
-    keep_last = max(1, int(keep_last))
     got = latest_manifest(spark, root)
-    jvm, fs = _fs_for(spark, root)
     corrupt = corrupt_manifests(spark, root)
     report["corrupt_manifests"] = corrupt
+    prev_seq = prev_root = None
     if got is None:
         report["manifest_seq"] = None
         data_root = root
@@ -1713,7 +1768,7 @@ def fsck_index(
                 "mid-write and its generation is not being served; re-run "
                 "the maintenance op (next commit supersedes the residue)"
             )
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(data_root)):
+        if not _exists(spark, data_root):
             report["issues"].append(
                 f"latest manifest (seq {seq}) names generation {gen!r} "
                 "which does not exist — the index cannot be served; "
@@ -1721,38 +1776,24 @@ def fsck_index(
             )
             return report
         # GC debt: what a completed gc_generations(keep_last=keep_last)
-        # would collect — the grace-window retainees are NOT debt
-        # (same parseable-published arithmetic as gc_generations)
-        published = [
+        # would collect, by the same classifier — plus the generations
+        # above the served seq, which GC leaves alone
+        report["gc_debt"], _ = _gc_candidates(
+            spark, root, seq, str(gen), keep_last
+        )
+        # the PREVIOUS retained generation, for the dropped-sidecar
+        # warning and the kind-regression check below
+        prev = [
             s
             for s in _manifest_seqs(spark, root)
-            if s <= seq and s not in corrupt
+            if s < seq and s not in corrupt
         ]
-        kept_seqs = set(published[-keep_last:]) | {seq}
-        kept_gens = {f"_gen-{s:06d}" for s in kept_seqs} | {str(gen)}
-        drop_flat = len(published) >= keep_last
-        for n in _list_names(spark, root):
-            m = _GEN_RE.fullmatch(n)
-            if m is not None:
-                # orphans (never published) are always debt
-                if n not in kept_gens or int(m.group(1)) not in kept_seqs:
-                    report["gc_debt"].append(n)
-            elif drop_flat and (
-                "=" in n or n.startswith("part-") or n == "_SUCCESS"
-            ):
-                report["gc_debt"].append(n)
-        for n in _list_names(spark, _join(root, MANIFEST_DIR)):
-            m = _MANIFEST_RE.fullmatch(n)
-            stranded_tmp = n.startswith(".manifest-") and n.endswith(
-                ".inprogress"
-            )
-            superseded = (
-                m is not None
-                and int(m.group(1)) <= seq
-                and int(m.group(1)) not in kept_seqs
-            )
-            if superseded or stranded_tmp:
-                report["gc_debt"].append(f"{MANIFEST_DIR}/{n}")
+        payload_prev = (
+            _read_manifest(spark, root, prev[-1]) if prev else None
+        )
+        if payload_prev is not None:
+            prev_seq = prev[-1]
+            prev_root = _join(root, str(payload_prev["generation"]))
     report["data_root"] = data_root
 
     try:
@@ -1761,127 +1802,37 @@ def fsck_index(
         report["issues"].append(f"payload unreadable: {exc}")
         return report
 
-    # zone-map completeness: sidecar inventory == actual data files
-    zm_path = _join(data_root, ZONE_MAP_DIR)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(zm_path)):
-        # silent-degradation advisory: if the PREVIOUS retained
-        # generation carried zone maps and the current one doesn't, a
-        # maintenance op recommitted without zone_map_cols — skipping
-        # reads fell back to full scans (correct, just slower); a
-        # WARNING, not an issue, so maintenance_cycle still publishes
-        if got is not None:
-            prev = [
-                s
-                for s in _manifest_seqs(spark, root)
-                if s < got[0] and s not in corrupt
-            ]
-            if prev:
-                payload_prev = _read_manifest(spark, root, prev[-1])
-                if payload_prev is not None and fs.exists(
-                    jvm.org.apache.hadoop.fs.Path(
-                        _join(
-                            root,
-                            str(payload_prev["generation"]),
-                            ZONE_MAP_DIR,
-                        )
-                    )
-                ):
-                    report["warnings"].append(
-                        f"generation at seq {prev[-1]} carried a "
-                        "_zonemap but the current one does not — a "
-                        "recommit dropped zone_map_cols; skipping "
-                        "reads silently degraded to full scans "
-                        "(correct, slower).  Pass zone_map_cols on "
-                        "the maintenance op to restore file skipping"
-                    )
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(zm_path)):
-        try:
-            listed = {
-                r["file"]
-                for r in spark.read.parquet(zm_path)
-                .select("file")
-                .collect()
-            }
-        except Exception as exc:
-            # an out-of-band-corrupted sidecar is exactly the class
-            # this check exists for — report it, never crash the
-            # diagnostic (same contract as the payload read above)
-            report["issues"].append(
-                f"_zonemap sidecar unreadable: {exc} — skipping reads "
-                "fall back to the full scan only when the sidecar is "
-                "ABSENT; rebuild it (write_zone_maps) or recommit"
-            )
-            listed = None
-        actual = _data_files(spark, data_root)
-        if listed is None:
-            unmapped, gone = [], []
-            report["zone_map_files"] = -1
-        else:
-            report["zone_map_files"] = len(listed)
-            unmapped = sorted(actual - listed)
-            gone = sorted(listed - actual)
-        if unmapped:
-            report["issues"].append(
-                f"{len(unmapped)} data file(s) absent from _zonemap "
-                f"(e.g. {unmapped[:3]}) — every zone_map_scan silently "
-                "SKIPS them (wrong results, not an error); rebuild the "
-                "sidecar (write_zone_maps) or recommit the generation"
-            )
-        if gone:
-            report["issues"].append(
-                f"_zonemap lists {len(gone)} file(s) that do not exist "
-                f"(e.g. {gone[:3]}) — skipping reads fail far from the "
-                "cause; rebuild the sidecar or recommit the generation"
-            )
-
-    # bloom completeness: sidecar inventory == actual data files, and
-    # the (bits, k) meta rows the probe needs must be present — same
-    # contract as the zone-map check: a data file missing from the
-    # sidecar is silently skipped by every bloom_point_scan (wrong
-    # results, not an error)
-    bl_path = _join(data_root, BLOOM_DIR)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(bl_path)):
-        try:
-            bl = spark.read.parquet(bl_path)
-            listed_bl = {
-                r["file"]
-                for r in bl.where(F.col("file") != "")
-                .select("file")
-                .distinct()
-                .collect()
-            }
-            n_meta = bl.where(F.col("file") == "").count()
-        except Exception as exc:
-            report["issues"].append(
-                f"_bloom sidecar unreadable: {exc} — point-lookup reads "
-                "fall back to the full scan only when the sidecar is "
-                "ABSENT; rebuild it (write_bloom_filters) or recommit"
-            )
-            listed_bl, n_meta = None, None
-        if listed_bl is not None:
-            if n_meta == 0:
-                report["issues"].append(
-                    "_bloom sidecar has no meta rows (bits/k) — every "
-                    "probe falls back to a full scan; rebuild the sidecar"
-                )
-            actual = _data_files(spark, data_root)
-            unmapped_bl = sorted(actual - listed_bl)
-            gone_bl = sorted(listed_bl - actual)
-            if unmapped_bl:
-                report["issues"].append(
-                    f"{len(unmapped_bl)} data file(s) absent from _bloom "
-                    f"(e.g. {unmapped_bl[:3]}) — every bloom_point_scan "
-                    "silently SKIPS them (wrong results, not an error); "
-                    "rebuild the sidecar (write_bloom_filters) or "
-                    "recommit the generation"
-                )
-            if gone_bl:
-                report["issues"].append(
-                    f"_bloom lists {len(gone_bl)} file(s) that do not "
-                    f"exist (e.g. {gone_bl[:3]}) — point-lookup reads "
-                    "fail far from the cause; rebuild the sidecar or "
-                    "recommit the generation"
-                )
+    # sidecar completeness: each sidecar's inventory == the data files
+    sidecars = [
+        n
+        for n in (ZONE_MAP_DIR, BLOOM_DIR)
+        if _exists(spark, _join(data_root, n))
+    ]
+    actual = _data_files(spark, data_root) if sidecars else set()
+    if ZONE_MAP_DIR in sidecars:
+        n_listed = _check_sidecar_inventory(
+            spark, data_root, ZONE_MAP_DIR, actual, report["issues"]
+        )
+        report["zone_map_files"] = -1 if n_listed is None else n_listed
+    elif prev_root is not None and _exists(
+        spark, _join(prev_root, ZONE_MAP_DIR)
+    ):
+        # silent-degradation advisory: the PREVIOUS retained generation
+        # carried zone maps and the current one doesn't — a maintenance
+        # op recommitted without zone_map_cols and skipping reads fell
+        # back to full scans (correct, just slower); a WARNING, not an
+        # issue, so maintenance_cycle still publishes
+        report["warnings"].append(
+            f"generation at seq {prev_seq} carried a _zonemap but the "
+            "current one does not — a recommit dropped zone_map_cols; "
+            "skipping reads silently degraded to full scans (correct, "
+            "slower).  Pass zone_map_cols on the maintenance op to "
+            "restore file skipping"
+        )
+    if BLOOM_DIR in sidecars:
+        _check_sidecar_inventory(
+            spark, data_root, BLOOM_DIR, actual, report["issues"]
+        )
 
     cols = set(df.columns)
     serving = _layout_kind(cols)
@@ -1906,33 +1857,22 @@ def fsck_index(
     # instead of fscking clean over a broken index.  Schema-only read
     # of the previous generation (one footer), skipped when it is
     # already GC'd or unreadable — a diagnostic must not crash.
-    if got is not None:
-        prev = [
-            s
-            for s in _manifest_seqs(spark, root)
-            if s < got[0] and s not in corrupt
-        ]
-        if prev:
-            payload_prev = _read_manifest(spark, root, prev[-1])
-            if payload_prev is not None:
-                prev_root = _join(root, str(payload_prev["generation"]))
-                prev_kind = None
-                if fs.exists(jvm.org.apache.hadoop.fs.Path(prev_root)):
-                    try:
-                        prev_kind = _layout_kind(
-                            set(spark.read.parquet(prev_root).columns)
-                        )
-                    except Exception:
-                        prev_kind = None  # unreadable predecessor: skip
-                if prev_kind is not None and prev_kind != kind:
-                    report["issues"].append(
-                        f"layout regressed from {prev_kind!r} (seq "
-                        f"{prev[-1]}) to {kind!r}: the current "
-                        f"generation no longer carries the {prev_kind!r} "
-                        "layout column(s) — a compaction published a "
-                        "broken index; roll back to the previous "
-                        "generation or rebuild before refreshing views"
-                    )
+    prev_kind = None
+    if prev_root is not None and _exists(spark, prev_root):
+        try:
+            prev_kind = _layout_kind(
+                set(spark.read.parquet(prev_root).columns)
+            )
+        except Exception:
+            prev_kind = None  # unreadable predecessor: skip
+    if prev_kind is not None and prev_kind != kind:
+        report["issues"].append(
+            f"layout regressed from {prev_kind!r} (seq {prev_seq}) to "
+            f"{kind!r}: the current generation no longer carries the "
+            f"{prev_kind!r} layout column(s) — a compaction published a "
+            "broken index; roll back to the previous generation or "
+            "rebuild before refreshing views"
+        )
 
     if "_commit_id" in cols:
         commits = df.select("_commit_id").distinct().count()
@@ -1943,7 +1883,7 @@ def fsck_index(
     stats_path = _join(data_root, "_stats")
     ref_path = _join(data_root, "_ref")
     if kind == "inverted":
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(stats_path)):
+        if not _exists(spark, stats_path):
             report["issues"].append(
                 "inverted index has no _stats sidecar — bm25 serving "
                 "reads n_docs/avgdl/n_buckets from it and will fail"
@@ -1984,9 +1924,7 @@ def fsck_index(
                         "built with different bucket counts; every "
                         "serve prunes to wrong buckets.  Rebuild."
                     )
-    if kind == "drift_log" and not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(ref_path)
-    ):
+    if kind == "drift_log" and not _exists(spark, ref_path):
         report["issues"].append(
             "drift log has no _ref sidecar — drift_report needs the "
             "frozen reference counts"

@@ -37,6 +37,7 @@ from airflow_etl_minio_to_postgres_spark.sources.catalog import (
     restore_nanos_timestamps,
 )
 from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+    _exists,
     _fs_for,
     _join,
     commit_parquet_generation,
@@ -111,19 +112,6 @@ class scaled_state_partitions:
                 "spark.sql.shuffle.partitions", self._prev
             )
         return False
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe on the filesystem SPARK writes to (Hadoop
-    FileSystem API), never the driver's local one: ``os.path.exists``
-    on a URI path (``s3a://``, even ``file://``) returns False forever,
-    and a broad read-and-catch treats ANY ``AnalysisException`` (schema
-    corruption, momentarily unreadable dir, misconfigured path) as
-    "absent" — the silent-skip failure mode a dedup screen must not
-    have (round-10 advisor finding).  This asks the exact question:
-    does the path exist on the session's filesystem for that scheme."""
-    jvm, fs = _fs_for(spark, path)
-    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
 
 
 def _commit_token(checkpoint_path: str) -> str:
@@ -492,7 +480,7 @@ def _assert_not_legacy_silver(spark: SparkSession, out_path: str) -> None:
     downstream readers.  Same posture as the near-dup store's legacy
     check: fail with the migration pointer, never improvise.  One
     ``listStatus`` RPC on the session's filesystem (URI-correct, the
-    ``_fs_exists`` precedent) — negligible per-batch cost."""
+    ``manifest._exists`` precedent) — negligible per-batch cost."""
     jvm, fs = _fs_for(spark, out_path)
     hpath = jvm.org.apache.hadoop.fs.Path(out_path)
     if not fs.exists(hpath):
@@ -958,7 +946,7 @@ def near_dup_against_store(
     )
 
     spark = df.sparkSession
-    if not _fs_exists(spark, store_path):
+    if not _exists(spark, store_path):
         raise ValueError(
             f"near-dup store at {store_path!r} does not exist; "
             "near_dup_against_store screens against an EXISTING store "
@@ -1050,7 +1038,7 @@ def _near_dup_process_batch(
     dropped = _intra_batch_drops(
         banded, sets, id_col, threshold, max_bucket_size
     )
-    if _fs_exists(spark, store_path):
+    if _exists(spark, store_path):
         cross = _store_screen_drops(
             spark,
             banded,
@@ -1753,7 +1741,7 @@ def streaming_drift_monitor(
     sidecar = sidecar.withColumn("n_buckets", F.lit(int(n_buckets)))
     spark = ref.sparkSession
     ref_path = os.path.join(out_local, "_ref")
-    if _fs_exists(spark, ref_path):
+    if _exists(spark, ref_path):
         # a restart must present the SAME frozen reference: silently
         # re-basing cutpoints makes every already-logged batch
         # incomparable with every future one (the silver legacy-layout

@@ -2462,6 +2462,69 @@ def test_fsck_gc_debt_honors_keep_last_grace_window(spark, tmp_path):
     ]
 
 
+def test_fsck_gc_debt_is_what_gc_generations_deletes(spark, tmp_path):
+    """fsck_index's GC debt and gc_generations' deletions come from
+    ONE retention rule: on a table carrying every kind of residue — a
+    legacy flat payload, a retained older generation, an orphan
+    generation, a corrupt manifest with its generation, a stranded
+    .inprogress publish temp, and an orphan generation ABOVE the served
+    seq — the debt fsck reports under keep_last=N is exactly what
+    gc_generations(keep_last=N) deletes plus the above-seq orphan (GC
+    never touches a later maintainer's prefix), and a second fsck
+    reports only that orphan."""
+    import os as _os
+    import shutil as _shutil
+
+    from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
+
+    tpl = str(tmp_path / "tpl")
+    df = spark.range(3).selectExpr("id", "id * 2 AS v").coalesce(1)
+    df.write.parquet(tpl)  # legacy flat payload: part-* + _SUCCESS
+    flat = sorted(
+        n for n in _os.listdir(tpl) if n.startswith("part-")
+    ) + ["_SUCCESS"]
+    # seq 1 commits with a wide grace window: the flat payload stays
+    assert mf.commit_parquet_generation(spark, df, tpl, keep_last=3) == 1
+    _os.makedirs(_os.path.join(tpl, "_gen-000002"))  # crashed write
+    _os.makedirs(_os.path.join(tpl, "_gen-000003"))  # crashed publish...
+    mdir = _os.path.join(tpl, mf.MANIFEST_DIR)
+    with open(_os.path.join(mdir, "manifest-000003.json"), "w") as f:
+        f.write('{"generation": "_gen-')  # ...its truncated manifest
+    # seq 4 published, then the run died before its GC
+    df.write.parquet(_os.path.join(tpl, "_gen-000004"))
+    mf.publish_generation(spark, tpl, 4, "_gen-000004")
+    _os.makedirs(_os.path.join(tpl, "_gen-000009"))  # a later maintainer
+    with open(_os.path.join(mdir, ".manifest-000005.json.inprogress"), "w"):
+        pass
+
+    residue = [
+        "_gen-000002",
+        "_gen-000003",
+        "_manifests/.manifest-000005.json.inprogress",
+        "_manifests/manifest-000003.json",
+    ]
+    expected = {
+        # only seq 4 kept: the flat payload and seq 1 are debt
+        1: flat + residue + ["_gen-000001", "_manifests/manifest-000001.json"],
+        # seq 1 retained; two published generations age the flat out
+        2: flat + residue,
+        # fewer than keep_last published: the flat payload is retained
+        3: residue,
+    }
+    for keep_last, want in expected.items():
+        root = str(tmp_path / f"t{keep_last}")
+        _shutil.copytree(tpl, root)
+        rep = mf.fsck_index(spark, root, keep_last=keep_last)
+        assert rep["manifest_seq"] == 4 and rep["issues"] == []
+        deleted = mf.gc_generations(
+            spark, root, 4, "_gen-000004", keep_last=keep_last
+        )
+        assert sorted(deleted) == sorted(want), (keep_last, deleted)
+        assert sorted(rep["gc_debt"]) == sorted(deleted + ["_gen-000009"])
+        again = mf.fsck_index(spark, root, keep_last=keep_last)
+        assert again["gc_debt"] == ["_gen-000009"] and again["issues"] == []
+
+
 def test_fsck_and_serving_survive_crash_stranded_manifest(spark, tmp_path):
     """Round-13 advisor finding (medium): on visible-before-bytes
     filesystems a crash mid-publish strands a partial object under the
