@@ -25,7 +25,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from airflow_etl_minio_to_postgres_spark.functions.text import WHITESPACE
+from airflow_etl_minio_to_postgres_spark.functions.text import words_expr
 
 HASH_LEN = 16
 
@@ -111,7 +111,7 @@ def drop_exact_dups(
 def shingles_expr(text: Column, k: int = 3) -> Column:
     """Word ``k``-shingles of lower/trimmed text; empty array when the doc
     has fewer than ``k`` words (guards Spark's decreasing-sequence edge)."""
-    words = F.split(F.lower(F.trim(text)), WHITESPACE)
+    words = words_expr(text)
     n = F.size(words)
     idx = F.sequence(F.lit(0), n - k)
 
@@ -202,7 +202,7 @@ def _minhash_table(
     join disappears because ``collect_set`` rides the same groupBy.
     Measured at sf0.1: 4.2s -> 0.9s for the signature table.
     """
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
+    words = words_expr(F.col(text_col))
     based = df.select(F.col(id_col).alias("_id"), words.alias("w")).where(
         F.size("w") >= shingle_k
     )
@@ -389,7 +389,7 @@ def word_ngrams(
     :func:`char_ngrams` for why): the regex split runs once per doc;
     the ``transform`` lambda only indexes the already-split array.
     """
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
+    words = words_expr(F.col(text_col))
     shingle = ", ".join(f"_w[i+{j}]" for j in range(n))
     return (
         df.select(F.col(id_col), words.alias("_w"))
@@ -717,7 +717,7 @@ def positional_word_ngrams(
     position: (id, pos, gram) — NOT distinct, one row per occurrence.
     The positional twin of :func:`word_ngrams`, for span-level operators
     that must map grams back onto the token stream."""
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
+    words = words_expr(F.col(text_col))
     shingle = ", ".join(f"_w[i+{j}]" for j in range(n))
     return (
         df.select(F.col(id_col), words.alias("_w"))
@@ -801,7 +801,7 @@ def cross_doc_spans(
             (F.max("pos") - F.min("pos") + k).alias("span_tokens"),
         )
     )
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
+    words = words_expr(F.col(text_col))
     toks = corpus.select(F.col(id_col), words.alias("_w"))
     return (
         grouped.join(toks, id_col)
@@ -859,7 +859,7 @@ def strip_cross_doc_spans(
             ).alias("_spans")
         )
     )
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
+    words = words_expr(F.col(text_col))
     return (
         corpus.select(F.col(id_col), words.alias("_w"))
         .join(spans, id_col, "left")
@@ -991,7 +991,8 @@ def salted_join_sides(
     left_id: str,
     key: str = "band_key",
     max_bucket_size: int | None = None,
-    right_id: str | None = None,
+    *,
+    right_id: str,
 ) -> tuple[DataFrame, DataFrame, list[str]]:
     """Two-frame generalization of :func:`salted_band_sides`: join
     sides for ``left JOIN right ON key`` with hot key buckets split
@@ -1009,20 +1010,12 @@ def salted_join_sides(
     downstream dropDuplicates / first-match logic behaves identically
     and results are bit-identical to the unsalted join.
 
-    Which side salts depends on ``right_id``:
-
-    * ``right_id=None`` (legacy): the LEFT side always salts, with
-      ``n_salt = min(ceil(max(l, r)/cap), l)``.  LIMITATION: the salt
-      key is the left id, so a bucket hot only on the RIGHT (few batch
-      rows vs a huge store bucket) cannot split below ``r`` comparisons
-      per task — ``n_salt`` is capped at ``l``, and per-task work is
-      ``~l/n_salt * r``, not ``~cap * min(l, r)``.
-    * ``right_id`` given: hot buckets salt their LARGER side
-      (per-bucket ``_swap`` flag, ``n_salt = ceil(max(l, r)/cap)``)
-      and replicate the smaller — per-task work is ``~cap * min(l, r)``
-      for EVERY hot shape, including right-heavy ones.  Both fan-outs
-      gain a one-element-or-sequence array explode (one extra Generate
-      node on cold rows vs the legacy scalar salt).
+    Hot buckets salt their LARGER side (per-bucket ``_swap`` flag,
+    ``n_salt = ceil(max(l, r)/cap)``; ``left_id``/``right_id`` are the
+    salt keys) and replicate the smaller — per-task work is
+    ``~cap * min(l, r)`` for EVERY hot shape, including right-heavy
+    ones (few batch rows vs a huge store bucket).  Both fan-outs carry
+    a one-element-or-sequence array explode.
 
     The hot directory is built from BOTH sides' bucket counts (two
     map-side-combined aggregates over the fan-outs, inner-joined —
@@ -1041,41 +1034,9 @@ def salted_join_sides(
     right = _persist_tracked(right)
     lc = left.groupBy(key).agg(F.count(F.lit(1)).alias("_lc"))
     rc = right.groupBy(key).agg(F.count(F.lit(1)).alias("_rc"))
-    hot_base = lc.join(rc, key).where(
+    hot = lc.join(rc, key).where(
         F.greatest(F.col("_lc"), F.col("_rc")) > cap
-    )
-    if right_id is None:
-        hot = hot_base.select(
-            key,
-            F.least(
-                F.ceil(
-                    F.greatest(F.col("_lc"), F.col("_rc")) / F.lit(cap)
-                ),
-                F.col("_lc"),
-            ).cast("int").alias("_ns"),
-        )
-        l_out = (
-            left.join(F.broadcast(hot), key, "left")
-            .withColumn("_ns", F.coalesce(F.col("_ns"), F.lit(1)))
-            .withColumn(
-                "_salt",
-                F.pmod(F.xxhash64(F.col(left_id)), F.col("_ns")).cast(
-                    "int"
-                ),
-            )
-            .drop("_ns")
-        )
-        r_out = (
-            right.join(F.broadcast(hot), key, "left")
-            .withColumn("_ns", F.coalesce(F.col("_ns"), F.lit(1)))
-            .withColumn(
-                "_salt", F.explode(F.sequence(F.lit(0), F.col("_ns") - 1))
-            )
-            .drop("_ns")
-        )
-        return l_out, r_out, [key, "_salt"]
-
-    hot = hot_base.select(
+    ).select(
         key,
         F.ceil(F.greatest(F.col("_lc"), F.col("_rc")) / F.lit(cap))
         .cast("int")
@@ -1141,7 +1102,7 @@ def simhash(
     form summed — results are bit-identical.  Returns (id_col, simhash
     long).
     """
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
+    words = words_expr(F.col(text_col))
     tok = (
         df.select(F.col(id_col), F.explode(words).alias("tok"))
         .withColumn(

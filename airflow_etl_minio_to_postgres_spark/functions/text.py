@@ -339,7 +339,7 @@ def chunk_text(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     step = chunk_tokens - overlap
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
+    words = words_expr(F.col(text_col))
     base = df.select(F.col(id_col), words.alias("_w")).where(
         (F.size("_w") > 1) | (F.element_at("_w", 1) != "")
     )
@@ -389,7 +389,7 @@ def tfidf_top_terms(
     no-collect pattern as q3's scalar subquery).  idf = ln((N+1)/(df+1))
     — the +1 smoothing keeps corpus-wide words finite.  Ordering ties
     break on the word itself, so the result is deterministic."""
-    spark_words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
+    spark_words = words_expr(F.col(text_col))
     tokens = df.select(
         F.col(id_col), F.explode(spark_words).alias("word")
     ).where(F.col("word") != "")
@@ -416,70 +416,94 @@ def tfidf_top_terms(
     return ranked.where(F.col("_rn") <= k).select(id_col, "word", "score")
 
 
-def bm25_topk(
+def _term_bucket_sql(col: str, n_buckets: int) -> str:
+    """THE inverted index's term-bucket rule as SQL text over ``col``:
+    ``pmod(xxhash64(term), n_buckets)``.  Both writers partition by it,
+    the serves probe with it and ``fsck_index`` re-checks a sample by
+    it — one string, the engine's own hash, so a posting's bucket and
+    a query term's probe agree by construction."""
+    return f"pmod(xxhash64({col}), {int(n_buckets)})"
+
+
+def _term_bucket(n_buckets: int) -> Column:
+    """:func:`_term_bucket_sql` over the ``term`` column, as the int
+    ``term_bucket`` partition value."""
+    return F.expr(_term_bucket_sql("term", n_buckets)).cast("int")
+
+
+def _postings(
     df: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    text_col: str,
+    id_col: str,
+    terms: list[str] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """THE BM25 posting build: ``(d, postings)`` where ``d`` is
+    ``(id_col, _w)`` (the :func:`words_expr` split, for the corpus
+    stats) and ``postings`` is ``(id_col, term, tf, dl)``, one row per
+    (doc, term).  Empty-string tokens (an empty or whitespace-only
+    text splits to ``[""]``) are never postings, on the direct path and
+    in the index alike; ``terms`` filters to a query's terms BEFORE the
+    tf aggregate, so only matching tokens shuffle.  Doc length rides
+    through the explode (a function of the doc, so ``max`` in the tf
+    aggregate recovers it exactly) — no corpus-sized length table ever
+    joins or shuffles."""
+    d = df.select(F.col(id_col), words_expr(F.col(text_col)).alias("_w"))
+    tokens = d.select(
+        F.col(id_col),
+        F.size(F.col("_w")).alias("_dl"),
+        F.explode(F.col("_w")).alias("term"),
+    ).where(F.col("term") != "")
+    if terms is not None:
+        tokens = tokens.where(F.col("term").isin(terms))
+    postings = tokens.groupBy(id_col, "term").agg(
+        F.count(F.lit(1)).alias("tf"), F.max("_dl").alias("dl")
+    )
+    return d, postings
+
+
+def _okapi_topk(
+    postings: DataFrame,
+    stats: DataFrame,
+    k: int,
+    k1: float,
+    b: float,
+    id_col: str,
+    query_id_col: str | None = None,
+    pairs: DataFrame | None = None,
+    by: tuple[str, ...] = ("term",),
+    max_df: int | None = None,
 ) -> DataFrame:
-    """Top-``k`` documents for a term query by BM25 — the LEXICAL
-    retrieval path, the sparse complement of the embedding family's
-    ANN serving (``ivf_topk_*``): production retrieval runs both and
-    fuses, so an engine that serves dense top-k needs the sparse twin.
+    """THE Okapi BM25 scorer behind all four serving forms.
 
-    Scoring is classic Okapi BM25:
-    ``idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))`` and
-    ``tf_part = tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))``, summed
-    over the query's terms per document.
-
-    Scale shape — the inverted-index access pattern without
-    materializing one: the token explode filters to the QUERY'S terms
-    immediately (a literal ``isin`` — the broadcast-vocabulary
-    pattern), so the only stage that sees every token is a narrow
-    scan+filter and everything that shuffles is (matching doc, term)
-    sized; df-per-term rides a window over those aggregated rows
-    (the tfidf precedent, no self-join); N and avgdl are ONE map-side
-    corpus aggregate broadcast as a 1-row cross join (the q3 scalar
-    pattern); doc length RIDES THROUGH the explode (it is a function
-    of the doc, so ``max`` in the tf aggregate recovers it exactly) —
-    no corpus-sized length table ever joins or shuffles.  Top-k is a
-    TakeOrdered (orderBy+limit), ties broken on the doc id.  Float
-    posture matches ``tfidf_top_terms``/``unigram_logprob``: per-term
-    doubles with ``ln``, summed per doc — few terms per query keep the
-    sum far from hash-rounding boundaries."""
-    if not query_terms:
-        raise ValueError("bm25_topk: query_terms must be non-empty")
-    terms = sorted({t.lower() for t in query_terms})
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
-    d = df.select(F.col(id_col), words.alias("_w"))
-    # corpus stats: one map-side-combined aggregate, broadcast back
-    stats = F.broadcast(
-        d.agg(
-            F.count(F.lit(1)).alias("_n_docs"),
-            F.avg(F.size(F.col("_w"))).alias("_avgdl"),
-        )
-    )
-    tokens = (
-        d.select(
-            F.col(id_col),
-            F.size(F.col("_w")).alias("_dl"),
-            F.explode(F.col("_w")).alias("term"),
-        )
-        .where(F.col("term").isin(terms))
-    )
-    tf = tokens.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf"), F.max("_dl").alias("_dl")
-    )
+    ``postings`` carry ``(id_col, term, tf, dl)`` already pruned to
+    the query's terms; ``stats`` is the 1-row ``(n_docs, avgdl)``
+    corpus frame, broadcast as a cross join (the q3 scalar pattern).
+    df is a window over the pruned postings partitioned ``by`` the
+    term (all postings of a term survive the prune, so the window sees
+    every one), taken BEFORE any query join — joining first would fan
+    a term's postings out once per query using it and inflate df.
+    ``max_df`` then cuts terms above it; ``pairs`` (``query_id_col``,
+    ``by``...) join in per-query terms.  Each posting scores
+    ``idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))`` times
+    ``tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))``, summed per
+    (query, doc).  Top-``k`` is a TakeOrdered (orderBy+limit) for a
+    single query, a ``row_number`` window per ``query_id_col``
+    otherwise; ties break on the doc id either way."""
     from pyspark.sql import Window
 
-    with_df = tf.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
+    scored = postings.withColumn(
+        "df", F.count(F.lit(1)).over(Window.partitionBy(*by))
     )
+    if max_df is not None:
+        scored = scored.where(F.col("df") <= F.lit(int(max_df)))
+    if pairs is not None:
+        scored = scored.join(pairs, list(by))
+    scalars = stats.select(
+        F.col("n_docs").alias("_n_docs"), F.col("avgdl").alias("_avgdl")
+    )
+    keys = [id_col] if query_id_col is None else [query_id_col, id_col]
     scored = (
-        with_df.crossJoin(stats)
+        scored.crossJoin(F.broadcast(scalars))
         .withColumn(
             "_idf",
             F.log(
@@ -497,17 +521,109 @@ def bm25_topk(
                 + F.lit(float(k1))
                 * (
                     F.lit(1.0 - float(b))
-                    + F.lit(float(b)) * F.col("_dl") / F.col("_avgdl")
+                    + F.lit(float(b)) * F.col("dl") / F.col("_avgdl")
                 )
             ),
         )
-    )
-    return (
-        scored.groupBy(id_col)
+        .groupBy(*keys)
         .agg(F.sum(F.col("_idf") * F.col("_tfp")).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(int(k))
     )
+    order = (F.col("score").desc(), F.col(id_col))
+    if query_id_col is None:
+        return scored.orderBy(*order).limit(int(k))
+    w = Window.partitionBy(query_id_col).orderBy(*order)
+    return (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= int(k))
+        .drop("_rn")
+    )
+
+
+def _index_sidecar(
+    spark: SparkSession, path: str
+) -> tuple[str, DataFrame, int]:
+    """The serves' one sidecar read: ``(data_root, stats, n_buckets)``
+    — the index's current generation (``resolve_data_root``), its
+    ``_stats`` frame and the ``n_buckets`` it was written with (read,
+    never guessed)."""
+    import os as _os
+
+    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+        resolve_data_root,
+    )
+
+    path = resolve_data_root(spark, path)
+    stats = spark.read.parquet(_os.path.join(path, "_stats"))
+    return path, stats, int(stats.collect()[0]["n_buckets"])
+
+
+def _scan_terms(
+    spark: SparkSession, path: str, terms: list[str], n_buckets: int
+) -> DataFrame:
+    """Postings of ``terms`` read through a partition-pruned scan: the
+    terms' buckets come from ONE driver-local probe of the term-bucket
+    rule (``manifest._probe_values`` — no job when the terms render as
+    SQL literals), and the scan carries ``term_bucket IN (...)``
+    (PartitionFilters) plus ``term IN (...)``."""
+    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+        _probe_values,
+    )
+
+    rows = _probe_values(
+        spark, terms, "string", [_term_bucket_sql("v", n_buckets)]
+    )
+    buckets = sorted({int(r[0]) for r in rows})
+    return (
+        spark.read.parquet(path)
+        .where(F.col("term_bucket").isin(buckets))
+        .where(F.col("term").isin(terms))
+    )
+
+
+def bm25_topk(
+    df: DataFrame,
+    query_terms: list[str],
+    k: int = 10,
+    k1: float = 1.2,
+    b: float = 0.75,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Top-``k`` documents for a term query by BM25 — the LEXICAL
+    retrieval path, the sparse complement of the embedding family's
+    ANN serving (``ivf_topk_*``): production retrieval runs both and
+    fuses, so an engine that serves dense top-k needs the sparse twin.
+
+    Scoring is classic Okapi BM25 (:func:`_okapi_topk`, the scorer all
+    four serving forms share):
+    ``idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))`` and
+    ``tf_part = tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))``, summed
+    over the query's terms per document.
+
+    Scale shape — the inverted-index access pattern without
+    materializing one: the posting build (:func:`_postings`, the one
+    the index writers use) filters the token explode to the QUERY'S
+    terms immediately (a literal ``isin`` — the broadcast-vocabulary
+    pattern), so the only stage that sees every token is a narrow
+    scan+filter and everything that shuffles is (matching doc, term)
+    sized; df-per-term rides a window over those aggregated rows
+    (the tfidf precedent, no self-join); N and avgdl are ONE map-side
+    corpus aggregate broadcast as a 1-row cross join.  Empty-string
+    tokens are dropped exactly as the index drops them.  Top-k is a
+    TakeOrdered (orderBy+limit), ties broken on the doc id.  Float
+    posture matches ``tfidf_top_terms``/``unigram_logprob``: per-term
+    doubles with ``ln``, summed per doc — few terms per query keep the
+    sum far from hash-rounding boundaries."""
+    if not query_terms:
+        raise ValueError("bm25_topk: query_terms must be non-empty")
+    terms = sorted({t.lower() for t in query_terms})
+    d, postings = _postings(df, text_col, id_col, terms)
+    # corpus stats: one map-side-combined aggregate, broadcast back
+    stats = d.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.avg(F.size(F.col("_w"))).alias("avgdl"),
+    )
+    return _okapi_topk(postings, stats, k, k1, b, id_col)
 
 
 def write_inverted_index(
@@ -544,8 +660,7 @@ def write_inverted_index(
     pass.  Returns ``path``."""
     import os as _os
 
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
-    d = df.select(F.col(id_col), words.alias("_w"))
+    d, postings = _postings(df, text_col, id_col)
     srow = d.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.avg(F.size(F.col("_w"))).alias("avgdl"),
@@ -559,35 +674,14 @@ def write_inverted_index(
             "postings (no non-empty tokens) — an empty index cannot "
             "be served; existing index left untouched"
         )
-    spark = df.sparkSession
-    stats = spark.createDataFrame(
+    stats = df.sparkSession.createDataFrame(
         [(srow["n_docs"], srow["avgdl"], int(n_buckets))],
         "n_docs bigint, avgdl double, n_buckets int",
     )
-    # doc length rides through the explode (a function of the doc, so
-    # max in the tf aggregate recovers it exactly) — the posting build
-    # never joins or shuffles a corpus-sized length table
-    tf = (
-        d.select(
-            F.col(id_col),
-            F.size(F.col("_w")).alias("_dl"),
-            F.explode(F.col("_w")).alias("term"),
-        )
-        .where(F.col("term") != "")
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("_dl").alias("dl"))
-    )
-    postings = (
-        tf.withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64(F.col("term")), F.lit(int(n_buckets))).cast(
-                "int"
-            ),
-        )
-        .repartition(int(n_buckets), "term_bucket")
-    )
     (
-        postings.write.mode("overwrite")
+        postings.withColumn("term_bucket", _term_bucket(n_buckets))
+        .repartition(int(n_buckets), "term_bucket")
+        .write.mode("overwrite")
         .partitionBy("term_bucket")
         .parquet(path)
     )
@@ -606,104 +700,23 @@ def bm25_topk_indexed(
 ) -> DataFrame:
     """Serve BM25 top-``k`` from a :func:`write_inverted_index` layout
     — the sparse mirror of ``ivf_topk_indexed``: the query's term
-    buckets are computed with the ENGINE'S OWN hash over a terms-frame
+    buckets are computed with the ENGINE'S OWN hash over the terms
     (bounded by ``|terms|`` — the IVF probe-collect pattern, and the
-    only way the probe agrees bit-for-bit with the writer's bucketing),
-    and the scan carries ``term_bucket IN (...)`` so Spark prunes to
-    exactly those partition directories (PartitionFilters, pinned in
-    tests).  Scoring replays :func:`bm25_topk`'s exact math — df as a
+    only way the probe agrees bit-for-bit with the writer's bucketing;
+    one driver-local SQL over a VALUES relation, so the probe schedules
+    no job), and the scan carries ``term_bucket IN (...)`` so Spark
+    prunes to exactly those partition directories (PartitionFilters,
+    pinned in tests).  Scoring is :func:`bm25_topk`'s scorer — df as a
     window over the pruned postings (all postings for a term live in
     its bucket, so the pruned scan sees every one), corpus stats from
     the broadcast sidecar — and is bit-identical to the direct path
     over the same corpus."""
-    import os as _os
-
     if not query_terms:
         raise ValueError("bm25_topk_indexed: query_terms must be non-empty")
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
-
-    path = resolve_data_root(spark, path)
+    path, stats, n_buckets = _index_sidecar(spark, path)
     terms = sorted({t.lower() for t in query_terms})
-    stats = spark.read.parquet(_os.path.join(path, "_stats"))
-    srow = stats.collect()[0]
-    n_buckets = int(srow["n_buckets"])
-    # Probe buckets via ONE driver-local SQL over a VALUES relation —
-    # still the engine's own xxhash64 (bit-agreement with the writer's
-    # bucketing by construction), but ConvertToLocalRelation folds the
-    # projection so the collect schedules no job (r18, the
-    # _bloom_kept_files pattern: the retired createDataFrame probe paid
-    # a Python->JVM conversion job of ~0.3-2 s per serve).  Terms a SQL
-    # literal cannot render exactly fall back to the frame form.
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        sql_cast_literals,
-    )
-
-    lits = sql_cast_literals(terms, "string")
-    if lits is not None:
-        probe = spark.sql(
-            f"SELECT DISTINCT pmod(xxhash64(v), {int(n_buckets)}L) AS b "
-            f"FROM VALUES {lits} AS t(v)"
-        )
-    else:
-        probe = (
-            spark.createDataFrame([(t,) for t in terms], "term string")
-            .select(
-                F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).alias(
-                    "b"
-                )
-            )
-            .distinct()
-        )
-    buckets = sorted(int(r[0]) for r in probe.collect())
-    postings = (
-        spark.read.parquet(path)
-        .where(F.col("term_bucket").isin(buckets))
-        .where(F.col("term").isin(terms))
-    )
-    from pyspark.sql import Window
-
-    with_df = postings.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
-    )
-    scored = (
-        with_df.crossJoin(
-            F.broadcast(
-                stats.select(
-                    F.col("n_docs").alias("_n_docs"),
-                    F.col("avgdl").alias("_avgdl"),
-                )
-            )
-        )
-        .withColumn(
-            "_idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("_n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "_tfp",
-            F.col("tf")
-            * F.lit(float(k1) + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(float(k1))
-                * (
-                    F.lit(1.0 - float(b))
-                    + F.lit(float(b)) * F.col("dl") / F.col("_avgdl")
-                )
-            ),
-        )
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(F.sum(F.col("_idf") * F.col("_tfp")).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(int(k))
-    )
+    postings = _scan_terms(spark, path, terms, n_buckets)
+    return _okapi_topk(postings, stats, k, k1, b, id_col)
 
 
 def bm25_topk_batch(
@@ -752,15 +765,7 @@ def bm25_topk_batch(
     explode drops it — the batch analogue of the single-query path's
     non-empty-terms requirement, which still applies to the table as
     a whole), and a NULL term inside an array is dropped."""
-    import os as _os
-
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
-
-    path = resolve_data_root(spark, path)
-    stats = spark.read.parquet(_os.path.join(path, "_stats"))
-    n_buckets = int(stats.collect()[0]["n_buckets"])
+    path, stats, n_buckets = _index_sidecar(spark, path)
     pairs = (
         queries.select(
             F.col(query_id_col),
@@ -773,79 +778,16 @@ def bm25_topk_batch(
     terms = sorted(r[0] for r in pairs.select("term").distinct().collect())
     if not terms:
         raise ValueError("bm25_topk_batch: queries contain no terms")
-    # driver-local VALUES probe — see bm25_topk_indexed (r18)
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        sql_cast_literals,
-    )
-
-    lits = sql_cast_literals(terms, "string")
-    if lits is not None:
-        bprobe = spark.sql(
-            f"SELECT DISTINCT pmod(xxhash64(v), {int(n_buckets)}L) AS b "
-            f"FROM VALUES {lits} AS t(v)"
-        )
-    else:
-        bprobe = (
-            spark.createDataFrame([(t,) for t in terms], "term string")
-            .select(
-                F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).alias(
-                    "b"
-                )
-            )
-            .distinct()
-        )
-    buckets = sorted(int(r[0]) for r in bprobe.collect())
-    postings = (
-        spark.read.parquet(path)
-        .where(F.col("term_bucket").isin(buckets))
-        .where(F.col("term").isin(terms))
-    )
-    from pyspark.sql import Window
-
-    with_df = postings.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
-    )
-    scored = (
-        with_df.join(F.broadcast(pairs), "term")
-        .crossJoin(
-            F.broadcast(
-                stats.select(
-                    F.col("n_docs").alias("_n_docs"),
-                    F.col("avgdl").alias("_avgdl"),
-                )
-            )
-        )
-        .withColumn(
-            "_idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("_n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "_tfp",
-            F.col("tf")
-            * F.lit(float(k1) + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(float(k1))
-                * (
-                    F.lit(1.0 - float(b))
-                    + F.lit(float(b)) * F.col("dl") / F.col("_avgdl")
-                )
-            ),
-        )
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum(F.col("_idf") * F.col("_tfp")).alias("score"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= int(k))
-        .drop("_rn")
+    postings = _scan_terms(spark, path, terms, n_buckets)
+    return _okapi_topk(
+        postings,
+        stats,
+        k,
+        k1,
+        b,
+        id_col,
+        query_id_col,
+        pairs=F.broadcast(pairs),
     )
 
 
@@ -914,15 +856,7 @@ def bm25_knn_join(
     ≤ k rows per query.  NULL/empty terms arrays contribute no rows;
     a query table with no terms at all is refused loudly (one cheap
     isEmpty on the exploded pairs, not a vocabulary collect)."""
-    import os as _os
-
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        resolve_data_root,
-    )
-
-    path = resolve_data_root(spark, path)
-    stats = spark.read.parquet(_os.path.join(path, "_stats"))
-    n_buckets = int(stats.collect()[0]["n_buckets"])
+    path, stats, n_buckets = _index_sidecar(spark, path)
     exploded = queries.select(
         F.col(query_id_col),
         F.explode(F.col(terms_col)).alias("term"),
@@ -931,7 +865,7 @@ def bm25_knn_join(
     # distinct exchange just to validate input
     if exploded.isEmpty():
         raise ValueError("bm25_knn_join: queries contain no terms")
-    bucket = F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int")
+    bucket = _term_bucket(n_buckets)
     # pairs feeds exactly ONE consumer (the scored join) and the probe
     # is derived from the terms alone — so the (qid, term) distinct
     # exchange runs once and the probe's distinct is over the (smaller)
@@ -943,58 +877,21 @@ def bm25_knn_join(
     pruned = spark.read.parquet(path).join(
         probe, ["term_bucket", "term"], "left_semi"
     )
-    from pyspark.sql import Window
-
     # (term_bucket, term) ≡ term as a grouping (the bucket is a
-    # function of the term); keying the window on both lets it reuse
-    # the semi-join's hash(term_bucket, term) exchange
-    with_df = pruned.withColumn(
-        "df",
-        F.count(F.lit(1)).over(Window.partitionBy("term_bucket", "term")),
-    )
-    if max_df is not None:
-        with_df = with_df.where(F.col("df") <= F.lit(int(max_df)))
-    scored = (
-        with_df.join(pairs, ["term_bucket", "term"])
-        .crossJoin(
-            F.broadcast(
-                stats.select(
-                    F.col("n_docs").alias("_n_docs"),
-                    F.col("avgdl").alias("_avgdl"),
-                )
-            )
-        )
-        .withColumn(
-            "_idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("_n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "_tfp",
-            F.col("tf")
-            * F.lit(float(k1) + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(float(k1))
-                * (
-                    F.lit(1.0 - float(b))
-                    + F.lit(float(b)) * F.col("dl") / F.col("_avgdl")
-                )
-            ),
-        )
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum(F.col("_idf") * F.col("_tfp")).alias("score"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= int(k))
-        .drop("_rn")
+    # function of the term); keying the df window and the pair join
+    # on both lets them reuse the semi-join's hash(term_bucket, term)
+    # exchange
+    return _okapi_topk(
+        pruned,
+        stats,
+        k,
+        k1,
+        b,
+        id_col,
+        query_id_col,
+        pairs=pairs,
+        by=("term_bucket", "term"),
+        max_df=max_df,
     )
 
 
@@ -1038,7 +935,7 @@ def unigram_logprob(
     shuffle for skew safety: ``groupBy("word").sum("tf")`` (map-side
     partial combine flattens the skew) joined back on word under AQE
     skew handling.  Same math, same oracle, identical results."""
-    spark_words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
+    spark_words = words_expr(F.col(text_col))
     tokens = df.select(
         F.col(id_col), F.explode(spark_words).alias("word")
     ).where(F.col("word") != "")

@@ -782,6 +782,32 @@ def sql_cast_literals(values: list, dtype: str) -> str | None:
     return ", ".join(out)
 
 
+def _probe_values(
+    spark: SparkSession, values: list, dtype: str, exprs: list[str]
+) -> list:
+    """Collect the SQL ``exprs`` (over a column ``v`` of type
+    ``dtype``) evaluated for each of ``values`` — the driver-local hash
+    probe the Bloom pruning and the BM25 term-bucket probe share.
+    When :func:`sql_cast_literals` renders the values, it is ONE SQL
+    over a VALUES relation: ConvertToLocalRelation folds the projection
+    into the LocalRelation, so the collect schedules no job (a
+    createDataFrame probe pays a Python->JVM conversion job of
+    ~0.3-2 s).  Values no SQL literal renders exactly fall back to the
+    same SQL text over a ``createDataFrame`` of them.  Either way the
+    engine's own functions compute the result at the column's native
+    type, so it agrees with the writer by construction."""
+    lits = sql_cast_literals(values, dtype)
+    if lits is not None:
+        sels = ", ".join(exprs)
+        sql = f"SELECT {sels} FROM VALUES {lits} AS t(v)"
+        return spark.sql(sql).collect()
+    return (
+        spark.createDataFrame([(v,) for v in values], f"v {dtype}")
+        .selectExpr(*exprs)
+        .collect()
+    )
+
+
 def bloom_point_scan(
     spark: SparkSession,
     root: str,
@@ -857,36 +883,17 @@ def _bloom_kept_files(
         return None
     bits, k = meta[column]
     # Probe positions: the engine's own xxhash64 at the column's native
-    # type, evaluated through ONE driver-local SQL over a VALUES
-    # relation — ConvertToLocalRelation folds the projection into the
-    # LocalRelation, so the collect never schedules a job (r18;
-    # measured 0.05 s vs 0.3-2 s for the retired createDataFrame form,
-    # whose Python->JVM conversion dominated every probe).  Hash
-    # identity with the writer is still by construction: same
-    # xxhash64, same typed value (literals round-trip through CAST at
-    # the column's type).  Values a SQL literal cannot render exactly
-    # fall back to the createDataFrame path.
-    lits = sql_cast_literals(values, dtypes[column])
-    if lits is not None:
-        sels = ", ".join(
-            f"pmod(xxhash64(v, {i}), {bits}L) AS p{i}" for i in range(k)
+    # type (same typed value as the writer hashed), through the one
+    # driver-local probe — |values| x k positions, metadata-sized
+    pos_rows = [
+        [int(p) for p in r]
+        for r in _probe_values(
+            spark,
+            values,
+            dtypes[column],
+            [f"pmod(xxhash64(v, {i}), {bits}L) AS p{i}" for i in range(k)],
         )
-        probe = spark.sql(
-            f"SELECT {sels} FROM VALUES {lits} AS t(v)"
-        )
-    else:
-        probe = spark.createDataFrame(
-            [(v,) for v in values], f"v {dtypes[column]}"
-        ).select(
-            *[
-                F.pmod(F.xxhash64(F.col("v"), F.lit(i)), F.lit(bits)).alias(
-                    f"p{i}"
-                )
-                for i in range(k)
-            ]
-        )
-    # |values| x k positions — metadata-sized planning collect
-    pos_rows = [[int(r[f"p{i}"]) for i in range(k)] for r in probe.collect()]
+    ]
 
     all_widx = sorted({p >> 6 for ps in pos_rows for p in ps})
     # Containment test DRIVER-SIDE over the pruned sidecar words: one
@@ -1463,6 +1470,7 @@ def _gc_candidates(
     root: str,
     keep_seq: int,
     keep_generation: str,
+    parsed: list[int],
     keep_last: int = 1,
     legacy_sidecars: tuple[str, ...] = (),
 ) -> tuple[list[str], set[str]]:
@@ -1470,7 +1478,10 @@ def _gc_candidates(
     deletes by and :func:`fsck_index` reports GC debt by, so the two
     can never disagree about the grace window.  Classifies the root
     listing and the manifest listing against the commit ``keep_seq``
-    (naming ``keep_generation``) under retention ``keep_last``.
+    (naming ``keep_generation``) under retention ``keep_last``;
+    ``parsed`` is the ascending list of PARSEABLE manifest seqs (at
+    least every one at or below ``keep_seq``) — each caller reads its
+    manifests once and hands the result in.
 
     Returns ``(names, held)``: ``names`` is everything the retention
     policy does not keep, in listing order, root names first, then
@@ -1485,11 +1496,7 @@ def _gc_candidates(
     # only be mid-scan on a generation it resolved, and corrupt
     # (crash-stranded) manifests were never resolvable — their
     # generations are orphans and their manifests superseded residue
-    published = [
-        s
-        for s in _manifest_seqs(spark, root)
-        if s <= keep_seq and _read_manifest(spark, root, s) is not None
-    ]
+    published = [s for s in parsed if s <= keep_seq]
     kept_seqs = set(published[-keep_last:]) | {keep_seq}
     # our writers name generations _gen-<seq>; a payload using another
     # convention keeps only the current generation (the safe floor)
@@ -1568,8 +1575,19 @@ def gc_generations(
     generation: it survives while fewer than ``keep_last`` generations
     have been published.  Returns deleted names."""
     jvm, fs = _fs_for(spark, root)
+    parsed = [
+        s
+        for s in _manifest_seqs(spark, root)
+        if s <= keep_seq and _read_manifest(spark, root, s) is not None
+    ]
     names, held = _gc_candidates(
-        spark, root, keep_seq, keep_generation, keep_last, legacy_sidecars
+        spark,
+        root,
+        keep_seq,
+        keep_generation,
+        parsed,
+        keep_last,
+        legacy_sidecars,
     )
     deleted = [n for n in names if n not in held]
     for n in deleted:
@@ -1737,14 +1755,25 @@ def fsck_index(
     mutation — safe against a live index."""
     from pyspark.sql import functions as F
 
+    from airflow_etl_minio_to_postgres_spark.functions.text import (
+        _term_bucket,
+    )
+
     report: dict = {
         "root": root,
         "issues": [],
         "warnings": [],
         "gc_debt": [],
     }
-    got = latest_manifest(spark, root)
-    corrupt = corrupt_manifests(spark, root)
+    # every listed manifest read ONCE; the served seq (latest_manifest's
+    # rule), the corrupt list, the grace window and the previous
+    # generation all derive from this map
+    payloads = {
+        s: _read_manifest(spark, root, s) for s in _manifest_seqs(spark, root)
+    }
+    parsed = [s for s, p in payloads.items() if p is not None]
+    corrupt = [s for s, p in payloads.items() if p is None]
+    got = (parsed[-1], payloads[parsed[-1]]) if parsed else None
     report["corrupt_manifests"] = corrupt
     prev_seq = prev_root = None
     if got is None:
@@ -1779,21 +1808,13 @@ def fsck_index(
         # would collect, by the same classifier — plus the generations
         # above the served seq, which GC leaves alone
         report["gc_debt"], _ = _gc_candidates(
-            spark, root, seq, str(gen), keep_last
+            spark, root, seq, str(gen), parsed, keep_last
         )
         # the PREVIOUS retained generation, for the dropped-sidecar
         # warning and the kind-regression check below
-        prev = [
-            s
-            for s in _manifest_seqs(spark, root)
-            if s < seq and s not in corrupt
-        ]
-        payload_prev = (
-            _read_manifest(spark, root, prev[-1]) if prev else None
-        )
-        if payload_prev is not None:
-            prev_seq = prev[-1]
-            prev_root = _join(root, str(payload_prev["generation"]))
+        if len(parsed) > 1:
+            prev_seq = parsed[-2]
+            prev_root = _join(root, str(payloads[prev_seq]["generation"]))
     report["data_root"] = data_root
 
     try:
@@ -1907,13 +1928,7 @@ def fsck_index(
                 bad = (
                     df.select("term", "term_bucket")
                     .limit(int(sample))
-                    .where(
-                        F.pmod(
-                            F.xxhash64(F.col("term")),
-                            F.lit(n_buckets),
-                        ).cast("int")
-                        != F.col("term_bucket")
-                    )
+                    .where(_term_bucket(n_buckets) != F.col("term_bucket"))
                     .count()
                 )
                 if bad:

@@ -1308,7 +1308,8 @@ def _inv_index_process_batch(
     == once; stats: an already-merged batch is a no-op) are directly
     testable."""
     from airflow_etl_minio_to_postgres_spark.functions.text import (
-        WHITESPACE,
+        _postings,
+        _term_bucket,
     )
     from airflow_etl_minio_to_postgres_spark.sources.files import (
         _local_path,
@@ -1356,26 +1357,10 @@ def _inv_index_process_batch(
         # the stats, only after the postings commit — so both the
         # postings and the stats for this batch are already on disk
         return
-    words = F.split(F.lower(F.trim(F.col(text_col))), WHITESPACE)
-    d = batch_df.select(F.col(id_col), words.alias("_w"))
-    # dl rides through the explode (function of the doc; max recovers
-    # it) — no batch-sized length join, matching the batch builder
-    tf = (
-        d.select(
-            F.col(id_col),
-            F.size(F.col("_w")).alias("_dl"),
-            F.explode(F.col("_w")).alias("term"),
-        )
-        .where(F.col("term") != "")
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("_dl").alias("dl"))
-    )
-    postings = tf.withColumn(
-        "term_bucket",
-        F.pmod(F.xxhash64(F.col("term")), F.lit(int(n_buckets))).cast("int"),
-    )
+    # the batch builder's posting build and bucket rule, verbatim
+    d, postings = _postings(batch_df, text_col, id_col)
     _write_batch_commit(
-        postings,
+        postings.withColumn("term_bucket", _term_bucket(n_buckets)),
         index_path,
         f"{token}-{batch_id}",
         layout="term_bucket",

@@ -2339,6 +2339,68 @@ def test_bm25_knn_join_max_df_drops_stopword_candidates(spark, tmp_path):
     assert uncapped.count() == 5
 
 
+def test_bm25_four_forms_agree_on_empty_and_unrenderable_terms(
+    spark, tmp_path
+):
+    """All four BM25 forms return the same rows, bit for bit, for term
+    sets the alphanumeric tests never draw: an empty term over a corpus
+    with empty/whitespace-only texts (the direct path drops empty
+    tokens like the index, so those docs never rank), and terms with a
+    quote or a backslash, which no SQL literal renders exactly — their
+    bucket probe takes the createDataFrame fallback (one term set
+    holds both: they fail the same literal check)."""
+    from airflow_etl_minio_to_postgres_spark.functions.text import (
+        bm25_knn_join,
+        bm25_topk,
+        bm25_topk_batch,
+        bm25_topk_indexed,
+        write_inverted_index,
+    )
+    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+        sql_cast_literals,
+    )
+
+    df = spark.createDataFrame(
+        [(0, ""), (1, "spark don't stop"), (2, "a\\b path spark"),
+         (3, "spark spark join"), (4, "   "), (5, "don't panic a\\b")]
+        + [(i, f"spark doc{i}") for i in range(6, 12)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "inv_odd")
+    write_inverted_index(df, path, n_buckets=4)
+    qsets = {1: ["spark", ""], 2: ["don't", "a\\b"]}
+    assert sql_cast_literals(["don't"], "string") is None
+    assert sql_cast_literals(["a\\b"], "string") is None
+    # one query table: the batched forms serve both term sets
+    queries = spark.createDataFrame(
+        list(qsets.items()), "qid long, terms array<string>"
+    )
+
+    def per_query(frame, qid=None):
+        got = {}
+        for r in frame.collect():
+            got.setdefault(qid or r.qid, []).append(
+                (r.doc_id, r.score.hex())
+            )
+        return {
+            q: sorted(v, key=lambda t: (-float.fromhex(t[1]), t[0]))
+            for q, v in got.items()
+        }
+
+    direct, indexed = {}, {}
+    for q, terms in qsets.items():
+        direct.update(per_query(bm25_topk(df, terms, k=20), q))
+        indexed.update(
+            per_query(bm25_topk_indexed(spark, path, terms, k=20), q)
+        )
+    assert set(direct) == set(qsets)
+    # the empty-text (0) and whitespace-only (4) docs never rank
+    assert all({0, 4}.isdisjoint(d for d, _ in v) for v in direct.values())
+    assert indexed == direct
+    assert per_query(bm25_topk_batch(spark, path, queries, k=20)) == direct
+    assert per_query(bm25_knn_join(spark, path, queries, k=20)) == direct
+
+
 def test_blocked_fuzzy_pairs_matches_naive(spark):
     """Blocked + threshold-bounded Levenshtein matching equals the
     naive all-pairs form restricted to the blocks: the length-delta

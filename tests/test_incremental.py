@@ -2525,6 +2525,38 @@ def test_fsck_gc_debt_is_what_gc_generations_deletes(spark, tmp_path):
         assert again["gc_debt"] == ["_gen-000009"] and again["issues"] == []
 
 
+def test_fsck_reads_each_manifest_once(spark, tmp_path, monkeypatch):
+    """fsck_index reads every listed manifest exactly once (the served
+    seq, the corrupt list, the grace window and the previous
+    generation all come from one map), and gc_generations reads each
+    manifest at or below its commit at most once."""
+    from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
+
+    root = str(tmp_path / "t")
+    df = spark.range(3).selectExpr("id", "id * 2 AS v").coalesce(1)
+    for _ in range(5):
+        mf.commit_parquet_generation(spark, df, root, keep_last=5)
+    reads = []
+    real = mf._read_manifest
+
+    def counted(spark_, root_, seq):
+        reads.append(seq)
+        return real(spark_, root_, seq)
+
+    monkeypatch.setattr(mf, "_read_manifest", counted)
+    rep = mf.fsck_index(spark, root, keep_last=5)
+    assert sorted(reads) == [1, 2, 3, 4, 5]
+    assert rep["manifest_seq"] == 5 and rep["corrupt_manifests"] == []
+    assert rep["issues"] == [] and rep["gc_debt"] == []
+    assert sorted(rep) == sorted(
+        ["root", "issues", "warnings", "gc_debt", "corrupt_manifests",
+         "manifest_seq", "data_root", "kind", "n_commits"]
+    )
+    reads.clear()
+    assert mf.gc_generations(spark, root, 5, "_gen-000005", keep_last=5) == []
+    assert sorted(reads) == [1, 2, 3, 4, 5]
+
+
 def test_fsck_and_serving_survive_crash_stranded_manifest(spark, tmp_path):
     """Round-13 advisor finding (medium): on visible-before-bytes
     filesystems a crash mid-publish strands a partial object under the

@@ -745,17 +745,16 @@ def test_ivf_assign_nprobe_matches_python_model(spark, vecs, nprobe):
     lkeys=st.lists(st.integers(0, 3), min_size=0, max_size=25),
     rkeys=st.lists(st.integers(0, 3), min_size=0, max_size=25),
     cap=st.integers(1, 6),
-    swap_mode=st.booleans(),
 )
 @SPARK_SETTINGS
 def test_salted_join_sides_every_pair_exactly_once(
-    spark, lkeys, rkeys, cap, swap_mode
+    spark, lkeys, rkeys, cap
 ):
     """salted_join_sides exactness under arbitrary two-frame bucket
-    shapes, in BOTH modes (legacy left-salted and right_id per-bucket
-    swap): for ANY left/right key multisets and ANY cap, the salted
-    join yields every in-bucket (left id, right id) pair EXACTLY once —
-    bit-identical downstream behavior to the unsalted join."""
+    shapes (per-bucket swap: the larger side salts): for ANY left/right
+    key multisets and ANY cap, the salted join yields every in-bucket
+    (left id, right id) pair EXACTLY once — bit-identical downstream
+    behavior to the unsalted join."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
@@ -777,7 +776,7 @@ def test_salted_join_sides_every_pair_exactly_once(
         "lid",
         "band_key",
         cap,
-        right_id="rid" if swap_mode else None,
+        right_id="rid",
     )
     got = sorted(
         (r.lid, r.rid) for r in l_fan.join(r_fan, jk).collect()
@@ -792,10 +791,10 @@ def test_salted_join_sides_every_pair_exactly_once(
 
 
 def test_salted_join_sides_right_heavy_splits(spark):
-    """The right_id mode's reason to exist: a bucket hot ONLY on the
+    """The per-bucket swap's reason to exist: a bucket hot ONLY on the
     right (1 left row x 200 store rows, cap 10) must salt the RIGHT
-    side into ceil(200/10)=20 sub-groups — the legacy mode is pinned
-    at n_salt <= l = 1 (cannot split below r comparisons per task)."""
+    side into ceil(200/10)=20 sub-groups — salting the left could not
+    split below r comparisons per task (n_salt <= l = 1)."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
@@ -807,16 +806,7 @@ def test_salted_join_sides_right_heavy_splits(spark):
         [(i, "k") for i in range(200)], "rid long, band_key string"
     )
 
-    # legacy: left salts, capped at l=1 -> one sub-group holds all 200
-    l_fan, r_fan, jk = salted_join_sides(
-        left, right, "lid", "band_key", 10
-    )
-    legacy_groups = (
-        r_fan.groupBy(*jk).agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    assert max(g.n for g in legacy_groups) == 200
-
-    # swap mode: right salts into ceil(200/10)=20 sub-groups of ~10,
+    # right salts into ceil(200/10)=20 sub-groups of ~10,
     # left replicates into all 20 — and the pair set is still exact
     l_fan, r_fan, jk = salted_join_sides(
         left, right, "lid", "band_key", 10, right_id="rid"
