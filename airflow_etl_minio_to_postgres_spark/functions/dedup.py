@@ -21,6 +21,10 @@ sha256, which is what makes the DuckDB oracle possible.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+from operator import and_
+
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -243,6 +247,66 @@ def _minhash_table(
     )
 
 
+def _attach_sides(
+    pairs: DataFrame, table: DataFrame, id_col: str, col: str, prefix: str
+) -> DataFrame:
+    """Join ``table``'s per-id ``col`` onto ``id_a`` and onto ``id_b``
+    as ``<prefix>a`` / ``<prefix>b`` — the two id-keyed joins every
+    pair verification reads its sides through."""
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            table.select(
+                F.col(id_col).alias(f"id_{side}"),
+                F.col(col).alias(prefix + side),
+            ),
+            f"id_{side}",
+        )
+    return pairs
+
+
+def _minhash_pairs(
+    sig: DataFrame,
+    id_col: str,
+    num_bands: int,
+    rows_per_band: int,
+    threshold: float,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """THE MinHash pair path over a signature table ``(id, shingles,
+    minhash)`` (:func:`_minhash_table`): band keys, the
+    :func:`bucket_pairs` self-join with the first-match rule over the
+    per-doc band-key arrays, then exact Jaccard over the attached
+    shingle sets.  Returns (id_a, id_b, jaccard), ``id_a < id_b``,
+    ``jaccard >= threshold`` — each pair once, so no distinct exchange.
+    Shared by :func:`near_dup_pairs` and the streaming intra-batch
+    screen, so the two cannot drift."""
+    banded = sig.select(
+        F.col(id_col),
+        band_keys_expr(F.col("minhash"), num_bands, rows_per_band).alias(
+            "_bks"
+        ),
+    ).select(
+        F.col(id_col),
+        "_bks",
+        F.posexplode("_bks").alias("_band", "band_key"),
+    )
+    pairs = bucket_pairs(
+        banded,
+        id_col,
+        ["_bks"],
+        max_bucket_size=max_bucket_size,
+        n_bands=num_bands,
+        band_differs=lambda b: F.element_at(F.col("_bks_a"), b + 1)
+        != F.element_at(F.col("_bks_b"), b + 1),
+    ).select("id_a", "id_b")
+    return (
+        _attach_sides(pairs, sig, id_col, "shingles", "sh_")
+        .withColumn("jaccard", jaccard_expr(F.col("sh_a"), F.col("sh_b")))
+        .where(F.col("jaccard") >= F.lit(threshold))
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -268,79 +332,15 @@ def near_dup_pairs(
             f"num_hashes ({num_hashes}) must divide evenly into num_bands "
             f"({num_bands}); trailing hashes would be silently ignored"
         )
-    rows_per_band = num_hashes // num_bands
     # The signature table feeds four plan branches (both band-join sides +
     # both shingle-set joins); persist it so the corpus is shingled and
     # hashed ONCE, not once per branch — at scale this is the difference
     # between one corpus pass and four.  Tracked for release_caches().
-    base = _persist_tracked(
+    sig = _persist_tracked(
         _minhash_table(df, text_col, id_col, num_hashes, shingle_k)
     )
-    banded = base.select(
-        F.col(id_col),
-        band_keys_expr(F.col("minhash"), num_bands, rows_per_band).alias(
-            "_bks"
-        ),
-    ).select(
-        F.col(id_col),
-        "_bks",
-        F.posexplode("_bks").alias("_band", "band_key"),
-    )
-    # First-match banding: emit a candidate ONLY from the lowest band
-    # whose keys match (every prior band's key must differ).  One row
-    # per (doc, band) per side and exactly one first-matching band make
-    # the candidate set unique by construction — the dropDuplicates
-    # exchange over the m^2-per-hot-bucket candidate set disappears for
-    # the price of a few string compares on the band-key arrays the
-    # sides now carry.  Result set identical: later-band copies of a
-    # pair are exactly the rows dropDuplicates used to discard.
-    first_match = None
-    for b_prior in range(num_bands - 1):
-        cond = (F.col("_band") <= F.lit(b_prior)) | (
-            F.element_at(F.col("_bks_a"), b_prior + 1)
-            != F.element_at(F.col("_bks_b"), b_prior + 1)
-        )
-        first_match = cond if first_match is None else first_match & cond
-    pairs = (
-        banded.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_bks").alias("_bks_a"),
-            "_band",
-            "band_key",
-        )
-        .join(
-            banded.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_bks").alias("_bks_b"),
-                "band_key",
-            ),
-            "band_key",
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(first_match)
-        .select("id_a", "id_b")
-    )
-    sets = base.select(id_col, "shingles")
-    with_sets = (
-        pairs.join(
-            sets.select(
-                F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")
-            ),
-            "id_b",
-        )
-    )
-    return (
-        with_sets.withColumn(
-            "jaccard", jaccard_expr(F.col("sh_a"), F.col("sh_b"))
-        )
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard")
+    return _minhash_pairs(
+        sig, id_col, num_bands, num_hashes // num_bands, threshold, None
     )
 
 
@@ -527,22 +527,11 @@ def ngram_jaccard_pairs(
             & (F.col("_sa") >= _req_ceil(threshold, F.col("_sb")))
         )
         .select("id_a", "id_b")
+        # a pair sharing k prefix grams meets k times
         .dropDuplicates(["id_a", "id_b"])
     )
-    doc_sets = per_doc.select(id_col, "_gset")
     return (
-        cand.join(
-            doc_sets.select(
-                F.col(id_col).alias("id_a"), F.col("_gset").alias("_ga")
-            ),
-            "id_a",
-        )
-        .join(
-            doc_sets.select(
-                F.col(id_col).alias("id_b"), F.col("_gset").alias("_gb")
-            ),
-            "id_b",
-        )
+        _attach_sides(cand, per_doc, id_col, "_gset", "_g")
         .withColumn("_c", F.size(F.array_intersect("_ga", "_gb")))
         .withColumn(
             "jaccard",
@@ -610,22 +599,11 @@ def ngram_containment_pairs(
             & (F.col("_sb") >= _req_ceil(threshold, F.col("_sa")))
         )
         .select("id_a", "id_b")
+        # a pair sharing k prefix grams meets k times
         .dropDuplicates(["id_a", "id_b"])
     )
-    doc_sets = per_doc.select(id_col, "_gset")
     return (
-        cand.join(
-            doc_sets.select(
-                F.col(id_col).alias("id_a"), F.col("_gset").alias("_ga")
-            ),
-            "id_a",
-        )
-        .join(
-            doc_sets.select(
-                F.col(id_col).alias("id_b"), F.col("_gset").alias("_gb")
-            ),
-            "id_b",
-        )
+        _attach_sides(cand, per_doc, id_col, "_gset", "_g")
         .withColumn(
             "containment",
             F.size(F.array_intersect("_ga", "_gb")).cast("double")
@@ -1073,6 +1051,65 @@ def salted_join_sides(
     )
 
 
+def bucket_pairs(
+    fan: DataFrame,
+    id_col: str,
+    carry: list[str],
+    *,
+    key: str = "band_key",
+    max_bucket_size: int | None = None,
+    n_bands: int = 0,
+    band_differs: Callable[[int], Column] | None = None,
+) -> DataFrame:
+    """THE candidate self-join of the banded near-duplicate families
+    (MinHash, SimHash, aHash, blocked linkage, the streaming intra-batch
+    screen): ``(id_a, id_b, <c>_a..., <c>_b...)`` for every pair of
+    ``fan`` rows sharing ``key``, with ``id_a < id_b``.  Each caller
+    adds its own verification as ordinary Column code over the carried
+    ``carry`` columns.
+
+    Hot buckets split through :func:`salted_band_sides` under
+    ``max_bucket_size`` (exact: each pair still meets once per shared
+    key).  With ``band_differs`` set, ``fan`` is a per-(id, band)
+    fan-out with a ``_band`` index and a key that includes it, and a
+    pair is emitted ONLY from the lowest band its sides share: band
+    ``b`` keeps a row iff every band ``b' < b`` differs
+    (``band_differs(b')``, over the carried columns).  One row per
+    (id, band) per side and exactly one first-matching band make the
+    candidate set unique by construction, so no ``dropDuplicates``
+    exchange reshuffles the m^2-per-hot-bucket candidate stream; the
+    later-band copies it would discard are never emitted."""
+    a_fan, b_fan, keys = salted_band_sides(fan, id_col, key, max_bucket_size)
+
+    def side(f: DataFrame, s: str, *band: str) -> DataFrame:
+        return f.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            *band,
+            *keys,
+        )
+
+    band = ["_band"] if band_differs is not None else []
+    pairs = (
+        side(a_fan, "a", *band)
+        .join(side(b_fan, "b"), keys)
+        .where(F.col("id_a") < F.col("id_b"))
+    )
+    if band and n_bands > 1:
+        pairs = pairs.where(
+            reduce(
+                and_,
+                [
+                    (F.col("_band") <= F.lit(b)) | band_differs(b)
+                    for b in range(n_bands - 1)
+                ],
+            )
+        )
+    return pairs.select(
+        "id_a", "id_b", *[f"{c}_{s}" for s in "ab" for c in carry]
+    )
+
+
 # ---------------------------------------------------------------------------
 # SimHash (60-bit, expression-only)
 # ---------------------------------------------------------------------------
@@ -1151,16 +1188,18 @@ def simhash_near_dup_pairs(
     (id_a, id_b, hamming) with ``id_a < id_b`` and
     ``hamming <= max_hamming``.
 
-    ``max_bucket_size`` bounds hot-band-bucket skew via
-    :func:`salted_band_sides` (exact — results are bit-identical to the
-    unsalted plan; only task-level work distribution changes).
+    Candidates come from :func:`bucket_pairs` with the first-match
+    rule over the shifted ``sig`` chunks; ``max_bucket_size`` bounds
+    hot-band-bucket skew through its :func:`salted_band_sides` salting
+    (exact — results are bit-identical to the unsalted plan; only
+    task-level work distribution changes).
     """
     chunk_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << chunk_bits) - 1
     sigs = _persist_tracked(simhash(df, text_col, id_col))
     banded = sigs.select(
         id_col,
-        "simhash",
+        F.col("simhash").alias("sig"),
         F.posexplode(
             F.array(
                 *[
@@ -1177,46 +1216,17 @@ def simhash_near_dup_pairs(
             )
         ).alias("_band", "band_key"),
     )
-    a_fan, b_fan, join_keys = salted_band_sides(
-        banded, id_col, "band_key", max_bucket_size
-    )
 
     def chunk(col: str, b: int) -> Column:
         return F.expr(f"shiftright({col}, {b * chunk_bits}) & {mask}")
 
-    # First-match banding: emit a pair ONLY from the lowest band whose
-    # chunks match — every band-b' < b chunk must differ.  A candidate
-    # pair is then unique by construction (one row per (doc, band) on
-    # each side, and exactly one band can be the first match), which
-    # deletes the dropDuplicates exchange that used to reshuffle the
-    # full m^2-per-hot-bucket candidate set; the replacement is a few
-    # shift-and-compare ops per candidate row on sigs the join already
-    # carries.  Result set identical: duplicates never had distinct
-    # (sig_a, sig_b), so dropping later copies == never emitting them.
-    first_match = None
-    for b_prior in range(SIMHASH_BANDS - 1):
-        cond = (F.col("_band") <= F.lit(b_prior)) | (
-            chunk("sig_a", b_prior) != chunk("sig_b", b_prior)
-        )
-        first_match = cond if first_match is None else first_match & cond
-    pairs = (
-        a_fan.select(
-            F.col(id_col).alias("id_a"),
-            F.col("simhash").alias("sig_a"),
-            "_band",
-            *join_keys,
-        )
-        .join(
-            b_fan.select(
-                F.col(id_col).alias("id_b"),
-                F.col("simhash").alias("sig_b"),
-                *join_keys,
-            ),
-            join_keys,
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(first_match)
-        .select("id_a", "id_b", "sig_a", "sig_b")
+    pairs = bucket_pairs(
+        banded,
+        id_col,
+        ["sig"],
+        max_bucket_size=max_bucket_size,
+        n_bands=SIMHASH_BANDS,
+        band_differs=lambda b: chunk("sig_a", b) != chunk("sig_b", b),
     )
     return (
         pairs.withColumn(

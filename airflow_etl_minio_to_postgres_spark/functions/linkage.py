@@ -14,9 +14,10 @@ Zingg):
    100 TB contract is the same as the MinHash band join in
    ``functions/dedup.py``: per-block candidate count is the unit of
    cost, so block keys are chosen to keep blocks small; a Zipf-hot
-   block is handled exactly like a hot LSH band — salt the block key
-   through ``dedup.salted_join_sides``' mechanism, or tighten the key
-   (block on more columns).
+   block is handled exactly like a hot LSH band — the block self-join
+   is the family's one candidate self-join, ``dedup.bucket_pairs``,
+   whose ``dedup.salted_band_sides`` salting splits it — or tighten the
+   key (block on more columns).
 2. **Pairwise matching** scores only the candidates: threshold-bounded
    Levenshtein (``F.levenshtein(l, r, threshold)`` — Spark abandons the
    DP early once the distance provably exceeds the bound, so per-pair
@@ -38,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-    salted_band_sides,
+    bucket_pairs,
 )
 from airflow_etl_minio_to_postgres_spark.functions.graph import (
     assign_clusters,
@@ -79,12 +80,13 @@ def blocked_fuzzy_pairs(
     in ONE join task doing ``m**2`` comparisons while the rest of the
     cluster idles (the same straggler the streaming near-dup sink
     measured at 275 s).  Set, blocks larger than the cap split through
-    :func:`~airflow_etl_minio_to_postgres_spark.functions.dedup.
-    salted_band_sides` — the shared skew mechanism of the banded dedup
-    family: the probe side salts into ``ceil(m/cap)`` sub-groups by id
-    hash, the build side replicates into each, every pair still meets
-    exactly once, so results are BIT-IDENTICAL to the unsalted plan
-    (pytest-pinned) and per-task work drops to ``~cap * m``.  Blocking
+    the banded dedup family's one candidate self-join
+    (:func:`~airflow_etl_minio_to_postgres_spark.functions.dedup.
+    bucket_pairs`) and its ``salted_band_sides`` salting: the probe
+    side salts into ``ceil(m/cap)`` sub-groups by id hash, the build
+    side replicates into each, every pair still meets exactly once,
+    so results are BIT-IDENTICAL to the unsalted plan (pytest-pinned)
+    and per-task work drops to ``~cap * m``.  Blocking
     runs over a single hashed block key (``xxhash64`` of the block
     columns) with the real column equalities re-checked in the join —
     hash collisions between different blocks are filtered exactly, and
@@ -122,30 +124,16 @@ def blocked_fuzzy_pairs(
     # only the wasted comparisons go.
     for a in blk:
         fan = fan.where(F.col(a).isNotNull())
-    a_fan, b_fan, keys = salted_band_sides(
-        fan, "_id", key="_bk", max_bucket_size=max_block_size
+    pairs = bucket_pairs(
+        fan, "_id", ["_name", *blk], key="_bk", max_bucket_size=max_block_size
     )
-    a = a_fan.select(
-        F.col("_id").alias("id_a"),
-        F.col("_name").alias("_name_a"),
-        *[F.col(c).alias(f"{c}_a") for c in blk],
-        *keys,
-    )
-    b = b_fan.select(
-        F.col("_id").alias("id_b"),
-        F.col("_name").alias("_name_b"),
-        *[F.col(c).alias(f"{c}_b") for c in blk],
-        *keys,
-    )
-    pairs = a.join(b, keys)
     # re-check the REAL block equalities: exact on hash collisions, and
     # SQL equality keeps the null-block exclusion the oracle join has
     for c in blk:
         pairs = pairs.where(F.col(f"{c}_a") == F.col(f"{c}_b"))
     return (
-        pairs.where(F.col("id_a") < F.col("id_b"))
         # necessary condition, no DP: edit distance >= length delta
-        .where(F.abs(F.length("_name_a") - F.length("_name_b")) <= d)
+        pairs.where(F.abs(F.length("_name_a") - F.length("_name_b")) <= d)
         .withColumn(
             "distance", F.levenshtein("_name_a", "_name_b", d)
         )

@@ -310,11 +310,13 @@ def ahash_near_dup_pairs(
     chunk; measured ~15M candidate pairs from 10k payloads at sf0.1):
     the bitstring is packed ONCE into two 32-bit longs, so per-candidate
     verification is two xor+bit_counts instead of ``n_cells`` substring
-    compares, and multi-band duplicates are eliminated by a FIRST-
-    MATCHING-BAND predicate (recompute each band's chunk equality from
-    the packed halves — pure integer expressions) rather than a
-    dropDuplicates shuffle of the full candidate set.  One exchange
-    total (the band-key join); the candidate stream never re-shuffles.
+    compares, and multi-band duplicates are eliminated by the FIRST-
+    MATCHING-BAND rule of the family's one candidate self-join,
+    :func:`...functions.dedup.bucket_pairs` (each band's chunk equality
+    recomputed from the packed halves — pure integer expressions),
+    rather than a dropDuplicates shuffle of the full candidate set.
+    One exchange total (the band-key join); the candidate stream never
+    re-shuffles.
 
     ``max_bucket_size`` bounds hot-band-bucket SKEW via the shared
     :func:`...functions.dedup.salted_band_sides` mechanism: oversized
@@ -329,7 +331,7 @@ def ahash_near_dup_pairs(
         raise ValueError("packed verification expects 64 bits / 8 bands")
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
         _persist_tracked,
-        salted_band_sides,
+        bucket_pairs,
     )
 
     band_len = n_cells // n_bands
@@ -369,42 +371,24 @@ def ahash_near_dup_pairs(
         ).alias("_band", "band_key"),
     )
 
-    def _chunk(col: str, b: int):
+    def _chunk(side: str, b: int):
         # band b lives in _hi (b<4) or _lo (b>=4), MSB-first
-        src = F.col(col + ("_hi" if b < 4 else "_lo"))
+        src = F.col(("_hi_" if b < 4 else "_lo_") + side)
         return F.shiftright(src, 24 - 8 * (b % 4)).bitwiseAND(F.lit(255))
 
-    a_fan, b_fan, join_keys = salted_band_sides(
-        packed, id_col, "band_key", max_bucket_size
+    cand = bucket_pairs(
+        packed,
+        id_col,
+        ["_hi", "_lo"],
+        max_bucket_size=max_bucket_size,
+        n_bands=n_bands,
+        band_differs=lambda b: _chunk("a", b) != _chunk("b", b),
     )
-    a = a_fan.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_hi").alias("a_hi"),
-        F.col("_lo").alias("a_lo"),
-        "_band",
-        *join_keys,
-    )
-    b_side = b_fan.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_hi").alias("b_hi"),
-        F.col("_lo").alias("b_lo"),
-        *join_keys,
-    )
-    cand = a.join(b_side, join_keys).where(F.col("id_a") < F.col("id_b"))
-    first_match = None
-    for b in range(n_bands):
-        eq = _chunk("a", b) == _chunk("b", b)
-        first_match = (
-            F.when(eq, F.lit(b))
-            if first_match is None
-            else first_match.when(eq, F.lit(b))
-        )
     ham = F.bit_count(
-        F.col("a_hi").bitwiseXOR(F.col("b_hi"))
-    ) + F.bit_count(F.col("a_lo").bitwiseXOR(F.col("b_lo")))
+        F.col("_hi_a").bitwiseXOR(F.col("_hi_b"))
+    ) + F.bit_count(F.col("_lo_a").bitwiseXOR(F.col("_lo_b")))
     return (
-        cand.where(F.col("_band") == first_match)
-        .withColumn("hamming", ham.cast("long"))
+        cand.withColumn("hamming", ham.cast("long"))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

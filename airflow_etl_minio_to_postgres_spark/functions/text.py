@@ -461,6 +461,29 @@ def _postings(
     return d, postings
 
 
+def _avgdl() -> Column:
+    """``avgdl = sum_dl / n_dl`` over a stats frame's exact integer
+    partials: the mean word count of the docs with a non-NULL text."""
+    return (F.col("sum_dl") / F.col("n_dl")).alias("avgdl")
+
+
+def _corpus_stats(d: DataFrame, *extra: Column) -> DataFrame:
+    """THE BM25 corpus statistics over :func:`_postings`' ``d``: the
+    1-row ``(n_docs, n_dl, sum_dl, avgdl)`` frame (plus any ``extra``
+    aggregates), one map-side-combined aggregate.  ``n_docs`` is
+    ``count(*)``; ``n_dl`` and ``sum_dl`` skip NULL texts, as the
+    oracles' ``avg(len(w))`` does.  An empty or whitespace-only text
+    keeps dl 1 (it splits to ``[""]``), as in the oracles, though it
+    has no postings.  Integer partials make the streamed merge exact:
+    a merged sidecar divides the same sums."""
+    return d.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.count(F.col("_w")).alias("n_dl"),
+        F.sum(F.size(F.col("_w"))).cast("long").alias("sum_dl"),
+        *extra,
+    ).select("*", _avgdl())
+
+
 def _okapi_topk(
     postings: DataFrame,
     stats: DataFrame,
@@ -618,12 +641,7 @@ def bm25_topk(
         raise ValueError("bm25_topk: query_terms must be non-empty")
     terms = sorted({t.lower() for t in query_terms})
     d, postings = _postings(df, text_col, id_col, terms)
-    # corpus stats: one map-side-combined aggregate, broadcast back
-    stats = d.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(F.size(F.col("_w"))).alias("avgdl"),
-    )
-    return _okapi_topk(postings, stats, k, k1, b, id_col)
+    return _okapi_topk(postings, _corpus_stats(d), k, k1, b, id_col)
 
 
 def write_inverted_index(
@@ -661,9 +679,8 @@ def write_inverted_index(
     import os as _os
 
     d, postings = _postings(df, text_col, id_col)
-    srow = d.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(F.size(F.col("_w"))).alias("avgdl"),
+    srow = _corpus_stats(
+        d,
         F.sum(
             F.size(F.filter(F.col("_w"), lambda w: w != ""))
         ).alias("_n_tokens"),

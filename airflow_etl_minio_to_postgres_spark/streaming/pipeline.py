@@ -790,57 +790,6 @@ def near_dup_store_scan(
     return store
 
 
-def _intra_batch_drops(
-    banded: DataFrame,
-    sets: DataFrame,
-    id_col: str,
-    threshold: float,
-    max_bucket_size: int | None,
-) -> DataFrame:
-    """Intra-batch pairwise-greedy drop set (the higher id of every
-    qualifying pair) — shared verbatim by the streaming sink and the
-    batch face :func:`near_dup_against_store`, so the two paths cannot
-    drift."""
-    from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        jaccard_expr,
-        salted_band_sides,
-    )
-
-    a_fan, b_fan, join_keys = salted_band_sides(
-        banded, id_col, "band_key", max_bucket_size
-    )
-    cand = (
-        a_fan.select(F.col(id_col).alias("id_a"), *join_keys)
-        .join(
-            b_fan.select(F.col(id_col).alias("id_b"), *join_keys),
-            join_keys,
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("shingles").alias("sh_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "id_b",
-        )
-        .where(
-            jaccard_expr(F.col("sh_a"), F.col("sh_b")) >= F.lit(threshold)
-        )
-        .select(F.col("id_b").alias(id_col))
-    )
-
-
 def _store_screen_drops(
     spark: SparkSession,
     banded: DataFrame,
@@ -893,8 +842,9 @@ def _store_screen_drops(
     )
     return (
         l_fan.join(r_fan, cross_keys)
-        # one row per (batch doc, stored doc) candidate; sh_s is a
-        # function of _sid, so keeping the first duplicate is exact
+        # each store row carries one band key, so first-match cannot
+        # apply: a (batch doc, stored doc) pair meets once per shared
+        # band (sh_s is a function of _sid, so keeping one is exact)
         .dropDuplicates([id_col, "_sid"])
         .join(sets, id_col)
         .where(
@@ -940,6 +890,7 @@ def near_dup_against_store(
     ``functions.dedup.release_caches()`` when done, as after any batch
     dedup operator."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        _minhash_pairs,
         _minhash_table,
         _persist_tracked,
         band_keys_expr,
@@ -963,9 +914,9 @@ def near_dup_against_store(
         ).alias("band_key"),
     )
     sets = sig.select(id_col, "shingles")
-    dropped = _intra_batch_drops(
-        banded, sets, id_col, threshold, max_bucket_size
-    ).unionByName(
+    dropped = _minhash_pairs(
+        sig, id_col, num_bands, rows_per_band, threshold, max_bucket_size
+    ).select(F.col("id_b").alias(id_col)).unionByName(
         _store_screen_drops(
             spark,
             banded,
@@ -1000,18 +951,22 @@ def _near_dup_process_batch(
     so the replay contract (same batch twice == once) is directly
     testable without killing a live stream.
 
-    ``max_bucket_size`` wires the dedup family's shared hot-bucket
-    salting (``functions/dedup.py salted_band_sides`` — exact by
-    construction) into the INTRA-batch candidate self-join: low-entropy
-    batches (shared boilerplate) concentrate whole bands into hot
-    buckets whose m^2 pairwise comparisons land on single tasks
-    (measured: a 50k-doc boilerplate-heavy batch spends its wall-clock
-    almost entirely there).  None = unsalted, the zero-overhead
-    default, same posture as the batch operators.  The batch-vs-STORE
-    join gets the two-frame form (``salted_join_sides``: batch side
-    salted, store side replicated into the sub-groups) under the same
-    knob."""
+    The INTRA-batch screen is :func:`near_dup_pairs`' own pair path
+    (``functions/dedup.py _minhash_pairs``: the ``bucket_pairs``
+    self-join with the first-match rule) over the batch signature
+    table.  ``max_bucket_size`` wires the dedup family's shared
+    hot-bucket salting (``salted_band_sides`` — exact by construction)
+    into that self-join: low-entropy batches (shared boilerplate)
+    concentrate whole bands into hot buckets whose m^2 pairwise
+    comparisons land on single tasks (measured: a 50k-doc
+    boilerplate-heavy batch spends its wall-clock almost entirely
+    there).  None = unsalted, the zero-overhead default, same posture
+    as the batch operators.  The batch-vs-STORE join gets the
+    two-frame form (``salted_join_sides``) under the same knob: each
+    hot bucket salts its LARGER side and replicates the smaller into
+    the sub-groups."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        _minhash_pairs,
         _minhash_table,
         band_keys_expr,
     )
@@ -1035,9 +990,9 @@ def _near_dup_process_batch(
         ).alias("band_key"),
     )
     sets = sig.select(id_col, "shingles")
-    dropped = _intra_batch_drops(
-        banded, sets, id_col, threshold, max_bucket_size
-    )
+    dropped = _minhash_pairs(
+        sig, id_col, num_bands, rows_per_band, threshold, max_bucket_size
+    ).select(F.col("id_b").alias(id_col))
     if _exists(spark, store_path):
         cross = _store_screen_drops(
             spark,
@@ -1249,10 +1204,11 @@ def streaming_inverted_index_upsert(
     rewrites exactly its own partitions.  The ``_stats`` sidecar the
     serving path needs (n_docs, avgdl, n_buckets) is NOT
     batch-decomposable by overwrite, so it merges EXACT integer
-    partials — ``(n_docs, sum_dl)``, the rollup's micro-unit policy —
-    and ``avgdl`` is derived by one division at write time (the same
-    long-sum/count division the batch writer's ``F.avg`` performs, so
-    streamed and one-shot sidecars agree bit-for-bit).  Replay safety
+    partials — ``(n_docs, n_dl, sum_dl)`` from ``text._corpus_stats``,
+    the rollup's micro-unit policy — and ``avgdl = sum_dl / n_dl`` is
+    derived by one division at write time (the batch writer's own
+    rule, so streamed and one-shot sidecars agree bit-for-bit, NULL
+    texts included).  Replay safety
     for the merge is the rollup's marker mechanism verbatim: the
     last-merged ``(token, batch_id)`` rides a ``_last_batch`` file
     promoted by the SAME atomic swap as the stats it describes.  The
@@ -1308,6 +1264,8 @@ def _inv_index_process_batch(
     == once; stats: an already-merged batch is a no-op) are directly
     testable."""
     from airflow_etl_minio_to_postgres_spark.functions.text import (
+        _avgdl,
+        _corpus_stats,
         _postings,
         _term_bucket,
     )
@@ -1367,10 +1325,8 @@ def _inv_index_process_batch(
         tasks=n_buckets,
     )
 
-    partial = d.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.col("_w"))).cast("long").alias("sum_dl"),
-    )
+    sums = ["n_docs", "n_dl", "sum_dl"]
+    partial = _corpus_stats(d).select(*sums)
     if os.path.exists(stats_path):
         on_disk = spark.read.parquet(stats_path)
         if "sum_dl" not in on_disk.columns:
@@ -1380,18 +1336,21 @@ def _inv_index_process_batch(
                 "rebuild the index with the streaming maintainer or "
                 "keep serving the batch-built layout"
             )
-        prev = on_disk.select("n_docs", "sum_dl")
-        merged = prev.unionByName(partial).agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
+        if "n_dl" not in on_disk.columns:
+            raise ValueError(
+                f"stats sidecar at {stats_path!r} has no n_dl column "
+                "(written before NULL texts left avgdl) — its avgdl "
+                "cannot be merged exactly; rebuild the index from a "
+                "fresh checkpoint, or serve a write_inverted_index "
+                "rebuild"
+            )
+        merged = on_disk.select(*sums).unionByName(partial).agg(
+            *[F.sum(c).cast("long").alias(c) for c in sums]
         )
     else:
         merged = partial
     stats = merged.select(
-        "n_docs",
-        "sum_dl",
-        (F.col("sum_dl") / F.col("n_docs")).alias("avgdl"),
-        F.lit(int(n_buckets)).alias("n_buckets"),
+        *sums, _avgdl(), F.lit(int(n_buckets)).alias("n_buckets")
     )
     _rewrite_in_place(
         stats, stats_path, extra_files={"_last_batch": f"{token}:{batch_id}"}

@@ -1264,6 +1264,64 @@ def test_streaming_inverted_index_serves_like_batch_build(spark, tmp_path):
     assert s2["n_docs"] == 30 and s2["sum_dl"] == s_stats["sum_dl"]
 
 
+def test_inverted_index_stats_agree_on_null_and_blank_texts(spark, tmp_path):
+    """One corpus-stats rule for both index writers: over empty,
+    whitespace-only and NULL texts, write_inverted_index and two
+    _inv_index_process_batch micro-batches write the same n_docs,
+    avgdl and n_buckets (NULL texts leave avgdl, blank ones count dl 1,
+    as in the oracles), and the two indexes score float-hex-equal.  A
+    streamed sidecar without n_dl refuses to merge."""
+    import pytest
+
+    from airflow_etl_minio_to_postgres_spark.functions.text import (
+        bm25_topk_indexed,
+        write_inverted_index,
+    )
+    from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
+        _inv_index_process_batch,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, ""),
+            (2, "   "),
+            (3, "a b"),
+            (4, None),
+            (5, "spark join window"),
+            (6, "spark spark filter a"),
+        ],
+        "doc_id long, text string",
+    )
+    built = str(tmp_path / "built")
+    streamed = str(tmp_path / "streamed")
+    write_inverted_index(docs, built, n_buckets=4)
+    for batch_id, part in enumerate(
+        [docs.where(F.col("doc_id") <= 3), docs.where(F.col("doc_id") > 3)]
+    ):
+        _inv_index_process_batch(part, batch_id, streamed, "tok", n_buckets=4)
+
+    cols = ["n_docs", "avgdl", "n_buckets"]
+    b_stats = spark.read.parquet(os.path.join(built, "_stats")).collect()[0]
+    s_stats = spark.read.parquet(os.path.join(streamed, "_stats")).collect()[0]
+    assert [b_stats[c] for c in cols] == [s_stats[c] for c in cols]
+    assert b_stats["n_docs"] == 6 and b_stats["avgdl"] == 11 / 5
+
+    def scores(path):
+        top = bm25_topk_indexed(spark, path, ["spark", "a"], k=6)
+        return [(r["doc_id"], r["score"].hex()) for r in top.collect()]
+
+    assert scores(built) == scores(streamed)
+
+    # a streamed sidecar from before n_dl cannot merge exactly: refused
+    legacy = str(tmp_path / "legacy")
+    spark.createDataFrame(
+        [(3, 4, 4 / 3, 4)],
+        "n_docs bigint, sum_dl bigint, avgdl double, n_buckets int",
+    ).write.parquet(os.path.join(legacy, "_stats"))
+    with pytest.raises(ValueError, match="no n_dl column"):
+        _inv_index_process_batch(docs, 0, legacy, "tok", n_buckets=4)
+
+
 def test_compact_inverted_index_merges_files_and_serves_bit_equal(
     spark, tmp_path
 ):

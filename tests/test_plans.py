@@ -691,6 +691,42 @@ def test_ahash_hash_is_scan_stage_pairs_join_is_hash_join(spark):
     assert "Python" not in pplan
 
 
+def test_banded_self_joins_never_aggregate_on_pair_ids(spark, tmp_path):
+    """The MinHash, SimHash and streaming intra-batch screens take their
+    candidates from the one first-match self-join (bucket_pairs), so no
+    aggregate keyed on (id_a, id_b) — the old dropDuplicates exchange —
+    appears in their plans.  The intra-batch plan comes from
+    near_dup_against_store over a small store."""
+    import re
+
+    from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        near_dup_pairs,
+        simhash_near_dup_pairs,
+    )
+    from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
+        near_dup_against_store,
+    )
+
+    pair_agg = re.compile(r"Aggregate\(keys=\[id_a#\d+L?, id_b#\d+L?\]")
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps {i % 3}") for i in range(6)],
+        "doc_id long, text string",
+    )
+    # a one-row store in the band-bucket layout the screen reads
+    store = str(tmp_path / "store")
+    spark.createDataFrame(
+        [(0, "0|x", ["a b c"], 0, "c-0")],
+        "doc_id long, band_key string, shingles array<string>, "
+        "band_bucket int, _commit_id string",
+    ).write.partitionBy("band_bucket", "_commit_id").parquet(store)
+    for df in (
+        near_dup_against_store(docs, store, store_partitions=4),
+        near_dup_pairs(docs),
+        simhash_near_dup_pairs(docs),
+    ):
+        assert not pair_agg.search(_physical_plan(df))
+
+
 def test_ivf_topk_batch_matches_per_query_indexed(spark, tmp_path):
     """Batched-query IVF serving: (1) per-query results are
     bit-identical to ivf_topk_indexed run one query at a time with the

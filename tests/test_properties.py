@@ -523,17 +523,28 @@ def test_image_ahash_matches_python_model(spark, payloads):
 @given(
     keys=st.lists(st.integers(0, 3), min_size=1, max_size=40),
     cap=st.integers(1, 6),
+    matrix=st.integers(1, 3).flatmap(
+        lambda nb: st.lists(
+            st.lists(st.integers(0, 2), min_size=nb, max_size=nb),
+            min_size=1,
+            max_size=12,
+        )
+    ),
 )
 @SPARK_SETTINGS
-def test_salted_band_sides_every_pair_exactly_once(spark, keys, cap):
+def test_salted_band_sides_every_pair_exactly_once(spark, keys, cap, matrix):
     """salted_band_sides exactness under arbitrary bucket shapes: for
     ANY key multiset and ANY cap, the salted self-join yields every
     in-bucket (id_a < id_b) pair EXACTLY once — the invariant that
     makes downstream first-matching-band predicates and dropDuplicates
-    behave identically to the unsalted plan."""
+    behave identically to the unsalted plan.  Over an arbitrary
+    id x band key matrix (1-3 bands), bucket_pairs with its first-match
+    rule yields every (id_a < id_b) pair sharing at least one band
+    EXACTLY once, with and without a cap."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        bucket_pairs,
         salted_band_sides,
     )
 
@@ -556,6 +567,30 @@ def test_salted_band_sides_every_pair_exactly_once(spark, keys, cap):
             for y in range(x + 1, len(members)):
                 expected.append((members[x], members[y]))
     assert got == sorted(expected)  # exactly once, none lost, none extra
+
+    n_bands = len(matrix[0])
+    bks = [[f"{b}|{k}" for b, k in enumerate(row)] for row in matrix]
+    banded = spark.createDataFrame(
+        [(i, ks, b, k) for i, ks in enumerate(bks) for b, k in enumerate(ks)],
+        "doc_id long, _bks array<string>, _band int, band_key string",
+    )
+    shared = sorted(
+        (x, y)
+        for x in range(len(bks))
+        for y in range(x + 1, len(bks))
+        if set(bks[x]) & set(bks[y])
+    )
+    for bucket_cap in (None, cap):
+        pairs = bucket_pairs(
+            banded,
+            "doc_id",
+            ["_bks"],
+            max_bucket_size=bucket_cap,
+            n_bands=n_bands,
+            band_differs=lambda b: F.element_at("_bks_a", b + 1)
+            != F.element_at("_bks_b", b + 1),
+        )
+        assert sorted((r.id_a, r.id_b) for r in pairs.collect()) == shared
 
 
 @given(
