@@ -567,17 +567,28 @@ def _index_sidecar(
 ) -> tuple[str, DataFrame, int]:
     """The serves' one sidecar read: ``(data_root, stats, n_buckets)``
     — the index's current generation (``resolve_data_root``), its
-    ``_stats`` frame and the ``n_buckets`` it was written with (read,
-    never guessed)."""
-    import os as _os
-
+    ``_stats`` row as a one-row LOCAL ``(n_docs, avgdl)`` frame and the
+    ``n_buckets`` it was written with (read, never guessed).  A
+    streamed ``_stats`` is its own committed root and is resolved too;
+    a batch-built flat one resolves to itself.  The frame is a VALUES
+    relation (the doubles rendered with ``repr``, which re-parses to
+    the same bits), so the scorer's plan carries the collected row
+    instead of scanning the sidecar a second time."""
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+        _join,
         resolve_data_root,
     )
 
     path = resolve_data_root(spark, path)
-    stats = spark.read.parquet(_os.path.join(path, "_stats"))
-    return path, stats, int(stats.collect()[0]["n_buckets"])
+    row = spark.read.parquet(
+        resolve_data_root(spark, _join(path, "_stats"))
+    ).collect()[0]
+    avgdl = "NULL" if row["avgdl"] is None else f"'{float(row['avgdl'])!r}'"
+    stats = spark.sql(
+        f"SELECT * FROM VALUES (CAST({int(row['n_docs'])} AS BIGINT), "
+        f"CAST({avgdl} AS DOUBLE)) AS t(n_docs, avgdl)"
+    )
+    return path, stats, int(row["n_buckets"])
 
 
 def _scan_terms(
@@ -726,7 +737,7 @@ def bm25_topk_indexed(
     pinned in tests).  Scoring is :func:`bm25_topk`'s scorer — df as a
     window over the pruned postings (all postings for a term live in
     its bucket, so the pruned scan sees every one), corpus stats from
-    the broadcast sidecar — and is bit-identical to the direct path
+    the collected sidecar row — and is bit-identical to the direct path
     over the same corpus."""
     if not query_terms:
         raise ValueError("bm25_topk_indexed: query_terms must be non-empty")
@@ -775,7 +786,7 @@ def bm25_topk_batch(
 
     Consistency contract (pinned in tests): per-query results are
     bit-identical to :func:`bm25_topk_indexed` run one query at a time
-    with the same (k, k1, b) — same pruned-df window, same broadcast
+    with the same (k, k1, b) — same pruned-df window, same collected
     sidecar stats, same double math, same (score desc, id) ties.
     Returns (query_id_col, id_col, score), ≤ k rows per query.  A
     query whose terms array is NULL or empty contributes NO rows (the

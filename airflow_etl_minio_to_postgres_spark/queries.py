@@ -158,13 +158,13 @@ from airflow_etl_minio_to_postgres_spark.sources.files import (
     read_csv,
     read_jsonl,
     recluster_zorder_committed,
-    recluster_zorder_parquet,
     recluster_zorder_partitions,
     write_csv,
     write_jsonl,
     write_orc,
     zorder_value_sql,
 )
+from airflow_etl_minio_to_postgres_spark.sources.manifest import read_resolved
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1978,7 +1978,7 @@ def medallion_silver_migrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(base, "silver")
     silver.write.parquet(path)  # the legacy flat layout
     migrate_legacy_silver(spark, path)
-    return spark.read.parquet(path).drop("_commit_id")
+    return read_resolved(spark, path).drop("_commit_id")
 
 
 @register(
@@ -5469,15 +5469,15 @@ def events_zorder_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_zorder_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The OPTIMIZE-after-ingest pass (sources/files.py
-    recluster_zorder_parquet) registered end-to-end: the events
-    predicate columns land as TWO curve-oblivious appended batches
-    (the layout a per-batch streaming writer leaves behind), the
-    location is re-clustered in place onto the Morton curve, and the
-    read-back is checked against the IDENTICAL oracle as
-    events_zorder_curve — the physical rewrite is proven lossless at
-    the value level while the footer pytest pins the layout effect
-    (both dims' per-file spans tighten).  One sampled range exchange;
-    atomic staged swap."""
+    recluster_zorder_committed) registered end-to-end on a local path:
+    the events predicate columns land as TWO curve-oblivious appended
+    batches (the layout a per-batch streaming writer leaves behind),
+    the table is re-clustered onto the Morton curve as its next
+    committed generation, and the resolved read-back is checked
+    against the IDENTICAL oracle as events_zorder_curve — the physical
+    rewrite is proven lossless at the value level while the footer
+    pytest pins the layout effect (both dims' per-file spans tighten).
+    One sampled range exchange; atomic manifest publish."""
     ev = load_table(spark, "events", sf_dir).select(
         "event_id",
         (F.col("user_id") % 1024).alias("bu"),
@@ -5489,8 +5489,8 @@ def events_zorder_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(F.col("event_id") % 2 == m).write.mode("append").parquet(
             path
         )
-    recluster_zorder_parquet(spark, path, ["bu", "bh"], bits=10, n_files=8)
-    back = spark.read.parquet(path)
+    recluster_zorder_committed(spark, path, ["bu", "bh"], bits=10, n_files=8)
+    back = read_resolved(spark, path)
     return back.select("event_id", F.expr(_ZVAL_SQL).alias("zval"))
 
 
@@ -5509,21 +5509,16 @@ def events_zorder_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The OBJECT-STORE face of the optimize pass (sources/files.py
     recluster_zorder_committed + sources/manifest.py
     commit_parquet_generation / read_resolved) registered end-to-end —
-    the RUNBOOK §5b resolving-reader migration as a driver-gated
+    the RUNBOOK §5 resolving-reader migration as a driver-gated
     entry: the same two curve-oblivious appended batches land at a
-    ``file://`` URI the local-swap recluster refuses, the recluster
-    plan (shared ``_zorder_staged`` — value-equal to
-    events_zorder_recluster by construction) is committed as an
+    ``file://`` URI, the recluster plan (the same writer as
+    events_zorder_recluster, on a local path there) is committed as an
     immutable manifest-published generation with a keep_last=2 grace
     window (the documented first-commit retention for un-migrated
     readers), and the read-back goes through the thin resolving
     reader every migrated consumer uses.  Checked against the
-    IDENTICAL curve oracle as the local variant — protocol swap
+    IDENTICAL curve oracle as the local-path entry — the URI commit
     proven lossless at the value level."""
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        read_resolved,
-    )
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id",
         (F.col("user_id") % 1024).alias("bu"),
@@ -5561,9 +5556,9 @@ def events_zorder_recluster_parts(spark: SparkSession, sf_dir: str) -> DataFrame
     imitate: the events curve columns land hive-partitioned with TWO
     curve-oblivious appended batches interleaved INSIDE each
     partition, then only partitions pk=0 and pk=2 are re-sorted onto
-    the Morton curve (one pruned read, one range exchange, atomic
-    per-partition swaps) while pk=1/pk=3 stay byte-untouched (pinned
-    by footer pytest).  The read-back of the WHOLE table is checked
+    the Morton curve (one pruned read, one range exchange, one
+    committed generation) while pk=1/pk=3 are carried into it as byte
+    copies (pinned by footer pytest).  The read-back of the WHOLE table is checked
     against the IDENTICAL curve oracle as events_zorder_curve — the
     scoped rewrite is proven lossless at the value level, touched and
     untouched partitions alike."""
@@ -5586,7 +5581,7 @@ def events_zorder_recluster_parts(spark: SparkSession, sf_dir: str) -> DataFrame
         spark, path, ["bu", "bh"], "pk", partitions=[0, 2], bits=10,
         n_files=4,
     )
-    back = spark.read.parquet(path)
+    back = read_resolved(spark, path)
     return back.select("event_id", F.expr(_ZVAL_SQL).alias("zval"))
 
 
@@ -7045,7 +7040,7 @@ def events_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     # the materialized table carries exact micro-units; convert on read
-    return spark.read.parquet(out).select(
+    return read_resolved(spark, out).select(
         "hour",
         "event_type",
         "n_events",
@@ -7104,7 +7099,7 @@ def events_streaming_rollup_serving(spark: SparkSession, sf_dir: str) -> DataFra
         os.path.join(base, "ckpt"),
     )
     q.awaitTermination()
-    rollup = spark.read.parquet(out)
+    rollup = read_resolved(spark, out)
 
     bounds = F.broadcast(
         rollup.agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))

@@ -27,13 +27,20 @@ is configured on the session (``session.ObjectStoreConfig``).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airflow_etl_minio_to_postgres_spark.naming import normalize_filename
+from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+    _exists,
+    _join,
+    _list_names,
+    commit_parquet_generation,
+    copy_tree,
+    resolve_data_root,
+)
 
 CSV_EXTENSIONS = {".csv"}
 EXCEL_EXTENSIONS = {".xlsx", ".xls"}
@@ -44,73 +51,6 @@ ORC_EXTENSIONS = {".orc"}
 
 def _extension(path: str) -> str:
     return os.path.splitext(path)[1].lower()
-
-
-def _local_path(path: str) -> str:
-    """Resolve a path to a plain local filesystem path, or raise.
-
-    The in-place rewrite helpers swap directories with ``os.replace`` —
-    local-FS only; object stores have no rename, so there the pattern is
-    stage-to-new-prefix + flip the reader path.
-    """
-    if path.startswith("file://"):
-        from urllib.parse import urlparse
-
-        return urlparse(path).path
-    if "://" in path:
-        raise ValueError(
-            "in-place rewrite is local-FS only (swap uses os.replace); on "
-            "object stores stage to a new prefix and flip the reader path"
-        )
-    return path
-
-
-_ASIDE = ".swap-old"
-
-
-def _aside(target: str) -> str:
-    """Where :func:`swap_dir` parks ``target``'s previous contents: a
-    sibling whose name starts with ``.``.  Spark's file listing skips
-    such names, so an aside inside a table directory (a partition swap)
-    is invisible to readers — ``kind=a.old`` would read as a second
-    partition and ``_kind=a.old`` fails every read with conflicting
-    partition columns."""
-    parent, name = os.path.split(target.rstrip("/"))
-    return os.path.join(parent, f".{name}{_ASIDE}")
-
-
-def _recover_swap(target: str) -> str:
-    """Finish or undo a :func:`swap_dir` that a crash interrupted.  Every
-    entry point runs this before it reads or tests ``target``:
-
-    * target missing, aside present — the crash fell between the aside
-      and the promote: restore the aside (the rerun restages);
-    * both present — the promote happened: delete the aside.
-
-    Returns ``target``."""
-    old = _aside(target)
-    if os.path.exists(old):
-        if os.path.exists(target):
-            shutil.rmtree(old)
-        else:
-            os.replace(old, target)
-    return target
-
-
-def swap_dir(staged: str, target: str) -> str:
-    """Replace directory ``target`` with ``staged``: move the old
-    contents aside, promote the staged copy, delete the aside last.
-    With :func:`_recover_swap` on entry (here and in every caller that
-    reads ``target`` first), a restart after a crash at any step
-    converges to the no-crash result.  Local FS only (``os.replace``).
-    Returns ``target``."""
-    _recover_swap(target)
-    old = _aside(target)
-    if os.path.exists(target):
-        os.replace(target, old)
-    os.replace(staged, target)
-    shutil.rmtree(old, ignore_errors=True)
-    return target
 
 
 def read_csv(
@@ -512,71 +452,6 @@ def write_zorder_parquet(
     return path
 
 
-def recluster_zorder_parquet(
-    spark: SparkSession,
-    path: str,
-    zorder_cols: list[str],
-    bits: int = 10,
-    n_files: int | None = None,
-    rank_bucket: bool = False,
-    sample_rate: float = 0.2,
-) -> str:
-    """Re-cluster an EXISTING parquet location onto the Z-order curve
-    in place — the OPTIMIZE-after-ingest half of the data-skipping
-    story (Delta's ``OPTIMIZE ... ZORDER BY`` run on a schedule):
-    streaming/incremental appends land one curve-oblivious file per
-    batch, so per-file min/max spans widen back toward the full domain
-    as batches accumulate; this housekeeping pass restores the tight
-    hyper-rectangles :func:`write_zorder_parquet` produces, folding
-    the per-batch fragmentation in the same rewrite.
-
-    Same plan as the one-shot sink (one sampled range exchange on the
-    curve value, in-partition sort, helpers dropped), staged and then
-    swapped in via :func:`_rewrite_in_place` — a restart after any
-    crash point converges to the no-crash result.  Run between
-    cleanly-terminated ingest runs, like the other compaction helpers.
-    At 100 TB the production form scopes the rewrite to partitions
-    touched since the last pass (re-sort only those directories under
-    dynamic partition overwrite) rather than the whole table; at any
-    scale the read side needs no change — pruning reads the same
-    footer stats either way.
-    A hive-partitioned location is REFUSED: this rewrite stages flat,
-    which would silently demote the partition columns to data columns
-    and break every reader that relies on directory pruning — use
-    :func:`recluster_zorder_partitions`, which re-sorts per partition
-    and preserves the layout.  Returns ``path``."""
-    lpath = _recover_swap(_local_path(path))
-    # guard only when the path exists as a directory — a missing path
-    # falls through to the parquet read, whose AnalysisException is the
-    # canonical missing-input error (not a bare FileNotFoundError here)
-    hive_dirs = (
-        [
-            e
-            for e in os.listdir(lpath)
-            if "=" in e
-            and not e.startswith(("_", "."))
-            and os.path.isdir(os.path.join(lpath, e))
-        ]
-        if os.path.isdir(lpath)
-        else []
-    )
-    if hive_dirs:
-        shown = sorted(hive_dirs)[:3]
-        more = "..." if len(hive_dirs) > 3 else ""
-        raise ValueError(
-            f"recluster_zorder_parquet: {path!r} is hive-partitioned "
-            f"(found {shown}{more}) — an in-place flat "
-            "rewrite would demote the partition columns and break "
-            "directory pruning; use recluster_zorder_partitions to "
-            "re-sort within the partition layout"
-        )
-    df = spark.read.parquet(lpath)
-    staged = _zorder_staged(
-        df, zorder_cols, bits, n_files, rank_bucket, sample_rate
-    )
-    return _rewrite_in_place(staged, path)
-
-
 def _zorder_staged(
     df: DataFrame,
     zorder_cols: list[str],
@@ -588,10 +463,10 @@ def _zorder_staged(
 ) -> DataFrame:
     """The shared Z-order plan (one sampled range exchange on the
     curve value, in-partition sort, helpers dropped) — identical for
-    the one-shot sink and the local-swap, manifest-committed and
-    per-partition re-clusters, so they are value-equal by
-    construction.  ``lead`` puts a partition column in front of the
-    curve value in both the range and the sort keys."""
+    the one-shot sink, the flat re-cluster and the per-partition
+    re-cluster, so they are value-equal by construction.  ``lead``
+    puts a partition column in front of the curve value in both the
+    range and the sort keys."""
     helper_cols = ["_zval"]
     zcols = list(zorder_cols)
     if rank_bucket:
@@ -622,26 +497,30 @@ def recluster_zorder_committed(
     bloom_cols: tuple[str, ...] = (),
     verify_row_count: bool = True,
 ) -> int:
-    """The OBJECT-STORE face of :func:`recluster_zorder_parquet` — the
-    same recluster plan committed through the manifest protocol
-    (``sources/manifest.commit_parquet_generation``) instead of the
-    local-FS ``os.replace`` swap, closing the family's last
-    local-only gap: works over ``file://`` URIs, HDFS, and s3a, a
-    crash at any point leaves the previous generation servable, and
-    ``keep_last`` is the usual GC grace window.
+    """Re-cluster an EXISTING parquet table onto the Z-order curve —
+    the OPTIMIZE-after-ingest half of the data-skipping story (Delta's
+    ``OPTIMIZE ... ZORDER BY`` run on a schedule): streaming or
+    incremental appends land one curve-oblivious file per batch, so
+    per-file min/max spans widen back toward the full domain as
+    batches accumulate; this housekeeping pass restores the tight
+    hyper-rectangles :func:`write_zorder_parquet` produces, folding
+    the per-batch fragmentation in the same rewrite.
 
-    The consumer contract is the ONE difference from the local
-    variant: readers must resolve — ``manifest.read_resolved(spark,
-    root)`` (one extra listStatus, then the identical parquet scan) or
-    a ``manifest.create_resolving_view`` refreshed per maintenance
-    cycle.  A plain ``spark.read.parquet(root)`` consumer would see
-    the pre-manifest payload (or nothing after its GC), which is why
-    :func:`recluster_zorder_parquet` refuses URI paths rather than
-    silently switching protocols: adopting THIS variant is an explicit
-    reader migration, per RUNBOOK §5b.  Hive-partitioned layouts are
-    refused for the same reason as the flat variant (a flat rewrite
-    demotes partition columns — use
-    :func:`recluster_zorder_partitions`).  ``zone_map_cols`` writes
+    Same plan as the one-shot sink (:func:`_zorder_staged`: one
+    sampled range exchange on the curve value, in-partition sort,
+    helpers dropped), committed as the next generation of ``root``
+    through ``sources/manifest.commit_parquet_generation``: local
+    paths, ``file://`` URIs, HDFS and s3a alike, a crash at any point
+    leaves the previous generation servable, and ``keep_last`` is the
+    usual GC grace window.  Readers resolve —
+    ``manifest.read_resolved(spark, root)`` (one extra listStatus,
+    then the identical parquet scan) or a
+    ``manifest.create_resolving_view`` refreshed per maintenance
+    cycle (RUNBOOK §5).  A hive-partitioned location is REFUSED: a
+    flat rewrite would silently demote the partition columns to data
+    columns and break every reader that relies on directory pruning —
+    use :func:`recluster_zorder_partitions`, which re-sorts per
+    partition and preserves the layout.  ``zone_map_cols`` writes
     the per-file min/max ``_zonemap`` sidecar into the new generation
     before the publish (``manifest.write_zone_maps``) — the natural
     pairing: the z-order layout makes every file a tight
@@ -663,12 +542,6 @@ def recluster_zorder_committed(
     still the snapshot, instead of by a later ``snapshot_diff``
     audit after the damage served.  Returns the committed sequence
     number."""
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        _list_names,
-        commit_parquet_generation,
-        resolve_data_root,
-    )
-
     data_root = resolve_data_root(spark, root)
     hive_dirs = [
         n
@@ -682,8 +555,11 @@ def recluster_zorder_committed(
             f"recluster_zorder_committed: {root!r} is hive-partitioned "
             f"(found {shown}{more}) — a flat committed rewrite would "
             "demote the partition columns and break directory pruning; "
-            "use recluster_zorder_partitions on a local path"
+            "use recluster_zorder_partitions to re-sort within the "
+            "partition layout"
         )
+    # a missing path falls through to the parquet read, whose
+    # AnalysisException is the canonical missing-input error
     df = spark.read.parquet(data_root)
     staged = _zorder_staged(
         df, zorder_cols, bits, n_files, rank_bucket, sample_rate
@@ -711,6 +587,11 @@ def recluster_zorder_committed(
     )
 
 
+class _NothingStaged(Exception):
+    """No row of the selected partitions: the re-cluster commits
+    nothing."""
+
+
 def recluster_zorder_partitions(
     spark: SparkSession,
     path: str,
@@ -724,29 +605,28 @@ def recluster_zorder_partitions(
 ) -> list[str]:
     """PARTITION-SCOPED Z-order re-cluster of a hive-partitioned table
     — the true Delta ``OPTIMIZE ... WHERE`` shape:
-    :func:`recluster_zorder_parquet` rewrites the whole location, but a
+    :func:`recluster_zorder_committed` rewrites the whole table, but a
     100 TB fact table partitioned by day only ever fragments in the
     partitions the last ingest touched, so this pass re-sorts ONLY the
-    named ``partitions`` (or every partition when ``None``) and leaves
-    the rest byte-untouched — rewrite cost proportional to the touched
+    named ``partitions`` (or every partition when ``None``) and never
+    re-encodes the rest — rewrite cost proportional to the touched
     data, not the table.
 
     One job reads the selected partitions through a partition-pruned
     scan, range-exchanges on (partition, curve value), sorts within
-    tasks, and stages the result hive-partitioned to a sibling tmp;
-    each staged partition directory is then put in place with
-    :func:`swap_dir`, whose asides start with ``.`` so no reader lists
-    them.  Asides a crash left inside the table are recovered before
-    the read, so a restart after any crash point converges to the
-    no-crash result.  Untouched partitions are never read, staged, or
-    replaced.  Local-FS only (directory swaps).  Returns the list of
-    partition directory names swapped."""
-    path = _local_path(path)
-    if os.path.isdir(path):
-        for name in os.listdir(path):
-            if name.startswith(".") and name.endswith(_ASIDE):
-                _recover_swap(os.path.join(path, name[1:-len(_ASIDE)]))
-    df = spark.read.parquet(path)
+    tasks, and writes the result hive-partitioned as the next
+    generation of ``path`` (``manifest.commit_parquet_generation``).
+    Before the publish, every partition directory of the current
+    generation that the write did not stage is carried into the new
+    generation with ``manifest.copy_tree`` — byte copies, never
+    re-encoded — so one pointer flip publishes the whole table, and a
+    crash at any point leaves the previous generation servable.
+    Readers resolve (``manifest.read_resolved``).  Works on any Hadoop
+    FileSystem (local paths, ``file://``, HDFS, s3a).  Selected
+    partitions without rows commit nothing.  Returns the list of
+    partition directory names rewritten."""
+    data_root = resolve_data_root(spark, path)
+    df = spark.read.parquet(data_root)
     if partitions is not None:
         df = df.where(F.col(partition_col).isin(list(partitions)))
     # explicit task count pins the file fan-out per touched partition
@@ -756,16 +636,27 @@ def recluster_zorder_partitions(
         df, zorder_cols, bits, n_files, rank_bucket, sample_rate,
         lead=partition_col,
     )
-    tmp = path.rstrip("/") + "__recluster_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    staged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-    swapped = sorted(
-        n for n in os.listdir(tmp) if n.startswith(f"{partition_col}=")
-    )
-    for name in swapped:
-        swap_dir(os.path.join(tmp, name), os.path.join(path, name))
-    shutil.rmtree(tmp, ignore_errors=True)
-    return swapped
+    prefix = f"{partition_col}="
+    rewritten: list[str] = []
+
+    def carry_untouched(gen: str) -> None:
+        rewritten.extend(
+            sorted(n for n in _list_names(spark, gen) if n.startswith(prefix))
+        )
+        if not rewritten:
+            raise _NothingStaged()
+        for n in _list_names(spark, data_root):
+            if n.startswith(prefix) and n not in rewritten:
+                copy_tree(spark, _join(data_root, n), _join(gen, n))
+
+    try:
+        commit_parquet_generation(
+            spark, staged, path, partition_by=(partition_col,),
+            pre_publish_validate=carry_untouched,
+        )
+    except _NothingStaged:
+        return []
+    return rewritten
 
 
 def upsert_parquet(
@@ -773,8 +664,12 @@ def upsert_parquet(
     path: str,
     key_cols: list[str],
 ) -> str:
-    """Keyed upsert into a parquet location without a lakehouse format:
-    read-modify-overwrite where incoming rows win on key collision.
+    """Keyed upsert into a parquet table without a lakehouse format:
+    read-modify-commit where incoming rows win on key collision, the
+    merged table committed as the next generation of ``path``
+    (``manifest.commit_parquet_generation``; readers resolve with
+    ``manifest.read_resolved``).  A restart after a crash at any point
+    re-reads the generation that is still served, so it converges.
 
     Correct and simple at dimension scale (the medallion serving tables);
     at fact scale use partition-scoped overwrite (``partition_by`` on write
@@ -782,18 +677,17 @@ def upsert_parquet(
     rewriting 100 TB per upsert is not a plan.
     """
     spark = df.sparkSession
-    path = _recover_swap(_local_path(path))
-    if os.path.exists(path):
-        existing = spark.read.schema(df.schema).parquet(path)
-        survivors = existing.join(
+    data_root = resolve_data_root(spark, path)
+    merged = df
+    if _exists(spark, data_root):
+        existing = spark.read.schema(df.schema).parquet(data_root)
+        merged = existing.join(
             df.select(*key_cols).dropDuplicates(key_cols),
             on=key_cols,
             how="left_anti",
-        )
-        merged = survivors.unionByName(df)
-    else:  # first write: nothing to merge
-        merged = df
-    return _rewrite_in_place(merged, path)
+        ).unionByName(df)
+    commit_parquet_generation(spark, merged, path)
+    return path
 
 
 def compact_parquet(
@@ -802,53 +696,18 @@ def compact_parquet(
     target_files: int,
     schema: T.StructType | None = None,
 ) -> str:
-    """Small-file compaction: rewrite a parquet location into
-    ``target_files`` files.  Streaming/incremental appends fragment
-    locations into many tiny files; scans then pay per-file open + footer
-    costs.  Run this as housekeeping on landing zones."""
-    _recover_swap(_local_path(path))
+    """Small-file compaction: rewrite a parquet table into
+    ``target_files`` files, committed as its next generation
+    (``manifest.commit_parquet_generation``; readers resolve with
+    ``manifest.read_resolved``).  Streaming/incremental appends
+    fragment locations into many tiny files; scans then pay per-file
+    open + footer costs.  Run this as housekeeping on landing zones."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    df = reader.parquet(path).coalesce(target_files)
-    return _rewrite_in_place(df, path)
-
-
-def _rewrite_in_place(
-    df: DataFrame,
-    path: str,
-    extra_files: dict[str, str] | None = None,
-    partition_by: list[str] | None = None,
-) -> str:
-    """Overwriting a location the plan also READS would delete its own
-    input; stage to a sibling tmp location, then :func:`swap_dir` — fully
-    distributed (no driver-side collect), one extra rename on local FS.
-    ``partition_by`` stages a hive-partitioned layout.
-
-    Crash safety: callers run :func:`_recover_swap` on ``path`` before
-    they plan the read of ``df``, so a restart after any crash point
-    converges to the no-crash result (an interrupted swap is undone or
-    finished before anything reads the target).
-
-    ``extra_files`` (name -> text content) are written into the staged
-    directory BEFORE the swap, so they become visible atomically with
-    the data they describe — the hook the streaming rollup uses to
-    commit its replay marker in the same rename as the merged table.
-    Names must start with ``_`` or ``.`` (Spark's parquet reader ignores
-    such files; anything else would corrupt the table)."""
-    path = _local_path(path)
-    tmp = path.rstrip("/") + "__rewrite_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_parquet(df, tmp, partition_by=partition_by)
-    for name, content in (extra_files or {}).items():
-        if not name.startswith(("_", ".")):
-            raise ValueError(
-                f"extra file {name!r} must start with '_' or '.' so the "
-                "parquet reader ignores it"
-            )
-        with open(os.path.join(tmp, name), "w", encoding="utf-8") as f:
-            f.write(content)
-    return swap_dir(tmp, path)
+    df = reader.parquet(resolve_data_root(spark, path))
+    commit_parquet_generation(spark, df.coalesce(target_files), path)
+    return path
 
 
 def bronze_path(base: str, file_name: str, folder: str = "bronze-files") -> str:

@@ -1,10 +1,10 @@
-"""Manifest-published index generations — the OBJECT-STORE commit
-protocol for the maintenance family.
+"""Manifest-published table generations — the ONE commit protocol of
+every in-place writer (upserts, compactions, Z-order reclusters, legacy
+migrations, the streaming merges and their replay markers).
 
-The local-FS maintenance ops (``compact_*`` / ``recluster_*`` /
-rollup markers) publish by atomic ``os.replace`` directory swaps, which
-object stores do not have (S3 "rename" is copy+delete, not atomic, and
-not cheap at index scale).  The 100 TB shape is the Iceberg/Delta
+Object stores have no atomic directory rename (S3 "rename" is
+copy+delete, not atomic, and not cheap at index scale), so a rewrite
+never replaces a directory.  The 100 TB shape is the Iceberg/Delta
 commit on plain parquet, reduced to its minimum here:
 
 1. **Write a NEW immutable generation prefix** next to the old one
@@ -104,6 +104,34 @@ def _list_names(spark: SparkSession, path: str) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(hpath)]
 
 
+def _read_text(spark: SparkSession, path: str) -> str | None:
+    """A small text object (manifest, replay marker) read through the
+    path's own filesystem; ``None`` when it does not exist.  Any other
+    I/O failure propagates."""
+    jvm, fs = _fs_for(spark, path)
+    try:
+        stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
+        try:
+            return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+    except Exception as exc:
+        if "FileNotFoundException" in str(exc):
+            return None
+        raise
+
+
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Create (or overwrite) a small text object through the path's own
+    filesystem."""
+    jvm, fs = _fs_for(spark, path)
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
 def _manifest_seqs(spark: SparkSession, root: str) -> list[int]:
     """Every manifest sequence number VISIBLE BY NAME, parseable or not,
     ascending.  Name-based on purpose: ``next_seq`` must never reuse the
@@ -128,20 +156,11 @@ def _read_manifest(spark: SparkSession, root: str, seq: int) -> dict | None:
     perfectly healthy manifest from the grace window and collect a
     generation a live reader resolved.  Fail the maintenance run loudly
     instead; retries are the scheduler's job."""
-    jvm, fs = _fs_for(spark, root)
-    mpath = jvm.org.apache.hadoop.fs.Path(
-        _join(root, MANIFEST_DIR, f"manifest-{seq:06d}.json")
+    text = _read_text(
+        spark, _join(root, MANIFEST_DIR, f"manifest-{seq:06d}.json")
     )
-    try:
-        stream = fs.open(mpath)
-        try:
-            text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-    except Exception as exc:
-        if "FileNotFoundException" in str(exc):
-            return None  # listed, then deleted — treat as absent
-        raise
+    if text is None:
+        return None  # listed, then deleted — treat as absent
     try:
         payload = json.loads(text)
     except (ValueError, UnicodeDecodeError):
@@ -1070,11 +1089,12 @@ def commit_parquet_generation(
     bloom_k: int = 5,
     allow_column_drop: bool = False,
     pre_publish_validate=None,
+    extra_files: dict[str, str] | None = None,
 ) -> int:
     """Write ANY DataFrame as the next manifest-committed generation
-    of ``root`` — the generic adopter path for serving tables whose
-    rewrites previously required the local-FS ``os.replace`` swap
-    (z-order recluster outputs, medallion gold, rollup serving): the
+    of ``root`` — the one commit path of every in-place writer
+    (upserts, compactions, z-order reclusters, legacy migrations,
+    medallion gold, the streaming merges): the
     frame lands in a new immutable ``_gen-<seq>`` prefix, the
     versioned manifest is published (staged PUT + rename — atomic
     commit point), and retention-aware GC runs strictly after.  A
@@ -1099,6 +1119,12 @@ def commit_parquet_generation(
     drops the superseded root copy once the flat payload leaves the
     grace window.  This is how the streamed-index compactors
     (``streaming/pipeline.py compact_*``) commit.
+    ``extra_files`` (name -> text) are written into the staged
+    generation next, so they become visible atomically with the data
+    they describe — how the streaming merges commit their
+    ``_last_batch`` replay marker.  Names must start with ``_`` or
+    ``.`` (Spark's parquet reader ignores such files; anything else
+    would corrupt the table); a bad name is refused before any write.
 
     SCHEMA GUARD: a recommit whose frame DROPS columns the current
     generation carries breaks every downstream reader silently (the
@@ -1126,10 +1152,18 @@ def commit_parquet_generation(
     validation — count or constraint-check what was actually written
     (parquet counts are footer-metadata jobs) rather than re-deriving
     it from the frame (``recluster_zorder_committed``'s row-count
-    guard).  The call shape is decided by signature inspection, never
+    guard; ``files.recluster_zorder_partitions`` uses the path to
+    carry the partition directories its write did not stage).  The
+    call shape is decided by signature inspection, never
     by catching ``TypeError`` (which would swallow a TypeError raised
     INSIDE the hook and mask the validation).  Returns the committed
     sequence number."""
+    for name in extra_files or {}:
+        if not name.startswith(("_", ".")):
+            raise ValueError(
+                f"extra file {name!r} must start with '_' or '.' so the "
+                "parquet reader ignores it"
+            )
     validate_takes_path = False
     if pre_publish_validate is not None:
         # Decide the hook's call shape UP FRONT (an uninspectable
@@ -1225,6 +1259,8 @@ def commit_parquet_generation(
         )
     for name in legacy_sidecars:
         copy_tree(spark, _join(data_root, name), _join(root, gen, name))
+    for name, text in (extra_files or {}).items():
+        _write_text(spark, _join(root, gen, name), text)
     if pre_publish_validate is not None:
         try:
             if validate_takes_path:
@@ -1433,11 +1469,7 @@ def publish_generation(
             f"manifest seq {seq} already published at {final} — "
             "a second maintainer committed concurrently"
         )
-    out = fs.create(tpath, True)
-    try:
-        out.write(bytearray(json.dumps({"generation": generation}).encode()))
-    finally:
-        out.close()
+    _write_text(spark, tmp, json.dumps({"generation": generation}))
     if not fs.rename(tpath, fpath):
         raise FileExistsError(
             f"could not rename staged manifest into {final} — "
@@ -1721,7 +1753,8 @@ def fsck_index(
       broken compaction fscks clean and ``maintenance_cycle`` refreshes
       the view over a broken index;
     * **sidecar** — an inverted index must carry a readable ``_stats``
-      (n_docs/avgdl/n_buckets), a drift log its ``_ref``; their
+      (n_docs/avgdl/n_buckets; a streamed one is its own committed
+      root and is resolved first), a drift log its ``_ref``; their
       ABSENCE where the layout requires one is an issue (every serve
       would fail far from the cause);
     * **fragmentation** — distinct ``_commit_id`` values and data-file
@@ -1901,9 +1934,11 @@ def fsck_index(
     else:
         report["n_commits"] = 0
 
-    stats_path = _join(data_root, "_stats")
     ref_path = _join(data_root, "_ref")
     if kind == "inverted":
+        # a streamed _stats is its own committed root; a batch-built
+        # flat one resolves to itself
+        stats_path = resolve_data_root(spark, _join(data_root, "_stats"))
         if not _exists(spark, stats_path):
             report["issues"].append(
                 "inverted index has no _stats sidecar — bm25 serving "

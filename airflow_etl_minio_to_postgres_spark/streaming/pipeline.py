@@ -40,7 +40,9 @@ from airflow_etl_minio_to_postgres_spark.sources.manifest import (
     _exists,
     _fs_for,
     _join,
+    _read_text,
     commit_parquet_generation,
+    read_resolved,
     resolve_data_root,
 )
 
@@ -160,16 +162,16 @@ def _write_batch_commit(
     )
 
 
-def _last_batch(path: str) -> tuple[str, int] | None:
+def _last_batch(spark: SparkSession, path: str) -> tuple[str, int] | None:
     """The ``(checkpoint token, batch_id)`` recorded by the
-    ``_last_batch`` marker a merging sink promotes with the table at
-    local ``path``, or ``None`` when there is no marker (a first merge
-    or a legacy table).  Each caller applies its own lineage policy."""
-    marker = os.path.join(path, "_last_batch")
-    if not os.path.exists(marker):
+    ``_last_batch`` marker a merging sink commits inside the
+    generation at ``path`` (read through the path's own filesystem),
+    or ``None`` when there is no marker (a first merge or a legacy
+    table).  Each caller applies its own lineage policy."""
+    text = _read_text(spark, _join(path, "_last_batch"))
+    if text is None:
         return None
-    with open(marker, encoding="utf-8") as f:
-        token, _, batch_id = f.read().strip().partition(":")
+    token, _, batch_id = text.strip().partition(":")
     return token, int(batch_id)
 
 
@@ -480,7 +482,10 @@ def _assert_not_legacy_silver(spark: SparkSession, out_path: str) -> None:
     downstream readers.  Same posture as the near-dup store's legacy
     check: fail with the migration pointer, never improvise.  One
     ``listStatus`` RPC on the session's filesystem (URI-correct, the
-    ``manifest._exists`` precedent) — negligible per-batch cost."""
+    ``manifest._exists`` precedent) — negligible per-batch cost.
+    ``out_path`` is the table's resolved data root: after
+    :func:`migrate_legacy_silver` a grace window may keep the flat
+    payload at the table root, beside the generation batches land in."""
     jvm, fs = _fs_for(spark, out_path)
     hpath = jvm.org.apache.hadoop.fs.Path(out_path)
     if not fs.exists(hpath):
@@ -500,12 +505,16 @@ def _silver_process_batch(
     batch_df: DataFrame, batch_id: int, out_path: str, token: str
 ) -> None:
     """One :func:`incremental_silver` micro-batch — module-level so the
-    replay contract (same batch twice == once) is directly testable."""
+    replay contract (same batch twice == once) is directly testable.
+    Batches land in the table's current generation (the root itself
+    until :func:`migrate_legacy_silver` commits one), where
+    ``manifest.read_resolved`` finds them."""
     from airflow_etl_minio_to_postgres_spark.plans.medallion import build_silver
 
-    _assert_not_legacy_silver(batch_df.sparkSession, out_path)
+    data_root = resolve_data_root(batch_df.sparkSession, out_path)
+    _assert_not_legacy_silver(batch_df.sparkSession, data_root)
     _write_batch_commit(
-        build_silver(batch_df), out_path, f"{token}-{batch_id}"
+        build_silver(batch_df), data_root, f"{token}-{batch_id}"
     )
 
 
@@ -516,24 +525,23 @@ def migrate_legacy_silver(spark: SparkSession, out_path: str) -> int:
     :func:`_assert_not_legacy_silver`'s error message points at,
     mirroring :func:`migrate_legacy_rollup` /
     :func:`migrate_legacy_near_dup_store`.  Pre-migration rows carry
-    commit id ``legacy-0`` (their batch lineage is unknowable).
-    Idempotent: an already-partitioned table is left untouched, and a
-    restart after any crash point converges to the no-crash result.
-    Local-FS only (``files.swap_dir``), like the other two migrations.
-    Returns the number of rows migrated (0 when already migrated)."""
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        _local_path,
-        _recover_swap,
-        _rewrite_in_place,
-    )
-
-    out_path = _recover_swap(_local_path(out_path))
-    df = spark.read.parquet(out_path)
+    commit id ``legacy-0`` (their batch lineage is unknowable).  The
+    migrated table is the table's first committed generation
+    (``manifest.commit_parquet_generation``); the sink and readers
+    resolve it (``manifest.read_resolved``).  Idempotent: an
+    already-partitioned table is left untouched, and a restart after
+    any crash point converges to the no-crash result.  Returns the
+    number of rows migrated (0 when already migrated)."""
+    df = read_resolved(spark, out_path)
     if "_commit_id" in df.columns:
         return 0
-    migrated = df.withColumn("_commit_id", F.lit("legacy-0"))
-    _rewrite_in_place(migrated, out_path, partition_by=["_commit_id"])
-    return spark.read.parquet(out_path).count()
+    commit_parquet_generation(
+        spark,
+        df.withColumn("_commit_id", F.lit("legacy-0")),
+        out_path,
+        partition_by=("_commit_id",),
+    )
+    return read_resolved(spark, out_path).count()
 
 
 def streaming_rollup_upsert(
@@ -554,25 +562,15 @@ def streaming_rollup_upsert(
     Replay safety: a merge is NOT idempotent (re-merging a batch's
     partials double-counts), so the sink records the last-merged
     ``(checkpoint token, batch_id)`` in a ``_last_batch`` marker file
-    written INSIDE the staged directory and promoted by the same
-    directory swap as the merged table — marker and data commit
-    atomically together.  A batch whose id is already covered by the
-    marker (crash landed between the rewrite and the checkpoint
-    commit) is a no-op on replay.  A legacy table without a marker
-    merges normally and gains one.  Returns the started StreamingQuery.
+    written INSIDE the staged generation before the manifest publish
+    (``manifest.commit_parquet_generation``) — marker and data commit
+    atomically together, on any Hadoop FileSystem.  A batch whose id
+    is already covered by the marker (crash landed between the commit
+    and the checkpoint commit) is a no-op on replay.  A legacy table
+    without a marker merges normally and gains one.  Readers resolve
+    the rollup (``manifest.read_resolved``).  Returns the started
+    StreamingQuery.
     """
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        _local_path,
-        _rewrite_in_place,
-    )
-
-    # Normalize ONCE, before the first batch: the existence check below
-    # is os.path-based, so a file:// URI would read as absent, the merge
-    # would be skipped, and the rewrite would REPLACE the rollup with
-    # just this batch's partials — silent data loss.  _local_path
-    # resolves file:// and refuses object-store URIs loudly (this sink
-    # is local-FS-only by construction: the rewrite swaps directories).
-    out_path = _local_path(out_path)
     token = _commit_token(checkpoint_path)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -591,16 +589,12 @@ def _rollup_process_batch(
 ) -> None:
     """One :func:`streaming_rollup_upsert` micro-batch — module-level so
     the replay contract (an already-merged batch is a no-op) is directly
-    testable.  ``out_path`` must already be local-FS-normalized."""
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        _recover_swap,
-        _rewrite_in_place,
-    )
-
+    testable."""
     spark = batch_df.sparkSession
-    # an interrupted swap would hide the table AND its marker: the batch
-    # would merge as a first write and drop every earlier total
-    last = _last_batch(_recover_swap(out_path))
+    # the served generation holds the totals AND their marker; a crash
+    # before a publish leaves the previous pair served
+    data_root = resolve_data_root(spark, out_path)
+    last = _last_batch(spark, data_root)
     if last is not None and last[0] == token and batch_id <= last[1]:
         return  # crash-replayed batch: already merged, no-op
     # The materialized rollup stores the value sum as EXACT bigint
@@ -616,7 +610,7 @@ def _rollup_process_batch(
             F.round(F.col("value") * F.lit(1e6)).cast("long")
         ).alias("sum_value_micros"),
     )
-    if os.path.exists(out_path):
+    if _exists(spark, data_root):
         # Guard the storage contract BEFORE merging: reading with
         # ``schema(partial.schema)`` would silently surface NULL for
         # any renamed/missing on-disk column (e.g. a legacy table
@@ -626,7 +620,7 @@ def _rollup_process_batch(
         # one-time rewrite, not something a sink should improvise
         # mid-stream (round-8 advisor finding).
         on_disk = {
-            f.name: f.dataType for f in spark.read.parquet(out_path).schema
+            f.name: f.dataType for f in spark.read.parquet(data_root).schema
         }
         expected = {f.name: f.dataType for f in partial.schema}
         if on_disk != expected:
@@ -636,7 +630,7 @@ def _rollup_process_batch(
                 "bigint micro-units since round 8); migrate the legacy "
                 "table explicitly before resuming the stream"
             )
-        existing = spark.read.schema(partial.schema).parquet(out_path)
+        existing = spark.read.schema(partial.schema).parquet(data_root)
         merged = (
             existing.unionByName(partial)
             .groupBy("hour", "event_type")
@@ -647,8 +641,8 @@ def _rollup_process_batch(
         )
     else:
         merged = partial
-    _rewrite_in_place(
-        merged, out_path,
+    commit_parquet_generation(
+        spark, merged, out_path,
         extra_files={"_last_batch": f"{token}:{batch_id}"},
     )
 
@@ -1057,22 +1051,17 @@ def migrate_legacy_near_dup_store(
     recomputed from the stored minhash signatures (the same
     ``band_keys_expr`` the writer used), so the migrated store is
     band-for-band identical to one written natively; migrated rows
-    carry commit id ``legacy-0``.  Idempotent: an already-migrated
-    store is left untouched, and a restart after any crash point
-    converges to the no-crash result.  Returns the number of store rows
-    after migration.  Local-FS only (``files.swap_dir``), like
-    :func:`migrate_legacy_rollup`."""
+    carry commit id ``legacy-0``.  The migrated store is the store's
+    first committed generation (``manifest.commit_parquet_generation``),
+    which :func:`near_dup_store_scan` and the sink resolve.  Idempotent:
+    an already-migrated store is left untouched, and a restart after
+    any crash point converges to the no-crash result.  Returns the
+    number of store rows after migration."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
         band_keys_expr,
     )
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        _local_path,
-        _recover_swap,
-        _rewrite_in_place,
-    )
 
-    store_path = _recover_swap(_local_path(store_path))
-    df = spark.read.parquet(store_path)
+    df = read_resolved(spark, store_path)
     if "band_key" in df.columns:
         return df.count()
     if "minhash" not in df.columns:
@@ -1103,10 +1092,11 @@ def migrate_legacy_near_dup_store(
         # sink's own repartition exists to prevent)
         .repartition(int(store_partitions), "band_bucket")
     )
-    _rewrite_in_place(
-        migrated, store_path, partition_by=["band_bucket", "_commit_id"]
+    commit_parquet_generation(
+        spark, migrated, store_path,
+        partition_by=("band_bucket", "_commit_id"),
     )
-    return spark.read.parquet(store_path).count()
+    return read_resolved(spark, store_path).count()
 
 
 def streaming_ivf_index_upsert(
@@ -1208,10 +1198,12 @@ def streaming_inverted_index_upsert(
     the rollup's micro-unit policy — and ``avgdl = sum_dl / n_dl`` is
     derived by one division at write time (the batch writer's own
     rule, so streamed and one-shot sidecars agree bit-for-bit, NULL
-    texts included).  Replay safety
-    for the merge is the rollup's marker mechanism verbatim: the
-    last-merged ``(token, batch_id)`` rides a ``_last_batch`` file
-    promoted by the SAME atomic swap as the stats it describes.  The
+    texts included).  The sidecar is its own committed table at
+    ``<data root>/_stats`` (``manifest.commit_parquet_generation``), so
+    a batch commits the stats without rewriting the postings.  Replay
+    safety for the merge is the rollup's marker mechanism verbatim:
+    the last-merged ``(token, batch_id)`` rides a ``_last_batch`` file
+    committed in the SAME generation as the stats it describes.  The
     marker is ALSO the lineage guard: pointing a NEW checkpoint at an
     existing index raises before any write (a foreign token would
     double-count both postings and stats — the drift monitor's
@@ -1222,20 +1214,14 @@ def streaming_inverted_index_upsert(
     LATER batch duplicates its postings and inflates the stats — dedup
     upstream (exact_dedup / the near-dup screen); rebuild
     (``write_inverted_index``) is the documented re-base operation.
-    Local-FS stats path (atomic swap).  Returns the started
-    StreamingQuery."""
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        _local_path,
-    )
-
-    index_path_local = _local_path(index_path)
+    Returns the started StreamingQuery."""
     token = _commit_token(checkpoint_path)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         _inv_index_process_batch(
             batch_df,
             batch_id,
-            index_path_local,
+            index_path,
             token,
             text_col,
             id_col,
@@ -1269,38 +1255,24 @@ def _inv_index_process_batch(
         _postings,
         _term_bucket,
     )
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        _local_path,
-        _recover_swap,
-        _rewrite_in_place,
-    )
 
     spark = batch_df.sparkSession
-
     # after a manifest-based compaction the postings AND the _stats
     # sidecar live under the current generation — resolve once per
-    # batch (one listStatus; a never-compacted index resolves to root)
+    # batch (one listStatus; a never-compacted index resolves to root).
+    # The streamed _stats is its own committed root; a batch-built flat
+    # one resolves to itself.
     index_path = resolve_data_root(spark, index_path)
-    # the replay marker and the stats merge are read with local-FS
-    # calls and written via _rewrite_in_place (a directory swap —
-    # local-FS only; an interrupted one is recovered first, or a
-    # missing sidecar would read as a first merge).  _local_path
-    # unwraps file:// URIs (so a scheme-qualified
-    # resolve_data_root result still finds the marker instead of
-    # silently treating it as absent and double-merging a replayed
-    # batch) and raises LOUDLY for object-store schemes — the
-    # documented 'Local-FS stats path' contract, enforced before any
-    # write happens.
-    stats_path = _recover_swap(
-        os.path.join(_local_path(index_path), "_stats")
-    )
-    # Lineage guard BEFORE any write: the marker only disambiguates
-    # replays within ONE checkpoint lineage.  A NEW checkpoint pointed
-    # at an existing index would silently double-count BOTH the
-    # postings (old _commit_id partitions are never overwritten by the
-    # new token's commit ids) and the sidecar stats partials — refuse
-    # loudly instead, the drift monitor's changed-reference stance.
-    last_token, last_id_merged = _last_batch(stats_path) or (token, -1)
+    stats_root = _join(index_path, "_stats")
+    stats_path = resolve_data_root(spark, stats_root)
+    # Every guard runs BEFORE any write.  Lineage: the marker only
+    # disambiguates replays within ONE checkpoint lineage.  A NEW
+    # checkpoint pointed at an existing index would silently
+    # double-count BOTH the postings (old _commit_id partitions are
+    # never overwritten by the new token's commit ids) and the sidecar
+    # stats partials — refuse loudly instead, the drift monitor's
+    # changed-reference stance.
+    last_token, last_id_merged = _last_batch(spark, stats_path) or (token, -1)
     if last_token != token:
         raise ValueError(
             f"inverted index at {index_path!r} was maintained under "
@@ -1311,23 +1283,15 @@ def _inv_index_process_batch(
             "with write_inverted_index and a fresh checkpoint."
         )
     if batch_id <= last_id_merged:
-        # crash-replayed batch: the marker is promoted atomically WITH
-        # the stats, only after the postings commit — so both the
-        # postings and the stats for this batch are already on disk
+        # crash-replayed batch: the marker is committed WITH the
+        # stats, only after the postings commit — so both the postings
+        # and the stats for this batch are already on disk
         return
-    # the batch builder's posting build and bucket rule, verbatim
-    d, postings = _postings(batch_df, text_col, id_col)
-    _write_batch_commit(
-        postings.withColumn("term_bucket", _term_bucket(n_buckets)),
-        index_path,
-        f"{token}-{batch_id}",
-        layout="term_bucket",
-        tasks=n_buckets,
-    )
-
     sums = ["n_docs", "n_dl", "sum_dl"]
-    partial = _corpus_stats(d).select(*sums)
-    if os.path.exists(stats_path):
+    on_disk = None
+    if _exists(spark, stats_path):
+        # the merge needs exact integer partials; a sidecar without
+        # them is refused before this batch's postings land
         on_disk = spark.read.parquet(stats_path)
         if "sum_dl" not in on_disk.columns:
             raise ValueError(
@@ -1344,16 +1308,26 @@ def _inv_index_process_batch(
                 "fresh checkpoint, or serve a write_inverted_index "
                 "rebuild"
             )
-        merged = on_disk.select(*sums).unionByName(partial).agg(
+    # the batch builder's posting build and bucket rule, verbatim
+    d, postings = _postings(batch_df, text_col, id_col)
+    _write_batch_commit(
+        postings.withColumn("term_bucket", _term_bucket(n_buckets)),
+        index_path,
+        f"{token}-{batch_id}",
+        layout="term_bucket",
+        tasks=n_buckets,
+    )
+    merged = _corpus_stats(d).select(*sums)
+    if on_disk is not None:
+        merged = on_disk.select(*sums).unionByName(merged).agg(
             *[F.sum(c).cast("long").alias(c) for c in sums]
         )
-    else:
-        merged = partial
     stats = merged.select(
         *sums, _avgdl(), F.lit(int(n_buckets)).alias("n_buckets")
     )
-    _rewrite_in_place(
-        stats, stats_path, extra_files={"_last_batch": f"{token}:{batch_id}"}
+    commit_parquet_generation(
+        spark, stats, stats_root,
+        extra_files={"_last_batch": f"{token}:{batch_id}"},
     )
 
 
@@ -1548,17 +1522,13 @@ def migrate_legacy_rollup(spark: SparkSession, out_path: str) -> int:
     carry whatever float error they accumulated before migration; that
     error is frozen, not compounded, from here on).  Rollup tables are
     dimension-scale by construction, so the read-rewrite (and the
-    returned row count) is metadata-sized work.  Local-FS only; a
-    restart after any crash point converges to the no-crash result.
-    Returns the number of rows migrated (0 when already migrated)."""
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        _local_path,
-        _recover_swap,
-        _rewrite_in_place,
-    )
-
-    out_path = _recover_swap(_local_path(out_path))
-    df = spark.read.parquet(out_path)
+    returned row count) is metadata-sized work.  The migrated table is
+    the rollup's first committed generation
+    (``manifest.commit_parquet_generation``), which the sink and
+    readers resolve; a restart after any crash point converges to the
+    no-crash result.  Returns the number of rows migrated (0 when
+    already migrated)."""
+    df = read_resolved(spark, out_path)
     names = set(df.columns)
     if "sum_value_micros" in names:
         return 0
@@ -1577,7 +1547,7 @@ def migrate_legacy_rollup(spark: SparkSession, out_path: str) -> int:
         .alias("sum_value_micros"),
     )
     n = migrated.count()
-    _rewrite_in_place(migrated, out_path)
+    commit_parquet_generation(spark, migrated, out_path)
     return n
 
 

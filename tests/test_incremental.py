@@ -20,6 +20,7 @@ from airflow_etl_minio_to_postgres_spark.sources.catalog import load_table
 from airflow_etl_minio_to_postgres_spark.sources.files import (
     write_sorted_parquet,
 )
+from airflow_etl_minio_to_postgres_spark.sources.manifest import read_resolved
 from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
     streaming_rollup_upsert,
 )
@@ -47,12 +48,12 @@ def test_streaming_rollup_merges_across_restarts(spark, tmp_path):
 
     first.write.mode("append").parquet(landing)
     _run_rollup(spark, landing, out, ckpt)
-    n_after_first = spark.read.parquet(out).count()
+    n_after_first = read_resolved(spark, out).count()
 
     second.write.mode("append").parquet(landing)
     _run_rollup(spark, landing, out, ckpt)  # same checkpoint: only new files
 
-    got = spark.read.parquet(out)
+    got = read_resolved(spark, out)
     expect = events.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
     ).agg(
@@ -70,10 +71,9 @@ def test_streaming_rollup_merges_across_restarts(spark, tmp_path):
 
 def test_streaming_rollup_merges_under_file_uri_out_path(spark, tmp_path):
     """A file:// out_path must behave exactly like the bare local path:
-    the sink's existence check is os.path-based, so an unnormalized URI
-    would read as absent on the SECOND run and the rewrite would
-    replace the rollup with just the new batch's partials — silent
-    loss of all prior totals.  Pin that batch-1 groups survive a
+    an existence check that read the URI as absent on the SECOND run
+    would replace the rollup with just the new batch's partials —
+    silent loss of all prior totals.  Pin that batch-1 groups survive a
     batch-2 merge under the URI spelling."""
     events = load_table(spark, "events", SF_SMOKE).select(
         "ts", "event_type", "value"
@@ -89,7 +89,7 @@ def test_streaming_rollup_merges_under_file_uri_out_path(spark, tmp_path):
     second.write.mode("append").parquet(landing)
     _run_rollup(spark, landing, out, ckpt)
 
-    got = spark.read.parquet(out)
+    got = read_resolved(spark, out)
     kinds = {r.event_type for r in got.select("event_type").distinct().collect()}
     assert "purchase" in kinds  # batch 2 arrived
     assert len(kinds) > 1  # batch 1 groups were MERGED, not replaced
@@ -181,12 +181,15 @@ def test_write_zorder_parquet_tightens_stats_on_both_dims(spark, tmp_path):
 def test_recluster_zorder_parquet_restores_tight_spans(spark, tmp_path):
     """The OPTIMIZE-after-ingest pass on a TWO-BATCH table: each
     appended batch is curve-oblivious (sorted on x only), so per-file
-    y-spans sit at the full domain; recluster_zorder_parquet rewrites
-    the location in place onto the curve — both dims' footer spans
-    tighten, no row is lost, values are unchanged, and the helper
+    y-spans sit at the full domain; recluster_zorder_committed commits
+    the table's next generation onto the curve — both dims' footer
+    spans tighten, no row is lost, values are unchanged, and the helper
     column never lands in the files."""
     from airflow_etl_minio_to_postgres_spark.sources.files import (
-        recluster_zorder_parquet,
+        recluster_zorder_committed,
+    )
+    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+        resolve_data_root,
     )
 
     grid = spark.range(4096).select(
@@ -225,12 +228,13 @@ def test_recluster_zorder_parquet_restores_tight_spans(spark, tmp_path):
         (r.x, r.y) for r in spark.read.parquet(path).collect()
     )
 
-    recluster_zorder_parquet(spark, path, ["x", "y"], bits=6, n_files=16)
+    recluster_zorder_committed(spark, path, ["x", "y"], bits=6, n_files=16)
 
-    back = spark.read.parquet(path)
+    back = read_resolved(spark, path)
     assert sorted(back.columns) == ["x", "y"]  # _zval dropped
     assert sorted((r.x, r.y) for r in back.collect()) == before_rows
-    zx, zy = file_spans(path, 0), file_spans(path, 1)
+    gen = resolve_data_root(spark, path)
+    zx, zy = file_spans(gen, 0), file_spans(gen, 1)
     assert len(zx) >= 8
     assert sum(zx) / len(zx) <= 40 and sum(zy) / len(zy) <= 40, (zx, zy)
 
@@ -239,11 +243,14 @@ def test_recluster_zorder_partitions_scopes_to_touched(spark, tmp_path):
     """The OPTIMIZE-WHERE shape: a day-partitioned table fragmented in
     BOTH days is reclustered for day 1 only — day-1 per-file spans
     tighten on both curve dims, day-2 files are byte-untouched (same
-    file names and mtimes), rows and values survive exactly."""
+    file names and bytes), rows and values survive exactly."""
     import os as _os
 
     from airflow_etl_minio_to_postgres_spark.sources.files import (
         recluster_zorder_partitions,
+    )
+    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+        resolve_data_root,
     )
 
     grid = spark.range(8192).select(
@@ -263,16 +270,17 @@ def test_recluster_zorder_partitions_scopes_to_touched(spark, tmp_path):
         )
 
     def day_files(day):
-        d = _os.path.join(path, f"day={day}")
-        return {
-            f: _os.path.getmtime(_os.path.join(d, f))
-            for f in _os.listdir(d)
-            if f.endswith(".parquet")
-        }
+        d = _os.path.join(resolve_data_root(spark, path), f"day={day}")
+        out = {}
+        for f in _os.listdir(d):
+            if f.endswith(".parquet"):
+                with open(_os.path.join(d, f), "rb") as fh:
+                    out[f] = fh.read()
+        return out
 
     def spans(day, col_idx):
         out = []
-        d = _os.path.join(path, f"day={day}")
+        d = _os.path.join(resolve_data_root(spark, path), f"day={day}")
         for f in glob.glob(_os.path.join(d, "*.parquet")):
             pf = pq.ParquetFile(f)
             if pf.metadata.num_rows == 0:
@@ -300,7 +308,7 @@ def test_recluster_zorder_partitions_scopes_to_touched(spark, tmp_path):
 
     assert day_files(1) == day2_before  # untouched partition: same bytes
     after_rows = sorted(
-        (r.day, r.x, r.y) for r in spark.read.parquet(path).collect()
+        (r.day, r.x, r.y) for r in read_resolved(spark, path).collect()
     )
     assert after_rows == before_rows
     zx, zy = spans(0, 0), spans(0, 1)
@@ -511,7 +519,7 @@ def test_streaming_rollup_refuses_legacy_schema(spark, tmp_path):
     _run_rollup(spark, landing, out, ckpt)
 
     # rewrite the rollup in the LEGACY shape (double sum_value)
-    legacy = spark.read.parquet(out).select(
+    legacy = read_resolved(spark, out).select(
         "hour", "event_type", "n_events",
         (F.col("sum_value_micros") / 1e6).alias("sum_value"),
     )
@@ -646,7 +654,7 @@ def test_migrate_legacy_rollup_roundtrip(spark, tmp_path):
     _run_rollup(spark, landing, out, ckpt)
 
     # devolve the table to the LEGACY shape (double sum_value)
-    legacy = spark.read.parquet(out).select(
+    legacy = read_resolved(spark, out).select(
         "hour", "event_type", "n_events",
         (F.col("sum_value_micros") / 1e6).alias("sum_value"),
     ).toPandas()
@@ -661,7 +669,7 @@ def test_migrate_legacy_rollup_roundtrip(spark, tmp_path):
     second.write.mode("append").parquet(landing)
     _run_rollup(spark, landing, out, ckpt)  # guard now passes
 
-    got = spark.read.parquet(out)
+    got = read_resolved(spark, out)
     expect = events.groupBy(
         F.date_trunc("hour", "ts").alias("hour"), "event_type"
     ).agg(
@@ -702,7 +710,7 @@ def _near_dup_batch(spark, rows, batch_id, out, store, token="tok"):
 
 def _snapshot(spark, path, cols):
     return sorted(
-        map(tuple, spark.read.parquet(path).select(*cols).collect())
+        map(tuple, read_resolved(spark, path).select(*cols).collect())
     )
 
 
@@ -779,14 +787,14 @@ def test_silver_legacy_layout_guard_and_migration(spark, tmp_path):
     n = migrate_legacy_silver(spark, out)
     assert n == 2
     assert migrate_legacy_silver(spark, out) == 0  # idempotent
-    migrated = spark.read.parquet(out)
+    migrated = read_resolved(spark, out)
     assert set(migrated.select("_commit_id").distinct().toPandas()["_commit_id"]) == {
         "legacy-0"
     }
 
     # the sink now resumes cleanly and appends its own partition
     _silver_process_batch(batch, 0, out, "tok")
-    after = spark.read.parquet(out)
+    after = read_resolved(spark, out)
     assert after.count() == 3
     commits = set(after.select("_commit_id").distinct().toPandas()["_commit_id"])
     assert commits == {"legacy-0", "tok-0"}
@@ -1248,7 +1256,7 @@ def test_streaming_inverted_index_serves_like_batch_build(spark, tmp_path):
 
     import os as _os
 
-    s_stats = spark.read.parquet(_os.path.join(streamed, "_stats")).collect()[0]
+    s_stats = read_resolved(spark, _os.path.join(streamed, "_stats")).collect()[0]
     b_stats = spark.read.parquet(_os.path.join(built, "_stats")).collect()[0]
     assert s_stats["n_docs"] == b_stats["n_docs"] == 30
     assert s_stats["avgdl"] == b_stats["avgdl"]  # bit-identical division
@@ -1260,7 +1268,7 @@ def test_streaming_inverted_index_serves_like_batch_build(spark, tmp_path):
         rest, 1, streamed, _commit_token(ckpt), n_buckets=16
     )
     assert spark.read.parquet(streamed).count() == n_postings
-    s2 = spark.read.parquet(_os.path.join(streamed, "_stats")).collect()[0]
+    s2 = read_resolved(spark, _os.path.join(streamed, "_stats")).collect()[0]
     assert s2["n_docs"] == 30 and s2["sum_dl"] == s_stats["sum_dl"]
 
 
@@ -1302,7 +1310,7 @@ def test_inverted_index_stats_agree_on_null_and_blank_texts(spark, tmp_path):
 
     cols = ["n_docs", "avgdl", "n_buckets"]
     b_stats = spark.read.parquet(os.path.join(built, "_stats")).collect()[0]
-    s_stats = spark.read.parquet(os.path.join(streamed, "_stats")).collect()[0]
+    s_stats = read_resolved(spark, os.path.join(streamed, "_stats")).collect()[0]
     assert [b_stats[c] for c in cols] == [s_stats[c] for c in cols]
     assert b_stats["n_docs"] == 6 and b_stats["avgdl"] == 11 / 5
 
@@ -1320,6 +1328,137 @@ def test_inverted_index_stats_agree_on_null_and_blank_texts(spark, tmp_path):
     ).write.parquet(os.path.join(legacy, "_stats"))
     with pytest.raises(ValueError, match="no n_dl column"):
         _inv_index_process_batch(docs, 0, legacy, "tok", n_buckets=4)
+
+
+def test_inverted_index_refused_merge_writes_no_postings(spark, tmp_path):
+    """A sidecar the stats merge must refuse (no n_dl) is refused before
+    the batch's postings land: after the ValueError no
+    ``_commit_id=tok-0`` directory exists, so the index never serves
+    postings its stats do not count."""
+    import pytest
+
+    from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
+        _inv_index_process_batch,
+    )
+
+    legacy = str(tmp_path / "legacy")
+    spark.createDataFrame(
+        [(3, 4, 4 / 3, 4)],
+        "n_docs bigint, sum_dl bigint, avgdl double, n_buckets int",
+    ).write.parquet(os.path.join(legacy, "_stats"))
+    docs = spark.createDataFrame(
+        [(1, "spark join window"), (2, "a b")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="no n_dl column"):
+        _inv_index_process_batch(docs, 0, legacy, "tok", n_buckets=4)
+    assert not glob.glob(
+        os.path.join(legacy, "**", "_commit_id=tok-0"), recursive=True
+    )
+
+
+def test_silver_migrated_under_grace_window_resumes_into_generation(
+    spark, tmp_path, monkeypatch
+):
+    """A legacy silver table migrated with keep_last=2 keeps its flat
+    payload at the root for one grace window.  The resumed sink must
+    resolve the migrated generation: the legacy guard does not trip on
+    the retained payload, the batch lands in the generation (beside
+    the flat files no resolving reader would see it), and read_resolved
+    serves every row."""
+    import functools
+
+    from airflow_etl_minio_to_postgres_spark.streaming import pipeline as pl
+
+    out = str(tmp_path / "silver")
+    spark.createDataFrame(
+        [("house a", "11111", 5), ("house b", "22222", 7)],
+        "property_title string, zip string, hoa int",
+    ).write.parquet(out)
+    with monkeypatch.context() as m:
+        m.setattr(
+            pl,
+            "commit_parquet_generation",
+            functools.partial(pl.commit_parquet_generation, keep_last=2),
+        )
+        assert pl.migrate_legacy_silver(spark, out) == 2
+    assert any(n.startswith("part-") for n in os.listdir(out))
+
+    batch = spark.createDataFrame(
+        [("  House C ", "33333", 9)],
+        "Property_Title string, zip string, HOA int",
+    )
+    pl._silver_process_batch(batch, 0, out, "tok")
+    got = read_resolved(spark, out)
+    assert sorted(
+        (r.property_title, r._commit_id)
+        for r in got.select("property_title", "_commit_id").collect()
+    ) == [("house a", "legacy-0"), ("house b", "legacy-0"), ("house c", "tok-0")]
+
+
+def test_in_place_writers_run_on_file_uris(spark, tmp_path):
+    """Every in-place writer commits through the filesystem of its own
+    path, so each runs on a file:// URI as on a local path (the rollup
+    sink, the index stats merge and the flat recluster have their own
+    URI tests)."""
+    from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        _minhash_table,
+    )
+    from airflow_etl_minio_to_postgres_spark.sources.files import (
+        compact_parquet,
+        recluster_zorder_partitions,
+        upsert_parquet,
+    )
+    from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
+        migrate_legacy_near_dup_store,
+        migrate_legacy_rollup,
+        migrate_legacy_silver,
+    )
+
+    def uri(name):
+        return "file://" + str(tmp_path / name)
+
+    dim = uri("dim")
+    upsert_parquet(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
+        dim, ["k"],
+    )
+    upsert_parquet(spark.createDataFrame([(2, "B")], "k int, v string"), dim, ["k"])
+    compact_parquet(spark, dim, target_files=1)
+    assert _snapshot(spark, dim, ["k", "v"]) == [(1, "a"), (2, "B")]
+
+    fact = uri("fact")
+    spark.createDataFrame(
+        [(1, 10, "a"), (2, 20, "a"), (3, 30, "b")], "x int, y int, kind string"
+    ).write.partitionBy("kind").parquet(fact)
+    assert recluster_zorder_partitions(
+        spark, fact, ["x", "y"], "kind", partitions=["a"], bits=4
+    ) == ["kind=a"]
+    assert _snapshot(spark, fact, ["x", "kind"]) == [(1, "a"), (2, "a"), (3, "b")]
+
+    silver = uri("silver")
+    spark.createDataFrame(
+        [("house a", "11111", 5)], "property_title string, zip string, hoa int"
+    ).write.parquet(silver)
+    assert migrate_legacy_silver(spark, silver) == 1
+    assert _snapshot(spark, silver, ["_commit_id"]) == [("legacy-0",)]
+
+    rollup = uri("rollup")
+    spark.sql(
+        "SELECT TIMESTAMP'2024-01-01 10:00:00' AS hour, 'view' AS event_type,"
+        " CAST(3 AS BIGINT) AS n_events, 4.5D AS sum_value"
+    ).write.parquet(rollup)
+    assert migrate_legacy_rollup(spark, rollup) == 1
+    assert _snapshot(spark, rollup, ["sum_value_micros"]) == [(4_500_000,)]
+
+    store = uri("store")
+    _minhash_table(
+        spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog")],
+            "doc_id long, text string",
+        ),
+        "text", "doc_id", 8, 3,
+    ).write.parquet(store)
+    assert migrate_legacy_near_dup_store(spark, store, store_partitions=8) == 4
 
 
 def test_compact_inverted_index_merges_files_and_serves_bit_equal(
@@ -1397,7 +1536,10 @@ def test_compact_inverted_index_merges_files_and_serves_bit_equal(
         r[0] for r in got.select("_commit_id").distinct().collect()
     ) == {"compact-0"}
     # sidecar + marker rode INTO the published generation
-    assert _os.path.exists(_os.path.join(data_root, "_stats", "_last_batch"))
+    assert _os.path.exists(_os.path.join(
+        resolve_data_root(spark, _os.path.join(data_root, "_stats")),
+        "_last_batch",
+    ))
     assert not _os.path.exists(_os.path.join(streamed, "_stats"))
     after = [
         tuple(r)
@@ -1412,8 +1554,8 @@ def test_compact_inverted_index_merges_files_and_serves_bit_equal(
     )
     extra.write.mode("append").parquet(landing)
     run_batch()
-    assert spark.read.parquet(
-        _os.path.join(resolve_data_root(spark, streamed), "_stats")
+    assert read_resolved(
+        spark, _os.path.join(resolve_data_root(spark, streamed), "_stats")
     ).collect()[0]["n_docs"] == 31
     served = [
         r.doc_id
@@ -1740,16 +1882,16 @@ def test_streaming_inverted_index_refuses_foreign_lineage(spark, tmp_path):
     idx = str(tmp_path / "inv")
     _inv_index_process_batch(docs, 0, idx, "tok-a", n_buckets=8)
     before = sorted(tuple(r) for r in spark.read.parquet(idx).collect())
-    stats_before = spark.read.parquet(
-        _os.path.join(idx, "_stats")
+    stats_before = read_resolved(
+        spark, _os.path.join(idx, "_stats")
     ).collect()[0]
 
     with _pytest.raises(ValueError, match="different checkpoint lineage"):
         _inv_index_process_batch(docs, 0, idx, "tok-b", n_buckets=8)
 
     after = sorted(tuple(r) for r in spark.read.parquet(idx).collect())
-    stats_after = spark.read.parquet(
-        _os.path.join(idx, "_stats")
+    stats_after = read_resolved(
+        spark, _os.path.join(idx, "_stats")
     ).collect()[0]
     assert after == before
     assert tuple(stats_after) == tuple(stats_before)
@@ -1758,8 +1900,8 @@ def test_streaming_inverted_index_refuses_foreign_lineage(spark, tmp_path):
         [(100, "window filter")], "doc_id long, text string"
     )
     _inv_index_process_batch(more, 1, idx, "tok-a", n_buckets=8)
-    assert spark.read.parquet(
-        _os.path.join(idx, "_stats")
+    assert read_resolved(
+        spark, _os.path.join(idx, "_stats")
     ).collect()[0]["n_docs"] == 11
 
 
@@ -1806,7 +1948,7 @@ def test_write_inverted_index_refusal_leaves_existing_index_intact(
 
 
 def test_recluster_zorder_parquet_refuses_hive_partitioned(spark, tmp_path):
-    """recluster_zorder_parquet stages a FLAT rewrite; run against a
+    """recluster_zorder_committed stages a FLAT rewrite; run against a
     hive-partitioned location it would silently demote the partition
     columns to data columns and break directory pruning (round-12
     advisor finding) — it must refuse with a pointer to the
@@ -1816,7 +1958,7 @@ def test_recluster_zorder_parquet_refuses_hive_partitioned(spark, tmp_path):
     import pytest as _pytest
 
     from airflow_etl_minio_to_postgres_spark.sources.files import (
-        recluster_zorder_parquet,
+        recluster_zorder_committed,
     )
 
     df = spark.range(100).selectExpr(
@@ -1827,7 +1969,7 @@ def test_recluster_zorder_parquet_refuses_hive_partitioned(spark, tmp_path):
     dirs_before = sorted(_os.listdir(path))
 
     with _pytest.raises(ValueError, match="hive-partitioned"):
-        recluster_zorder_parquet(spark, path, ["x"], bits=6)
+        recluster_zorder_committed(spark, path, ["x"], bits=6)
 
     assert sorted(_os.listdir(path)) == dirs_before
     assert spark.read.parquet(path).count() == 100
@@ -2458,12 +2600,12 @@ def test_inv_index_lineage_guard_over_file_uri(spark, tmp_path):
         _inv_index_process_batch(docs, 0, idx, "tok-b", n_buckets=8)
 
     # crash-replayed batch is a no-op (was: stats double-merge)
-    stats_before = spark.read.parquet(
-        _os.path.join(idx_local, "_stats")
+    stats_before = read_resolved(
+        spark, _os.path.join(idx_local, "_stats")
     ).collect()[0]
     _inv_index_process_batch(docs, 0, idx, "tok-a", n_buckets=8)
-    stats_after = spark.read.parquet(
-        _os.path.join(idx_local, "_stats")
+    stats_after = read_resolved(
+        spark, _os.path.join(idx_local, "_stats")
     ).collect()[0]
     assert tuple(stats_after) == tuple(stats_before)
     assert stats_after["n_docs"] == 10
@@ -2474,7 +2616,7 @@ def test_inv_index_lineage_guard_over_file_uri(spark, tmp_path):
     )
     _inv_index_process_batch(more, 1, idx, "tok-a", n_buckets=8)
     assert (
-        spark.read.parquet(_os.path.join(idx_local, "_stats")).collect()[0][
+        read_resolved(spark, _os.path.join(idx_local, "_stats")).collect()[0][
             "n_docs"
         ]
         == 11
@@ -2711,40 +2853,39 @@ def test_recluster_zorder_guard_error_shapes(spark, tmp_path):
     from pyspark.errors import AnalysisException
 
     from airflow_etl_minio_to_postgres_spark.sources.files import (
-        recluster_zorder_parquet,
+        recluster_zorder_committed,
     )
 
     # missing path -> the parquet reader's own error, not the guard's
     with _pytest.raises(AnalysisException):
-        recluster_zorder_parquet(spark, str(tmp_path / "nope"), ["a"])
+        recluster_zorder_committed(spark, str(tmp_path / "nope"), ["a"])
 
     # 2 hive dirs -> refusal names both, no trailing ellipsis
     root = str(tmp_path / "hive")
     _os.makedirs(_os.path.join(root, "a=1"))
     _os.makedirs(_os.path.join(root, "a=2"))
     with _pytest.raises(ValueError, match=r"\['a=1', 'a=2'\]\)") as ei:
-        recluster_zorder_parquet(spark, root, ["a"])
+        recluster_zorder_committed(spark, root, ["a"])
     assert "..." not in str(ei.value)
 
     # >3 hive dirs -> truncated listing keeps the ellipsis
     for i in range(3, 7):
         _os.makedirs(_os.path.join(root, f"a={i}"))
     with _pytest.raises(ValueError, match=r"\.\.\."):
-        recluster_zorder_parquet(spark, root, ["a"])
+        recluster_zorder_committed(spark, root, ["a"])
 
 
 def test_recluster_zorder_committed_over_uri_with_resolving_view(
     spark, tmp_path
 ):
-    """RUNBOOK 5b closure: generic-reader tables can now adopt manifest
-    commits — recluster_zorder_committed runs the IDENTICAL recluster
-    plan as the local-swap variant but lands it as a manifest-committed
-    generation (works over file:// URIs where the local variant
-    refuses), and consumers migrate to the thin resolving reader
-    (read_resolved / create_resolving_view).  Value-equality with the
-    local variant, the reader contract, retention of the flat legacy
-    payload under a grace window, and view refresh across a second
-    commit are all pinned here."""
+    """Generic-reader tables adopt manifest commits —
+    recluster_zorder_committed lands the recluster as a
+    manifest-committed generation over a local path and over a file://
+    URI alike, and consumers read through the thin resolving reader
+    (read_resolved / create_resolving_view).  Value-equality between
+    the two spellings, the reader contract, retention of the flat
+    legacy payload under a grace window, and view refresh across a
+    second commit are all pinned here."""
     import os as _os
 
     from pyspark.sql import functions as F
@@ -2752,7 +2893,6 @@ def test_recluster_zorder_committed_over_uri_with_resolving_view(
     from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
     from airflow_etl_minio_to_postgres_spark.sources.files import (
         recluster_zorder_committed,
-        recluster_zorder_parquet,
     )
 
     rows = spark.range(400).select(
@@ -2771,8 +2911,8 @@ def test_recluster_zorder_committed_over_uri_with_resolving_view(
         )
     uri = f"file://{committed}"
 
-    recluster_zorder_parquet(spark, local, ["bu", "bh"], bits=10, n_files=4)
-    want = sorted(tuple(r) for r in spark.read.parquet(local).collect())
+    recluster_zorder_committed(spark, local, ["bu", "bh"], bits=10, n_files=4)
+    want = sorted(tuple(r) for r in read_resolved(spark, local).collect())
 
     # grace window keeps the flat payload through the FIRST commit, so
     # un-migrated plain readers survive one maintenance cycle

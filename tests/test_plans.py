@@ -994,3 +994,68 @@ def test_zone_map_scan_reads_only_surviving_files(spark, tmp_path):
     pushed = plan.split("PushedFilters")[1][:200]
     assert _re.search(r"GreaterThanOrEqual\(id,0\)", pushed)
     assert _re.search(r"LessThanOrEqual\(id,249\)", pushed)
+
+
+def test_bm25_index_serves_scan_stats_once(spark, tmp_path):
+    """Each index serve reads the _stats sidecar once (the collect that
+    yields n_buckets) and hands that row to the scorer as a one-row
+    local relation: the query plan scans the postings only, never the
+    sidecar, and the scores stay bit-identical to the direct path."""
+    from airflow_etl_minio_to_postgres_spark.functions.text import (
+        bm25_knn_join,
+        bm25_topk,
+        bm25_topk_batch,
+        bm25_topk_indexed,
+        write_inverted_index,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (i, f"spark join window doc{i} " + "pad " * (i % 3))
+            for i in range(12)
+        ],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "inv")
+    write_inverted_index(docs, idx, n_buckets=8)
+    queries = spark.createDataFrame(
+        [(0, ["spark"]), (1, ["doc7", "join"])], "qid long, terms array<string>"
+    )
+    terms = ["spark", "doc7"]
+    indexed = bm25_topk_indexed(spark, idx, terms, k=5)
+    for df in (
+        indexed,
+        bm25_topk_batch(spark, idx, queries, k=5),
+        bm25_knn_join(spark, idx, queries, k=5),
+    ):
+        plan = _physical_plan(df)
+        assert "_stats" not in plan, plan
+        assert plan.count("FileScan parquet") == 1, plan  # the postings
+        assert "LocalTableScan" in plan, plan
+    direct = bm25_topk(docs, terms, k=5)
+    assert [(r.doc_id, r.score.hex()) for r in indexed.collect()] == [
+        (r.doc_id, r.score.hex()) for r in direct.collect()
+    ]
+
+
+def test_package_has_one_commit_protocol():
+    """Every in-place writer commits a manifest generation: no package
+    module renames directories with os.replace, stages to a sibling
+    __rewrite_tmp / __recluster_tmp, or refuses a path for not being on
+    the local filesystem."""
+    import pathlib
+    import re
+
+    import airflow_etl_minio_to_postgres_spark as pkg
+
+    banned = re.compile(
+        r"os\.replace\(|__rewrite_tmp|__recluster_tmp|local-FS only",
+        re.IGNORECASE,
+    )
+    hits = [
+        f"{p.name}:{n}: {line.strip()}"
+        for p in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert hits == []

@@ -27,6 +27,10 @@ from airflow_etl_minio_to_postgres_spark.sources.jdbc import (
     read_options,
     write_options,
 )
+from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+    read_resolved,
+    resolve_data_root,
+)
 
 CFG = JdbcConfig(url="jdbc:postgresql://db:5432/gold", user="u", password="p")
 
@@ -277,7 +281,7 @@ def test_upsert_parquet(spark, tmp_path):
     upsert_parquet(base, path, ["k"])
     update = spark.createDataFrame([(2, "B2"), (3, "c")], ["k", "v"])
     upsert_parquet(update, path, ["k"])
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    got = {r["k"]: r["v"] for r in read_resolved(spark, path).collect()}
     assert got == {1: "a", 2: "B2", 3: "c"}  # incoming wins, others kept
 
 
@@ -290,8 +294,9 @@ def test_compact_parquet(spark, tmp_path):
     import glob
     assert len(glob.glob(path + "/*.parquet")) >= 5
     compact_parquet(spark, path, target_files=1)
-    assert len(glob.glob(path + "/*.parquet")) == 1
-    assert sorted(r["x"] for r in spark.read.parquet(path).collect()) == [0, 1, 2, 3, 4]
+    gen = resolve_data_root(spark, path)
+    assert len(glob.glob(gen + "/*.parquet")) == 1
+    assert sorted(r["x"] for r in read_resolved(spark, path).collect()) == [0, 1, 2, 3, 4]
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
@@ -306,15 +311,15 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
 
 
 def test_rewrite_leaves_no_sibling_dirs(spark, tmp_path):
-    """Crash-safe rewrite: after a successful upsert neither the __rewrite_tmp
-    stage nor the __rewrite_old backup survives, and the data is intact."""
+    """Crash-safe rewrite: a successful upsert commits inside the table
+    directory and leaves nothing beside it, and the data is intact."""
     from airflow_etl_minio_to_postgres_spark.sources.files import upsert_parquet
 
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
     upsert_parquet(df, path, ["k"])
     upsert_parquet(spark.createDataFrame([(2, "B")], ["k", "v"]), path, ["k"])
-    got = {tuple(r) for r in spark.read.parquet(path).collect()}
+    got = {tuple(r) for r in read_resolved(spark, path).collect()}
     assert got == {(1, "a"), (2, "B")}
     siblings = sorted(p.name for p in tmp_path.iterdir())
     assert siblings == ["t"]

@@ -1,16 +1,20 @@
-"""Crash-point model of the local directory swap (``sources/files.swap_dir``).
+"""Crash-point model of the one commit protocol
+(``sources/manifest.commit_parquet_generation``).
 
-Every ``os.replace`` of the package, and every ``shutil.rmtree`` of the
-in-place rewrites, runs inside ``sources/files.py``, so wrapping that
-module's two calls sees every step of a rewrite.  A crash before the k-th
-call leaves the files exactly as they were when that call began:
-
-* the filesystem-only test makes the k-th call raise, for every k;
-* the Spark cases run the operation once and copy the working directory
-  before every call (one Spark run instead of one per crash point).  Each
-  distinct copy is then restored, read (no reader may see an aside's
-  rows), and restarted by running the operation again; the restart must
-  end at the no-crash result.
+Every in-place writer commits a manifest generation, and each step of a
+commit runs through a ``manifest`` function: ``next_seq`` opens it (the
+data write follows), ``copy_tree`` carries a sidecar or an untouched
+partition, ``_write_text`` writes a replay marker (and the staged
+manifest), ``publish_generation`` is the commit point and
+``gc_generations`` collects what the new generation supersedes.
+Wrapping those functions sees every step boundary.  A crash before the
+k-th call leaves the files exactly as they were when that call began, so
+each case runs the operation once and copies the working directory
+before every call (one Spark run instead of one per crash point).  Each
+distinct copy is then restored, read through ``manifest.read_resolved``
+(no reader may see a staged or superseded generation's rows), and
+restarted by running the operation again; the restart must end at the
+no-crash result.
 """
 
 from __future__ import annotations
@@ -23,25 +27,29 @@ import pytest
 from pyspark.sql import functions as F
 
 from airflow_etl_minio_to_postgres_spark.sources import files as sf
+from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
+from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+    read_resolved,
+    resolve_data_root,
+)
+
+# the commit's step boundaries, in the order a commit calls them
+_STEPS = (
+    "next_seq",
+    "copy_tree",
+    "_write_text",
+    "publish_generation",
+    "gc_generations",
+)
 
 
 class _Crash(Exception):
     pass
 
 
-class _Proxy:
-    """A module stand-in whose ``name`` attribute is ``fn``."""
-
-    def __init__(self, module, name, fn):
-        self._module, self._name, self._fn = module, name, fn
-
-    def __getattr__(self, attr):
-        return self._fn if attr == self._name else getattr(self._module, attr)
-
-
 def _before_each_call(m, before) -> None:
-    """Run ``before(k)`` ahead of the k-th ``os.replace`` or
-    ``shutil.rmtree`` call made by the swap module."""
+    """Run ``before(k)`` ahead of the k-th call of a commit step, in
+    ``manifest`` and in the modules that import the steps by name."""
     calls = [0]
 
     def counted(fn):
@@ -52,13 +60,11 @@ def _before_each_call(m, before) -> None:
 
         return inner
 
-    m.setattr(sf, "os", _Proxy(os, "replace", counted(os.replace)))
-    m.setattr(
-        sf,
-        "shutil",
-        _Proxy(shutil, "rmtree", counted(shutil.rmtree)),
-        raising=False,
-    )
+    for name in _STEPS:
+        wrapped = counted(getattr(mf, name))
+        for module in (mf, sf):
+            if hasattr(module, name):
+                m.setattr(module, name, wrapped)
 
 
 def _tree(root: str) -> tuple:
@@ -105,48 +111,8 @@ def _every_crash_point(monkeypatch, work, op, check, between=None) -> int:
     return len(states)
 
 
-def test_swap_dir_converges_at_every_crash_point(monkeypatch, tmp_path):
-    """Filesystem only, the k-th call raising: once recovered the target
-    always holds a complete copy, and a rerun ends at the staged one."""
-    target, staged = tmp_path / "t", tmp_path / "t_staged"
-
-    def op():
-        if not staged.exists():  # a rerun restages, as a rewrite would
-            staged.mkdir()
-            (staged / "v").write_text("new")
-        sf.swap_dir(str(staged), str(target))
-
-    def crash_at(k):
-        def before(i):
-            if i == k:
-                raise _Crash(k)
-
-        return before
-
-    for k in range(1, 5):
-        for d in tmp_path.iterdir():
-            shutil.rmtree(d)
-        target.mkdir()
-        (target / "v").write_text("old")
-        with monkeypatch.context() as m:
-            _before_each_call(m, crash_at(k))
-            if k == 4:  # three calls: aside, promote, delete the aside
-                op()
-            else:
-                with pytest.raises(_Crash):
-                    op()
-        if k < 4:
-            sf._recover_swap(str(target))
-            assert (target / "v").read_text() in ("old", "new"), k
-            assert os.listdir(tmp_path) in (["t"], ["t", "t_staged"],
-                                            ["t_staged", "t"]), k
-            op()
-        assert (target / "v").read_text() == "new", k
-        assert sorted(os.listdir(tmp_path)) == ["t"], k
-
-
 def _rows(spark, path):
-    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    return sorted(tuple(r) for r in read_resolved(spark, path).collect())
 
 
 def test_upsert_restart_after_any_crash_keeps_every_row(
@@ -170,7 +136,7 @@ def test_upsert_restart_after_any_crash_keeps_every_row(
         sf.upsert_parquet(update, path, ["k"])
 
     n = _every_crash_point(monkeypatch, work, op, check)
-    assert n == 3  # staged; table aside; staged copy promoted
+    assert n == 2  # generation staged; published, not yet collected
 
 
 def test_rollup_restart_after_any_crash_keeps_totals_and_marker(
@@ -200,7 +166,8 @@ def test_rollup_restart_after_any_crash_keeps_totals_and_marker(
             ("view", 2, 3_000_000),
             ("buy", 1, 2_000_000),
         ]
-        with open(os.path.join(out, "_last_batch"), encoding="utf-8") as f:
+        marker = os.path.join(resolve_data_root(spark, out), "_last_batch")
+        with open(marker, encoding="utf-8") as f:
             assert f.read() == "tok:1"
         assert os.listdir(work) == ["rollup"]
 
@@ -208,7 +175,7 @@ def test_rollup_restart_after_any_crash_keeps_totals_and_marker(
         _rollup_process_batch(b1, 1, out, "tok")
 
     n = _every_crash_point(monkeypatch, work, op, check)
-    assert n == 3
+    assert n == 3  # data staged; marker staged; published
 
 
 def test_migrate_legacy_silver_restart_after_any_crash(
@@ -235,10 +202,21 @@ def test_migrate_legacy_silver_restart_after_any_crash(
     n = _every_crash_point(
         monkeypatch, work, lambda: migrate_legacy_silver(spark, out), check
     )
-    assert n == 3
+    assert n == 2  # generation staged; published, not yet collected
 
 
 _KIND_ROWS = [(1, 10, "a"), (2, 20, "a"), (3, 30, "b")]
+
+
+@pytest.fixture(scope="module")
+def kind_table(spark, tmp_path_factory):
+    """The two-partition table, written once per module; each test
+    copies it."""
+    path = str(tmp_path_factory.mktemp("kind") / "t")
+    spark.createDataFrame(
+        _KIND_ROWS, "x int, y int, kind string"
+    ).write.partitionBy("kind").parquet(path)
+    return path
 
 
 def _recluster_a(spark, path):
@@ -247,40 +225,31 @@ def _recluster_a(spark, path):
     )
 
 
-def _kind_table(spark, path):
-    spark.createDataFrame(
-        _KIND_ROWS, "x int, y int, kind string"
-    ).write.partitionBy("kind").parquet(path)
-
-
 def test_recluster_partitions_crash_after_promote_hides_aside(
-    spark, monkeypatch, tmp_path
+    spark, monkeypatch, tmp_path, kind_table
 ):
-    """A crash after a partition's promote leaves its previous contents
-    in an aside inside the table.  The aside must not read as a
-    partition: the table still reads the no-crash row count."""
+    """A crash after the publish leaves the superseded partition
+    directories inside the table until the next GC.  They must not read
+    as partitions: the table still reads the no-crash row count."""
     path = str(tmp_path / "t")
-    _kind_table(spark, path)
-    real_rmtree = shutil.rmtree
+    shutil.copytree(kind_table, path)
 
-    def crash_on_aside(p, *args, **kwargs):
-        if os.path.dirname(str(p).rstrip("/")) == path and os.path.exists(p):
-            raise _Crash(p)
-        return real_rmtree(p, *args, **kwargs)
+    def crash_on_gc(*args, **kwargs):
+        raise _Crash()
 
     with monkeypatch.context() as m:
-        m.setattr(shutil, "rmtree", crash_on_aside)
+        m.setattr(mf, "gc_generations", crash_on_gc)
         with pytest.raises(_Crash):
             _recluster_a(spark, path)
-    assert spark.read.parquet(path).count() == len(_KIND_ROWS)
+    assert read_resolved(spark, path).count() == len(_KIND_ROWS)
 
 
 def test_recluster_partitions_restart_after_any_crash(
-    spark, monkeypatch, tmp_path
+    spark, monkeypatch, tmp_path, kind_table
 ):
     work = str(tmp_path / "w")
     path = os.path.join(work, "t")
-    _kind_table(spark, path)
+    shutil.copytree(kind_table, path)
 
     def between():
         # a crash may hide a partition until the restart, never add rows
@@ -289,9 +258,13 @@ def test_recluster_partitions_restart_after_any_crash(
     def check():
         assert _rows(spark, path) == _KIND_ROWS
         assert os.listdir(work) == ["t"]
-        assert not [n for n in os.listdir(path) if n.endswith(sf._ASIDE)]
+        # nothing staged or superseded is left beside the served one
+        served = os.path.basename(resolve_data_root(spark, path))
+        assert sorted(
+            n for n in os.listdir(path) if not n.startswith(".")
+        ) == sorted([served, mf.MANIFEST_DIR])
 
     n = _every_crash_point(
         monkeypatch, work, lambda: _recluster_a(spark, path), check, between
     )
-    assert n == 4  # staged; partition aside; promoted; staging left over
+    assert n == 3  # touched partition staged; untouched carried; published
