@@ -1,5 +1,5 @@
-"""Similarity search over embedding columns — brute-force cosine top-k and
-a sign-LSH bucketed ANN variant.
+"""Similarity search over embedding columns: brute-force cosine top-k,
+banded-LSH pair and k-NN joins, and IVF (inverted-file) serving.
 
 Scale design:
 
@@ -8,12 +8,27 @@ Scale design:
   TakeOrdered, which keeps only k rows per partition then k at the driver).
   Linear in corpus size but embarrassingly parallel — correct reference
   semantics for verifying approximate paths.
-* Sign-LSH ANN is the scale path: each vector gets a small bucket key from
-  the signs of its leading components (a fixed, data-independent set of
-  axis-aligned hyperplanes — deterministic, so the oracle reproduces it).
-  Search touches ONE bucket: a partition-pruned fraction of the corpus.
-  Production IVF would learn centroids instead; the plumbing (bucket
-  assignment -> bucket-local top-k) is identical.
+* IVF is the scale path, served by TWO regimes over one probe rule
+  (rank cells by max cosine, ties to the smallest cid) and one top-k
+  rule (:func:`_topk`):
+
+  - the cogrouped cell join (:func:`ivf_knn_join`): both sides take
+    their cells engine-side (:func:`_probe_col`) and meet in one
+    cogroup keyed on the cell id, whose kernel emits each query's
+    local top-k before a small per-query merge (REPOSE, ICDE'21).
+    :func:`ivf_topk` is its one-query instance;
+  - the broadcast batch over a cell-partitioned index
+    (:func:`ivf_topk_batch` over :func:`write_ivf_index`): probes are
+    ranked driver-side (:func:`_probe_cells`), the union of probe cells
+    drives one partition-pruned scan, and the (query, cell, vector)
+    side is broadcast.  :func:`ivf_topk_indexed` keeps the one-vector
+    form with the query as a UDF constant.
+
+  Cells come from :func:`kmeans_centroids` or a deterministic stub
+  (the first ``n_cells`` vectors by id).
+* Sign-LSH ANN (:func:`ann_topk_sign_lsh`) searches ONE sign bucket of
+  the leading components — data-independent, so the oracle reproduces
+  it.
 
 All arithmetic is double-precision: float32 embeddings are cast up before
 any multiply, matching DuckDB's behavior on ``FLOAT[]`` lists.
@@ -463,6 +478,70 @@ def probe_cids_arrow(
     )
 
 
+# Centroid lists longer than this ship to the assignment UDFs as a
+# SparkContext broadcast instead of in the pickled closure (the ~100k-cell
+# regime, where re-pickling the matrix per task would dominate).
+_CLOSURE_CENTROIDS = 256
+
+
+def _centroid_list(
+    centroids: DataFrame, cid: str = "cid", cvec: str = "cvec"
+) -> list[tuple[int, list[float]]]:
+    """The one centroid collect of every IVF form: ``(cid, vector)``
+    pairs, n_cells x dim — metadata, the Spark MLlib KMeans pattern."""
+    return [
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in centroids.select(cid, cvec).collect()
+    ]
+
+
+def _stub_centroids(
+    df: DataFrame, n_cells: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The deterministic stub cells: the first ``n_cells`` vectors by id,
+    as ``(cid, cvec)`` — the same contract as :func:`kmeans_centroids`."""
+    return df.where(F.col(id_col) < n_cells).select(
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
+    )
+
+
+def _probe_col(
+    vec: Column,
+    cents: list[tuple[int, list[float]]],
+    nprobe: int,
+    spark: SparkSession,
+) -> Column:
+    """The engine-side probe rule: each vector's ranked top-``nprobe``
+    cell ids (:func:`probe_cids_arrow`), the centroids riding the UDF
+    closure up to ``_CLOSURE_CENTROIDS`` cells and a broadcast above."""
+    return probe_cids_arrow(
+        vec,
+        cents,
+        int(nprobe),
+        spark=spark,
+        via_broadcast=len(cents) > _CLOSURE_CENTROIDS,
+    )
+
+
+def _probe_cells(
+    cents: list[tuple[int, list[float]]], vectors: list, nprobe: int
+) -> list[list[int]]:
+    """The driver-side probe rule: each vector's ranked top-``nprobe``
+    cell ids by :func:`_rank_cells` — the routine behind
+    :func:`_probe_col`, so both sides of a serve probe the same cells."""
+    if not cents:
+        return [[] for _ in vectors]
+    cids, cmat = _centroid_matrix(cents)
+    ranked = _rank_cells(
+        pd.Series(list(vectors), dtype="object"),
+        cids,
+        cmat,
+        min(int(nprobe), len(cids)),
+        _ranked_cells,
+    )
+    return [[int(c) for c in row] for row in ranked]
+
+
 def _cell_topk_kernel(
     k: int,
     id_col: str,
@@ -704,6 +783,30 @@ def flag_close_to_any_arrow(
     return _flag(vec)
 
 
+def _topk(
+    scored: DataFrame,
+    order: list[Column],
+    k: int,
+    query_id_col: str | None = None,
+    rank_col: str | None = None,
+) -> DataFrame:
+    """The top-k rule of every serving form: the first ``k`` rows of
+    ``scored`` by ``order``.  Without a query column it is a TakeOrdered
+    (orderBy + limit: k rows per partition, then k at the driver); with
+    one, a ``row_number`` window per ``query_id_col``, whose rank is
+    kept as the long column ``rank_col`` when one is named."""
+    if query_id_col is None:
+        return scored.orderBy(*order).limit(int(k))
+    from pyspark.sql import Window
+
+    rank = F.row_number().over(Window.partitionBy(query_id_col).orderBy(*order))
+    name = rank_col or "_rn"
+    ranked = scored.withColumn(
+        name, rank if rank_col is None else rank.cast("long")
+    ).where(F.col(name) <= F.lit(int(k)))
+    return ranked if rank_col is not None else ranked.drop(name)
+
+
 def topk_cosine(
     df: DataFrame,
     query_id: int,
@@ -721,16 +824,15 @@ def topk_cosine(
     q = df.where(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("_query_vec"),
     )
-    return (
+    scored = (
         df.where(F.col(id_col) != query_id)
         .crossJoin(F.broadcast(q))
         .select(
             id_col,
             cosine_arrow(F.col(vec_col), F.col("_query_vec")).alias("cosine"),
         )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
     )
+    return _topk(scored, [F.col("cosine").desc(), F.col(id_col)], k)
 
 
 def sign_bucket_expr(vec: Column, n_bits: int = 8) -> Column:
@@ -780,10 +882,7 @@ def ivf_assign(
     callers that need to distinguish the nearest cell from the extra
     probes.
     """
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in centroids.select(centroid_id, centroid_vec).collect()
-    ]
+    cents = _centroid_list(centroids, centroid_id, centroid_vec)
     cols = [id_col, centroid_id]
     if not cents:
         empty = df.select(
@@ -795,13 +894,9 @@ def ivf_assign(
         return empty.select(*cols)
     probed = df.select(
         id_col,
-        probe_cids_arrow(
-            F.col(vec_col),
-            cents,
-            int(nprobe),
-            spark=df.sparkSession,
-            via_broadcast=len(cents) > 256,
-        ).alias("_probes"),
+        _probe_col(F.col(vec_col), cents, nprobe, df.sparkSession).alias(
+            "_probes"
+        ),
     )
     exploded = probed.select(
         id_col, F.posexplode("_probes").alias("_pos", centroid_id)
@@ -829,37 +924,26 @@ def ivf_topk(
     the CORPUS is partitioned once — one cell per vector — and recall
     is tuned per query by probing more cells).
 
+    A one-row :func:`ivf_knn_join`: the query row ``id == query_id``
+    against the corpus, the query's own id excluded, projected to
+    ``(id_col, cosine)`` — so its rows are by construction the cell
+    join's, and bit-identical to :func:`ivf_topk_indexed` over a
+    :func:`write_ivf_index` of the same corpus.
+
     Default centroid "training" is a deterministic stub — the first
     ``n_cells`` corpus vectors by id; pass
     ``centroids=kmeans_centroids(df, ...)`` for trained cells (same
-    (cid, cvec) contract, identical serving plan).  At scale the corpus
-    is written partitioned by cell, making this a partition-pruned scan
-    (``nprobe`` partitions) + tiny top-k.
+    (cid, cvec) contract, identical serving plan).
     """
     if centroids is None:
-        centroids = df.where(F.col(id_col) < n_cells).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-        )
-    else:
-        centroids = centroids.select("cid", "cvec")
-    assigned = ivf_assign(df, centroids, id_col, vec_col)
-    corpus = df.join(assigned, on=id_col)
-    qrow = df.where(F.col(id_col) == query_id)
-    probes = ivf_assign(
-        qrow, centroids, id_col, vec_col, nprobe=nprobe
-    ).select("cid")
-    q = qrow.select(F.col(vec_col).alias("_query_vec"))
-    return (
-        corpus.join(F.broadcast(probes), "cid", "semi")
-        .where(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            cosine_arrow(F.col(vec_col), F.col("_query_vec")).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+        centroids = _stub_centroids(df, n_cells, id_col, vec_col)
+    query = df.where(F.col(id_col) == query_id).select(
+        F.col(id_col).alias("_qid"), F.col(vec_col).alias("_qvec")
     )
+    return ivf_knn_join(
+        query, df, centroids, k, nprobe, id_col, vec_col, "_qid", "_qvec",
+        exclude_self=True,
+    ).select(id_col, "cosine")
 
 
 def write_ivf_index(
@@ -902,19 +986,14 @@ def ivf_topk_indexed(
     ``cid IN (probes)`` — Spark prunes to exactly those partition
     directories (visible as PartitionFilters in the plan; pinned in
     tests), so the corpus read is proportional to the probed cells,
-    not the index.  Probe cells are ranked by the same routine as
-    :func:`ivf_assign` (:func:`_rank_cells`: max cosine, then smallest
-    cid), so results are identical to running :func:`ivf_topk` over
-    the unindexed corpus."""
+    not the index.  Probe cells are ranked by the one driver-side
+    probe rule (:func:`_probe_cells`: max cosine, then smallest cid),
+    the engine-side rule's routine, so results are identical to running
+    :func:`ivf_topk` over the unindexed corpus.  The one-vector form
+    keeps the query as a UDF constant and a TakeOrdered top-k, which
+    schedule fewer jobs than a one-row :func:`ivf_topk_batch`."""
     q = [float(x) for x in query_vec]
-    cents = [(r[0], r[1]) for r in centroids.select("cid", "cvec").collect()]
-    probes = []
-    if cents:
-        cids, cmat = _centroid_matrix(cents)
-        ranked = _rank_cells(
-            pd.Series([q]), cids, cmat, min(int(nprobe), len(cids)), _ranked_cells
-        )
-        probes = [int(c) for c in ranked[0]]
+    probes = _probe_cells(_centroid_list(centroids), [q], nprobe)[0]
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
         resolve_data_root,
     )
@@ -926,17 +1005,14 @@ def ivf_topk_indexed(
         corpus = corpus.where(F.col(id_col) != exclude_id)
     # Scoring: the constant-query Arrow form — the query ships once per
     # task in the UDF closure and is broadcast to the batch shape, so the
-    # produced doubles are identical to cosine_arrow on a query COLUMN
-    # (the ivf_topk / ivf_topk_batch paths) and the bit-identity contract
-    # between indexed and unindexed serving holds by construction.
-    return (
-        corpus.select(
-            id_col,
-            cosine_vs_const_arrow(F.col(vec_col), q).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+    # produced doubles are identical to the cell kernel's and
+    # cosine_arrow's (the ivf_topk / ivf_topk_batch paths) and the
+    # bit-identity contract between indexed and unindexed serving holds
+    # by construction.
+    scored = corpus.select(
+        id_col, cosine_vs_const_arrow(F.col(vec_col), q).alias("cosine")
     )
+    return _topk(scored, [F.col("cosine").desc(), F.col(id_col)], k)
 
 
 def ivf_topk_batch(
@@ -953,59 +1029,67 @@ def ivf_topk_batch(
     exclude_self: bool = False,
 ) -> DataFrame:
     """Serve cosine top-k for a TABLE of queries from a
-    :func:`write_ivf_index` layout — the realistic eval/retrieval
-    workload (:func:`ivf_topk_indexed` is its single-vector sibling
-    for point lookups).
+    :func:`write_ivf_index` layout — the broadcast regime of IVF
+    serving, for eval-sized query tables (:func:`ivf_topk_indexed` is
+    its single-vector sibling for point lookups, :func:`ivf_knn_join`
+    the cell-join regime for corpus-scale ones).
 
-    Shape at scale: probe cells are assigned ENGINE-side
-    (:func:`ivf_assign` over the query table — no per-query driver
-    round-trips), the UNION of all probe cells is collected driver-side
-    (bounded by n_cells, metadata-sized — the same probe-selection
-    collect as the single-query path) and drives ONE partition-pruned
-    corpus scan shared by every query; the (query id, probe cell,
-    query vector) side is then broadcast into the pruned corpus, so
-    each corpus row is scored only against the queries probing ITS
-    cell, and a per-query top-k window finishes.  The broadcast
-    presumes an eval-sized query set (thousands); a corpus-scale query
-    table would co-partition both sides by cell id instead of
-    broadcasting — a different operator (a cell-bucketed join), not a
-    bigger broadcast.
+    Shape at scale: the query side is collected (a broadcast routes it
+    through the driver anyway) and each query's probe cells come from
+    the one driver-side probe rule (:func:`_probe_cells`), so the
+    ``(query id, probe cell, query vector)`` side is a local relation
+    with the query table's own column types.  The UNION of all probe
+    cells drives ONE partition-pruned corpus scan shared by every
+    query; the query side is broadcast into it, so each corpus row is
+    scored only against the queries probing ITS cell, and a per-query
+    top-k window (:func:`_topk`) finishes.  A corpus-scale query table
+    belongs to :func:`ivf_knn_join` (co-partitioned by cell id), not
+    to a bigger broadcast.
 
     Consistency contract (pinned in tests): per-query results are
     bit-identical to :func:`ivf_topk_indexed` run one query at a time
-    with the same (k, nprobe) — both sides rank probe cells by
-    (max cosine, then smallest cid) and results by (cosine desc, then
-    smallest id), and both compute the same sequential double fold
-    over the same array order.  ``exclude_self`` drops the corpus row
-    whose id equals the query id (queries drawn from the corpus).
+    and to :func:`ivf_knn_join` with the same (k, nprobe) — all rank
+    probe cells by (max cosine, then smallest cid) and results by
+    (cosine desc, then smallest id), and all compute the same
+    sequential double fold over the same array order.  A NULL or
+    wrong-dimension query vector probes the smallest cids and ranks
+    its candidates by id, all cosines NULL.  ``exclude_self`` drops
+    the corpus row whose id equals the query id (queries drawn from
+    the corpus).
 
     Returns (query_id_col, id_col, cosine), k rows per query, ordered
     within each query by (cosine desc, id).
     """
-    probes = ivf_assign(
-        queries,
-        centroids,
-        query_id_col,
-        query_vec_col,
-        nprobe=nprobe,
-    )
-    cells = sorted(
-        r[0] for r in probes.select("cid").distinct().collect()
-    )
-    # Scoring is ONE cosine_arrow batch op per Arrow batch of candidate
-    # pairs — the same _fold as every other serving
-    # operator, which keeps the indexed/batch/knn_join bit-identity
-    # contract.
+    from pyspark.sql import types as T
+
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
         resolve_data_root,
     )
 
+    qframe = queries.select(query_id_col, query_vec_col)
+    rows = qframe.collect()
+    probes = _probe_cells(
+        _centroid_list(centroids), [r[1] for r in rows], nprobe
+    )
+    qside = spark.createDataFrame(  # a pandas frame: a LocalTableScan
+        pd.DataFrame(
+            [(r[0], c, r[1]) for r, cells in zip(rows, probes) for c in cells],
+            columns=[query_id_col, "cid", query_vec_col],
+        ),
+        T.StructType(
+            [
+                qframe.schema[query_id_col],
+                T.StructField("cid", T.LongType()),
+                qframe.schema[query_vec_col],
+            ]
+        ),
+    )
+    cells = sorted({c for cells in probes for c in cells})
     corpus = spark.read.parquet(resolve_data_root(spark, path)).where(
         F.col("cid").isin(cells)
     )
-    qside = probes.join(
-        queries.select(query_id_col, query_vec_col), query_id_col
-    )
+    # Scoring is ONE cosine_arrow batch op per Arrow batch of candidate
+    # pairs — the same _fold as every other serving operator.
     scored = corpus.join(F.broadcast(qside), "cid").select(
         F.col(query_id_col),
         F.col(id_col),
@@ -1013,17 +1097,8 @@ def ivf_topk_batch(
     )
     if exclude_self:
         scored = scored.where(F.col(id_col) != F.col(query_id_col))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= F.lit(int(k)))
-        .drop("_rn")
-        .orderBy(query_id_col, F.col("cosine").desc(), id_col)
-    )
+    order = [F.col("cosine").desc(), F.col(id_col)]
+    return _topk(scored, order, k, query_id_col).orderBy(query_id_col, *order)
 
 
 def semantic_decontaminate(
@@ -1098,14 +1173,15 @@ def ivf_knn_join(
     query_vec_col: str = "qvec",
     exclude_self: bool = False,
 ) -> DataFrame:
-    """Cosine top-k for a CORPUS-SCALE query table — the cell-bucketed
-    join the :func:`ivf_topk_batch` docstring prescribes when the query
-    side outgrows a broadcast (e.g. joining two embedding corpora, or
-    serving a full eval suite against a training corpus).
+    """Cosine top-k for a CORPUS-SCALE query table — the cell-join
+    regime of IVF serving, which the :func:`ivf_topk_batch` docstring
+    prescribes when the query side outgrows a broadcast (e.g. joining
+    two embedding corpora, or serving a full eval suite against a
+    training corpus); :func:`ivf_topk` is its one-row instance.
 
-    Shape at scale: both sides take ONE narrow assignment pass against
-    the broadcast centroid table (corpus -> its primary cell, queries ->
-    their ``nprobe`` nearest cells), then meet in a SHUFFLE equi-join
+    Shape at scale: both sides take ONE narrow assignment pass by the
+    engine-side probe rule (:func:`_probe_col`: corpus -> its primary
+    cell, queries -> their ``nprobe`` nearest cells), then meet in a SHUFFLE equi-join
     keyed on cell id — each side exchanges once on ``cid``, scoring is
     confined within cells (the IVF bound: candidate volume is
     sum over cells of |queries probing c| x |corpus in c|, never
@@ -1137,12 +1213,9 @@ def ivf_knn_join(
     # by selection: every global top-k row is in its cell's local top-k,
     # ranked in the same order (cosine desc NULLS LAST, id) from the
     # same bit-identical cosines as the batch and indexed paths.
-    from pyspark.sql import Window, types as T
+    from pyspark.sql import types as T
 
-    cents = [
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in centroids.select("cid", "cvec").collect()
-    ]
+    cents = _centroid_list(centroids)
     spark = corpus.sparkSession
     if not cents:
         # no cells -> no candidates; same empty (qid, id, cosine) frame
@@ -1156,28 +1229,15 @@ def ivf_knn_join(
     cside = corpus.select(
         F.col(id_col),
         F.col(vec_col),
-        F.element_at(
-            probe_cids_arrow(
-                F.col(vec_col),
-                cents,
-                1,
-                spark=spark,
-                via_broadcast=len(cents) > 256,
-            ),
-            1,
-        ).alias("cid"),
+        F.element_at(_probe_col(F.col(vec_col), cents, 1, spark), 1).alias(
+            "cid"
+        ),
     )
     qside = queries.select(
         F.col(query_id_col),
         F.col(query_vec_col),
         F.explode(
-            probe_cids_arrow(
-                F.col(query_vec_col),
-                cents,
-                int(nprobe),
-                spark=spark,
-                via_broadcast=len(cents) > 256,
-            )
+            _probe_col(F.col(query_vec_col), cents, nprobe, spark)
         ).alias("cid"),
     )
     out_schema = T.StructType(
@@ -1204,15 +1264,8 @@ def ivf_knn_join(
             schema=out_schema,
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
-    )
-    return (
-        percell.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= F.lit(int(k)))
-        .drop("_rn")
-        .orderBy(query_id_col, F.col("cosine").desc(), id_col)
-    )
+    order = [F.col("cosine").desc(), F.col(id_col)]
+    return _topk(percell, order, k, query_id_col).orderBy(query_id_col, *order)
 
 
 def rrf_fuse(
@@ -1236,36 +1289,10 @@ def rrf_fuse(
     full-outer joins on the id touch ≤ Σ k_i rows; the fused sum is a
     fixed left-to-right fold over explicit coalesces (reproduce the
     same list order in any oracle).  Returns the top-``k`` rows
-    ``(id_col, rrf)`` by (fused score desc, id)."""
-    if not results:
-        raise ValueError("rrf_fuse: results must be non-empty")
-    from pyspark.sql import Window
-
-    fused = None
-    rank_cols = []
-    for i, (r, score_col) in enumerate(results):
-        w = Window.orderBy(F.col(score_col).desc(), F.col(id_col))
-        ranked = r.select(
-            id_col,
-            (
-                F.lit(1.0)
-                / (F.lit(int(k_rrf)) + F.row_number().over(w))
-            ).alias(f"_rrf{i}"),
-        )
-        rank_cols.append(f"_rrf{i}")
-        fused = (
-            ranked
-            if fused is None
-            else fused.join(ranked, id_col, "full")
-        )
-    expr = F.coalesce(F.col(rank_cols[0]), F.lit(0.0))
-    for c in rank_cols[1:]:
-        expr = expr + F.coalesce(F.col(c), F.lit(0.0))
-    return (
-        fused.select(id_col, expr.alias("rrf"))
-        .orderBy(F.col("rrf").desc(), F.col(id_col))
-        .limit(int(k))
-    )
+    ``(id_col, rrf)`` by (fused score desc, id): :func:`rrf_fuse_grouped`
+    with no query column, whose one global window per list and final
+    TakeOrdered are this single-query form's shape."""
+    return rrf_fuse_grouped(results, k, k_rrf, id_col, query_id_col=None)
 
 
 def rrf_fuse_grouped(
@@ -1293,19 +1320,21 @@ def rrf_fuse_grouped(
     rank windows partition on the query id (no global single-partition
     window — the batched form stays parallel where the single-query
     form cannot), and the full-outer join chain keys on
-    (query, id)."""
+    (query, id).  ``query_id_col=None`` is :func:`rrf_fuse`: global
+    rank windows and a TakeOrdered top-``k``."""
     if not results:
-        raise ValueError("rrf_fuse_grouped: results must be non-empty")
+        raise ValueError("rrf_fuse: results must be non-empty")
     from pyspark.sql import Window
 
+    qcols = [] if query_id_col is None else [query_id_col]
     fused = None
     rank_cols = []
     for i, (r, score_col) in enumerate(results):
-        w = Window.partitionBy(query_id_col).orderBy(
+        w = Window.partitionBy(*qcols).orderBy(
             F.col(score_col).desc(), F.col(id_col)
         )
         ranked = r.select(
-            query_id_col,
+            *qcols,
             id_col,
             (
                 F.lit(1.0)
@@ -1316,19 +1345,14 @@ def rrf_fuse_grouped(
         fused = (
             ranked
             if fused is None
-            else fused.join(ranked, [query_id_col, id_col], "full")
+            else fused.join(ranked, [*qcols, id_col], "full")
         )
     expr = F.coalesce(F.col(rank_cols[0]), F.lit(0.0))
     for c in rank_cols[1:]:
         expr = expr + F.coalesce(F.col(c), F.lit(0.0))
-    scored = fused.select(query_id_col, id_col, expr.alias("rrf"))
-    wk = Window.partitionBy(query_id_col).orderBy(
-        F.col("rrf").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(wk))
-        .where(F.col("_rn") <= int(k))
-        .drop("_rn")
+    scored = fused.select(*qcols, id_col, expr.alias("rrf"))
+    return _topk(
+        scored, [F.col("rrf").desc(), F.col(id_col)], k, query_id_col
     )
 
 
@@ -1594,17 +1618,14 @@ def knn_join(
     (``id_col``, neighbor_id, cosine, rank) with rank 1..k, cosine-desc,
     neighbor id as the deterministic tie-break.
     """
-    from pyspark.sql import Window
-
     scored = _band_bucket_apply(
         df, dim, n_bands, bits_per_band, seed, id_col, vec_col,
         _band_knn_kernel(k, id_col, vec_col),
         ("_qid", "_nid"),
     )
-    w = Window.partitionBy("_qid").orderBy(F.col("cosine").desc(), F.col("_nid"))
+    order = [F.col("cosine").desc(), F.col("_nid")]
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        _topk(scored, order, k, "_qid", rank_col="rank")
         .select(
             F.col("_qid").alias(id_col),
             F.col("_nid").alias("neighbor_id"),
@@ -1629,16 +1650,15 @@ def ann_topk_sign_lsh(
     q = bucketed.where(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("_query_vec"), F.col("bucket").alias("_qb")
     )
-    return (
+    scored = (
         bucketed.crossJoin(F.broadcast(q))
         .where((F.col("bucket") == F.col("_qb")) & (F.col(id_col) != query_id))
         .select(
             id_col,
             cosine_arrow(F.col(vec_col), F.col("_query_vec")).alias("cosine"),
         )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
     )
+    return _topk(scored, [F.col("cosine").desc(), F.col(id_col)], k)
 
 
 def kmeans_centroids(
@@ -1648,7 +1668,7 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    literal_centroid_limit: int = 256,
+    literal_centroid_limit: int = _CLOSURE_CENTROIDS,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means over an embedding column — the
     centroid trainer SemDeDup/IVF were stubbing (first-n-by-id).
@@ -1706,6 +1726,9 @@ def kmeans_centroids(
         (cid, [float(x) for x in r[vec_col]]) for cid, r in enumerate(seeds)
     ]
     counts = {cid: 0 for cid, _ in centroids}
+    # the cell count never changes across iterations, nor does the
+    # closure-vs-broadcast choice of the assignment UDF
+    via_broadcast = len(centroids) > literal_centroid_limit
     # The update aggregate's dim+1 Column objects are identical every
     # iteration — build them ONCE (r18): each F.sum(...) chain is ~6
     # py4j round-trips, so rebuilding 64 of them per iteration was
@@ -1736,7 +1759,7 @@ def kmeans_centroids(
                 F.col(vec_col),
                 centroids,
                 spark=df.sparkSession,
-                via_broadcast=len(centroids) > literal_centroid_limit,
+                via_broadcast=via_broadcast,
             ).alias("cid"),
             vec_col,
         )
@@ -1812,11 +1835,7 @@ def semantic_dedup(
         # fast path: deterministic stub (first n_cells vectors by id);
         # pass centroids=kmeans_centroids(df, ...) for trained cells —
         # same (cid, cvec) contract, identical downstream plan.
-        centroids = corpus.where(F.col(id_col) < n_cells).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-        )
-    else:
-        centroids = centroids.select("cid", "cvec")
+        centroids = _stub_centroids(corpus, n_cells, id_col, vec_col)
     assigned = ivf_assign(
         corpus, centroids, id_col, vec_col,
         nprobe=nprobe, rank_col="_cell_rank",

@@ -486,7 +486,7 @@ def _corpus_stats(d: DataFrame, *extra: Column) -> DataFrame:
 
 def _okapi_topk(
     postings: DataFrame,
-    stats: DataFrame,
+    stats: tuple[int, float | None],
     k: int,
     k1: float,
     b: float,
@@ -499,8 +499,9 @@ def _okapi_topk(
     """THE Okapi BM25 scorer behind all four serving forms.
 
     ``postings`` carry ``(id_col, term, tf, dl)`` already pruned to
-    the query's terms; ``stats`` is the 1-row ``(n_docs, avgdl)``
-    corpus frame, broadcast as a cross join (the q3 scalar pattern).
+    the query's terms; ``stats`` is the corpus ``(n_docs, avgdl)`` as
+    two Python numbers, which enter the plan as literals (no stats
+    relation to scan or broadcast).
     df is a window over the pruned postings partitioned ``by`` the
     term (all postings of a term survive the prune, so the window sees
     every one), taken BEFORE any query join — joining first would fan
@@ -509,10 +510,13 @@ def _okapi_topk(
     ``by``...) join in per-query terms.  Each posting scores
     ``idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))`` times
     ``tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))``, summed per
-    (query, doc).  Top-``k`` is a TakeOrdered (orderBy+limit) for a
-    single query, a ``row_number`` window per ``query_id_col``
-    otherwise; ties break on the doc id either way."""
+    (query, doc).  Top-``k`` is the serving top-k rule
+    (``similarity._topk``): a TakeOrdered for a single query, a
+    ``row_number`` window per ``query_id_col`` otherwise; ties break on
+    the doc id either way."""
     from pyspark.sql import Window
+
+    from airflow_etl_minio_to_postgres_spark.functions.similarity import _topk
 
     scored = postings.withColumn(
         "df", F.count(F.lit(1)).over(Window.partitionBy(*by))
@@ -521,17 +525,15 @@ def _okapi_topk(
         scored = scored.where(F.col("df") <= F.lit(int(max_df)))
     if pairs is not None:
         scored = scored.join(pairs, list(by))
-    scalars = stats.select(
-        F.col("n_docs").alias("_n_docs"), F.col("avgdl").alias("_avgdl")
-    )
+    n_docs, avgdl = stats
+    avgdl_lit = F.lit(None if avgdl is None else float(avgdl)).cast("double")
     keys = [id_col] if query_id_col is None else [query_id_col, id_col]
     scored = (
-        scored.crossJoin(F.broadcast(scalars))
-        .withColumn(
+        scored.withColumn(
             "_idf",
             F.log(
                 F.lit(1.0)
-                + (F.col("_n_docs") - F.col("df") + F.lit(0.5))
+                + (F.lit(int(n_docs)).cast("long") - F.col("df") + F.lit(0.5))
                 / (F.col("df") + F.lit(0.5))
             ),
         )
@@ -544,36 +546,29 @@ def _okapi_topk(
                 + F.lit(float(k1))
                 * (
                     F.lit(1.0 - float(b))
-                    + F.lit(float(b)) * F.col("dl") / F.col("_avgdl")
+                    + F.lit(float(b)) * F.col("dl") / avgdl_lit
                 )
             ),
         )
         .groupBy(*keys)
         .agg(F.sum(F.col("_idf") * F.col("_tfp")).alias("score"))
     )
-    order = (F.col("score").desc(), F.col(id_col))
-    if query_id_col is None:
-        return scored.orderBy(*order).limit(int(k))
-    w = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= int(k))
-        .drop("_rn")
+    return _topk(
+        scored, [F.col("score").desc(), F.col(id_col)], k, query_id_col
     )
 
 
 def _index_sidecar(
     spark: SparkSession, path: str
-) -> tuple[str, DataFrame, int]:
-    """The serves' one sidecar read: ``(data_root, stats, n_buckets)``
-    — the index's current generation (``resolve_data_root``), its
-    ``_stats`` row as a one-row LOCAL ``(n_docs, avgdl)`` frame and the
-    ``n_buckets`` it was written with (read, never guessed).  A
-    streamed ``_stats`` is its own committed root and is resolved too;
-    a batch-built flat one resolves to itself.  The frame is a VALUES
-    relation (the doubles rendered with ``repr``, which re-parses to
-    the same bits), so the scorer's plan carries the collected row
-    instead of scanning the sidecar a second time."""
+) -> tuple[str, tuple[int, float | None], int]:
+    """The serves' one sidecar read: ``(data_root, (n_docs, avgdl),
+    n_buckets)`` — the index's current generation
+    (``resolve_data_root``), its ``_stats`` row as the scorer's two
+    numbers and the ``n_buckets`` it was written with (read, never
+    guessed).  A streamed ``_stats`` is its own committed root and is
+    resolved too; a batch-built flat one resolves to itself.  The
+    scorer takes the collected numbers as literals, so no serve plan
+    scans or broadcasts the sidecar."""
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
         _join,
         resolve_data_root,
@@ -583,12 +578,7 @@ def _index_sidecar(
     row = spark.read.parquet(
         resolve_data_root(spark, _join(path, "_stats"))
     ).collect()[0]
-    avgdl = "NULL" if row["avgdl"] is None else f"'{float(row['avgdl'])!r}'"
-    stats = spark.sql(
-        f"SELECT * FROM VALUES (CAST({int(row['n_docs'])} AS BIGINT), "
-        f"CAST({avgdl} AS DOUBLE)) AS t(n_docs, avgdl)"
-    )
-    return path, stats, int(row["n_buckets"])
+    return path, (row["n_docs"], row["avgdl"]), int(row["n_buckets"])
 
 
 def _scan_terms(
@@ -642,7 +632,7 @@ def bm25_topk(
     scan+filter and everything that shuffles is (matching doc, term)
     sized; df-per-term rides a window over those aggregated rows
     (the tfidf precedent, no self-join); N and avgdl are ONE map-side
-    corpus aggregate broadcast as a 1-row cross join.  Empty-string
+    corpus aggregate, collected and passed as literals.  Empty-string
     tokens are dropped exactly as the index drops them.  Top-k is a
     TakeOrdered (orderBy+limit), ties broken on the doc id.  Float
     posture matches ``tfidf_top_terms``/``unigram_logprob``: per-term
@@ -652,7 +642,10 @@ def bm25_topk(
         raise ValueError("bm25_topk: query_terms must be non-empty")
     terms = sorted({t.lower() for t in query_terms})
     d, postings = _postings(df, text_col, id_col, terms)
-    return _okapi_topk(postings, _corpus_stats(d), k, k1, b, id_col)
+    srow = _corpus_stats(d).first()
+    return _okapi_topk(
+        postings, (srow["n_docs"], srow["avgdl"]), k, k1, b, id_col
+    )
 
 
 def write_inverted_index(

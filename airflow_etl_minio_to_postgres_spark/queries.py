@@ -4215,8 +4215,8 @@ def docs_hybrid_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_ivf_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched-query IVF serving (functions/similarity.py
     ivf_topk_batch): THREE query vectors served from the SAME
-    materialized index in one plan — probe cells assigned engine-side
-    over the query table (nprobe=2), the union of probe cells driving
+    materialized index in one plan — probe cells ranked driver-side
+    over the collected query table (nprobe=2), the union of probe cells driving
     ONE partition-pruned corpus scan, the (qid, cid, qvec) side
     broadcast into it, and a per-query top-k window.  The realistic
     eval/retrieval workload the single-vector ivf_topk_indexed entry

@@ -1127,7 +1127,9 @@ def commit_parquet_generation(
     would corrupt the table); a bad name is refused before any write.
 
     SCHEMA GUARD: a recommit whose frame DROPS columns the current
-    generation carries breaks every downstream reader silently (the
+    generation carries (as its manifest records them; a manifest
+    written before columns were recorded falls back to the
+    generation's own footers) breaks every downstream reader silently (the
     resolving view narrows, selects fail far from the cause) — the
     usual cause is a compaction bug, not intent, so the commit
     REFUSES before writing anything unless ``allow_column_drop=True``
@@ -1184,27 +1186,35 @@ def commit_parquet_generation(
         )
     got = latest_manifest(spark, root)
     data_root = root if got is None else _join(root, str(got[1]["generation"]))
-    if got is not None:
-        try:
-            prev_cols = set(spark.read.parquet(data_root).columns)
-        except AnalysisException:
-            # the EXPECTED degradation only: predecessor prefix absent
-            # or schema-less (GC'd out from under a stale manifest, a
-            # crash between write and publish).  Anything else — a
-            # storage hiccup, a permission error — PROPAGATES: a
-            # blanket except here would silently disable the guard and
-            # admit the exact column-dropping recommit it exists to
-            # refuse (r15 advisor finding).
-            prev_cols = set()
-        dropped = sorted(prev_cols - set(df.columns))
-        if dropped and not allow_column_drop:
-            raise ValueError(
-                f"commit_parquet_generation: frame drops column(s) "
-                f"{dropped} that the current generation of {root!r} "
-                "carries — every reader of the resolving view would "
-                "break; pass allow_column_drop=True if this migration "
-                "is deliberate"
-            )
+    prev_cols: set = set()
+    # a predecessor prefix that is gone (GC'd out from under a stale
+    # manifest) has nothing left to guard
+    if got is not None and _exists(spark, data_root):
+        if "columns" in got[1]:
+            # recorded at publish: no footer read, no job
+            prev_cols = set(got[1]["columns"])
+        else:
+            # a manifest published before columns were recorded: the
+            # generation's own schema is the only record
+            try:
+                prev_cols = set(spark.read.parquet(data_root).columns)
+            except AnalysisException:
+                # the EXPECTED degradation only: a schema-less prefix
+                # (a crash between write and publish).  Anything else —
+                # a storage hiccup, a permission error — PROPAGATES: a
+                # blanket except here would silently disable the guard
+                # and admit the exact column-dropping recommit it
+                # exists to refuse (r15 advisor finding).
+                pass
+    dropped = sorted(prev_cols - set(df.columns))
+    if dropped and not allow_column_drop:
+        raise ValueError(
+            f"commit_parquet_generation: frame drops column(s) "
+            f"{dropped} that the current generation of {root!r} "
+            "carries — every reader of the resolving view would "
+            "break; pass allow_column_drop=True if this migration "
+            "is deliberate"
+        )
     seq = next_seq(spark, root)
     gen = f"_gen-{seq:06d}"
     writer = df.write.mode("overwrite")
@@ -1285,7 +1295,7 @@ def commit_parquet_generation(
             except Exception:
                 pass
             raise
-    publish_generation(spark, root, seq, gen)
+    publish_generation(spark, root, seq, gen, columns=df.columns)
     gc_generations(
         spark,
         root,
@@ -1440,10 +1450,16 @@ def next_seq(spark: SparkSession, root: str) -> int:
 
 
 def publish_generation(
-    spark: SparkSession, root: str, seq: int, generation: str
+    spark: SparkSession,
+    root: str,
+    seq: int,
+    generation: str,
+    columns: list[str] | None = None,
 ) -> None:
     """Step 2 — the commit point: make ``_manifests/manifest-<seq>.json``
-    visible naming ``generation``.
+    visible naming ``generation`` (and, when given, the ``columns`` it
+    was committed with — the next commit's schema guard reads them
+    instead of the generation's footers).
 
     On object stores a single PUT is atomic, but on file:// and HDFS
     ``fs.create`` makes the path VISIBLE before any bytes are written —
@@ -1469,7 +1485,10 @@ def publish_generation(
             f"manifest seq {seq} already published at {final} — "
             "a second maintainer committed concurrently"
         )
-    _write_text(spark, tmp, json.dumps({"generation": generation}))
+    payload = {"generation": generation}
+    if columns is not None:
+        payload["columns"] = list(columns)
+    _write_text(spark, tmp, json.dumps(payload))
     if not fs.rename(tpath, fpath):
         raise FileExistsError(
             f"could not rename staged manifest into {final} — "

@@ -134,6 +134,25 @@ def _commit_token(checkpoint_path: str) -> str:
     return format(zlib.crc32(checkpoint_path.encode("utf-8")), "08x")
 
 
+def _start_sink(raw_stream: DataFrame, checkpoint_path: str, process, **kw):
+    """Start ``raw_stream`` as an ``availableNow`` ``foreachBatch`` sink
+    checkpointed at ``checkpoint_path`` — the one starter of every
+    ``streaming_*`` sink.  Each micro-batch runs ``process(batch_df,
+    batch_id, token=<the checkpoint's commit token>, **kw)``.  Returns
+    the started StreamingQuery."""
+    token = _commit_token(checkpoint_path)
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        process(batch_df, batch_id, token=token, **kw)
+
+    return (
+        raw_stream.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def _write_batch_commit(
     df: DataFrame,
     path: str,
@@ -460,16 +479,8 @@ def incremental_silver(
     ``_commit_id`` column doubles as per-batch lineage on read; select
     the data columns to ignore it.  Returns the started StreamingQuery.
     """
-    token = _commit_token(checkpoint_path)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _silver_process_batch(batch_df, batch_id, out_path, token)
-
-    return (
-        raw_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _start_sink(
+        raw_stream, checkpoint_path, _silver_process_batch, out_path=out_path
     )
 
 
@@ -571,16 +582,8 @@ def streaming_rollup_upsert(
     the rollup (``manifest.read_resolved``).  Returns the started
     StreamingQuery.
     """
-    token = _commit_token(checkpoint_path)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _rollup_process_batch(batch_df, batch_id, out_path, token)
-
-    return (
-        raw_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _start_sink(
+        raw_stream, checkpoint_path, _rollup_process_batch, out_path=out_path
     )
 
 
@@ -722,30 +725,20 @@ def streaming_near_dup_dedup(
     batch-vs-batch and batch-vs-pruned-store (never all-pairs), exact
     Jaccard verify against stored shingle sets.  Returns the started
     StreamingQuery."""
-    token = _commit_token(checkpoint_path)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _near_dup_process_batch(
-            batch_df,
-            batch_id,
-            out_path=out_path,
-            store_path=store_path,
-            token=token,
-            text_col=text_col,
+    return _start_sink(
+        raw_stream,
+        checkpoint_path,
+        _near_dup_process_batch,
+        out_path=out_path,
+        store_path=store_path,
+        text_col=text_col,
             id_col=id_col,
             threshold=threshold,
             num_hashes=num_hashes,
             num_bands=num_bands,
             shingle_k=shingle_k,
-            store_partitions=store_partitions,
-            max_bucket_size=max_bucket_size,
-        )
-
-    return (
-        raw_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+        store_partitions=store_partitions,
+        max_bucket_size=max_bucket_size,
     )
 
 
@@ -1129,19 +1122,14 @@ def streaming_ivf_index_upsert(
     file per batch; fold with ``sources/files.py compact_parquet`` per
     cell directory (or rebuild) between cleanly-terminated runs.
     Returns the started StreamingQuery."""
-    token = _commit_token(checkpoint_path)
-    cents = centroids.select("cid", "cvec")
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _ivf_index_process_batch(
-            batch_df, batch_id, index_path, token, cents, id_col, vec_col
-        )
-
-    return (
-        raw_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _start_sink(
+        raw_stream,
+        checkpoint_path,
+        _ivf_index_process_batch,
+        index_path=index_path,
+        centroids=centroids.select("cid", "cvec"),
+        id_col=id_col,
+        vec_col=vec_col,
     )
 
 
@@ -1215,24 +1203,14 @@ def streaming_inverted_index_upsert(
     upstream (exact_dedup / the near-dup screen); rebuild
     (``write_inverted_index``) is the documented re-base operation.
     Returns the started StreamingQuery."""
-    token = _commit_token(checkpoint_path)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _inv_index_process_batch(
-            batch_df,
-            batch_id,
-            index_path,
-            token,
-            text_col,
-            id_col,
-            n_buckets,
-        )
-
-    return (
-        raw_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _start_sink(
+        raw_stream,
+        checkpoint_path,
+        _inv_index_process_batch,
+        index_path=index_path,
+        text_col=text_col,
+        id_col=id_col,
+        n_buckets=n_buckets,
     )
 
 
@@ -1642,7 +1620,6 @@ def streaming_drift_monitor(
     # the _ref sidecar and the count log live under the current
     # generation; a never-compacted monitor resolves to the root
     out_local = resolve_data_root(ref.sparkSession, out_path)
-    token = _commit_token(checkpoint_path)
     r = ref.select(*gcols, F.col(value_col).alias("_v")).where(
         F.col("_v").isNotNull()
     )
@@ -1677,17 +1654,13 @@ def streaming_drift_monitor(
             )
     else:
         sidecar.coalesce(1).write.mode("overwrite").parquet(ref_path)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        _drift_process_batch(
-            batch_df, batch_id, out_local, token, value_col, by=gcols
-        )
-
-    return (
-        raw_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _start_sink(
+        raw_stream,
+        checkpoint_path,
+        _drift_process_batch,
+        out_path=out_local,
+        value_col=value_col,
+        by=gcols,
     )
 
 

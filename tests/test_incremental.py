@@ -3837,6 +3837,40 @@ def test_commit_schema_guard_refuses_column_drop(spark, tmp_path):
     assert set(mf.read_resolved(spark, root).columns) == {"id"}
 
 
+def test_commit_schema_guard_reads_manifest_columns(spark, tmp_path):
+    """The guard takes the current generation's columns from its
+    manifest (recorded at publish, no footer read), and a manifest
+    written before columns were recorded falls back to the
+    generation's own schema: a column-dropping recommit is refused
+    either way."""
+    import json
+    import os
+
+    import pytest as _pytest
+
+    from pyspark.sql import functions as F
+
+    from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
+
+    df = spark.range(4).select(F.col("id"), F.lit("x").alias("v"))
+    for legacy in (False, True):
+        root = str(tmp_path / f"t{int(legacy)}")
+        if legacy:
+            # the manifest shape before columns were recorded
+            df.write.parquet(os.path.join(root, "_gen-000001"))
+            mf.publish_generation(spark, root, 1, "_gen-000001")
+        else:
+            mf.commit_parquet_generation(spark, df, root)
+        with open(
+            os.path.join(root, mf.MANIFEST_DIR, "manifest-000001.json")
+        ) as f:
+            payload = json.load(f)
+        assert payload.get("columns") == (None if legacy else ["id", "v"])
+        with _pytest.raises(ValueError, match="drops column.*'v'"):
+            mf.commit_parquet_generation(spark, df.select("id"), root)
+        assert mf.next_seq(spark, root) == 2
+
+
 def test_recluster_zorder_committed_with_bloom(spark, tmp_path):
     """recluster_zorder_committed(bloom_cols=...) pairs the layout
     pass with BOTH skipping sidecars in one atomic commit: range

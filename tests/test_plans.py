@@ -998,9 +998,9 @@ def test_zone_map_scan_reads_only_surviving_files(spark, tmp_path):
 
 def test_bm25_index_serves_scan_stats_once(spark, tmp_path):
     """Each index serve reads the _stats sidecar once (the collect that
-    yields n_buckets) and hands that row to the scorer as a one-row
-    local relation: the query plan scans the postings only, never the
-    sidecar, and the scores stay bit-identical to the direct path."""
+    yields n_buckets) and hands (n_docs, avgdl) to the scorer as
+    literals: the query plan scans the postings only, carries no stats
+    relation, and the scores stay bit-identical to the direct path."""
     from airflow_etl_minio_to_postgres_spark.functions.text import (
         bm25_knn_join,
         bm25_topk,
@@ -1031,7 +1031,7 @@ def test_bm25_index_serves_scan_stats_once(spark, tmp_path):
         plan = _physical_plan(df)
         assert "_stats" not in plan, plan
         assert plan.count("FileScan parquet") == 1, plan  # the postings
-        assert "LocalTableScan" in plan, plan
+        assert "n_docs" not in plan and "avgdl" not in plan, plan
     direct = bm25_topk(docs, terms, k=5)
     assert [(r.doc_id, r.score.hex()) for r in indexed.collect()] == [
         (r.doc_id, r.score.hex()) for r in direct.collect()

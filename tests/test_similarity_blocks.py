@@ -180,3 +180,69 @@ def test_int_ids_keep_declared_types_with_empty_bucket(spark):
         cos = [(-_fold_model(list(qv), list(cv)), i) for i, cv in enumerate(vecs)]
         want += [(q, i) for _, i in sorted(cos)[:3]]
     assert sorted(tuple(r)[:2] for r in got.collect()) == sorted(want)
+
+
+def _hexed(df):
+    """Rows with every float as its hex string: an exact comparison."""
+    return [
+        tuple(v.hex() if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    ]
+
+
+def test_single_query_forms_equal_their_batch_forms(spark, tmp_path):
+    """Over a corpus with NULL, zero-norm and wrong-dimension vectors:
+    ivf_topk equals ivf_topk_indexed over a write_ivf_index of the
+    same corpus (every cell probed, so every dirty row is a candidate);
+    ivf_topk_batch equals ivf_knn_join with NULL, zero-norm and
+    wrong-dimension query vectors among the queries; rrf_fuse equals
+    rrf_fuse_grouped on one query.  Floats are compared as hex."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(5)
+    rows = [
+        (i, [round(float(x), 4) for x in rng.standard_normal(4)])
+        for i in range(24)
+    ]
+    rows[9] = (9, None)
+    rows[13] = (13, [0.0] * 4)
+    rows[17] = (17, [1.0, 2.0, 3.0])
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = e.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
+    )
+    path = str(tmp_path / "index")
+    sim.write_ivf_index(e, cents, path)
+
+    direct = sim.ivf_topk(e, 0, k=30, centroids=cents, nprobe=4)
+    served = sim.ivf_topk_indexed(
+        spark, path, cents, rows[0][1], k=30, nprobe=4, exclude_id=0
+    )
+    got = _hexed(direct)
+    assert got == _hexed(served)
+    assert [r[0] for r in got[-3:]] == [9, 13, 17]  # NULL cosines last
+
+    qs = e.where(F.col("vec_id").isin(0, 9, 13, 17, 21)).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    batch = sim.ivf_topk_batch(
+        spark, path, cents, qs, k=5, nprobe=2, exclude_self=True
+    )
+    joined = sim.ivf_knn_join(qs, e, cents, k=5, nprobe=2, exclude_self=True)
+    got = _hexed(batch)
+    assert got == _hexed(joined)
+    assert {r[0] for r in got} == {0, 9, 13, 17, 21}
+
+    lists = [
+        spark.createDataFrame(
+            [(1, 0.5), (2, 0.5), (3, None), (4, 0.9)], "doc_id long, score double"
+        ),
+        spark.createDataFrame(
+            [(2, 0.1), (4, 0.1), (5, 0.7)], "doc_id long, score double"
+        ),
+    ]
+    fused = sim.rrf_fuse([(r, "score") for r in lists], k=4)
+    grouped = sim.rrf_fuse_grouped(
+        [(r.withColumn("qid", F.lit(7)), "score") for r in lists], k=4
+    ).orderBy(F.col("rrf").desc(), "doc_id")
+    assert _hexed(fused) == _hexed(grouped.select("doc_id", "rrf"))
