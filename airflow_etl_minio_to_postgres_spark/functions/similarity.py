@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airflow_etl_minio_to_postgres_spark.session import local_relation
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -1071,11 +1073,9 @@ def ivf_topk_batch(
     probes = _probe_cells(
         _centroid_list(centroids), [r[1] for r in rows], nprobe
     )
-    qside = spark.createDataFrame(  # a pandas frame: a LocalTableScan
-        pd.DataFrame(
-            [(r[0], c, r[1]) for r, cells in zip(rows, probes) for c in cells],
-            columns=[query_id_col, "cid", query_vec_col],
-        ),
+    qside = local_relation(  # a LocalTableScan: broadcast with no job
+        spark,
+        [(r[0], c, r[1]) for r, cells in zip(rows, probes) for c in cells],
         T.StructType(
             [
                 qframe.schema[query_id_col],
@@ -1776,7 +1776,8 @@ def kmeans_centroids(
         counts = {cid: 0 for cid, _ in centroids}
         counts.update({int(r["cid"]): int(r["_n"]) for r in stats})
         centroids = [(cid, new.get(cid, cvec)) for cid, cvec in centroids]
-    return df.sparkSession.createDataFrame(
+    return local_relation(
+        df.sparkSession,
         [(cid, cvec, counts[cid]) for cid, cvec in centroids],
         "cid long, cvec array<double>, n_members long",
     )

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airflow_etl_minio_to_postgres_spark.session import local_relation
+
 # BPE-ish token pattern: runs of alphanumerics OR single non-space symbols —
 # the same regex works in Java (Spark) and RE2 (DuckDB).
 TOKEN_PATTERN = "[a-z0-9]+|[^a-z0-9\\s]"
@@ -53,19 +55,12 @@ def word_count_expr(text: Column) -> Column:
 
 def stopword_ratio_expr(text: Column, lang: str = "en") -> Column:
     """Fraction of words found in the ``lang`` stopword set (double)."""
-    stoplist = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    words = words_expr(text)
-    hits = F.size(F.filter(words, lambda w: F.array_contains(stoplist, w)))
-    return hits.cast("double") / F.size(words).cast("double")
+    return _stop_ratio_of(words_expr(text), lang)
 
 
 def punct_ratio_expr(text: Column) -> Column:
     """Fraction of characters that are not ``[a-z0-9 ]`` after lowering."""
-    low = F.lower(text)
-    stripped = F.regexp_replace(low, "[^a-z0-9 ]", "")
-    return (F.length(low) - F.length(stripped)).cast("double") / F.length(
-        low
-    ).cast("double")
+    return _punct_ratio_of(F.lower(text))
 
 
 def quality_score_expr(text: Column) -> Column:
@@ -115,7 +110,7 @@ def _lang_of(en: Column, de: Column, fr: Column) -> Column:
 
 def _stop_ratio_of(ws: Column, lang: str) -> Column:
     """:func:`stopword_ratio_expr` over an ALREADY-BOUND words array —
-    identical operands and operations, so identical doubles."""
+    the one stopword-ratio rule, so identical doubles."""
     stoplist = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     hits = F.size(F.filter(ws, lambda w: F.array_contains(stoplist, w)))
     return hits.cast("double") / F.size(ws).cast("double")
@@ -416,19 +411,14 @@ def tfidf_top_terms(
     return ranked.where(F.col("_rn") <= k).select(id_col, "word", "score")
 
 
-def _term_bucket_sql(col: str, n_buckets: int) -> str:
-    """THE inverted index's term-bucket rule as SQL text over ``col``:
-    ``pmod(xxhash64(term), n_buckets)``.  Both writers partition by it,
-    the serves probe with it and ``fsck_index`` re-checks a sample by
-    it — one string, the engine's own hash, so a posting's bucket and
-    a query term's probe agree by construction."""
-    return f"pmod(xxhash64({col}), {int(n_buckets)})"
-
-
-def _term_bucket(n_buckets: int) -> Column:
-    """:func:`_term_bucket_sql` over the ``term`` column, as the int
-    ``term_bucket`` partition value."""
-    return F.expr(_term_bucket_sql("term", n_buckets)).cast("int")
+def _term_bucket(n_buckets: int, col: str = "term") -> Column:
+    """THE inverted index's term-bucket rule over ``col``, as the int
+    ``term_bucket`` partition value: ``pmod(xxhash64(term),
+    n_buckets)``.  Both writers partition by it, the serves probe with
+    it and ``fsck_index`` re-checks a sample by it — one builder, the
+    engine's own hash, so a posting's bucket and a query term's probe
+    agree by construction."""
+    return F.pmod(F.xxhash64(F.col(col)), F.lit(int(n_buckets))).cast("int")
 
 
 def _postings(
@@ -586,15 +576,16 @@ def _scan_terms(
 ) -> DataFrame:
     """Postings of ``terms`` read through a partition-pruned scan: the
     terms' buckets come from ONE driver-local probe of the term-bucket
-    rule (``manifest._probe_values`` — no job when the terms render as
-    SQL literals), and the scan carries ``term_bucket IN (...)``
-    (PartitionFilters) plus ``term IN (...)``."""
+    rule (``manifest._probe_values`` over :func:`_term_bucket` — no
+    job, whatever the terms hold), and the scan carries
+    ``term_bucket IN (...)`` (PartitionFilters) plus ``term IN
+    (...)``."""
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
         _probe_values,
     )
 
     rows = _probe_values(
-        spark, terms, "string", [_term_bucket_sql("v", n_buckets)]
+        spark, terms, "string", [_term_bucket(n_buckets, "v")]
     )
     buckets = sorted({int(r[0]) for r in rows})
     return (
@@ -695,7 +686,8 @@ def write_inverted_index(
             "postings (no non-empty tokens) — an empty index cannot "
             "be served; existing index left untouched"
         )
-    stats = df.sparkSession.createDataFrame(
+    stats = local_relation(
+        df.sparkSession,
         [(srow["n_docs"], srow["avgdl"], int(n_buckets))],
         "n_docs bigint, avgdl double, n_buckets int",
     )
@@ -724,8 +716,8 @@ def bm25_topk_indexed(
     buckets are computed with the ENGINE'S OWN hash over the terms
     (bounded by ``|terms|`` — the IVF probe-collect pattern, and the
     only way the probe agrees bit-for-bit with the writer's bucketing;
-    one driver-local SQL over a VALUES relation, so the probe schedules
-    no job), and the scan carries ``term_bucket IN (...)`` so Spark
+    one driver-local probe over a local relation, so it schedules no
+    job), and the scan carries ``term_bucket IN (...)`` so Spark
     prunes to exactly those partition directories (PartitionFilters,
     pinned in tests).  Scoring is :func:`bm25_topk`'s scorer — df as a
     window over the pruned postings (all postings for a term live in

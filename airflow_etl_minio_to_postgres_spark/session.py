@@ -9,6 +9,7 @@ that with one SparkSession whose defaults are chosen for cluster scale:
 * ``spark.sql.shuffle.partitions`` sized to the local core count here; on a
   real cluster AQE coalesces or the operator passes an explicit value.
 * Arrow enabled so any unavoidable pandas interchange is vectorized.
+* Driver-held rows enter a plan one way, :func:`local_relation`.
 * s3a settings are applied only when a MinIO/S3 endpoint is configured, so
   local-FS tests never need the object store (reference reads MinIO via
   S3Hook at ``dags/dag_etl_minio_to_postgres.py:32-49``).
@@ -20,7 +21,8 @@ import os
 import tempfile
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 @dataclass(frozen=True)
@@ -90,3 +92,32 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_relation(
+    spark: SparkSession, rows: list, schema: str | StructType | list[str]
+) -> DataFrame:
+    """Driver-held ``rows`` (tuples, positional) as a DataFrame — the
+    one way file inventories, probe keys, sidecar rows, centroids and
+    query sides enter a plan.  The rows travel as a pyarrow Table, so
+    the frame is a JVM ``LocalRelation``: it plans as a
+    ``LocalTableScan``, a collect or broadcast of it schedules no job,
+    a projection over it folds into the relation at planning time, and
+    no Python worker ever runs for it.
+    (A list-built ``createDataFrame`` plans as ``Scan ExistingRDD`` —
+    a job wherever it is consumed; a pandas-built one does the same
+    when the session's Arrow flag is off or the frame is empty.)
+
+    ``schema`` is a DDL string or ``StructType`` — each column is
+    inferred from its Python values, then cast to the declared type —
+    or a list of column names, which keeps the inferred types (the
+    probe rule: values enter in their own Python types and the caller
+    casts them to the column type in the engine)."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    names = schema.names if isinstance(schema, StructType) else list(schema)
+    cols = list(zip(*rows)) if rows else [() for _ in names]
+    table = pa.table([pa.array(list(c)) for c in cols], names=names)
+    return spark.createDataFrame(table, schema)

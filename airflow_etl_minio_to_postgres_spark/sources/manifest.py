@@ -55,6 +55,9 @@ import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
+
+from airflow_etl_minio_to_postgres_spark.session import local_relation
 
 MANIFEST_DIR = "_manifests"
 ZONE_MAP_DIR = "_zonemap"
@@ -204,15 +207,46 @@ def latest_manifest(
     return None
 
 
-def resolve_data_root(spark: SparkSession, root: str) -> str:
-    """Where an index's CURRENT data actually lives: the generation the
-    latest manifest names, or ``root`` itself when no manifest was ever
-    published (legacy layout — zero behavior change for indexes that
-    never ran a manifest-based maintenance op)."""
+def _current_generation(
+    spark: SparkSession, root: str
+) -> tuple[str, dict | None]:
+    """``(data_root, manifest payload)`` of ``root``'s current
+    generation: the generation the latest manifest names with that
+    manifest, or ``(root, None)`` when no manifest was ever published
+    (legacy layout — zero behavior change for indexes that never ran a
+    manifest-based maintenance op)."""
     got = latest_manifest(spark, root)
     if got is None:
-        return root
-    return _join(root, got[1]["generation"])
+        return root, None
+    return _join(root, str(got[1]["generation"])), got[1]
+
+
+def resolve_data_root(spark: SparkSession, root: str) -> str:
+    """Where an index's CURRENT data actually lives
+    (:func:`_current_generation`'s data root)."""
+    return _current_generation(spark, root)[0]
+
+
+def _committed_schema(
+    spark: SparkSession, data_root: str, payload: dict | None
+) -> StructType | None:
+    """The schema the current generation was committed with: the
+    types its manifest ``payload`` recorded at publish (no footer
+    read, no job), else — a legacy flat table, or a manifest published
+    before types were recorded — the generation's own footers.
+    ``None`` for a schema-less prefix (a crash between write and
+    publish).  The commit's drop-column guard and the streaming
+    rollup's type guard both read it."""
+    if payload is not None and "schema" in payload:
+        return StructType.fromJson(payload["schema"])
+    try:
+        return spark.read.parquet(data_root).schema
+    except AnalysisException:
+        # the EXPECTED degradation only: a schema-less prefix.
+        # Anything else — a storage hiccup, a permission error —
+        # PROPAGATES: a blanket except here would silently disable the
+        # guards and admit the exact recommit they exist to refuse.
+        return None
 
 
 def snapshots(spark: SparkSession, root: str) -> list[dict]:
@@ -491,21 +525,6 @@ def _file_col(gen_path: str):
     ).alias("file")
 
 
-def _files_relation(
-    spark: SparkSession, names: list[str], tail: str = "", cols: str = "file"
-):
-    """The data-file inventory ``names`` (non-empty — an empty VALUES
-    list is a parse error) as a SQL ``VALUES`` LocalRelation, one row
-    ``('<name>'<tail>)`` per file with columns ``cols`` — all JVM: a
-    Python-sourced DataFrame (``createDataFrame``) would drag a
-    Python-runner stage into the sidecar write and cost seconds of
-    worker spin-up for a handful of rows."""
-    values = ", ".join(
-        "('" + n.replace("'", "''") + "'" + tail + ")" for n in names
-    )
-    return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
-
-
 def write_zone_maps(
     spark: SparkSession, gen_path: str, zone_map_cols: tuple[str, ...]
 ) -> str:
@@ -563,23 +582,19 @@ def write_zone_maps(
     # complete BY CONSTRUCTION: empty files ride with null stats
     # (conservatively never skipped, harmlessly — they have no rows)
     # and fsck's inventory check stays exact, never a false positive.
-    # The file list enters as a SQL VALUES LocalRelation and the pad
-    # is a left-anti join — all JVM.
+    # The file list enters as a local relation (a generation with zero
+    # data files pads nothing) and the pad is a left-anti join.
     names = sorted(_data_files(spark, gen_path))
-    if names:
-        all_files = _files_relation(spark, names)
-        null_stats = [
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in stats.schema.fields
-            if f.name != "file"
-        ]
-        pad = all_files.join(stats, "file", "left_anti").select(
-            "file", *null_stats
-        )
-        stats = stats.unionByName(pad)
-    # else: a generation with ZERO data files (an empty commit) — an
-    # empty VALUES list is a parse error, and there is nothing to pad;
-    # the (empty) stats frame itself is the correct sidecar.
+    all_files = local_relation(spark, [(n,) for n in names], "file string")
+    null_stats = [
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in stats.schema.fields
+        if f.name != "file"
+    ]
+    pad = all_files.join(stats, "file", "left_anti").select(
+        "file", *null_stats
+    )
+    stats = stats.unionByName(pad)
     zm_path = _join(gen_path, ZONE_MAP_DIR)
     # one row per data file — a single small file is the right shape
     stats.coalesce(1).write.mode("overwrite").parquet(zm_path)
@@ -670,8 +685,8 @@ def write_bloom_filters(
     files touches only the files whose filters claim the key.
 
     Representation: SPARSE bitmap words.  Each row of a file sets
-    ``k`` bits (``pmod(xxhash64(value, i), bits)`` for i in 0..k-1 —
-    the engine's own JVM hash, so the probe recomputes identical
+    ``k`` bits (:func:`_bloom_positions` — the engine's own JVM hash,
+    one Column builder the probe shares, so it recomputes identical
     positions), and the sidecar stores one row per (file, col,
     word_idx) with the OR of the 64-bit words — size is bounded by
     set bits (≤ k·rows-per-file words), never by ``bits``, so the
@@ -682,13 +697,12 @@ def write_bloom_filters(
     rows (word_idx -1) name every data file so fsck's completeness
     check stays exact — a non-empty file silently missing from the
     sidecar would be wrongly skipped by every probe, the worst
-    failure class.  All JVM: the explode/groupBy build is one
-    map-side-combined aggregate over the just-written generation
-    (k·rows shuffled — commit-time index-build cost, the z-order
-    class, not a serving cost), the sentinel rows enter as SQL VALUES
-    LocalRelations.  Written BEFORE the manifest publish by
-    :func:`commit_parquet_generation`, so the sidecar rides the
-    atomic flip.  Size ``bits`` to the per-file row count (fpp ~
+    failure class.  The explode/groupBy build is one map-side-combined
+    aggregate over the just-written generation (k·rows shuffled —
+    commit-time index-build cost, the z-order class, not a serving
+    cost); the sentinel rows enter as one local relation.  Written
+    BEFORE the manifest publish by :func:`commit_parquet_generation`,
+    so the sidecar rides the atomic flip.  Size ``bits`` to the per-file row count (fpp ~
     (1 - e^(-k·n/bits))^k); the default holds ~1% fpp at 10^5 rows
     per file.  Returns the sidecar path."""
     from pyspark.sql import functions as F
@@ -708,18 +722,11 @@ def write_bloom_filters(
     rel = _file_col(gen_path)
     parts = []
     for c in bloom_cols:
-        pos = F.explode(
-            F.array(
-                *[
-                    F.pmod(F.xxhash64(F.col(c), F.lit(i)), F.lit(bits))
-                    for i in range(k)
-                ]
-            )
-        ).alias("pos")
+        pos = F.explode(F.array(*_bloom_positions(F.col(c), bits, k)))
         parts.append(
             df.select(rel, F.col(c))
             .where(F.col(c).isNotNull())
-            .select("file", pos)
+            .select("file", pos.alias("pos"))
             .select(
                 "file",
                 F.lit(c).alias("col"),
@@ -734,20 +741,13 @@ def write_bloom_filters(
     words = parts[0]
     for p in parts[1:]:
         words = words.unionByName(p)
-    meta_vals = ", ".join(
-        "('', '" + c.replace("'", "''") + f"', {bits}L, {k}L)"
-        for c in bloom_cols
-    )
-    sentinels = spark.sql(
-        f"SELECT * FROM VALUES {meta_vals} AS t(file, col, word_idx, word)"
-    )
     names = sorted(_data_files(spark, gen_path))
-    if names:
-        sentinels = sentinels.unionByName(
-            _files_relation(
-                spark, names, ", '', -1L, 0L", "file, col, word_idx, word"
-            )
-        )
+    sentinels = local_relation(
+        spark,
+        [("", c, bits, k) for c in bloom_cols]
+        + [(n, "", -1, 0) for n in names],
+        "file string, col string, word_idx bigint, word bigint",
+    )
     bl_path = _join(gen_path, BLOOM_DIR)
     # sidecar size is words-per-file x files (unlike _zonemap's one
     # row per file), so a single coalesced task would bottleneck a
@@ -762,67 +762,35 @@ def write_bloom_filters(
     return bl_path
 
 
-def sql_cast_literals(values: list, dtype: str) -> str | None:
-    """Render probe values as ``(CAST('<literal>' AS <dtype>))`` VALUES
-    rows for a driver-local hash computation, or ``None`` when any
-    value cannot be rendered EXACTLY (the caller then falls back to the
-    createDataFrame path).  Exactness rules: ints/Decimals/dates/
-    timestamps round-trip through their canonical strings; floats use
-    ``repr`` (shortest round-trip form, re-parsed correctly-rounded);
-    strings must be quote/backslash-free (Spark's default C-style
-    escape handling would reinterpret them)."""
-    import datetime
-    import decimal
-    import math
+def _bloom_positions(c, bits: int, k: int) -> list:
+    """THE Bloom bit-position rule over column ``c``:
+    ``pmod(xxhash64(value, i), bits)`` for i in 0..k-1 — the engine's
+    own hash, one builder for :func:`write_bloom_filters` and the
+    probe, so a probed value's positions are the writer's by
+    construction."""
+    from pyspark.sql import functions as F
 
-    if not values:
-        return None  # an empty VALUES list is a parse error
-    out = []
-    for v in values:
-        if isinstance(v, bool):
-            s = "true" if v else "false"
-        elif isinstance(v, int) or isinstance(v, decimal.Decimal):
-            s = str(v)
-        elif isinstance(v, float):
-            if not math.isfinite(v):
-                return None
-            s = repr(v)
-        elif isinstance(v, datetime.datetime):
-            s = v.isoformat(sep=" ")
-        elif isinstance(v, datetime.date):
-            s = v.isoformat()
-        elif isinstance(v, str):
-            if "'" in v or "\\" in v:
-                return None
-            s = v
-        else:
-            return None
-        out.append(f"(CAST('{s}' AS {dtype}))")
-    return ", ".join(out)
+    return [F.pmod(F.xxhash64(c, F.lit(i)), F.lit(bits)) for i in range(k)]
 
 
 def _probe_values(
-    spark: SparkSession, values: list, dtype: str, exprs: list[str]
+    spark: SparkSession, values: list, dtype: str, cols: list
 ) -> list:
-    """Collect the SQL ``exprs`` (over a column ``v`` of type
-    ``dtype``) evaluated for each of ``values`` — the driver-local hash
-    probe the Bloom pruning and the BM25 term-bucket probe share.
-    When :func:`sql_cast_literals` renders the values, it is ONE SQL
-    over a VALUES relation: ConvertToLocalRelation folds the projection
-    into the LocalRelation, so the collect schedules no job (a
-    createDataFrame probe pays a Python->JVM conversion job of
-    ~0.3-2 s).  Values no SQL literal renders exactly fall back to the
-    same SQL text over a ``createDataFrame`` of them.  Either way the
-    engine's own functions compute the result at the column's native
-    type, so it agrees with the writer by construction."""
-    lits = sql_cast_literals(values, dtype)
-    if lits is not None:
-        sels = ", ".join(exprs)
-        sql = f"SELECT {sels} FROM VALUES {lits} AS t(v)"
-        return spark.sql(sql).collect()
+    """Collect ``cols`` (Columns over a column ``v`` of type ``dtype``)
+    evaluated for each of ``values`` — the driver-local hash probe the
+    Bloom pruning and the BM25 term-bucket probe share.  The values
+    enter as a ``session.local_relation`` in their own Python types
+    and the engine CASTs them to ``dtype``, so the hash columns — the
+    writer's own builders — see the value the writer hashed, at the
+    column's native type.  The projection
+    folds into the local relation, so the collect schedules no job,
+    whatever the values hold (quotes and backslashes included)."""
+    from pyspark.sql import functions as F
+
     return (
-        spark.createDataFrame([(v,) for v in values], f"v {dtype}")
-        .selectExpr(*exprs)
+        local_relation(spark, [(v,) for v in values], ["v"])
+        .select(F.col("v").cast(dtype).alias("v"))
+        .select(*cols)
         .collect()
     )
 
@@ -846,11 +814,13 @@ def bloom_point_scan(
 
     Planning cost: one sidecar read filtered to the probed word
     indexes (pushed to the parquet scan), one file-count-sized
-    aggregate, positions recomputed with the engine's own
-    ``xxhash64`` at the column's native type — hash identity with
-    the writer is by construction, not convention.  The survivor
-    list is collected driver-side (file-count-sized planning
-    metadata, the Delta add-file-replay shape).  Fallbacks are
+    collect, positions recomputed by the writer's own Column builder
+    (:func:`_bloom_positions`) over the values cast to the column's
+    native type in a job-free local probe (:func:`_probe_values`) —
+    hash identity with the writer is by construction, not
+    convention.  The survivor list is collected driver-side
+    (file-count-sized planning metadata, the Delta add-file-replay
+    shape).  Fallbacks are
     :func:`skipping_scan`'s: no sidecar, or no filter for ``column``
     (it wasn't in ``bloom_cols``) → full scan with the predicate; a
     column absent from the TABLE raises; ``None`` values are dropped
@@ -901,16 +871,16 @@ def _bloom_kept_files(
         # contract — the re-applied predicate still filters
         return None
     bits, k = meta[column]
-    # Probe positions: the engine's own xxhash64 at the column's native
-    # type (same typed value as the writer hashed), through the one
-    # driver-local probe — |values| x k positions, metadata-sized
+    # Probe positions: the writer's position builder over the values
+    # cast to the column's native type, through the one driver-local
+    # probe — |values| x k positions, metadata-sized
     pos_rows = [
         [int(p) for p in r]
         for r in _probe_values(
             spark,
             values,
             dtypes[column],
-            [f"pmod(xxhash64(v, {i}), {bits}L) AS p{i}" for i in range(k)],
+            _bloom_positions(F.col("v"), bits, k),
         )
     ]
 
@@ -1127,10 +1097,9 @@ def commit_parquet_generation(
     would corrupt the table); a bad name is refused before any write.
 
     SCHEMA GUARD: a recommit whose frame DROPS columns the current
-    generation carries (as its manifest records them; a manifest
-    written before columns were recorded falls back to the
-    generation's own footers) breaks every downstream reader silently (the
-    resolving view narrows, selects fail far from the cause) — the
+    generation carries (:func:`_committed_schema`) breaks every
+    downstream reader silently (the resolving view narrows, selects
+    fail far from the cause) — the
     usual cause is a compaction bug, not intent, so the commit
     REFUSES before writing anything unless ``allow_column_drop=True``
     states the migration is deliberate.  Additions and type changes
@@ -1184,28 +1153,13 @@ def commit_parquet_generation(
                 pre_publish_validate
             ).parameters.values()
         )
-    got = latest_manifest(spark, root)
-    data_root = root if got is None else _join(root, str(got[1]["generation"]))
+    data_root, payload = _current_generation(spark, root)
     prev_cols: set = set()
     # a predecessor prefix that is gone (GC'd out from under a stale
     # manifest) has nothing left to guard
-    if got is not None and _exists(spark, data_root):
-        if "columns" in got[1]:
-            # recorded at publish: no footer read, no job
-            prev_cols = set(got[1]["columns"])
-        else:
-            # a manifest published before columns were recorded: the
-            # generation's own schema is the only record
-            try:
-                prev_cols = set(spark.read.parquet(data_root).columns)
-            except AnalysisException:
-                # the EXPECTED degradation only: a schema-less prefix
-                # (a crash between write and publish).  Anything else —
-                # a storage hiccup, a permission error — PROPAGATES: a
-                # blanket except here would silently disable the guard
-                # and admit the exact column-dropping recommit it
-                # exists to refuse (r15 advisor finding).
-                pass
+    if payload is not None and _exists(spark, data_root):
+        prev = _committed_schema(spark, data_root, payload)
+        prev_cols = set(prev.names) if prev is not None else set()
     dropped = sorted(prev_cols - set(df.columns))
     if dropped and not allow_column_drop:
         raise ValueError(
@@ -1295,7 +1249,7 @@ def commit_parquet_generation(
             except Exception:
                 pass
             raise
-    publish_generation(spark, root, seq, gen, columns=df.columns)
+    publish_generation(spark, root, seq, gen, columns=df.schema)
     gc_generations(
         spark,
         root,
@@ -1454,12 +1408,13 @@ def publish_generation(
     root: str,
     seq: int,
     generation: str,
-    columns: list[str] | None = None,
+    columns: StructType | None = None,
 ) -> None:
     """Step 2 — the commit point: make ``_manifests/manifest-<seq>.json``
     visible naming ``generation`` (and, when given, the ``columns`` it
-    was committed with — the next commit's schema guard reads them
-    instead of the generation's footers).
+    was committed with: their names, and their types next to them, which
+    :func:`_committed_schema` reads instead of the generation's
+    footers).
 
     On object stores a single PUT is atomic, but on file:// and HDFS
     ``fs.create`` makes the path VISIBLE before any bytes are written —
@@ -1487,7 +1442,8 @@ def publish_generation(
         )
     payload = {"generation": generation}
     if columns is not None:
-        payload["columns"] = list(columns)
+        payload["columns"] = columns.names
+        payload["schema"] = columns.jsonValue()
     _write_text(spark, tmp, json.dumps(payload))
     if not fs.rename(tpath, fpath):
         raise FileExistsError(

@@ -26,7 +26,7 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
@@ -37,6 +37,8 @@ from airflow_etl_minio_to_postgres_spark.sources.catalog import (
     restore_nanos_timestamps,
 )
 from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+    _committed_schema,
+    _current_generation,
     _exists,
     _fs_for,
     _join,
@@ -596,7 +598,7 @@ def _rollup_process_batch(
     spark = batch_df.sparkSession
     # the served generation holds the totals AND their marker; a crash
     # before a publish leaves the previous pair served
-    data_root = resolve_data_root(spark, out_path)
+    data_root, payload = _current_generation(spark, out_path)
     last = _last_batch(spark, data_root)
     if last is not None and last[0] == token and batch_id <= last[1]:
         return  # crash-replayed batch: already merged, no-op
@@ -621,9 +623,11 @@ def _rollup_process_batch(
         # migration), corrupting merged totals forever.  Fail loudly
         # instead; migration of legacy tables is a deliberate
         # one-time rewrite, not something a sink should improvise
-        # mid-stream (round-8 advisor finding).
+        # mid-stream (round-8 advisor finding).  The committed schema
+        # comes from the manifest's type record (no footer read).
         on_disk = {
-            f.name: f.dataType for f in spark.read.parquet(data_root).schema
+            f.name: f.dataType
+            for f in _committed_schema(spark, data_root, payload) or ()
         }
         expected = {f.name: f.dataType for f in partial.schema}
         if on_disk != expected:
@@ -777,35 +781,68 @@ def near_dup_store_scan(
     return store
 
 
-def _store_screen_drops(
-    spark: SparkSession,
-    banded: DataFrame,
-    sets: DataFrame,
+def _band_bucket(store_partitions: int) -> Column:
+    """THE near-dup store's bucket rule over ``band_key``, as the int
+    ``band_bucket`` partition value: ``pmod(xxhash64(band_key),
+    store_partitions)``.  The sink and the legacy migration write by it
+    and the store screen probes by it, so they agree by construction."""
+    return F.pmod(
+        F.xxhash64(F.col("band_key")), F.lit(int(store_partitions))
+    ).cast("int")
+
+
+def _near_dup_drops(
+    sig: DataFrame,
     store_path: str,
     *,
     id_col: str,
+    num_hashes: int,
+    num_bands: int,
     threshold: float,
     store_partitions: int,
     max_bucket_size: int | None,
     exclude_commit: str | None = None,
-) -> DataFrame:
-    """Batch-vs-STORE drop set: ids of batch docs that near-duplicate an
-    already-accepted stored doc.  The batch's bucket set is collected
-    driver-side (bounded by ``store_partitions`` — metadata-sized, the
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """THE near-dup screen over a signature table ``sig``:
+    ``(banded, sets, dropped)`` — the banded fan-out ``(id, band_key)``,
+    the shingle sets ``(id, shingles)`` and the distinct ids to drop.
+    :func:`near_dup_against_store` and the streaming sink both screen
+    through it, so the two paths cannot drift.
+
+    Two drop sets, united: the intra-batch pair path
+    (``functions/dedup.py _minhash_pairs``, drop the higher id of each
+    qualifying pair), and — when the store exists — the batch docs that
+    near-duplicate an already-accepted stored doc (store always wins).
+    For the latter the batch's bucket set is collected driver-side
+    (bounded by ``store_partitions`` — metadata-sized, the
     ``ivf_topk_indexed`` probe pattern) and the store scan is pruned to
-    those partitions.  Shared verbatim by the streaming sink and
-    :func:`near_dup_against_store`."""
+    those partitions, minus a replaying batch's own ``exclude_commit``."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        _minhash_pairs,
+        band_keys_expr,
         jaccard_expr,
         salted_join_sides,
     )
 
-    bucket_of = F.pmod(
-        F.xxhash64(F.col("band_key")), F.lit(int(store_partitions))
-    ).cast("int")
+    spark = sig.sparkSession
+    rows_per_band = num_hashes // num_bands
+    banded = sig.select(
+        F.col(id_col),
+        F.explode(
+            band_keys_expr(F.col("minhash"), num_bands, rows_per_band)
+        ).alias("band_key"),
+    )
+    sets = sig.select(id_col, "shingles")
+    dropped = _minhash_pairs(
+        sig, id_col, num_bands, rows_per_band, threshold, max_bucket_size
+    ).select(F.col("id_b").alias(id_col))
+    if not _exists(spark, store_path):
+        return banded, sets, dropped.distinct()
     buckets = sorted(
         r[0]
-        for r in banded.select(bucket_of.alias("b")).distinct().collect()
+        for r in banded.select(_band_bucket(store_partitions).alias("b"))
+        .distinct()
+        .collect()
     )
     store_banded = near_dup_store_scan(
         spark, store_path, buckets, exclude_commit=exclude_commit
@@ -827,7 +864,7 @@ def _store_screen_drops(
         max_bucket_size,
         right_id="_sid",
     )
-    return (
+    cross = (
         l_fan.join(r_fan, cross_keys)
         # each store row carries one band key, so first-match cannot
         # apply: a (batch doc, stored doc) pair meets once per shared
@@ -840,6 +877,7 @@ def _store_screen_drops(
         )
         .select(id_col)
     )
+    return banded, sets, dropped.unionByName(cross).distinct()
 
 
 def near_dup_against_store(
@@ -877,45 +915,30 @@ def near_dup_against_store(
     ``functions.dedup.release_caches()`` when done, as after any batch
     dedup operator."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        _minhash_pairs,
         _minhash_table,
         _persist_tracked,
-        band_keys_expr,
     )
 
-    spark = df.sparkSession
-    if not _exists(spark, store_path):
+    if not _exists(df.sparkSession, store_path):
         raise ValueError(
             f"near-dup store at {store_path!r} does not exist; "
             "near_dup_against_store screens against an EXISTING store "
             "(build one with streaming_near_dup_dedup)"
         )
-    rows_per_band = num_hashes // num_bands
     sig = _persist_tracked(
         _minhash_table(df, text_col, id_col, num_hashes, shingle_k)
     )
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            band_keys_expr(F.col("minhash"), num_bands, rows_per_band)
-        ).alias("band_key"),
+    _, _, dropped = _near_dup_drops(
+        sig,
+        store_path,
+        id_col=id_col,
+        num_hashes=num_hashes,
+        num_bands=num_bands,
+        threshold=threshold,
+        store_partitions=store_partitions,
+        max_bucket_size=max_bucket_size,
     )
-    sets = sig.select(id_col, "shingles")
-    dropped = _minhash_pairs(
-        sig, id_col, num_bands, rows_per_band, threshold, max_bucket_size
-    ).select(F.col("id_b").alias(id_col)).unionByName(
-        _store_screen_drops(
-            spark,
-            banded,
-            sets,
-            store_path,
-            id_col=id_col,
-            threshold=threshold,
-            store_partitions=store_partitions,
-            max_bucket_size=max_bucket_size,
-        )
-    )
-    return df.join(dropped.distinct(), id_col, "left_anti")
+    return df.join(dropped, id_col, "left_anti")
 
 
 def _near_dup_process_batch(
@@ -953,52 +976,33 @@ def _near_dup_process_batch(
     hot bucket salts its LARGER side and replicates the smaller into
     the sub-groups."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        _minhash_pairs,
         _minhash_table,
-        band_keys_expr,
     )
 
-    spark = batch_df.sparkSession
     # post-compaction the store lives under the current generation; the
     # batch's accepted signatures must land there too
-    store_path = resolve_data_root(spark, store_path)
+    store_path = resolve_data_root(batch_df.sparkSession, store_path)
     commit_id = f"{token}-{batch_id}"
-    rows_per_band = num_hashes // num_bands
-    bucket_of = F.pmod(
-        F.xxhash64(F.col("band_key")), F.lit(int(store_partitions))
-    ).cast("int")
     sig = _minhash_table(
         batch_df, text_col, id_col, num_hashes, shingle_k
     ).persist()
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            band_keys_expr(F.col("minhash"), num_bands, rows_per_band)
-        ).alias("band_key"),
+    banded, sets, dropped = _near_dup_drops(
+        sig,
+        store_path,
+        id_col=id_col,
+        num_hashes=num_hashes,
+        num_bands=num_bands,
+        threshold=threshold,
+        store_partitions=store_partitions,
+        max_bucket_size=max_bucket_size,
+        exclude_commit=commit_id,
     )
-    sets = sig.select(id_col, "shingles")
-    dropped = _minhash_pairs(
-        sig, id_col, num_bands, rows_per_band, threshold, max_bucket_size
-    ).select(F.col("id_b").alias(id_col))
-    if _exists(spark, store_path):
-        cross = _store_screen_drops(
-            spark,
-            banded,
-            sets,
-            store_path,
-            id_col=id_col,
-            threshold=threshold,
-            store_partitions=store_partitions,
-            max_bucket_size=max_bucket_size,
-            exclude_commit=commit_id,
-        )
-        dropped = dropped.unionByName(cross)
     # Materialize the drop set BEFORE any write: its plan reads the
     # store, and the store write below must not race a pending store
     # scan (file listings are snapshotted at DataFrame creation, but an
     # eager boundary makes the ordering explicit rather than
     # incidental).  The drop set is id-only.
-    dropped_ids = dropped.distinct().persist()
+    dropped_ids = dropped.persist()
     dropped_ids.count()
     _write_batch_commit(
         batch_df.join(dropped_ids, id_col, "left_anti"), out_path, commit_id
@@ -1011,7 +1015,7 @@ def _near_dup_process_batch(
     _write_batch_commit(
         banded.join(dropped_ids, id_col, "left_anti")
         .join(sets, id_col)
-        .withColumn("band_bucket", bucket_of),
+        .withColumn("band_bucket", _band_bucket(store_partitions)),
         store_path,
         commit_id,
         layout="band_bucket",
@@ -1072,12 +1076,7 @@ def migrate_legacy_near_dup_store(
                 band_keys_expr(F.col("minhash"), num_bands, rows_per_band)
             ).alias("band_key"),
         )
-        .withColumn(
-            "band_bucket",
-            F.pmod(
-                F.xxhash64(F.col("band_key")), F.lit(int(store_partitions))
-            ).cast("int"),
-        )
+        .withColumn("band_bucket", _band_bucket(store_partitions))
         .withColumn("_commit_id", F.lit("legacy-0"))
         # one writer task per bucket — without this every shuffle task
         # writes a sliver into every bucket dir (up to shuffle_partitions

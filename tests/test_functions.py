@@ -2346,18 +2346,14 @@ def test_bm25_four_forms_agree_on_empty_and_unrenderable_terms(
     sets the alphanumeric tests never draw: an empty term over a corpus
     with empty/whitespace-only texts (the direct path drops empty
     tokens like the index, so those docs never rank), and terms with a
-    quote or a backslash, which no SQL literal renders exactly — their
-    bucket probe takes the createDataFrame fallback (one term set
-    holds both: they fail the same literal check)."""
+    quote or a backslash (one term set holds both), which the bucket
+    probe takes as plain values."""
     from airflow_etl_minio_to_postgres_spark.functions.text import (
         bm25_knn_join,
         bm25_topk,
         bm25_topk_batch,
         bm25_topk_indexed,
         write_inverted_index,
-    )
-    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-        sql_cast_literals,
     )
 
     df = spark.createDataFrame(
@@ -2369,8 +2365,6 @@ def test_bm25_four_forms_agree_on_empty_and_unrenderable_terms(
     path = str(tmp_path / "inv_odd")
     write_inverted_index(df, path, n_buckets=4)
     qsets = {1: ["spark", ""], 2: ["don't", "a\\b"]}
-    assert sql_cast_literals(["don't"], "string") is None
-    assert sql_cast_literals(["a\\b"], "string") is None
     # one query table: the batched forms serve both term sets
     queries = spark.createDataFrame(
         list(qsets.items()), "qid long, terms array<string>"

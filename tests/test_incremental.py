@@ -805,7 +805,8 @@ def test_streaming_rollup_replay_is_a_noop(spark, tmp_path):
     partials double-counts), so replay safety is marker-based: a batch
     id already covered by the atomically-committed _last_batch marker
     must not merge again; a LATER batch and a different checkpoint
-    lineage still merge."""
+    lineage still merge.  A committed generation whose column changed
+    type under the same name is refused."""
     from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
         _rollup_process_batch,
     )
@@ -828,6 +829,27 @@ def test_streaming_rollup_replay_is_a_noop(spark, tmp_path):
     _rollup_process_batch(b0, 0, out, "tokB")
     tripled = _snapshot(spark, out, ["hour", "event_type", "n_events"])
     assert sum(r[2] for r in tripled) == 3 * sum(r[2] for r in once)
+    # the type guard reads the committed schema from the manifest: a
+    # generation whose n_events changed type under the same name is
+    # refused before any merge
+    import pytest
+
+    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+        commit_parquet_generation,
+        next_seq,
+    )
+
+    commit_parquet_generation(
+        spark,
+        read_resolved(spark, out).withColumn(
+            "n_events", F.col("n_events").cast("int")
+        ),
+        out,
+    )
+    seq = next_seq(spark, out)
+    with pytest.raises(ValueError, match="micro-unit"):
+        _rollup_process_batch(b0, 2, out, "tokB")
+    assert next_seq(spark, out) == seq
 
 
 def test_near_dup_store_scan_is_partition_pruned(spark, tmp_path):
@@ -3708,7 +3730,9 @@ def test_bloom_point_scan_prunes_and_matches_full_filter(spark, tmp_path):
     lookup of a few keys touches a strict subset of files, the result
     equals the full filtered scan exactly (zero false negatives), an
     absent key returns empty, and the isin predicate is re-applied so
-    false positives never leak rows."""
+    false positives never leak rows.  The same holds for typed probes
+    (quoted strings, decimal, date, timestamp, double, string keys
+    against a bigint column), whose probe collect schedules no job."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
@@ -3734,6 +3758,92 @@ def test_bloom_point_scan_prunes_and_matches_full_filter(spark, tmp_path):
     # empty values: empty frame with the table schema, no scan
     empty = mf.bloom_point_scan(spark, root, "id", [])
     assert empty.count() == 0 and set(empty.columns) == {"id", "grp"}
+
+    # typed probes: string keys with a quote or a backslash, decimal,
+    # date, timestamp and double columns, and a bigint column probed
+    # with string keys all equal the full filtered scan, and the probe
+    # collect (values cast to the column type, the writer's position
+    # builder) schedules no job — nor does it add one to the planning
+    import datetime
+    import decimal
+    import itertools
+
+    from pyspark.sql import Row
+
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def jobs(fn):
+        group = f"typed-probe-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    t0 = datetime.datetime(2024, 1, 2, 3, 4, 5, 123456)
+    typed = spark.createDataFrame(
+        [
+            Row(
+                id=i,
+                s=["plain", "don't", "a\\b", "x"][i % 4] + str(i % 5),
+                d=decimal.Decimal(i) / 4,
+                dt=datetime.date(2024, 1, 1) + datetime.timedelta(i % 9),
+                ts=t0 + datetime.timedelta(microseconds=i),
+                x=[-0.0, 1e300, 0.1, 2.5][i % 4] * (1 + i % 3),
+            )
+            for i in range(60)
+        ],
+        "id bigint, s string, d decimal(10,2), dt date, ts timestamp, "
+        "x double",
+    )
+    troot = str(tmp_path / "typed")
+    cols = ("id", "s", "d", "dt", "ts", "x")
+    mf.commit_parquet_generation(
+        spark, typed.repartition(6), troot, bloom_cols=cols, bloom_bits=4096
+    )
+    full = mf.read_resolved(spark, troot)
+    data_root = mf.resolve_data_root(spark, troot)
+    dtypes = dict(full.dtypes)
+    probes = {
+        "s": ["don't1", "a\\b2", "nope'\\"],
+        "d": [decimal.Decimal("0.25"), decimal.Decimal("7.50")],
+        "dt": [datetime.date(2024, 1, 3)],
+        "ts": [t0 + datetime.timedelta(microseconds=7)],
+        "x": [-0.0, 1e300, 0.30000000000000004],
+        "id": ["1", "5"],
+    }
+    # planning cost of a plain bigint probe (sidecar reads only)
+    base = jobs(
+        lambda: mf._bloom_kept_files(spark, data_root, "id", [1], dtypes)
+    )
+    for c, vs in probes.items():
+        scan = mf.bloom_point_scan(spark, troot, c, vs)
+        got = sorted(r["id"] for r in scan.collect())
+        want = sorted(
+            r["id"]
+            for r in full.where(
+                F.col(c).isin([F.lit(v).cast(dtypes[c]) for v in vs])
+            ).collect()
+        )
+        assert got == want and want, (c, got, want)
+        plan_jobs = jobs(
+            lambda: mf._bloom_kept_files(spark, data_root, c, vs, dtypes)
+        )
+        assert plan_jobs == base, c
+        assert (
+            jobs(
+                lambda: mf._probe_values(
+                    spark,
+                    vs,
+                    dtypes[c],
+                    mf._bloom_positions(F.col("v"), 4096, 5),
+                )
+            )
+            == 0
+        ), c
 
 
 def test_bloom_point_scan_fallbacks_and_nulls(spark, tmp_path):

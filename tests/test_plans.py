@@ -1059,3 +1059,29 @@ def test_package_has_one_commit_protocol():
         if banned.search(line)
     ]
     assert hits == []
+
+
+def test_package_builds_local_relations_one_way():
+    """Driver-held rows enter a plan one way, session.local_relation:
+    outside queries.py and the workbook reader in sources/files.py no
+    package module renders SQL VALUES text, keeps a SQL-literal
+    renderer, or calls createDataFrame itself."""
+    import pathlib
+    import re
+
+    import airflow_etl_minio_to_postgres_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    banned = re.compile(r"FROM VALUES|sql_cast_literals|createDataFrame\(")
+    hits = [
+        (p.relative_to(root).as_posix(), line.strip())
+        for p in sorted(root.rglob("*.py"))
+        if p.relative_to(root).as_posix()
+        not in ("queries.py", "sources/files.py")
+        for line in p.read_text().splitlines()
+        if banned.search(line)
+    ]
+    # the helper's own call is the one createDataFrame
+    assert hits == [
+        ("session.py", "return spark.createDataFrame(table, schema)")
+    ]
