@@ -197,8 +197,8 @@ def cosine_scores_pandas_udf(
     batch — the 10-100x win over a row-at-a-time Python UDF the PySpark
     docs promise, with the query vector captured in the closure (shipped
     once per task, not per row).  For THIS particular computation the
-    pure-JVM expression twin (similarity.cosine_expr — zip_with +
-    aggregate, whole-stage codegen) is still faster and is the
+    pure-JVM expression twin (a zip_with + aggregate fold,
+    whole-stage codegen) is still faster and is the
     production default; the pandas_udf form is the template for the
     cases with no expression equivalent (a real model's scoring step, a
     tokenizer, learned quality filters) and is oracle-gated against the
@@ -221,7 +221,7 @@ def cosine_scores_pandas_udf(
         denom = norms * qn
         ok = denom > 0
         # Zero-norm embedding (or zero query vector): the JVM twin
-        # (similarity.cosine_expr) uses try_divide -> NULL, and DuckDB's
+        # uses try_divide -> NULL, and DuckDB's
         # ``/`` is NULL on zero divisors too; mask to a nullable Float64
         # so Arrow ships a real null, not a warning-laden 0/0 NaN.
         out = np.where(ok, (m @ q) / np.where(ok, denom, 1.0), np.nan)

@@ -37,56 +37,30 @@ any multiply, matching DuckDB's behavior on ``FLOAT[]`` lists.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from airflow_etl_minio_to_postgres_spark.session import local_relation
-
-
-def dot_expr(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(dot_expr(a, a))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    """``try_divide``, not ``/``: under Spark 4's default ANSI mode a
-    single zero-norm embedding (an all-zeros vector from a failed
-    upstream encode) would raise DIVIDE_BY_ZERO and kill the whole job —
-    at 100 TB a dirty row must degrade to NULL, never fail the pipeline
-    (same policy as the try_cast in events_json_props).  DuckDB's ``/``
-    returns NULL on zero divisors already, so the oracle agrees.
-
-    NOTE (optimization r17): this higher-order-function form is the
-    expression REFERENCE; every hot path now runs :func:`cosine_arrow`
-    (one numpy batch op per Arrow batch — measured 6x on the pair-join
-    shape, guide §4.2).  Kept because (a) it is the semantics contract
-    the Arrow twin is tested against, and (b) expression-only consumers
-    (oracle parity experiments, plans that must stay Python-free) still
-    need it."""
-    return F.try_divide(dot_expr(a, b), norm_expr(a) * norm_expr(b))
 
 
 # ---------------------------------------------------------------------------
 # Arrow-vectorized cosine (optimization guide §4.2: hand whole Arrow batches
 # to numpy instead of folding per element in interpreted HOF expressions).
 #
-# Semantics match cosine_expr: float32 is cast up before any multiply; a
-# zero-norm side degrades the pair to NULL (the try_divide posture); a NULL
-# or ragged (zip_with would null-pad) embedding degrades to NULL.  Dirty
-# rows with non-finite components also degrade to NULL — a strict superset
-# of the expression form's NULL set (which would propagate NaN); filters
-# and thresholds behave identically, and no test/oracle input carries
-# non-finite embeddings.
+# Semantics match the SQL expression form ``try_divide(dot(a, b),
+# sqrt(dot(a, a)) * sqrt(dot(b, b)))``, each dot an ``aggregate(zip_with(a,
+# b, x * y), 0.0, +)`` fold (kept in ``tests/oracle.py`` as the reference
+# every kernel here is pinned against): float32 is cast up before any
+# multiply; a zero-norm side degrades the pair to NULL (the try_divide
+# posture); a NULL or ragged (zip_with would null-pad) embedding degrades
+# to NULL.  Dirty rows with non-finite components also degrade to NULL — a
+# strict superset of the expression form's NULL set (which would propagate
+# NaN); filters and thresholds behave identically, and no test/oracle
+# input carries non-finite embeddings.
 #
-# Precision: BIT-IDENTICAL to cosine_expr, not merely close.  The batch
-# kernel accumulates SEQUENTIALLY OVER DIMENSIONS (vectorized over rows):
+# Precision: BIT-IDENTICAL to the expression form, not merely close.  The
+# batch kernel accumulates SEQUENTIALLY OVER DIMENSIONS (vectorized over rows):
 # num = a0*b0; num = num + a1*b1; ... — the exact rounding sequence of the
 # expression form's left fold (and of the DuckDB oracle's list_sum and the
 # property tests' Python models), just issued as d vectorized ops instead
@@ -118,7 +92,8 @@ def _fold(a, b):
     """Sequential-dimension dot product over the last axis, with numpy
     broadcasting: ``_fold(ma, mb)`` gives row-wise dots and
     ``_fold(q[:, None], c[None])`` the q x c matrix — acc = a0*b0;
-    acc = acc + a1*b1; ..., the rounding sequence of cosine_expr's fold.
+    acc = acc + a1*b1; ..., the rounding sequence of the expression
+    form's fold.
     The only dimension loop in this module."""
     import numpy as np
 
@@ -145,7 +120,7 @@ def _sims_blocks(q, c, rows=None):
     """Yield ``(lo, block)``: the cosines of query rows ``lo:lo+len(block)``
     of the (nq, d) matrix ``q`` against every row of the (m, d) matrix
     ``c``, at most ``rows`` (default ``_ROW_BLOCK``) query rows per block.
-    EXACT cosine_expr doubles; a pair whose divisor is zero (try_divide's
+    EXACT expression-form doubles; a pair whose divisor is zero (try_divide's
     NULL) comes out -inf, any other degraded pair NaN — never finite."""
     import numpy as np
 
@@ -291,7 +266,7 @@ def _result_frame(cols, cosine=None):
     """Kernel output frame.  ``cols`` maps each output column to
     ``(input column, row positions)``, so every id column keeps the
     dtype of the input column it is taken from — the type of the
-    declared applyInPandas schema field, empty frames included.
+    declared output schema field, empty frames included.
     ``cosine`` becomes a nullable double column (:func:`_nullable`)."""
     out = pd.DataFrame(
         {
@@ -319,9 +294,9 @@ _COS_PAIR_UDF = None
 
 
 def cosine_arrow(a: Column, b: Column) -> Column:
-    """Arrow-vectorized twin of :func:`cosine_expr` (see the block comment
-    above for semantics/precision); the production path for every cosine
-    in this module."""
+    """Arrow-vectorized twin of the expression-form cosine (see the block
+    comment above for semantics/precision); the production path for
+    every cosine in this module."""
     global _COS_PAIR_UDF
     if _COS_PAIR_UDF is None:
 
@@ -701,6 +676,43 @@ def _band_knn_kernel(k: int, id_col: str, vec_col: str):
     return _knn
 
 
+def _apply_by_runs(df: DataFrame, key: str, kernel, schema) -> DataFrame:
+    """THE grouped-kernel crossing of the band buckets and the SemDeDup
+    cells: ``df`` is hash-partitioned and sorted on ``key``, and ONE
+    ``mapInPandas`` pass per partition calls ``kernel`` once per run of
+    equal keys (one group) holding two or more rows — a one-row group
+    forms no pair and no neighbor, so it is skipped.  A grouped
+    ``applyInPandas`` pays one Python call per group instead (~5 ms
+    each on a 4-vCPU host; ``knn_join`` made 496 of them for 200
+    vectors, most for one-row buckets).  The open run's pieces are
+    held in a list and concatenated once when the run closes, so a
+    task holds one group at a time (with the Arrow batches its rows
+    arrived in), as the grouped form does.  The local pass per
+    partition, then a small global merge, is REPOSE's shape
+    (ICDE'21)."""
+    import numpy as np
+
+    def _close(held):
+        if sum(map(len, held)) > 1:
+            yield kernel(pd.concat(held, ignore_index=True))
+
+    def _runs(batches):
+        held = []
+        for pdf in filter(len, batches):  # an empty batch has no run
+            keys = pdf[key].to_numpy()
+            cut = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1), len(keys)]
+            for lo, hi in zip(cut[:-1], cut[1:]):
+                if held and held[0][key].iat[0] != keys[lo]:
+                    yield from _close(held)
+                    held = []
+                held.append(pdf.iloc[lo:hi])
+        yield from _close(held)
+
+    return df.repartition(key).sortWithinPartitions(key).mapInPandas(
+        _runs, schema
+    )
+
+
 def semantic_pair_drops_grouped(
     cellv: DataFrame,
     threshold: float,
@@ -710,14 +722,15 @@ def semantic_pair_drops_grouped(
 ) -> DataFrame:
     """Within-cell SemDeDup drop ids — every id with a smaller-id
     same-cell neighbor at cosine >= ``threshold`` — via ONE grouped
-    Arrow crossing per cell (optimization r17, guide §4.2 + §8's
-    move-bytes-once rule): each cell's vectors cross the Python
+    Arrow crossing per partition (:func:`_apply_by_runs`; a one-row
+    cell is skipped) under guide §8's move-bytes-once rule: each
+    cell's vectors cross the Python
     boundary ONCE (m x d doubles) and the m^2 pair cosines run as d
     vectorized numpy steps, instead of the retired equi-self-join
     whose ArrowEvalPython predicate shipped BOTH vectors per candidate
     pair (m^2 x 2d doubles — measured 4 GB/entry at sf0.1 nprobe=2,
     the whole regression).  Pair semantics are exact: cosines are
-    bit-identical to cosine_expr (sequential fold — see
+    bit-identical to the expression form (sequential fold — see
     :func:`_fold`), the drop rule compares actual id VALUES (never row
     order), NULL/ragged vectors neither drop nor get dropped (their
     cosines are NULL), and vectors of different dimensions never pair
@@ -729,8 +742,6 @@ def semantic_pair_drops_grouped(
     an id across cells (nprobe > 1); callers ``distinct()`` exactly as
     they did over the join form."""
     import numpy as np
-
-    from pyspark.sql import types as T
 
     out_schema = T.StructType([cellv.schema[id_col]])
     thr, rows = float(threshold), _ROW_BLOCK
@@ -745,10 +756,8 @@ def semantic_pair_drops_grouped(
         )
         return _result_frame({id_col: (pdf[id_col], np.unique(ci))})
 
-    return (
-        cellv.select(cell_col, id_col, vec_col)
-        .groupBy(cell_col)
-        .applyInPandas(_drops, schema=out_schema)
+    return _apply_by_runs(
+        cellv.select(cell_col, id_col, vec_col), cell_col, _drops, out_schema
     )
 
 
@@ -762,7 +771,7 @@ def flag_close_to_any_arrow(
     matrix in d sequential numpy steps, instead of the retired
     corpus x |benchmark| crossJoin whose Arrow predicate shipped the
     vector once PER benchmark row.  Cosines are bit-identical to
-    cosine_expr (sequential fold); NULL / ragged / wrong-dim /
+    the expression form (sequential fold); NULL / ragged / wrong-dim /
     zero-norm comparisons are NULL (never >= threshold), matching the
     cosine_arrow degrade policy — a NULL or ragged benchmark row never
     flags anything.  Benchmarks are small by contract (eval suites);
@@ -799,8 +808,6 @@ def _topk(
     kept as the long column ``rank_col`` when one is named."""
     if query_id_col is None:
         return scored.orderBy(*order).limit(int(k))
-    from pyspark.sql import Window
-
     rank = F.row_number().over(Window.partitionBy(query_id_col).orderBy(*order))
     name = rank_col or "_rn"
     ranked = scored.withColumn(
@@ -853,6 +860,23 @@ def add_sign_bucket(
     return df.withColumn("bucket", sign_bucket_expr(F.col(vec_col), n_bits))
 
 
+def _posexplode_once(df: DataFrame, keep, arr, pos, value) -> DataFrame:
+    """THE explode of an Arrow UDF's array column ``arr`` (the probe
+    lists of :func:`ivf_assign`, the band keys of
+    :func:`_band_bucket_apply`): ``keep`` plus ``(pos, value)`` per
+    element, with the UDF evaluated once per row.  A plain
+    ``posexplode`` of the attribute breaks that rule: Catalyst's
+    InferFiltersFromGenerate adds ``size(arr) > 0 AND isnotnull(arr)``
+    under the Generate, predicate pushdown substitutes the UDF for the
+    attribute in that filter, and the plan then runs the UDF in two
+    ArrowEvalPython nodes.  The outer form infers no filter, and
+    ``value IS NOT NULL`` then drops exactly the rows a plain
+    ``posexplode`` never emits (a NULL or empty array), since neither
+    array ever holds a NULL element."""
+    out = df.select(*keep, F.posexplode_outer(arr).alias(pos, value))
+    return out.where(F.col(value).isNotNull())
+
+
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
@@ -870,7 +894,7 @@ def ivf_assign(
     table is collected driver-side (n_cells x dim — metadata, the
     Spark MLlib KMeans pattern; it was already required to fit as a
     broadcast) and each vector's ranked probe list is ONE Arrow batch
-    op (:func:`probe_cids_arrow`) + a posexplode — replacing the
+    op (:func:`probe_cids_arrow`) + an explode — replacing the
     corpus x n_cells crossJoin fan-out and the per-vector row_number
     window, whose id-keyed Exchange was the assignment's only shuffle.
     The ranking semantics and produced rows are identical to the
@@ -883,6 +907,13 @@ def ivf_assign(
     additionally exposes the 1-based probe rank (1 = primary cell) for
     callers that need to distinguish the nearest cell from the extra
     probes.
+
+    Once-per-row rule: the probe UDF runs once per row, in ONE
+    ArrowEvalPython node.  The probe list is exploded by
+    :func:`_posexplode_once`; a plain ``posexplode`` of the ``_probes``
+    column would let Catalyst infer ``size(_probes) > 0`` under the
+    Generate and push the UDF itself into that filter, so each task
+    would rank every vector's cells twice.
     """
     cents = _centroid_list(centroids, centroid_id, centroid_vec)
     cols = [id_col, centroid_id]
@@ -900,8 +931,8 @@ def ivf_assign(
             "_probes"
         ),
     )
-    exploded = probed.select(
-        id_col, F.posexplode("_probes").alias("_pos", centroid_id)
+    exploded = _posexplode_once(
+        probed, [id_col], "_probes", "_pos", centroid_id
     )
     if rank_col is not None:
         exploded = exploded.withColumn(
@@ -1062,8 +1093,6 @@ def ivf_topk_batch(
     Returns (query_id_col, id_col, cosine), k rows per query, ordered
     within each query by (cosine desc, id).
     """
-    from pyspark.sql import types as T
-
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
         resolve_data_root,
     )
@@ -1213,8 +1242,6 @@ def ivf_knn_join(
     # by selection: every global top-k row is in its cell's local top-k,
     # ranked in the same order (cosine desc NULLS LAST, id) from the
     # same bit-identical cosines as the batch and indexed paths.
-    from pyspark.sql import types as T
-
     cents = _centroid_list(centroids)
     spark = corpus.sparkSession
     if not cents:
@@ -1324,8 +1351,6 @@ def rrf_fuse_grouped(
     rank windows and a TakeOrdered top-``k``."""
     if not results:
         raise ValueError("rrf_fuse: results must be non-empty")
-    from pyspark.sql import Window
-
     qcols = [] if query_id_col is None else [query_id_col]
     fused = None
     rank_cols = []
@@ -1388,8 +1413,6 @@ def mmr_rerank(
     (the try_divide posture).  Returns (query_id_col, id_col,
     score_col, mmr, rank) with rank 1..k per query."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     in_schema = candidates.schema
     out_schema = T.StructType(
@@ -1511,35 +1534,38 @@ def _band_bucket_apply(
 ) -> DataFrame:
     """Shared band-bucket prelude of :func:`embedding_near_dup_pairs` and
     :func:`knn_join`: each row — (id, band-key array, vector), one per
-    (id, band) — shuffles ONCE on its band key into the grouped
-    ``kernel``, whose output is the two ``id_fields`` (typed like
-    ``id_col``) plus a double ``cosine``, so every vector crosses the
-    Python boundary once per band instead of once per candidate pair.
-    Band keys come from :func:`hyperplane_band_keys_arrow`, and the
-    corpus has ONE consumer chain referencing the vector column once,
-    so no persist barrier is needed."""
-    from pyspark.sql import types as T
+    (id, band) — shuffles ONCE on its band key into ``kernel``, whose
+    output is the two ``id_fields`` (typed like ``id_col``) plus a
+    double ``cosine``, so every vector crosses the Python boundary once
+    per band instead of once per candidate pair.  The kernel runs once
+    per bucket of two or more rows inside one ``mapInPandas`` pass per
+    partition (:func:`_apply_by_runs`), not as one Python call per
+    bucket.
 
+    Once-per-row rule: :func:`hyperplane_band_keys_arrow` runs once per
+    row, in ONE ArrowEvalPython node.  The key array is exploded by
+    :func:`_posexplode_once`; a plain ``posexplode`` would let Catalyst
+    infer ``size(_bks) > 0`` under the Generate and push the key UDF
+    into that filter, so every task would compute and ship the keys
+    twice.  The corpus has ONE consumer chain referencing the vector
+    column once, so no persist barrier is needed."""
     planes = hyperplanes(dim, n_bands * bits_per_band, seed)
-    base = df.select(id_col, vec_col)
-    bv = base.select(
-        F.col(id_col),
-        F.col(vec_col),
+    keyed = df.select(
+        id_col,
+        vec_col,
         hyperplane_band_keys_arrow(F.col(vec_col), planes, n_bands).alias(
             "_bks"
         ),
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        "_bks",
-        F.posexplode("_bks").alias("_band", "band_key"),
     )
-    id_type = base.schema[id_col].dataType
+    bv = _posexplode_once(
+        keyed, [id_col, vec_col, "_bks"], "_bks", "_band", "band_key"
+    )
+    id_type = keyed.schema[id_col].dataType
     out_schema = T.StructType(
         [T.StructField(name, id_type) for name in id_fields]
         + [T.StructField("cosine", T.DoubleType())]
     )
-    return bv.groupBy("band_key").applyInPandas(kernel, schema=out_schema)
+    return _apply_by_runs(bv, "band_key", kernel, out_schema)
 
 
 def embedding_near_dup_pairs(
@@ -1611,6 +1637,10 @@ def knn_join(
     bucket^2), bounded by the random hyperplanes keeping buckets near
     corpus/2^bits; memory per task is O(_ROW_BLOCK x m) for an m-row
     bucket, since its cosines are built ``_ROW_BLOCK`` rows at a time.
+    The band-key UDF runs once per row (one ArrowEvalPython node; a
+    plain ``posexplode`` of its array would copy it into an inferred
+    filter — see :func:`_band_bucket_apply`), and each partition crosses
+    into Python once, skipping one-row buckets.
 
     Recall contract (approximate by design): a true neighbor sharing no
     band with its query is missed; near-identical vectors collide on some

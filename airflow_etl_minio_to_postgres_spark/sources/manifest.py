@@ -722,7 +722,7 @@ def write_bloom_filters(
     rel = _file_col(gen_path)
     parts = []
     for c in bloom_cols:
-        pos = F.explode(F.array(*_bloom_positions(F.col(c), bits, k)))
+        pos = F.explode(_bloom_positions(c, bits, k))
         parts.append(
             df.select(rel, F.col(c))
             .where(F.col(c).isNotNull())
@@ -762,15 +762,22 @@ def write_bloom_filters(
     return bl_path
 
 
-def _bloom_positions(c, bits: int, k: int) -> list:
-    """THE Bloom bit-position rule over column ``c``:
-    ``pmod(xxhash64(value, i), bits)`` for i in 0..k-1 — the engine's
-    own hash, one builder for :func:`write_bloom_filters` and the
-    probe, so a probed value's positions are the writer's by
-    construction."""
+def _bloom_positions(name: str, bits: int, k: int):
+    """THE Bloom bit-position rule over column ``name``: the array
+    ``[pmod(xxhash64(value, i), bits) for int i in 0..k-1]`` — the
+    engine's own hash, one Column for :func:`write_bloom_filters` and
+    the probe, so a probed value's positions are the writer's by
+    construction.  It is one SQL expression, so building it is one
+    py4j call; k separate position Columns cost ~4k calls on every
+    probe.  The lambda variable is ``<name>_i``, never the column's own
+    name, so it cannot shadow the column."""
     from pyspark.sql import functions as F
 
-    return [F.pmod(F.xxhash64(c, F.lit(i)), F.lit(bits)) for i in range(k)]
+    col, i = (f"`{n.replace('`', '``')}`" for n in (name, f"{name}_i"))
+    return F.expr(
+        f"transform(sequence(0, {int(k) - 1}), "
+        f"{i} -> pmod(xxhash64({col}, {i}), {int(bits)}))"
+    )
 
 
 def _probe_values(
@@ -875,12 +882,12 @@ def _bloom_kept_files(
     # cast to the column's native type, through the one driver-local
     # probe — |values| x k positions, metadata-sized
     pos_rows = [
-        [int(p) for p in r]
+        [int(p) for p in r[0]]
         for r in _probe_values(
             spark,
             values,
             dtypes[column],
-            _bloom_positions(F.col("v"), bits, k),
+            [_bloom_positions("v", bits, k)],
         )
     ]
 

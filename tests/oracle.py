@@ -16,6 +16,31 @@ import pandas as pd
 from airflow_etl_minio_to_postgres_spark.schemas import TESTDATA_TABLES
 
 
+def _dot_expr(a, b):
+    from pyspark.sql import functions as F
+
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def cosine_expr(a, b):
+    """The SQL expression form of cosine, the reference every Arrow
+    cosine kernel of ``functions/similarity.py`` is pinned against bit
+    for bit: a left ``aggregate(zip_with(...))`` fold per dot product,
+    float32 cast up first.  ``try_divide``, not ``/``: under Spark 4's
+    ANSI mode a zero-norm vector would raise DIVIDE_BY_ZERO; it
+    degrades to NULL instead, as DuckDB's ``/`` does on a zero divisor,
+    and a NULL or ragged vector (zip_with null-pads) is NULL too."""
+    from pyspark.sql import functions as F
+
+    return F.try_divide(
+        _dot_expr(a, b), F.sqrt(_dot_expr(a, a)) * F.sqrt(_dot_expr(b, b))
+    )
+
+
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TESTDATA_TABLES:

@@ -634,10 +634,10 @@ def test_ivf_knn_join_matches_expression_reference(spark):
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-        cosine_expr,
         ivf_assign,
         ivf_knn_join,
     )
+    from tests.oracle import cosine_expr
 
     rows = [
         (0, [1.0, 0.0, 0.0]),
@@ -744,11 +744,11 @@ def test_banded_pair_kernel_matches_join_reference(spark):
         release_caches,
     )
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-        cosine_expr,
         embedding_near_dup_pairs,
         hyperplanes,
         knn_join,
     )
+    from tests.oracle import cosine_expr
 
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),

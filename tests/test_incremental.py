@@ -3839,11 +3839,94 @@ def test_bloom_point_scan_prunes_and_matches_full_filter(spark, tmp_path):
                     spark,
                     vs,
                     dtypes[c],
-                    mf._bloom_positions(F.col("v"), 4096, 5),
+                    [mf._bloom_positions("v", 4096, 5)],
                 )
             )
             == 0
         ), c
+
+
+def test_bloom_positions_equal_the_per_position_rule(
+    spark, tmp_path, monkeypatch
+):
+    """The one-expression Bloom position rule gives the positions of
+    the k per-position Columns it replaced: a _bloom sidecar written
+    with the per-position rule serves today's probe with the same
+    surviving files and no false negative, on bigint, string (quote,
+    backslash), decimal, date, timestamp and double keys; and the two
+    rules' position arrays are equal for bit counts inside and past
+    the int range."""
+    import datetime
+    import decimal
+
+    from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
+
+    def per_position(name, bits, k):
+        return F.array(
+            *[
+                F.pmod(F.xxhash64(F.col(name), F.lit(i)), F.lit(bits))
+                for i in range(k)
+            ]
+        )
+
+    t0 = datetime.datetime(2024, 1, 2, 3, 4, 5, 123456)
+    typed = spark.createDataFrame(
+        [
+            (
+                i,
+                ["plain", "don't", "a\\b"][i % 3] + str(i % 5),
+                decimal.Decimal(i) / 4,
+                datetime.date(2024, 1, 1) + datetime.timedelta(i % 9),
+                t0 + datetime.timedelta(microseconds=i),
+                [-0.0, 1e300, 0.1][i % 3] * (1 + i % 4),
+            )
+            for i in range(48)
+        ],
+        "id bigint, s string, d decimal(10,2), dt date, ts timestamp, "
+        "x double",
+    )
+    cols = ("id", "s", "d", "dt", "ts", "x")
+    probes = {
+        "id": [3, 40, 999],
+        "s": ["don't1", "a\\b2", "plain0"],
+        "d": [decimal.Decimal("0.25"), decimal.Decimal("7.50")],
+        "dt": [datetime.date(2024, 1, 3)],
+        "ts": [t0 + datetime.timedelta(microseconds=7)],
+        "x": [-0.0, 0.30000000000000004, 0.2],
+    }
+    root = str(tmp_path / "t")
+    monkeypatch.setattr(mf, "_bloom_positions", per_position)
+    mf.commit_parquet_generation(
+        spark, typed.repartition(6), root, bloom_cols=cols, bloom_bits=4096
+    )
+    full = mf.read_resolved(spark, root)
+    data_root = mf.resolve_data_root(spark, root)
+    dtypes = dict(full.dtypes)
+    old = {
+        c: mf._bloom_kept_files(spark, data_root, c, vs, dtypes)
+        for c, vs in probes.items()
+    }
+    monkeypatch.undo()
+    for c, vs in probes.items():
+        kept = mf._bloom_kept_files(spark, data_root, c, vs, dtypes)
+        assert kept == old[c] and kept, c
+        got = sorted(
+            r["id"] for r in mf.bloom_point_scan(spark, root, c, vs).collect()
+        )
+        want = sorted(
+            r["id"]
+            for r in full.where(
+                F.col(c).isin([F.lit(v).cast(dtypes[c]) for v in vs])
+            ).collect()
+        )
+        assert got == want and want, (c, got, want)
+    for bits in (4096, 1 << 33):
+        for c in cols:
+            rows = typed.select(
+                per_position(c, bits, 7).alias("a"),
+                mf._bloom_positions(c, bits, 7).alias("b"),
+            ).collect()
+            assert all(r.a == r.b for r in rows), (bits, c)
 
 
 def test_bloom_point_scan_fallbacks_and_nulls(spark, tmp_path):

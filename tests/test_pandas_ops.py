@@ -94,9 +94,7 @@ def test_cosine_pandas_udf_zero_norm_matches_jvm_twin(spark):
     from airflow_etl_minio_to_postgres_spark.functions.pandas_ops import (
         cosine_scores_pandas_udf,
     )
-    from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-        cosine_expr,
-    )
+    from tests.oracle import cosine_expr
 
     df = spark.createDataFrame(
         [(1, [0.0, 0.0]), (2, [1.0, 2.0])],

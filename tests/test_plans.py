@@ -13,10 +13,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from airflow_etl_minio_to_postgres_spark import queries as registry
-from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-    cosine_expr,
-)
 from tests.conftest import SF_SMOKE
+from tests.oracle import cosine_expr
 
 
 def _physical_plan(df) -> str:
@@ -495,12 +493,35 @@ def test_ivf_assign_is_arrow_narrow_map_no_window(spark):
     plan = _physical_plan(
         ivf_assign(emb, cents, nprobe=2, rank_col="rnk")
     )
-    assert "ArrowEvalPython" in plan
+    # the probe UDF runs once per row: no inferred size(_probes) > 0
+    # filter carries a second copy of it
+    assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan
     assert "Window" not in plan
     assert "Exchange" not in plan  # assignment itself needs no shuffle
     assert "BroadcastExchange" not in plan
     assert "Generate" in plan  # the posexplode of ranked probes
+
+
+def test_band_bucket_ops_run_key_udf_once_and_cross_per_partition(spark):
+    """knn_join and embedding_near_dup_pairs: the band-key UDF runs in
+    ONE ArrowEvalPython node (a plain posexplode of the key array would
+    let an inferred size(_bks) > 0 filter carry a second copy), and the
+    bucket kernels run in one MapInPandas pass over band-key-sorted
+    partitions, not one grouped Python call per bucket."""
+    from airflow_etl_minio_to_postgres_spark.functions.similarity import (
+        embedding_near_dup_pairs,
+        knn_join,
+    )
+
+    emb = registry.load_table(spark, "embeddings", SF_SMOKE)
+    for df in (knn_join(emb, dim=64), embedding_near_dup_pairs(emb, dim=64)):
+        plan = _physical_plan(df)
+        assert plan.count("ArrowEvalPython") == 1
+        assert "MapInPandas" in plan
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "BatchEvalPython" not in plan
+        assert plan.count("Exchange hashpartitioning(band_key") == 1
 
 
 def test_ivf_knn_join_is_cogrouped_cell_kernel(spark):
@@ -1085,3 +1106,47 @@ def test_package_builds_local_relations_one_way():
     assert hits == [
         ("session.py", "return spark.createDataFrame(table, schema)")
     ]
+
+
+def test_explain_audit_reports_udf_evaluated_twice_per_row(spark):
+    """scripts/explain_entries.py's audit: a plain posexplode of an
+    Arrow UDF's array column (the UDF copied into the inferred
+    size > 0 filter below it) is reported; the package's explode rule
+    is not, nor is a UDF pushed into both branches of a Union, where
+    each copy sees other rows."""
+    import importlib.util
+    from pathlib import Path
+
+    from airflow_etl_minio_to_postgres_spark.functions.similarity import (
+        _posexplode_once,
+        probe_cids_arrow,
+    )
+
+    root = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "explain_entries", root / "scripts" / "explain_entries.py"
+    )
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+
+    def formatted(df):
+        return spark._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+
+    emb = registry.load_table(spark, "embeddings", SF_SMOKE)
+    cents = [(0, [0.1] * 64), (1, [-0.1] * 64)]
+    probed = emb.select(
+        "vec_id", probe_cids_arrow(F.col("embedding"), cents, 2).alias("p")
+    )
+    plain = probed.select("vec_id", F.posexplode("p"))
+    (twice,) = audit.duplicated_udfs(formatted(plain)).values()
+    assert len(twice) == 2
+    once = _posexplode_once(probed, ["vec_id"], "p", "pos", "cid")
+    assert audit.duplicated_udfs(formatted(once)) == {}
+    both = probed.where(F.col("vec_id") < 5).unionByName(
+        probed.where(F.col("vec_id") > 50)
+    )
+    union = _posexplode_once(both, ["vec_id"], "p", "pos", "cid")
+    assert formatted(union).count(") ArrowEvalPython") == 2
+    assert audit.duplicated_udfs(formatted(union)) == {}

@@ -8,6 +8,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from airflow_etl_minio_to_postgres_spark.functions import similarity as sim
 
@@ -246,3 +247,154 @@ def test_single_query_forms_equal_their_batch_forms(spark, tmp_path):
         [(r.withColumn("qid", F.lit(7)), "score") for r in lists], k=4
     ).orderBy(F.col("rrf").desc(), "doc_id")
     assert _hexed(fused) == _hexed(grouped.select("doc_id", "rrf"))
+
+
+def _grouped_band_apply(df, dim, n_bands, bits, kernel, id_fields):
+    """The band-bucket form the sorted-run pass replaced, kept as the
+    reference: a plain posexplode of the key array, then one grouped
+    applyInPandas call per band bucket."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    planes = sim.hyperplanes(dim, n_bands * bits, 42)
+    keys = sim.hyperplane_band_keys_arrow(F.col("embedding"), planes, n_bands)
+    bv = df.select("vec_id", "embedding", keys.alias("_bks")).select(
+        "vec_id",
+        "embedding",
+        "_bks",
+        F.posexplode("_bks").alias("_band", "band_key"),
+    )
+    id_type = df.schema["vec_id"].dataType
+    schema = T.StructType(
+        [T.StructField(name, id_type) for name in id_fields]
+        + [T.StructField("cosine", T.DoubleType())]
+    )
+    return bv.groupBy("band_key").applyInPandas(kernel, schema=schema)
+
+
+def _band_cases(rng):
+    real = [
+        [round(float(x), 3) for x in rng.standard_normal(4)] for _ in range(14)
+    ]
+    return {
+        # 2 keys per band: buckets of ~7 rows over 2-row Arrow batches
+        "spans_batches": ([(i, v) for i, v in enumerate(real)], 2, 1),
+        # v and -v differ in every sign bit: every bucket holds one row
+        "one_row_buckets": ([(0, real[0]), (1, [-x for x in real[0]])], 2, 8),
+        "degenerate_hot": (
+            [(i, v) for i, v in enumerate(real[:5])]
+            + [
+                (5, None),
+                (6, [0.0] * 4),
+                (7, [1.0, 2.0]),
+                (8, [1.0, None, 0.0, 0.0]),
+                (9, None),
+                (10, [0.0] * 4),
+                (11, [3.0, 1.0, 2.0]),
+            ],
+            2,
+            3,
+        ),
+        "duplicate_ids": (
+            [(i // 2, v) for i, v in enumerate(real[:6])]
+            + [(0, real[0]), (1, [x + 1e-3 for x in real[0]])],
+            2,
+            2,
+        ),
+        "empty": ([], 2, 2),
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "spans_batches",
+        "one_row_buckets",
+        "degenerate_hot",
+        "duplicate_ids",
+        "empty",
+    ],
+)
+def test_sorted_run_pass_matches_grouped_reference(spark, case):
+    """Both band kernels, run once per band-key run of a sorted
+    partition (_band_bucket_apply), return exactly the rows of the
+    grouped applyInPandas form, floats as hex: a bucket spanning
+    Arrow batches, only one-row buckets, a hot bucket of NULL, ragged,
+    zero-norm and NULL-element vectors sharing the all-zero keys,
+    duplicate id values, and an empty input."""
+    from pyspark.sql import functions as F
+
+    rows, n_bands, bits = _band_cases(np.random.default_rng(3))[case]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    planes = sim.hyperplanes(4, n_bands * bits, 42)
+    keys = sim.hyperplane_band_keys_arrow(F.col("embedding"), planes, n_bands)
+    sizes = [
+        r[1]
+        for r in df.select(F.explode(keys).alias("k"))
+        .groupBy("k")
+        .count()
+        .collect()
+    ]
+    if case == "spans_batches":
+        assert max(sizes) > 2
+    if case == "one_row_buckets":
+        assert sizes and max(sizes) == 1
+    if case == "degenerate_hot":
+        assert max(sizes) >= 7  # the six degenerate rows share a key
+
+    kernels = [
+        (sim._band_knn_kernel(2, "vec_id", "embedding"), ("_qid", "_nid")),
+        (
+            sim._band_pair_drops_kernel(0.2, "vec_id", "embedding"),
+            ("id_a", "id_b"),
+        ),
+    ]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    if case == "spans_batches":
+        spark.conf.set(key, "2")
+    try:
+        for kernel, fields in kernels:
+            got = sim._band_bucket_apply(
+                df, 4, n_bands, bits, 42, "vec_id", "embedding", kernel, fields
+            )
+            ref = _grouped_band_apply(df, 4, n_bands, bits, kernel, fields)
+            want = sorted(_hexed(ref), key=repr)
+            assert sorted(_hexed(got), key=repr) == want
+            if case in ("one_row_buckets", "empty"):
+                assert want == []
+            else:
+                assert want
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_empty_probe_and_band_arrays_emit_no_rows(spark):
+    """nprobe=0 gives every vector an empty probe list: ivf_assign
+    emits no row, as a plain posexplode did.  The explode rule drops
+    NULL and empty arrays and keeps every element of the others, in
+    posexplode's order.  n_bands=0 builds no key UDF at all: it raises
+    before any plan runs."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cid long, cvec array<double>"
+    )
+    assert sim.ivf_assign(df, cents, nprobe=0, rank_col="r").collect() == []
+    assert len(sim.ivf_assign(df, cents, nprobe=2).collect()) == 6
+
+    arrs = spark.createDataFrame(
+        [(1, ["a", "b"]), (2, []), (3, None), (4, ["c"])],
+        "id long, arr array<string>",
+    )
+    got = sim._posexplode_once(arrs, ["id"], "arr", "p", "v").collect()
+    ref = arrs.select("id", F.posexplode("arr").alias("p", "v")).collect()
+    assert sorted(got) == sorted(ref) and len(got) == 3
+    with pytest.raises(ValueError):
+        sim.knn_join(df, dim=2, n_bands=0)
+    with pytest.raises(ValueError):
+        sim.embedding_near_dup_pairs(df, dim=2, n_bands=0)
