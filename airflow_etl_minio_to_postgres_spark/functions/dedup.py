@@ -112,53 +112,6 @@ def drop_exact_dups(
 # ---------------------------------------------------------------------------
 
 
-def shingles_expr(text: Column, k: int = 3) -> Column:
-    """Word ``k``-shingles of lower/trimmed text; empty array when the doc
-    has fewer than ``k`` words (guards Spark's decreasing-sequence edge)."""
-    words = words_expr(text)
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), n - k)
-
-    def shingle(i: Column) -> Column:
-        parts = [F.element_at(words, (i + j + 1).cast("int")) for j in range(k)]
-        return F.concat_ws(" ", *parts)
-
-    return F.when(n >= k, F.transform(idx, shingle)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def minhash_signature_expr(shingles: Column, num_hashes: int = 8) -> Column:
-    """Array of ``num_hashes`` min-hashes: for seed s, the lexicographic min
-    of ``sha256(s || ':' || shingle)`` hex prefixes over the shingle set."""
-
-    def one_hash(seed: int) -> Column:
-        return F.array_min(
-            F.transform(
-                shingles,
-                lambda sh: F.substring(
-                    F.sha2(F.concat_ws(":", F.lit(str(seed)), sh), 256),
-                    1,
-                    HASH_LEN,
-                ),
-            )
-        )
-
-    return F.array(*[one_hash(s) for s in range(num_hashes)])
-
-
-def add_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    shingle_k: int = 3,
-) -> DataFrame:
-    sh = shingles_expr(F.col(text_col), shingle_k)
-    return df.withColumn("shingles", sh).withColumn(
-        "minhash", minhash_signature_expr(F.col("shingles"), num_hashes)
-    )
-
-
 def band_keys_expr(minhash: Column, num_bands: int, rows_per_band: int) -> Column:
     """LSH band keys: band b hashes its signature slice into one string key.
     Docs sharing ANY band key become candidate pairs."""
@@ -190,10 +143,11 @@ def _minhash_table(
 ) -> DataFrame:
     """(id, shingles, minhash) via explode -> ONE aggregate.
 
-    Why not the pure-expression form (:func:`minhash_signature_expr`)?
-    Higher-order array functions run *interpreted* (no codegen, no common-
-    subexpression elimination), and Catalyst's projection collapse inlines
-    the shingle-building expression into every seed lambda — the text gets
+    Why explode rather than one array expression per row (``transform``
+    over the shingles, ``array_min`` of each seed's hashes)?  Higher-order
+    array functions run *interpreted* (no codegen, no common-subexpression
+    elimination), and Catalyst's projection collapse inlines the
+    shingle-building expression into every seed lambda — the text gets
     re-split O(seeds x shingle-width) times per row.  Exploding instead
     evaluates each expression exactly once per shingle.
 

@@ -90,28 +90,6 @@ def decode_image(payload: bytes) -> "np.ndarray":
     return np.asarray(img.convert("RGB"), dtype=np.uint8)
 
 
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Decode -> ``Image.resize((width, height))`` -> re-encode (PNG),
-    returning the resized payload bytes.
-
-    Same guarded-Pillow contract as :func:`decode_image`; intended to run
-    inside the same Arrow batch loop so the Python boundary is paid per
-    batch.  PNG output keeps the round-trip lossless and deterministic
-    for tests."""
-    if _PILImage is None:
-        raise NotImplementedError(
-            "Pillow is not installed in this environment; the Spark-side "
-            "plumbing (batch shape, schema) is covered by "
-            "extract_payload_features"
-        )
-    import io
-
-    img = _PILImage.open(io.BytesIO(payload)).convert("RGB")
-    out = io.BytesIO()
-    img.resize((width, height)).save(out, format="PNG")
-    return out.getvalue()
-
-
 FRAME_SAMPLE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

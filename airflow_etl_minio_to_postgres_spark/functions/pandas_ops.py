@@ -16,6 +16,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from airflow_etl_minio_to_postgres_spark.functions.similarity import (
+    cosine_vs_const_arrow,
+)
+
 
 def _n_buckets(df: DataFrame) -> int:
     """Coarse-group bucket count: a small multiple of the session's
@@ -193,41 +197,22 @@ def cosine_scores_pandas_udf(
     function.
 
     Why this shape matters: the whole Arrow batch arrives as ONE pandas
-    Series, so the math runs as a single numpy matrix-vector product per
-    batch — the 10-100x win over a row-at-a-time Python UDF the PySpark
-    docs promise, with the query vector captured in the closure (shipped
-    once per task, not per row).  For THIS particular computation the
-    pure-JVM expression twin (a zip_with + aggregate fold,
-    whole-stage codegen) is still faster and is the
-    production default; the pandas_udf form is the template for the
-    cases with no expression equivalent (a real model's scoring step, a
-    tokenizer, learned quality filters) and is oracle-gated against the
-    same SQL as the JVM twin to prove the crossing computes identically.
+    Series, so the math runs as vectorized numpy per batch — the
+    10-100x win over a row-at-a-time Python UDF the PySpark docs
+    promise, with the query vector captured in the closure (shipped
+    once per task, not per row).  The UDF is
+    ``similarity.cosine_vs_const_arrow``, the package's one cosine
+    kernel, so the scores are bit-identical to every other cosine here
+    and degrade the same way: a NULL, ragged or wrong-dimension vector
+    and a zero-norm side score NULL.  The crossing is the template for
+    the cases with no expression equivalent (a real model's scoring
+    step, a tokenizer, learned quality filters) and is oracle-gated
+    against the same SQL as the brute-force cosine top-k.
     """
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    q = np.asarray(query_vec, dtype="float64")
-    qn = float(np.sqrt(q @ q))
-
-    @F.pandas_udf("double")
-    def _cos(col: pd.Series) -> pd.Series:
-        # np.stack raises on an empty batch (Arrow may hand one over on
-        # empty partitions) — an empty Series must round-trip as such.
-        if len(col) == 0:
-            return pd.Series([], dtype="float64")
-        m = np.stack(col.to_numpy()).astype("float64")
-        norms = np.sqrt((m * m).sum(axis=1))
-        denom = norms * qn
-        ok = denom > 0
-        # Zero-norm embedding (or zero query vector): the JVM twin
-        # uses try_divide -> NULL, and DuckDB's
-        # ``/`` is NULL on zero divisors too; mask to a nullable Float64
-        # so Arrow ships a real null, not a warning-laden 0/0 NaN.
-        out = np.where(ok, (m @ q) / np.where(ok, denom, 1.0), np.nan)
-        return pd.Series(pd.array(np.where(ok, out, None), dtype="Float64"))
-
-    return df.select(F.col(id_col), _cos(F.col(vec_col)).alias("cosine"))
+    return df.select(
+        F.col(id_col),
+        cosine_vs_const_arrow(F.col(vec_col), query_vec).alias("cosine"),
+    )
 
 
 def chunk_text_udtf(
@@ -243,12 +228,12 @@ def chunk_text_udtf(
     and the scalar pandas_udf): a row fans out into a VARIABLE number of
     output rows through a generator, consumed via ``LATERAL``.
 
-    Same role as the pandas_udf cosine: the JVM expression form
-    (``chunk_text``: sequence + slice, whole-stage codegen) is the
-    production default; the UDTF form is the template for fan-outs with
-    no expression equivalent (a real tokenizer emitting chunk token
-    ids, a parser emitting AST nodes), oracle-gated against the SAME
-    SQL as the JVM twin to prove the crossing computes identically.
+    The JVM expression form (``chunk_text``: sequence + slice,
+    whole-stage codegen) is the production default; the UDTF form is
+    the template for fan-outs with no expression equivalent (a real
+    tokenizer emitting chunk token ids, a parser emitting AST nodes),
+    oracle-gated against the SAME SQL as the JVM twin to prove the
+    crossing computes identically.
 
     Tokenization parity is deliberate: ``re.split(r"\\s+", ...,
     flags=re.ASCII)`` matches Java regex ``\\s`` (ASCII-only

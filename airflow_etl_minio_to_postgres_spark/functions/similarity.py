@@ -355,14 +355,25 @@ def _ranked_cells(sims, cids):
 
 
 def _centroid_matrix(centroids):
-    """(cid, vector) list -> (cid-sorted int64 ids, float64 matrix)."""
+    """(cid, vector) list -> (cid-sorted int64 ids, float64 matrix).
+
+    The matrix takes the most common centroid dimension.  A NULL vector,
+    a NULL element, or a ragged or other-dimension vector becomes a zero
+    row: its cosine divisor is zero, so it scores NULL against every
+    vector and ranks last (:func:`_ranked_cells`, :func:`_argmax_cell`),
+    as :func:`cosine_arrow` degrades such a pair."""
+    from collections import Counter
+
     import numpy as np
 
     ordered = sorted(centroids, key=lambda c: int(c[0]))
     cids = np.asarray([int(c) for c, _ in ordered], dtype=np.int64)
-    cmat = np.asarray(
-        [[float(x) for x in v] for _, v in ordered], dtype=np.float64
-    )
+    vecs = [None if v is None or None in v else v for _, v in ordered]
+    dims = Counter(len(v) for v in vecs if v is not None).most_common(1)
+    cmat = np.zeros((len(vecs), dims[0][0] if dims else 0))
+    for i, v in enumerate(vecs):
+        if v is not None and len(v) == cmat.shape[1]:
+            cmat[i] = v
     return cids, cmat
 
 
@@ -463,11 +474,12 @@ _CLOSURE_CENTROIDS = 256
 
 def _centroid_list(
     centroids: DataFrame, cid: str = "cid", cvec: str = "cvec"
-) -> list[tuple[int, list[float]]]:
+) -> list[tuple[int, list[float] | None]]:
     """The one centroid collect of every IVF form: ``(cid, vector)``
-    pairs, n_cells x dim — metadata, the Spark MLlib KMeans pattern."""
+    pairs, n_cells x dim — metadata, the Spark MLlib KMeans pattern.  A
+    NULL vector stays None (:func:`_centroid_matrix` degrades it)."""
     return [
-        (int(r[0]), [float(x) for x in r[1]])
+        (int(r[0]), None if r[1] is None else list(r[1]))
         for r in centroids.select(cid, cvec).collect()
     ]
 
@@ -1378,91 +1390,6 @@ def rrf_fuse_grouped(
     scored = fused.select(*qcols, id_col, expr.alias("rrf"))
     return _topk(
         scored, [F.col("rrf").desc(), F.col(id_col)], k, query_id_col
-    )
-
-
-def mmr_rerank(
-    candidates: DataFrame,
-    k: int = 10,
-    lam: float = 0.5,
-    query_id_col: str = "qid",
-    id_col: str = "doc_id",
-    score_col: str = "score",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Maximal-Marginal-Relevance diversification of retrieval results
-    (Carbonell & Goldstein): greedily re-rank each query's candidate
-    list by ``lam * rel - (1 - lam) * max_{s in selected} cos(d, s)``
-    — the standard post-retrieval step that stops a RAG top-k from
-    being five paraphrases of the same passage.  ``candidates`` is a
-    per-query result table ``(query_id_col, id_col, score_col,
-    vec_col)`` — the shape the serving operators return joined back to
-    their vectors; ``lam = 1`` reproduces pure relevance order.
-
-    Shape at scale: inputs are top-N RESULT tables (≤ N rows per
-    query — result-sized, never corpus-sized), and greedy selection
-    has a loop-carried dependency (step i needs the i-1 picks) that a
-    relational form could only fake with k chained self-joins — so
-    this is a deliberate Arrow crossing: ONE ``applyInPandas`` per
-    query group, O(k·N) numpy inside the batch, plan-pinned like the
-    package's other five crossings.  Determinism: candidates are
-    canonically ordered (score desc, id) before the loop and every
-    pick's ties resolve to the first candidate in that order (higher
-    relevance, then smaller id), duplicate (query, id) rows are
-    dropped first, and a zero-norm vector similarity counts as 0.0
-    (the try_divide posture).  Returns (query_id_col, id_col,
-    score_col, mmr, rank) with rank 1..k per query."""
-    import numpy as np
-
-    in_schema = candidates.schema
-    out_schema = T.StructType(
-        [
-            in_schema[query_id_col],
-            in_schema[id_col],
-            in_schema[score_col],
-            T.StructField("mmr", T.DoubleType()),
-            T.StructField("rank", T.LongType()),
-        ]
-    )
-    kk, ll = int(k), float(lam)
-
-    def _mmr(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = (
-            # sort BEFORE dedup so the kept duplicate is deterministic
-            # (the highest-scored row per id), whatever the input order
-            pdf.sort_values([score_col, id_col], ascending=[False, True])
-            .drop_duplicates(subset=[id_col], keep="first")
-            .reset_index(drop=True)
-        )
-        vecs = np.array(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-        )
-        norms = np.sqrt(_fold(vecs, vecs))
-        rel = pdf[score_col].to_numpy(dtype=np.float64)
-        n = len(pdf)
-        picked: list[int] = []
-        picked_mmr: list[float] = []
-        max_sim = np.zeros(n)
-        avail = np.ones(n, dtype=bool)
-        while avail.any() and len(picked) < kk:
-            mmr = np.where(avail, ll * rel - (1.0 - ll) * max_sim, -np.inf)
-            best = int(np.argmax(mmr))  # first max in canonical order
-            picked.append(best)
-            picked_mmr.append(float(mmr[best]))
-            avail[best] = False
-            denom = norms * norms[best]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sim = np.where(denom > 0.0, _fold(vecs, vecs[best]) / denom, 0.0)
-            max_sim = np.maximum(max_sim, sim)
-        out = pdf.iloc[picked][[query_id_col, id_col, score_col]].copy()
-        out["mmr"] = picked_mmr
-        out["rank"] = np.arange(1, len(picked) + 1, dtype=np.int64)
-        return out
-
-    return (
-        candidates.select(query_id_col, id_col, score_col, vec_col)
-        .groupBy(query_id_col)
-        .applyInPandas(_mmr, schema=out_schema)
     )
 
 

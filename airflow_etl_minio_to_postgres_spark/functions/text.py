@@ -1364,20 +1364,3 @@ def pack_sequences(
         F.floor(start / F.lit(budget)).cast("long").alias("pack_id"),
         (start % F.lit(budget)).cast("long").alias("pack_offset"),
     )
-
-
-def add_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full stats bundle to a documents frame."""
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "token_count": token_count_expr(t),
-            "word_count": word_count_expr(t),
-            "char_count": F.length(t),
-            "punct_ratio": punct_ratio_expr(t),
-            "stopword_ratio": stopword_ratio_expr(t),
-            "quality_score": quality_score_expr(t),
-            "lang_pred": lang_id_expr(t),
-            "fingerprint": fingerprint_expr(t),
-        }
-    )

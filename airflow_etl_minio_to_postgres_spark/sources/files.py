@@ -733,19 +733,3 @@ def ingest_bronze(
     out = bronze_path(bronze_base, name)
     write_csv(df, out, mode="overwrite", single_file=False)
     return df, out
-
-
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan with SCHEMA EVOLUTION: files written under different
-    schema versions (a bronze landing zone where upstream added columns
-    over time) read as one frame with the UNION schema; files missing a
-    column surface NULL for it.
-
-    Cost note for the 100 TB posture: ``mergeSchema`` reconciles footers
-    across data files at planning time — fine for a landing zone, wrong
-    for the curated store, where the schema should be DECLARED
-    (schemas.py) so planning reads zero footers and the scan stays
-    ReadSchema-pruned.  This reader is the exploratory/bronze entry
-    point; silver and beyond go through the declared-schema catalog.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(path)

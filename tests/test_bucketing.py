@@ -1,42 +1,12 @@
-"""Bucketed co-located joins + DDL schema casting."""
+"""DDL schema casting (``operators.cleaning.apply_schema``)."""
 
 from __future__ import annotations
 
 from decimal import Decimal
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airflow_etl_minio_to_postgres_spark.operators.cleaning import apply_schema
-from airflow_etl_minio_to_postgres_spark.sources.bucketing import (
-    read_bucketed,
-    write_bucketed,
-)
-
-
-def test_bucketed_join_has_no_shuffle(spark):
-    left = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    right = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("w")
-    )
-    write_bucketed(left, "b_left", ["k"], num_buckets=8, sort_cols=["k"])
-    write_bucketed(right, "b_right", ["k"], num_buckets=8, sort_cols=["k"])
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try:
-        # Force sort-merge so the assertion is about bucketing, not broadcast.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = read_bucketed(spark, "b_left").join(
-            read_bucketed(spark, "b_right"), "k"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        # Co-located: bucket-to-bucket join, no exchange on either side.
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_apply_schema_casts_to_ddl_types(spark):

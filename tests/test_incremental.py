@@ -378,26 +378,6 @@ def test_observe_quality_rides_the_write_action(spark, tmp_path):
         assert_min_rows(obs, metrics["n_rows"] + 1)
 
 
-def test_read_parquet_evolving_unions_schema_versions(spark, tmp_path):
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        read_parquet_evolving,
-    )
-
-    path = str(tmp_path / "landing")
-    spark.createDataFrame([(1, "a")], "id long, v1 string").write.mode(
-        "append"
-    ).parquet(path)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, v1 string, v2 double"
-    ).write.mode("append").parquet(path)
-
-    got = read_parquet_evolving(spark, path)
-    assert sorted(got.columns) == ["id", "v1", "v2"]
-    rows = {r["id"]: (r["v1"], r["v2"]) for r in got.collect()}
-    # old-schema file surfaces NULL for the later-added column
-    assert rows == {1: ("a", None), 2: ("b", 9.5)}
-
-
 def test_validate_expectations_counts_and_uniqueness(spark):
     from pyspark.sql import functions as F
 
@@ -2223,18 +2203,16 @@ def test_retrieval_chain_end_to_end(spark, tmp_path):
     a retrieval team would copy first: stream-maintained sparse AND
     dense indexes -> batched serving from both on-disk layouts
     (bm25_topk_batch / ivf_topk_batch) -> per-query RRF fusion ->
-    MMR diversification of the fused list -> recall eval of the fused
-    SERVED lists against fused brute-force truth.  Pins: the chain is
-    deterministic end-to-end (two runs bit-equal), lam=1 MMR
-    reproduces pure fused order, and the measured hybrid recall stays
-    above the floor the settings were tuned for."""
+    recall eval of the fused SERVED lists against fused brute-force
+    truth.  Pins: the chain is deterministic end-to-end (two runs
+    bit-equal), and the measured hybrid recall stays above the floor
+    the settings were tuned for."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
         ann_recall_at_k,
         ivf_knn_join,
         ivf_topk_batch,
-        mmr_rerank,
         rrf_fuse_grouped,
     )
     from airflow_etl_minio_to_postgres_spark.functions.text import (
@@ -2303,17 +2281,7 @@ def test_retrieval_chain_end_to_end(spark, tmp_path):
         fused = rrf_fuse_grouped(
             [(sparse, "score"), (dense, "cosine")], k=10
         )
-        # 4. MMR diversification (vectors joined back onto the list)
-        with_vecs = fused.join(
-            embs.select(
-                F.col("vec_id").alias("doc_id"), "embedding"
-            ),
-            "doc_id",
-        )
-        diversified = mmr_rerank(
-            with_vecs, k=5, lam=0.7, score_col="rrf"
-        )
-        # 5. recall eval: fused SERVED vs fused brute-force truth
+        # 4. recall eval: fused SERVED vs fused brute-force truth
         truth_dense = ivf_knn_join(
             queries.select("qid", "qvec"), embs, cents, k=10, nprobe=8
         ).withColumnRenamed("vec_id", "doc_id")
@@ -2321,45 +2289,16 @@ def test_retrieval_chain_end_to_end(spark, tmp_path):
             [(sparse, "score"), (truth_dense, "cosine")], k=10
         )
         rec = ann_recall_at_k(fused, truth, k=10, id_col="doc_id")
-        return fused, diversified, rec
+        return fused, rec
 
-    fused1, div1, rec1 = chain()
+    fused1, rec1 = chain()
     f1 = sorted(tuple(r) for r in fused1.collect())
-    d1 = sorted(tuple(r) for r in div1.collect())
     r1 = sorted(tuple(r) for r in rec1.collect())
 
     # deterministic end-to-end: the whole chain twice, bit-equal
-    fused2, div2, rec2 = chain()
+    fused2, rec2 = chain()
     assert sorted(tuple(r) for r in fused2.collect()) == f1
-    assert sorted(tuple(r) for r in div2.collect()) == d1
     assert sorted(tuple(r) for r in rec2.collect()) == r1
-
-    # every query produced a full diversified page
-    per_q = {}
-    for qid, *_ in d1:
-        per_q[qid] = per_q.get(qid, 0) + 1
-    assert per_q == {0: 5, 1: 5, 2: 5}
-
-    # lam=1 MMR == pure fused order (rank by rrf desc, doc_id)
-    with_vecs = fused1.join(
-        embs.select(F.col("vec_id").alias("doc_id"), "embedding"),
-        "doc_id",
-    )
-    pure = mmr_rerank(with_vecs, k=5, lam=1.0, score_col="rrf")
-    want = {
-        qid: [
-            doc
-            for _, doc in sorted(
-                ((rrf, doc) for q2, doc, rrf in f1 if q2 == qid),
-                key=lambda t: (-t[0], t[1]),
-            )[:5]
-        ]
-        for qid in (0, 1, 2)
-    }
-    got = {}
-    for r in pure.orderBy("qid", "rank").collect():
-        got.setdefault(r.qid, []).append(r.doc_id)
-    assert got == want
 
     # measured hybrid recall above the tuned floor (sparse is exact,
     # dense approximation at nprobe=2 over 8 cells)

@@ -86,9 +86,11 @@ def test_backward_asof_picks_latest_at_or_before(spark):
 
 
 def test_cosine_pandas_udf_zero_norm_matches_jvm_twin(spark):
-    """A zero-norm embedding must yield NULL on both Arrow and JVM paths
-    (try_divide semantics; Spark 4 ANSI would otherwise raise
-    DIVIDE_BY_ZERO), and an empty input must not crash np.stack."""
+    """The scalar pandas_udf cosine equals the expression form bit for
+    bit, NULLs included: a zero-norm, NULL, NULL-element or
+    wrong-dimension embedding yields NULL (try_divide semantics; Spark 4
+    ANSI would otherwise raise DIVIDE_BY_ZERO; zip_with null-pads) and
+    never fails the batch, and an empty input round-trips as empty."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.pandas_ops import (
@@ -97,9 +99,16 @@ def test_cosine_pandas_udf_zero_norm_matches_jvm_twin(spark):
     from tests.oracle import cosine_expr
 
     df = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [1.0, 2.0])],
+        [
+            (1, [0.0, 0.0]),
+            (2, [1.0, 2.0]),
+            (3, [0.1, 0.7]),
+            (4, None),
+            (5, [1.0, None]),
+            (6, [1.0, 2.0, 3.0]),
+        ],
         "vec_id long, embedding array<double>",
-    )
+    ).coalesce(1)  # one Arrow batch holds every dirty row
     q = [1.0, 1.0]
     jvm = {
         r.vec_id: r.cosine
@@ -114,11 +123,11 @@ def test_cosine_pandas_udf_zero_norm_matches_jvm_twin(spark):
         r.vec_id: r.cosine
         for r in cosine_scores_pandas_udf(df, q).collect()
     }
-    assert jvm[1] is None and arrow[1] is None
-    assert abs(jvm[2] - arrow[2]) < 1e-12
+    assert [jvm[i] for i in (1, 4, 5, 6)] == [None] * 4
+    assert arrow == jvm
     # zero QUERY vector: every score is NULL, no numpy warnings/errors
     assert [
         r.cosine for r in cosine_scores_pandas_udf(df, [0.0, 0.0]).collect()
-    ] == [None, None]
+    ] == [None] * 6
     # empty relation round-trips as empty
     assert cosine_scores_pandas_udf(df.where("vec_id < 0"), q).collect() == []

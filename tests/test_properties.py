@@ -1360,81 +1360,6 @@ def test_bm25_batch_matches_python_model(spark, tmp_path, docs, queries):
 
 
 @given(
-    cands=st.lists(
-        st.tuples(
-            st.integers(0, 6),  # doc_id (dups possible)
-            st.integers(0, 9),  # relevance score (ties likely)
-            st.tuples(
-                st.integers(-3, 3), st.integers(-3, 3), st.integers(-3, 3)
-            ),  # vector (zero vectors possible)
-        ),
-        min_size=1,
-        max_size=10,
-    ),
-    k=st.integers(1, 5),
-    lam=st.sampled_from([0.0, 0.5, 1.0]),
-)
-@SPARK_SETTINGS
-def test_mmr_rerank_matches_python_model(spark, cands, k, lam):
-    """mmr_rerank vs a pure-Python greedy model over arbitrary
-    candidate sets: canonical (score desc, id) order, dedup keeps the
-    highest-scored copy, every pick maximizes lam*rel - (1-lam)*max
-    cosine to the selected set with first-in-canonical-order ties,
-    zero-norm similarity counts 0, k > n returns all rows.  Integer
-    components keep every double exact, so rank AND value agree
-    bitwise."""
-    import math
-
-    from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-        mmr_rerank,
-    )
-
-    df = spark.createDataFrame(
-        [(0, i, float(s), [float(x) for x in v]) for i, s, v in cands],
-        "qid long, doc_id long, score double, embedding array<double>",
-    )
-
-    # model: sort, dedup (keep best copy), greedy
-    rows = sorted(cands, key=lambda t: (-t[1], t[0]))
-    seen, canon = set(), []
-    for i, s, v in rows:
-        if i not in seen:
-            seen.add(i)
-            canon.append((i, float(s), [float(x) for x in v]))
-
-    def cos(a, b):
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        d = na * nb
-        return (sum(x * y for x, y in zip(a, b)) / d) if d > 0.0 else 0.0
-
-    picked, max_sim = [], [0.0] * len(canon)
-    avail = [True] * len(canon)
-    while any(avail) and len(picked) < k:
-        best, best_val = None, None
-        for j, (i, s, v) in enumerate(canon):
-            if not avail[j]:
-                continue
-            val = lam * s - (1.0 - lam) * max_sim[j]
-            if best is None or val > best_val:
-                best, best_val = j, val
-        picked.append((canon[best][0], best_val))
-        avail[best] = False
-        for j, (_, _, v) in enumerate(canon):
-            max_sim[j] = max(max_sim[j], cos(v, canon[best][2]))
-
-    got = [
-        (r.doc_id, r.mmr)
-        for r in mmr_rerank(df, k=k, lam=lam)
-        .orderBy("rank")
-        .collect()
-    ]
-    assert [i for i, _ in got] == [i for i, _ in picked]
-    for (gi, gm), (_, em) in zip(got, picked):
-        assert gm == em, (gi, gm, em)
-
-
-@given(
     ref_rows=st.lists(
         st.tuples(
             st.sampled_from(["a", "b", None]),

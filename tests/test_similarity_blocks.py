@@ -398,3 +398,42 @@ def test_empty_probe_and_band_arrays_emit_no_rows(spark):
         sim.knn_join(df, dim=2, n_bands=0)
     with pytest.raises(ValueError):
         sim.embedding_near_dup_pairs(df, dim=2, n_bands=0)
+
+
+def test_null_centroid_scores_null_and_ranks_last(spark):
+    """A NULL stub centroid (vector 3 of the corpus is NULL, n_cells=8)
+    scores NULL against every vector, as cosine_arrow degrades a pair:
+    semantic_dedup and ivf_topk return exactly their rows with that cell
+    left out of the centroids, at every nprobe.  A NULL, NULL-element,
+    ragged or other-dimension centroid ranks after every valid cell, and
+    never wins the argmax, even against negative cosines."""
+    rng = np.random.default_rng(5)
+    base = rng.standard_normal((12, 4))
+    rows = [
+        (i, None if i == 3 else (base[i % 12] + 1e-3 * (i // 12)).tolist())
+        for i in range(24)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    valid = sim._stub_centroids(df, 8, "vec_id", "embedding").where("cid != 3")
+
+    got = sorted(sim.semantic_dedup(df, n_cells=8).collect())
+    want = sorted(sim.semantic_dedup(df, centroids=valid).collect())
+    assert got == want and len(got) < len(rows)
+    for nprobe in (1, 2, 8):
+        got = _hexed(sim.ivf_topk(df, 14, n_cells=8, nprobe=nprobe))
+        want = _hexed(
+            sim.ivf_topk(df, 14, centroids=valid, nprobe=min(nprobe, 7))
+        )
+        assert sorted(got) == sorted(want) and got
+
+    cents = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, None),
+        (2, [1.0, 0.0]),
+        (3, [0.0, 1.0, 0.0]),
+        (4, [1.0, None, 0.0]),
+    ]
+    assert sim._probe_cells(cents, [[1.0, 1.0, 0.0]], 5) == [[0, 3, 1, 2, 4]]
+    cids, cmat = sim._centroid_matrix(cents)
+    va = pd.Series([np.array([-1.0, -2.0, 0.0])], dtype="object")
+    assert sim._rank_cells(va, cids, cmat, 1, sim._argmax_cell).tolist() == [[0]]
