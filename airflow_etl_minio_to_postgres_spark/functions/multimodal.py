@@ -7,13 +7,13 @@ run as Arrow-batched Python over partition-local batches (``mapInPandas``),
 so bytes never round-trip through the driver and the Python boundary is paid
 once per batch, not per row.
 
-The actual media codecs are NOT available in this environment, so
-:func:`decode_image` is a clearly-marked stub (``NotImplementedError``) and
-the tested path uses :func:`extract_payload_features` — a deterministic
-feature extractor over the payload bytes whose outputs the DuckDB oracle can
+No media codec is a dependency: every operator here reads the payload
+bytes directly.  :func:`extract_payload_features` is a deterministic
+feature extractor over those bytes whose outputs the DuckDB oracle can
 reproduce (byte length, sha256 prefix, modular fake dimensions).  The
 Spark-side plumbing — schema, batch shape, UDF signature, partitioning — is
-real and is what this module exists to pin down.
+real and is what this module exists to pin down; a real decoder slots into
+the same Arrow batch loop.
 """
 
 from __future__ import annotations
@@ -60,34 +60,6 @@ def attach_payload(
         F.encode(F.col(text_col), "UTF-8").alias("payload"),
         F.lit(mime).alias("mime"),
     )
-
-
-try:  # optional codec dependency — absent in the build sandbox
-    from PIL import Image as _PILImage
-except ImportError:  # pragma: no cover - exercised via the skip marker
-    _PILImage = None
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """Decode image bytes to an ``(H, W, C)`` uint8 array via Pillow.
-
-    Guarded optional dependency (mirroring the s3a smoke pattern): where
-    Pillow exists this is a real decode; in the codec-less sandbox it
-    raises ``NotImplementedError`` and the contract test skips.  Call it
-    from inside an Arrow batch loop (``mapInPandas``, as
-    :func:`extract_payload_features` does) — never per-row from the
-    driver.
-    """
-    if _PILImage is None:
-        raise NotImplementedError(
-            "Pillow is not installed in this environment; install pillow "
-            "for real decode, or use extract_payload_features for the "
-            "deterministic codec-free test path"
-        )
-    import io
-
-    img = _PILImage.open(io.BytesIO(payload))
-    return np.asarray(img.convert("RGB"), dtype=np.uint8)
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType(
@@ -212,8 +184,8 @@ def add_image_ahash(
     underlying bytes (re-encode, brightness change — here: the
     uppercase byte shift of the fake text payloads) barely moves the
     hash, while content-hash dedup AND shingle dedup both see a
-    completely different object.  With real images, :func:`decode_image`
-    -> grayscale resize feeds the same thresholding; this byte-domain
+    completely different object.  With real images, a decode ->
+    grayscale resize feeds the same thresholding; this byte-domain
     form is the codec-free path that runs everywhere.
 
     Expression-only — hex + substr + conv in the scan stage, no Python

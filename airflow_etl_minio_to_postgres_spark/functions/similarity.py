@@ -1651,6 +1651,9 @@ def kmeans_centroids(
     * a FIXED iteration count, not a convergence test — float
       convergence thresholds are where cross-engine drift hides.
 
+    A NULL vector or one with a NULL element takes no part: it seeds no
+    cell, sizes no ``dim`` and is no cell's member.
+
     Scale shape, per iteration: ONE corpus scan -> assignment ->
     map-side-combined groupBy collapsing to ``n_cells`` rows of ``dim``
     integer sums.  Assignment is a narrow Arrow map with zero
@@ -1662,7 +1665,10 @@ def kmeans_centroids(
     (n_cells x dim — metadata, the Spark MLlib KMeans pattern); nothing
     data-sized ever reaches the driver.  The init top-k is a
     TakeOrdered (partial per-partition top-k), not a global sort."""
-    corpus = df.select(id_col, vec_col)
+    corpus = df.select(id_col, vec_col).where(
+        F.col(vec_col).isNotNull()
+        & ~F.exists(vec_col, lambda x: x.isNull())
+    )
     if dim is None:
         probe = corpus.select(F.size(vec_col).alias("d")).first()
         if probe is None:

@@ -1188,8 +1188,9 @@ def curriculum_order(
     shuffle is one window per bucket partition (never a global total
     order).  Distinct hash domains keep the cutpoint sample and the
     intra-bucket order statistically independent.  At production scale
-    write partitioned-by-bucket with ``write_sorted_parquet`` on the
-    order key and the dataloader reads buckets sequentially."""
+    write partitioned by bucket, range-partitioned and sorted within
+    partitions on the order key, and the dataloader reads buckets
+    sequentially."""
     b = quantile_buckets_sampled(
         df,
         score,

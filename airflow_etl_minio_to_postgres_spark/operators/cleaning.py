@@ -78,19 +78,6 @@ def clean(df: DataFrame) -> DataFrame:
     return fill_nulls(clean_strings(df))
 
 
-def apply_schema(df: DataFrame, struct: T.StructType) -> DataFrame:
-    """Cast every column to its DDL-declared type, in schema order — the
-    silver/gold type boundary (reference fixes types by DDL,
-    ``dags/dag_etl_minio_to_postgres.py:296-322,413-551``; e.g. silver
-    ``list_price INTEGER`` widens to gold ``DECIMAL(10,2)``)."""
-    missing = [f.name for f in struct.fields if f.name not in df.columns]
-    if missing:
-        raise ValueError(f"apply_schema: columns missing from frame: {missing}")
-    return df.select(
-        *[F.col(f.name).cast(f.dataType) for f in struct.fields]
-    )
-
-
 def cap_events_per_user(
     df: DataFrame,
     cap: int,

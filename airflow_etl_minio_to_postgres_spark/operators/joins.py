@@ -1,10 +1,11 @@
-"""Join strategy helpers for scale: explicit skew salting.
+"""Join planning for scale: the per-key skew report.
 
 AQE's skew-join splitting (on by default, ``session.py``) handles most skew
-at runtime; :func:`salted_join` is the explicit tool for pathological hot
-keys (a handful of keys holding a large fraction of a 100 TB fact): the big
-side spreads each hot key across ``salt_buckets`` sub-keys, the small side
-replicates per bucket, so no single task owns a whole hot key.
+at runtime; the report below says which keys are hot before a join is
+salted.  The engine's one salting mechanism is
+``functions/dedup.salted_band_sides``: each hot key spreads across
+sub-keys on one side and replicates per sub-key on the other, so no
+single task owns a whole hot key.
 """
 
 from __future__ import annotations
@@ -12,53 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SALT_COL = "_salt"
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str | list[str],
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated.
-
-    The salt is derived from a hash of the big side's full row — any
-    assignment works for correctness (the join result is salt-invariant);
-    a content hash keeps runs deterministic without an RNG.  Cost: the
-    small side's shuffle volume multiplies by ``salt_buckets`` — use only
-    when the small side is genuinely small and the keys genuinely hot.
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    if SALT_COL in big.columns or SALT_COL in small.columns:
-        raise ValueError(f"column {SALT_COL!r} already present")
-    if how not in {"inner", "left", "left_outer", "leftouter", "left_semi",
-                   "leftsemi", "left_anti", "leftanti"}:
-        # right/full joins would emit one row PER REPLICA for unmatched
-        # small-side keys — semantically wrong under replication.
-        raise ValueError(
-            f"salted_join supports inner/left-family joins only, got {how!r}"
-        )
-    salted_big = big.withColumn(
-        SALT_COL,
-        F.pmod(F.hash(*[F.col(c) for c in big.columns]), F.lit(salt_buckets)),
-    )
-    replicated_small = small.withColumn(
-        SALT_COL,
-        F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
-    )
-    return salted_big.join(
-        replicated_small, on=keys + [SALT_COL], how=how
-    ).drop(SALT_COL)
-
 
 def join_key_skew_report(
     df: DataFrame, key: str, top_n: int = 10
 ) -> DataFrame:
     """"Measure, don't guess" applied to join planning: the per-key
     hot-spot report you run BEFORE deciding whether a join needs
-    :func:`salted_join` / ``salted_join_sides`` — at 100 TB a single
+    salting (``dedup.salted_band_sides``) — at 100 TB a single
     key holding 1% of a fact table turns an equi-join into one
     straggler task, and the fix (salting, AQE skew thresholds, key
     filtering) depends on knowing which keys and how hot.

@@ -127,8 +127,10 @@ def apply_cdc(
     passes through exactly one anti-join against the touched keys and a
     union with the surviving payloads — the base table is never
     shuffled beyond that single key join, and never rewritten where
-    untouched.  This is the in-engine core of MERGE INTO; pair with
-    ``sources/files.upsert_parquet`` for the storage side.
+    untouched.  This is the in-engine core of MERGE INTO; commit the
+    result as the table's next generation
+    (``sources/manifest.commit_parquet_generation``) for the storage
+    side.
 
     Contract (same family as the as-of tie rule): ``(key, seq)`` pairs
     are unique in the feed — tied sequence numbers make "latest"

@@ -1,3 +1,3 @@
-from airflow_etl_minio_to_postgres_spark.sources.catalog import load_table, load_tables
+from airflow_etl_minio_to_postgres_spark.sources.catalog import load_table
 
-__all__ = ["load_table", "load_tables"]
+__all__ = ["load_table"]

@@ -136,7 +136,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     if schema is not None:
         reader = reader.schema(schema)
     return restore_nanos_timestamps(reader.parquet(path), nanos)
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in TESTDATA_SCHEMAS}

@@ -34,7 +34,6 @@ from pyspark.sql import types as T
 
 from airflow_etl_minio_to_postgres_spark.naming import normalize_filename
 from airflow_etl_minio_to_postgres_spark.sources.manifest import (
-    _exists,
     _join,
     _list_names,
     commit_parquet_generation,
@@ -292,36 +291,6 @@ def write_parquet(
     return path
 
 
-def write_sorted_parquet(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    mode: str = "overwrite",
-    n_files: int | None = None,
-) -> str:
-    """Range-partition + sort-within-partitions parquet sink: the
-    data-skipping layout for the 100 TB store.
-
-    ``repartitionByRange(sort_cols)`` gives every output file a DISJOINT
-    value range and ``sortWithinPartitions`` orders rows inside it, so
-    parquet row-group min/max statistics become tight and non-overlapping
-    — a later ``WHERE sort_col BETWEEN ...`` scan prunes whole files and
-    row groups instead of reading everything (the same reason warehouses
-    Z-order/cluster their fact tables).  Without the sort, every file
-    spans the full value range and min/max stats prune nothing.
-    ``n_files`` overrides the range-partition count (e.g. to bound file
-    count on small dimensions); the sampled range boundaries keep output
-    files balanced even on skewed keys.
-    """
-    cols = [F.col(c) for c in sort_cols]
-    if n_files is not None:
-        ranged = df.repartitionByRange(n_files, *cols)
-    else:
-        ranged = df.repartitionByRange(*cols)
-    ranged.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
-    return path
-
-
 def zorder_value_sql(cols: list[str], bits: int = 10) -> str:
     """Morton (Z-order) curve value over ``cols`` as ONE SQL text —
     interleave bit ``i`` of column ``j`` into position ``i*len(cols)+j``
@@ -348,140 +317,27 @@ def zorder_value_sql(cols: list[str], bits: int = 10) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-def zorder_rank_buckets(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 8,
-    sample_rate: float = 0.2,
-    prefix: str = "_zb_",
-) -> tuple[DataFrame, list[str]]:
-    """Map arbitrary ORDERABLE columns (doubles, timestamps cast to
-    epoch, skewed bigints) into ``[0, 2**bits)`` rank buckets — the
-    general-input front end of :func:`write_zorder_parquet`, which
-    needs pre-bucketed non-negative ints.  A raw ``%`` bucket destroys
-    locality on skewed or continuous domains; RANK buckets (quantile
-    cutpoints) give every bucket the same row mass, which is what makes
-    the interleaved curve's hyper-rectangles equal-sized.
-
-    Cutpoints are exact percentiles of a deterministic value-hash
-    sample (``xxhash64`` of the row's zorder columns — no id column
-    needed, identical sample on any layout/rerun), estimated for ALL
-    columns in ONE sample aggregate and broadcast back; each bucket id
-    is a narrow scan-stage lookup.  ``sample_rate`` bounds percentile
-    state exactly as in ``quantile_buckets_sampled`` — at 100 TB pick
-    the rate that bounds the sample, not a fixed fraction.
-
-    Contract edge: an EMPTY sample (rate too low for the input size)
-    yields NULL cutpoints → NULL buckets → NULL curve values, which all
-    range-partition together (no crash, but no locality) — size the
-    rate to the data.
-
-    Returns ``(df + bucket columns, bucket column names)`` ready to
-    pass to :func:`write_zorder_parquet`."""
-    n_cuts = (1 << bits) - 1
-    probs = [(j + 1) / (1 << bits) for j in range(n_cuts)]
-    draw = (
-        F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(2**32)).cast(
-            "double"
-        )
-        / F.lit(float(2**32))
-    )
-    sample = df.where(draw < F.lit(float(sample_rate)))
-    cuts = sample.agg(
-        *[
-            F.percentile(
-                F.col(c).cast("double"),
-                F.array(*[F.lit(p) for p in probs]),
-            ).alias(f"_cuts_{c}")
-            for c in cols
-        ]
-    )
-    out = df.crossJoin(F.broadcast(cuts))
-    names = []
-    for c in cols:
-        bucket = F.aggregate(
-            F.col(f"_cuts_{c}"),
-            F.lit(0),
-            lambda acc, cut: acc
-            + F.when(F.col(c).cast("double") >= cut, F.lit(1)).otherwise(
-                F.lit(0)
-            ),
-        )
-        names.append(f"{prefix}{c}")
-        out = out.withColumn(f"{prefix}{c}", bucket.cast("long"))
-    return out.drop(*[f"_cuts_{c}" for c in cols]), names
-
-
-def write_zorder_parquet(
-    df: DataFrame,
-    zorder_cols: list[str],
-    path: str,
-    bits: int = 10,
-    mode: str = "overwrite",
-    n_files: int | None = None,
-    rank_bucket: bool = False,
-    sample_rate: float = 0.2,
-) -> str:
-    """Z-order clustered parquet sink — the MULTI-column data-skipping
-    layout (the Delta/Iceberg ``OPTIMIZE ZORDER BY`` pattern on plain
-    parquet).  :func:`write_sorted_parquet` makes ONE column's min/max
-    statistics tight; a 100 TB fact table is queried on several
-    (user AND time, tenant AND key), and a single-column sort leaves
-    every other column's per-file range at the full domain — zero
-    pruning.  Interleaving the columns' bits onto one space-filling
-    curve gives every output file a small HYPER-RECTANGLE of the value
-    space instead of a slab: each file's min/max stats are tight on
-    EVERY interleaved column at once, so a predicate on any of them
-    prunes files (at k files and 2 columns, per-file span shrinks
-    ~1/sqrt(k) per dimension vs 1/k on one and 1 on the other).
-
-    Same execution shape as the single-column sink: one range exchange
-    on the curve value (sampled boundaries keep files balanced even on
-    skewed curves), sort within partitions, the helper column dropped
-    before the write — the layout costs one shuffle, reads cost
-    nothing.  ``zorder_cols`` must be pre-bucketed non-negative ints
-    (see :func:`zorder_value_sql`) — or pass ``rank_bucket=True`` to
-    bucket arbitrary orderable columns through
-    :func:`zorder_rank_buckets` first (equal-mass quantile buckets, one
-    sample aggregate; the bucket helper columns never land in the
-    files)."""
-    staged = _zorder_staged(
-        df, zorder_cols, bits, n_files, rank_bucket, sample_rate
-    )
-    staged.write.mode(mode).parquet(path)
-    return path
-
-
 def _zorder_staged(
     df: DataFrame,
     zorder_cols: list[str],
     bits: int,
     n_files: int | None,
-    rank_bucket: bool,
-    sample_rate: float,
     lead: str | None = None,
 ) -> DataFrame:
     """The shared Z-order plan (one sampled range exchange on the
-    curve value, in-partition sort, helpers dropped) — identical for
-    the one-shot sink, the flat re-cluster and the per-partition
-    re-cluster, so they are value-equal by construction.  ``lead``
-    puts a partition column in front of the curve value in both the
-    range and the sort keys."""
-    helper_cols = ["_zval"]
-    zcols = list(zorder_cols)
-    if rank_bucket:
-        df, bucket_cols = zorder_rank_buckets(
-            df, zcols, bits=bits, sample_rate=sample_rate
-        )
-        zcols = bucket_cols
-        helper_cols += bucket_cols
-    zdf = df.withColumn("_zval", F.expr(zorder_value_sql(zcols, bits)))
+    curve value, in-partition sort, the curve column dropped) —
+    identical for the flat and the per-partition re-cluster, so they
+    are value-equal by construction.  ``zorder_cols`` must be
+    pre-bucketed non-negative ints (see :func:`zorder_value_sql`).
+    ``lead`` puts a partition column in front of the curve value in
+    both the range and the sort keys."""
+    zdf = df.withColumn("_zval", F.expr(zorder_value_sql(zorder_cols, bits)))
     keys = [lead, "_zval"] if lead else ["_zval"]
     if n_files is not None:
         ranged = zdf.repartitionByRange(int(n_files), *map(F.col, keys))
     else:
         ranged = zdf.repartitionByRange(*map(F.col, keys))
-    return ranged.sortWithinPartitions(*keys).drop(*helper_cols)
+    return ranged.sortWithinPartitions(*keys).drop("_zval")
 
 
 def recluster_zorder_committed(
@@ -490,8 +346,6 @@ def recluster_zorder_committed(
     zorder_cols: list[str],
     bits: int = 10,
     n_files: int | None = None,
-    rank_bucket: bool = False,
-    sample_rate: float = 0.2,
     keep_last: int = 1,
     zone_map_cols: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] = (),
@@ -502,13 +356,21 @@ def recluster_zorder_committed(
     ``OPTIMIZE ... ZORDER BY`` run on a schedule): streaming or
     incremental appends land one curve-oblivious file per batch, so
     per-file min/max spans widen back toward the full domain as
-    batches accumulate; this housekeeping pass restores the tight
-    hyper-rectangles :func:`write_zorder_parquet` produces, folding
-    the per-batch fragmentation in the same rewrite.
+    batches accumulate; this housekeeping pass restores tight
+    hyper-rectangles, folding the per-batch fragmentation in the same
+    rewrite.
 
-    Same plan as the one-shot sink (:func:`_zorder_staged`: one
-    sampled range exchange on the curve value, in-partition sort,
-    helpers dropped), committed as the next generation of ``root``
+    Interleaving the columns' bits onto one space-filling curve gives
+    every output file a small HYPER-RECTANGLE of the value space
+    instead of a slab, so each file's min/max stats are tight on EVERY
+    interleaved column at once and a predicate on any of them prunes
+    files (a single-column sort leaves every other column's per-file
+    range at the full domain).  ``zorder_cols`` must be pre-bucketed
+    non-negative ints (see :func:`zorder_value_sql`).
+
+    The plan is :func:`_zorder_staged` (one sampled range exchange on
+    the curve value, in-partition sort, the curve column dropped),
+    committed as the next generation of ``root``
     through ``sources/manifest.commit_parquet_generation``: local
     paths, ``file://`` URIs, HDFS and s3a alike, a crash at any point
     leaves the previous generation servable, and ``keep_last`` is the
@@ -561,9 +423,7 @@ def recluster_zorder_committed(
     # a missing path falls through to the parquet read, whose
     # AnalysisException is the canonical missing-input error
     df = spark.read.parquet(data_root)
-    staged = _zorder_staged(
-        df, zorder_cols, bits, n_files, rank_bucket, sample_rate
-    )
+    staged = _zorder_staged(df, zorder_cols, bits, n_files)
     guard = None
     if verify_row_count:
         expected = df.count()  # footer-metadata job over the source gen
@@ -600,8 +460,6 @@ def recluster_zorder_partitions(
     partitions: list | None = None,
     bits: int = 10,
     n_files: int | None = None,
-    rank_bucket: bool = False,
-    sample_rate: float = 0.2,
 ) -> list[str]:
     """PARTITION-SCOPED Z-order re-cluster of a hive-partitioned table
     — the true Delta ``OPTIMIZE ... WHERE`` shape:
@@ -633,8 +491,7 @@ def recluster_zorder_partitions(
     # (without it AQE coalesces a small rewrite into one file, undoing
     # the multi-file hyper-rectangle layout the pass exists to restore)
     staged = _zorder_staged(
-        df, zorder_cols, bits, n_files, rank_bucket, sample_rate,
-        lead=partition_col,
+        df, zorder_cols, bits, n_files, lead=partition_col
     )
     prefix = f"{partition_col}="
     rewritten: list[str] = []
@@ -657,57 +514,6 @@ def recluster_zorder_partitions(
     except _NothingStaged:
         return []
     return rewritten
-
-
-def upsert_parquet(
-    df: DataFrame,
-    path: str,
-    key_cols: list[str],
-) -> str:
-    """Keyed upsert into a parquet table without a lakehouse format:
-    read-modify-commit where incoming rows win on key collision, the
-    merged table committed as the next generation of ``path``
-    (``manifest.commit_parquet_generation``; readers resolve with
-    ``manifest.read_resolved``).  A restart after a crash at any point
-    re-reads the generation that is still served, so it converges.
-
-    Correct and simple at dimension scale (the medallion serving tables);
-    at fact scale use partition-scoped overwrite (``partition_by`` on write
-    + ``replaceWhere``-style pruning) or a table format with MERGE —
-    rewriting 100 TB per upsert is not a plan.
-    """
-    spark = df.sparkSession
-    data_root = resolve_data_root(spark, path)
-    merged = df
-    if _exists(spark, data_root):
-        existing = spark.read.schema(df.schema).parquet(data_root)
-        merged = existing.join(
-            df.select(*key_cols).dropDuplicates(key_cols),
-            on=key_cols,
-            how="left_anti",
-        ).unionByName(df)
-    commit_parquet_generation(spark, merged, path)
-    return path
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    schema: T.StructType | None = None,
-) -> str:
-    """Small-file compaction: rewrite a parquet table into
-    ``target_files`` files, committed as its next generation
-    (``manifest.commit_parquet_generation``; readers resolve with
-    ``manifest.read_resolved``).  Streaming/incremental appends
-    fragment locations into many tiny files; scans then pay per-file
-    open + footer costs.  Run this as housekeeping on landing zones."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(resolve_data_root(spark, path))
-    commit_parquet_generation(spark, df.coalesce(target_files), path)
-    return path
 
 
 def bronze_path(base: str, file_name: str, folder: str = "bronze-files") -> str:

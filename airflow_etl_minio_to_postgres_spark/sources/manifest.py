@@ -171,19 +171,6 @@ def _read_manifest(spark: SparkSession, root: str, seq: int) -> dict | None:
     return payload if isinstance(payload, dict) else None
 
 
-def corrupt_manifests(spark: SparkSession, root: str) -> list[int]:
-    """Sequence numbers of visible-but-unparseable manifests — the
-    residue of a publish that crashed mid-write.  Harmless to serving
-    (``latest_manifest`` skips them) but worth surfacing: the newest
-    generation they were about to publish is NOT being served.
-    ``fsck_index`` reports these."""
-    return [
-        s
-        for s in _manifest_seqs(spark, root)
-        if _read_manifest(spark, root, s) is None
-    ]
-
-
 def latest_manifest(
     spark: SparkSession, root: str
 ) -> tuple[int, dict] | None:

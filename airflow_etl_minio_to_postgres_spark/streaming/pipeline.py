@@ -459,86 +459,12 @@ def stream_stream_attribution(
     ).select("user_id", "purchase_id", "click_id")
 
 
-def incremental_silver(
-    raw_stream: DataFrame, out_path: str, checkpoint_path: str
-):
-    """Incremental medallion silver: each micro-batch of raw rows runs the
-    batch cleaning kernel (standardize + trim/lower + nullif + typed fill)
-    and appends to the silver parquet — the streaming counterpart of the
-    reference's daily re-run (``dags/dag_etl_minio_to_postgres.py:248``).
-
-    ``foreachBatch`` reuses the exact batch plan, so stream and batch silver
-    are byte-identical for the same input.
-
-    Replay safety: the checkpoint makes restarts exactly-once at the
-    batch level, but a crash BETWEEN the parquet append and the
-    checkpoint commit replays the batch — with a bare append that
-    duplicated its rows.  The sink instead writes each batch into its
-    own ``_commit_id`` partition with dynamic partition overwrite: a
-    replayed batch REWRITES exactly its own partition (same checkpoint
-    lineage + batch id → same commit id), so the table converges to the
-    exactly-once result regardless of where the crash landed.  The
-    ``_commit_id`` column doubles as per-batch lineage on read; select
-    the data columns to ignore it.  Returns the started StreamingQuery.
-    """
-    return _start_sink(
-        raw_stream, checkpoint_path, _silver_process_batch, out_path=out_path
-    )
-
-
-def _assert_not_legacy_silver(spark: SparkSession, out_path: str) -> None:
-    """Loud guard against resuming a ``_commit_id``-partitioned silver
-    stream over a pre-round-11 FLAT silver table (plain appended
-    part-files at the root): a partitioned write next to flat files
-    leaves the directory with conflicting structures — unreadable as
-    one table — and silently adds a ``_commit_id`` column for
-    downstream readers.  Same posture as the near-dup store's legacy
-    check: fail with the migration pointer, never improvise.  One
-    ``listStatus`` RPC on the session's filesystem (URI-correct, the
-    ``manifest._exists`` precedent) — negligible per-batch cost.
-    ``out_path`` is the table's resolved data root: after
-    :func:`migrate_legacy_silver` a grace window may keep the flat
-    payload at the table root, beside the generation batches land in."""
-    jvm, fs = _fs_for(spark, out_path)
-    hpath = jvm.org.apache.hadoop.fs.Path(out_path)
-    if not fs.exists(hpath):
-        return
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if status.isFile() and name.startswith("part-"):
-            raise ValueError(
-                f"silver table at {out_path!r} has flat data files at "
-                "its root (pre-round-11 appended layout) but this sink "
-                "writes _commit_id partitions; run migrate_legacy_silver "
-                "before resuming the stream"
-            )
-
-
-def _silver_process_batch(
-    batch_df: DataFrame, batch_id: int, out_path: str, token: str
-) -> None:
-    """One :func:`incremental_silver` micro-batch — module-level so the
-    replay contract (same batch twice == once) is directly testable.
-    Batches land in the table's current generation (the root itself
-    until :func:`migrate_legacy_silver` commits one), where
-    ``manifest.read_resolved`` finds them."""
-    from airflow_etl_minio_to_postgres_spark.plans.medallion import build_silver
-
-    data_root = resolve_data_root(batch_df.sparkSession, out_path)
-    _assert_not_legacy_silver(batch_df.sparkSession, data_root)
-    _write_batch_commit(
-        build_silver(batch_df), data_root, f"{token}-{batch_id}"
-    )
-
-
 def migrate_legacy_silver(spark: SparkSession, out_path: str) -> int:
-    """One-shot migration of a pre-round-11 FLAT silver table (plain
-    appended part-files) to the ``_commit_id``-partitioned replay-safe
-    layout that :func:`incremental_silver` writes — the rewrite
-    :func:`_assert_not_legacy_silver`'s error message points at,
-    mirroring :func:`migrate_legacy_rollup` /
-    :func:`migrate_legacy_near_dup_store`.  Pre-migration rows carry
-    commit id ``legacy-0`` (their batch lineage is unknowable).  The
+    """One-shot migration of a FLAT silver table (plain appended
+    part-files) to the ``_commit_id``-partitioned replay-safe layout,
+    where each micro-batch owns one ``_commit_id`` partition.
+    Pre-migration rows carry commit id ``legacy-0`` (their batch
+    lineage is unknowable).  The
     migrated table is the table's first committed generation
     (``manifest.commit_parquet_generation``); the sink and readers
     resolve it (``manifest.read_resolved``).  Idempotent: an
@@ -618,13 +544,11 @@ def _rollup_process_batch(
     if _exists(spark, data_root):
         # Guard the storage contract BEFORE merging: reading with
         # ``schema(partial.schema)`` would silently surface NULL for
-        # any renamed/missing on-disk column (e.g. a legacy table
-        # written with double ``sum_value`` before the micro-unit
-        # migration), corrupting merged totals forever.  Fail loudly
-        # instead; migration of legacy tables is a deliberate
-        # one-time rewrite, not something a sink should improvise
-        # mid-stream (round-8 advisor finding).  The committed schema
-        # comes from the manifest's type record (no footer read).
+        # any renamed/missing on-disk column (e.g. a table written
+        # with a double ``sum_value``), corrupting merged totals
+        # forever.  Fail loudly instead; a sink never improvises a
+        # conversion mid-stream.  The committed schema comes from the
+        # manifest's type record (no footer read).
         on_disk = {
             f.name: f.dataType
             for f in _committed_schema(spark, data_root, payload) or ()
@@ -633,9 +557,9 @@ def _rollup_process_batch(
         if on_disk != expected:
             raise ValueError(
                 f"rollup at {out_path!r} has schema {sorted(on_disk)} "
-                f"but this writer stores {sorted(expected)} (exact "
-                "bigint micro-units since round 8); migrate the legacy "
-                "table explicitly before resuming the stream"
+                f"but this writer stores {sorted(expected)} (value "
+                "sums as exact bigint micro-units); rebuild the rollup "
+                "into a fresh path"
             )
         existing = spark.read.schema(partial.schema).parquet(data_root)
         merged = (
@@ -756,10 +680,9 @@ def near_dup_store_scan(
     band buckets that can match (``band_bucket IN (...)`` — a partition
     filter, so unprobed directories are never listed or read) and
     excluding a replaying batch's own half-committed partition.  Raises
-    loudly on a pre-partitioned legacy store (flat ``(doc_id, minhash,
+    loudly on any other layout (e.g. flat ``(doc_id, minhash,
     shingles)`` rows) — reading it as absent would silently skip the
-    cross-batch screen; migrate with
-    :func:`migrate_legacy_near_dup_store`.  Manifest-aware: after a
+    cross-batch screen.  Manifest-aware: after a
     :func:`compact_near_dup_store` commit the store lives under the
     current generation (one ``listStatus`` to resolve; a
     never-compacted store reads as before)."""
@@ -769,8 +692,8 @@ def near_dup_store_scan(
         raise ValueError(
             f"near-dup store at {store_path!r} has columns "
             f"{sorted(store.columns)} but this reader needs "
-            f"{sorted(required)} (band-partitioned layout since round "
-            "11); run migrate_legacy_near_dup_store before resuming"
+            f"{sorted(required)} (the band_bucket/_commit_id "
+            "partitioned layout); rebuild the store into a fresh path"
         )
     if exclude_commit is not None:
         store = store.where(F.col("_commit_id") != F.lit(exclude_commit))
@@ -784,8 +707,8 @@ def near_dup_store_scan(
 def _band_bucket(store_partitions: int) -> Column:
     """THE near-dup store's bucket rule over ``band_key``, as the int
     ``band_bucket`` partition value: ``pmod(xxhash64(band_key),
-    store_partitions)``.  The sink and the legacy migration write by it
-    and the store screen probes by it, so they agree by construction."""
+    store_partitions)``.  The sink writes by it and the store screen
+    probes by it, so they agree by construction."""
     return F.pmod(
         F.xxhash64(F.col("band_key")), F.lit(int(store_partitions))
     ).cast("int")
@@ -904,7 +827,7 @@ def near_dup_against_store(
     READ-ONLY by design: survivors are returned as a lazy DataFrame;
     nothing is appended to the store — growing it is the streaming
     sink's job (whose commit-id machinery makes appends replay-safe),
-    or a deliberate migrate/compact operation.  A missing or legacy
+    or a deliberate compact operation.  A missing or foreign-layout
     store raises loudly (a silently-skipped screen is the failure mode
     this family refuses); ``num_hashes``/``num_bands``/``shingle_k``
     MUST match the parameters the store was built with — signatures
@@ -1034,63 +957,6 @@ def _near_dup_process_batch(
         release_caches()
 
 
-def migrate_legacy_near_dup_store(
-    spark: SparkSession,
-    store_path: str,
-    num_bands: int = 4,
-    num_hashes: int = 8,
-    store_partitions: int = 64,
-) -> int:
-    """One-shot migration of a pre-round-11 flat signature store
-    (``(doc_id, minhash, shingles)`` rows, appended unpartitioned) to
-    the band-partitioned layout :func:`near_dup_store_scan` reads —
-    the deliberate rewrite its error message points at.  Band keys are
-    recomputed from the stored minhash signatures (the same
-    ``band_keys_expr`` the writer used), so the migrated store is
-    band-for-band identical to one written natively; migrated rows
-    carry commit id ``legacy-0``.  The migrated store is the store's
-    first committed generation (``manifest.commit_parquet_generation``),
-    which :func:`near_dup_store_scan` and the sink resolve.  Idempotent:
-    an already-migrated store is left untouched, and a restart after
-    any crash point converges to the no-crash result.  Returns the
-    number of store rows after migration."""
-    from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        band_keys_expr,
-    )
-
-    df = read_resolved(spark, store_path)
-    if "band_key" in df.columns:
-        return df.count()
-    if "minhash" not in df.columns:
-        raise ValueError(
-            f"store at {store_path!r} has columns {sorted(df.columns)}: "
-            "neither the band-partitioned nor the legacy flat layout"
-        )
-    rows_per_band = num_hashes // num_bands
-    id_col = [c for c in df.columns if c not in ("minhash", "shingles")][0]
-    migrated = (
-        df.select(
-            F.col(id_col),
-            "shingles",
-            F.explode(
-                band_keys_expr(F.col("minhash"), num_bands, rows_per_band)
-            ).alias("band_key"),
-        )
-        .withColumn("band_bucket", _band_bucket(store_partitions))
-        .withColumn("_commit_id", F.lit("legacy-0"))
-        # one writer task per bucket — without this every shuffle task
-        # writes a sliver into every bucket dir (up to shuffle_partitions
-        # x store_partitions tiny files, the fragmentation the streaming
-        # sink's own repartition exists to prevent)
-        .repartition(int(store_partitions), "band_bucket")
-    )
-    commit_parquet_generation(
-        spark, migrated, store_path,
-        partition_by=("band_bucket", "_commit_id"),
-    )
-    return read_resolved(spark, store_path).count()
-
-
 def streaming_ivf_index_upsert(
     raw_stream: DataFrame,
     centroids: DataFrame,
@@ -1116,10 +982,10 @@ def streaming_ivf_index_upsert(
     partitions.  Centroids are FROZEN for the life of the stream —
     reassigning cells would move existing vectors, which an append-only
     maintainer must not do; retrain + rebuild (``write_ivf_index``) is
-    the deliberate operation for centroid drift, exactly like the
-    rollup's legacy migration.  Per-cell file fragmentation grows one
-    file per batch; fold with ``sources/files.py compact_parquet`` per
-    cell directory (or rebuild) between cleanly-terminated runs.
+    the deliberate operation for centroid drift.  Per-cell file
+    fragmentation grows one file per batch; fold it with
+    :func:`compact_ivf_index` (or rebuild) between cleanly-terminated
+    runs.
     Returns the started StreamingQuery."""
     return _start_sink(
         raw_stream,
@@ -1361,8 +1227,8 @@ def compact_ivf_index(
     ``compact-<seq>`` commit per cell, rewriting each cell's
     one-file-per-batch fragmentation into (about) one file — the
     per-cell folding the maintainer's docstring prescribes.  The
-    ``cid`` partition level is PRESERVED (a flat ``compact_parquet``
-    over the index root would destroy the directory layout
+    ``cid`` partition level is PRESERVED (a flat rewrite of the
+    index root would destroy the directory layout
     :func:`...functions.similarity.ivf_topk_indexed` /
     ``ivf_topk_batch`` prune on), so serving reads the identical
     partition-filtered plan before and after — bit-equal results,
@@ -1477,55 +1343,14 @@ def compact_near_dup_store(
     df = spark.read.parquet(resolve_data_root(spark, store_path))
     if not {"band_key", "band_bucket", "_commit_id"} <= set(df.columns):
         raise ValueError(
-            f"store at {store_path!r} is not the band-partitioned layout "
-            "(run migrate_legacy_near_dup_store first)"
+            f"store at {store_path!r} has columns {sorted(df.columns)}, "
+            "not the band_bucket/_commit_id partitioned layout "
+            "(band_key, band_bucket, _commit_id); rebuild the store "
+            "into a fresh path"
         )
     return _fold_commits(
         spark, store_path, df, "band_bucket", compact_seq, keep_last
     )
-
-
-def migrate_legacy_rollup(spark: SparkSession, out_path: str) -> int:
-    """One-shot migration of a pre-micro-unit rollup table (double
-    ``sum_value``) to the exact bigint ``sum_value_micros`` storage
-    contract that :func:`streaming_rollup_upsert`'s schema guard
-    enforces — the deliberate rewrite the guard's error message points
-    at, instead of the sink improvising a conversion mid-stream.
-
-    Idempotent: an already-migrated table is left untouched.  The
-    conversion is ``round(sum_value * 1e6)`` — the same quantization
-    the writer applies per value, so post-migration totals merge with
-    new micro-unit partials on equal footing (legacy DOUBLE totals
-    carry whatever float error they accumulated before migration; that
-    error is frozen, not compounded, from here on).  Rollup tables are
-    dimension-scale by construction, so the read-rewrite (and the
-    returned row count) is metadata-sized work.  The migrated table is
-    the rollup's first committed generation
-    (``manifest.commit_parquet_generation``), which the sink and
-    readers resolve; a restart after any crash point converges to the
-    no-crash result.  Returns the number of rows migrated (0 when
-    already migrated)."""
-    df = read_resolved(spark, out_path)
-    names = set(df.columns)
-    if "sum_value_micros" in names:
-        return 0
-    if "sum_value" not in names:
-        raise ValueError(
-            f"rollup at {out_path!r} has columns {sorted(names)} — "
-            "neither the legacy (sum_value) nor the current "
-            "(sum_value_micros) contract; refusing to guess"
-        )
-    migrated = df.select(
-        F.col("hour").cast("timestamp").alias("hour"),
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.round(F.col("sum_value") * F.lit(1e6))
-        .cast("long")
-        .alias("sum_value_micros"),
-    )
-    n = migrated.count()
-    commit_parquet_generation(spark, migrated, out_path)
-    return n
 
 
 def run_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1634,8 +1459,8 @@ def streaming_drift_monitor(
     if _exists(spark, ref_path):
         # a restart must present the SAME frozen reference: silently
         # re-basing cutpoints makes every already-logged batch
-        # incomparable with every future one (the silver legacy-layout
-        # guard posture — fail loudly, never re-base in place).  The
+        # incomparable with every future one (the layout guards'
+        # posture — fail loudly, never re-base in place).  The
         # sidecar is bucket-count-sized (x |segments| when segmented,
         # dimension-sized by contract), so the full compare is free.
         old = sorted(
@@ -1712,9 +1537,9 @@ def compact_drift_log(
     :func:`compact_ivf_index`.  Every row keeps its ``_batch_id``
     DATA column, so :func:`drift_report` is bit-equal before and after
     (pinned in tests); the ``_ref`` sidecar rides INTO the published
-    generation (a generic ``compact_parquet`` over the root would
-    flatten the ``_commit_id`` layout AND drop the sidecar — this is
-    why the log has its own compactor).  Same run-window contract as
+    generation (a generic flat rewrite of the root would flatten the
+    ``_commit_id`` layout AND drop the sidecar — this is why the log
+    has its own compactor).  Same run-window contract as
     the other compactors: only between cleanly-terminated runs,
     because a pending replay's dynamic overwrite would duplicate
     rather than replace rows folded into the compact commit.

@@ -184,36 +184,6 @@ def test_simhash_near_dup_pairs_planted(spark):
     assert [(r["id_a"], r["id_b"], r["hamming"]) for r in pairs] == [(1, 2, 0)]
 
 
-def test_resize_image_raises_cleanly_without_pillow():
-    # Guarded optional dependency: without Pillow the codec entry points
-    # raise a clear NotImplementedError instead of an ImportError mid-job.
-    from airflow_etl_minio_to_postgres_spark.functions import multimodal
-
-    if multimodal._PILImage is not None:
-        pytest.skip("Pillow installed — covered by the round-trip test")
-    with pytest.raises(NotImplementedError, match="[Pp]illow"):
-        multimodal.decode_image(b"\x89PNG")
-
-
-def test_decode_resize_roundtrip_with_pillow():
-    # Runs wherever Pillow exists (mirrors the s3a-smoke opt-in pattern);
-    # skipped in the codec-less sandbox.
-    from airflow_etl_minio_to_postgres_spark.functions import multimodal
-
-    if multimodal._PILImage is None:
-        pytest.skip("Pillow not installed in this environment")
-    import io
-
-    img = multimodal._PILImage.new("RGB", (8, 6), (250, 10, 20))
-    buf = io.BytesIO()
-    img.save(buf, format="PNG")
-    payload = buf.getvalue()
-
-    arr = multimodal.decode_image(payload)
-    assert arr.shape == (6, 8, 3) and arr.dtype.name == "uint8"
-    assert (arr[0, 0] == (250, 10, 20)).all()
-
-
 def test_sample_frame_offsets_fanout(spark):
     from airflow_etl_minio_to_postgres_spark.functions.multimodal import (
         attach_payload,
@@ -1247,25 +1217,42 @@ def test_image_ahash_large_payload_no_overflow(spark):
 
 def test_kmeans_centroids_edge_cases(spark):
     """n_cells larger than the corpus degrades to one centroid per
-    vector; dim is inferred when omitted; an empty corpus fails loudly."""
+    vector; dim is inferred when omitted; an empty corpus fails loudly;
+    a NULL vector, or one with a NULL element, neither seeds a cell, nor
+    sizes the inferred dim, nor counts as a member."""
     import pytest
 
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
         kmeans_centroids,
     )
 
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
+    schema = "vec_id long, embedding array<double>"
+    df = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])], schema)
     got = kmeans_centroids(df, n_cells=5, n_iters=2).collect()
     assert len(got) == 2  # only as many cells as vectors exist
     assert sorted(r.n_members for r in got) == [1, 1]
     assert all(len(r.cvec) == 2 for r in got)  # dim inferred
 
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    empty = spark.createDataFrame([], schema)
     with pytest.raises(ValueError, match="empty corpus"):
         kmeans_centroids(empty, n_cells=2, n_iters=1)
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0]), (3, [1.0, 1.0])], schema
+    )
+    got = kmeans_centroids(df, n_cells=4, dim=2).collect()
+    assert len(got) == 3  # one cell per non-NULL vector
+    assert sorted(r.n_members for r in got) == [1, 1, 1]
+    assert sorted(tuple(r.cvec) for r in got) == [
+        (0.0, 1.0), (1.0, 0.0), (1.0, 1.0)
+    ]
+
+    holed = spark.createDataFrame(
+        [(0, None), (1, [None, 1.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0])], schema
+    )
+    got = kmeans_centroids(holed, n_cells=4).collect()
+    assert sorted(tuple(r.cvec) for r in got) == [(0.0, 1.0), (1.0, 0.0)]
+    assert sorted(r.n_members for r in got) == [1, 1]
 
 
 def test_temperature_mix_matches_python_model_and_flattens(spark):

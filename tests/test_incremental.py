@@ -3,9 +3,9 @@
 * streaming_rollup_upsert merges NEW micro-batched arrivals into an
   existing materialized rollup (two availableNow passes over a growing
   landing directory == one batch aggregate over everything), and
-* write_sorted_parquet produces disjoint per-file value ranges with
-  ordered row-group min/max stats — the layout that makes parquet
-  data-skipping actually skip.
+* recluster_zorder_committed gives every file tight min/max stats on
+  each Z-ordered column — the layout that makes parquet data-skipping
+  actually skip.
 """
 
 from __future__ import annotations
@@ -17,9 +17,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from airflow_etl_minio_to_postgres_spark.sources.catalog import load_table
-from airflow_etl_minio_to_postgres_spark.sources.files import (
-    write_sorted_parquet,
-)
 from airflow_etl_minio_to_postgres_spark.sources.manifest import read_resolved
 from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
     streaming_rollup_upsert,
@@ -95,47 +92,19 @@ def test_streaming_rollup_merges_under_file_uri_out_path(spark, tmp_path):
     assert len(kinds) > 1  # batch 1 groups were MERGED, not replaced
 
 
-def test_write_sorted_parquet_stats_are_disjoint_and_ordered(spark, tmp_path):
-    orders = load_table(spark, "orders", SF_SMOKE).select(
-        "o_orderkey", "o_totalprice"
-    )
-    path = str(tmp_path / "orders_sorted")
-    write_sorted_parquet(orders, path, ["o_orderkey"], n_files=4)
-
-    file_ranges = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        pf = pq.ParquetFile(f)
-        if pf.metadata.num_rows == 0:
-            continue
-        mins, maxs = [], []
-        for rg in range(pf.num_row_groups):
-            st = pf.metadata.row_group(rg).column(0).statistics
-            assert st is not None and st.has_min_max
-            mins.append(st.min)
-            maxs.append(st.max)
-        # row groups within a file are ordered (sortWithinPartitions)
-        assert mins == sorted(mins) and maxs == sorted(maxs)
-        file_ranges.append((min(mins), max(maxs)))
-    assert len(file_ranges) >= 2  # range partitioning actually split
-    file_ranges.sort()
-    for (_, hi), (lo, _) in zip(file_ranges, file_ranges[1:]):
-        assert hi < lo  # disjoint: a BETWEEN scan can prune whole files
-    # and the full key set survived the re-layout
-    total = sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in glob.glob(os.path.join(path, "*.parquet"))
-    )
-    assert total == orders.count()
-
-
-def test_write_zorder_parquet_tightens_stats_on_both_dims(spark, tmp_path):
+def test_recluster_zorder_committed_tightens_stats_on_both_dims(
+    spark, tmp_path
+):
     """The multi-column data-skipping claim, measured on the footers: a
     Z-order layout over (x, y) gives every file a tight min/max range on
     BOTH columns, where a single-column sort leaves the other column's
     per-file range at the full domain (zero pruning).  Also: the helper
     curve column never lands in the files and no row is lost."""
     from airflow_etl_minio_to_postgres_spark.sources.files import (
-        write_zorder_parquet,
+        recluster_zorder_committed,
+    )
+    from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+        resolve_data_root,
     )
 
     # full 64x64 grid, one row per cell — deterministic, uniform
@@ -160,15 +129,19 @@ def test_write_zorder_parquet_tightens_stats_on_both_dims(spark, tmp_path):
         return spans
 
     zpath = str(tmp_path / "zordered")
-    write_zorder_parquet(grid, ["x", "y"], zpath, bits=6, n_files=16)
+    grid.write.parquet(zpath)
+    recluster_zorder_committed(spark, zpath, ["x", "y"], bits=6, n_files=16)
     spath = str(tmp_path / "xsorted")
-    write_sorted_parquet(grid, spath, ["x"], n_files=16)
+    grid.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(
+        spath
+    )
 
-    back = spark.read.parquet(zpath)
+    back = read_resolved(spark, zpath)
     assert back.count() == 4096
     assert sorted(back.columns) == ["x", "y"]  # _zval dropped
 
-    zx, zy = file_spans(zpath, 0), file_spans(zpath, 1)
+    zgen = resolve_data_root(spark, zpath)
+    zx, zy = file_spans(zgen, 0), file_spans(zgen, 1)
     assert len(zx) >= 8  # the range exchange actually split
     # every file covers a hyper-rectangle: tight on BOTH dims (sampled
     # range boundaries may straddle quadrants, hence <= 40, not 16)
@@ -315,49 +288,6 @@ def test_recluster_zorder_partitions_scopes_to_touched(spark, tmp_path):
     assert sum(zx) / len(zx) <= 40 and sum(zy) / len(zy) <= 40, (zx, zy)
 
 
-def test_write_zorder_parquet_rank_bucket_handles_raw_doubles(spark, tmp_path):
-    """rank_bucket=True makes the Z-order sink work on arbitrary
-    orderable columns: two RAW uniform doubles (no pre-bucketing) still
-    land as tight hyper-rectangles on both dims, the bucket helper
-    columns never reach the files, and no row is lost."""
-    from airflow_etl_minio_to_postgres_spark.sources.files import (
-        write_zorder_parquet,
-    )
-
-    # deterministic pseudo-uniform doubles in [0, 1): hash-derived
-    df = spark.range(8192).select(
-        ((F.xxhash64("id") % 100000 + 100000) % 100000 / 100000.0).alias("a"),
-        ((F.xxhash64("id", F.lit(7)) % 100000 + 100000) % 100000 / 100000.0).alias("b"),
-    )
-    path = str(tmp_path / "zraw")
-    write_zorder_parquet(
-        df, ["a", "b"], path, bits=6, n_files=16, rank_bucket=True
-    )
-
-    back = spark.read.parquet(path)
-    assert back.count() == 8192
-    assert sorted(back.columns) == ["a", "b"]  # helpers dropped
-
-    spans = {0: [], 1: []}
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        pf = pq.ParquetFile(f)
-        if pf.metadata.num_rows == 0:
-            continue
-        for ci in (0, 1):
-            mins, maxs = [], []
-            for rg in range(pf.num_row_groups):
-                st = pf.metadata.row_group(rg).column(ci).statistics
-                assert st is not None and st.has_min_max
-                mins.append(st.min)
-                maxs.append(st.max)
-            spans[ci].append(max(maxs) - min(mins))
-    assert len(spans[0]) >= 8
-    # raw domain is ~[0,1); both dims tight per file
-    for ci in (0, 1):
-        avg = sum(spans[ci]) / len(spans[ci])
-        assert avg <= 0.65, (ci, spans[ci])
-
-
 def test_observe_quality_rides_the_write_action(spark, tmp_path):
     from airflow_etl_minio_to_postgres_spark.operators.audit import (
         assert_min_rows,
@@ -483,10 +413,10 @@ def test_validate_expectations_empty_frame_passes_with_zero_counts(spark):
 
 
 def test_streaming_rollup_refuses_legacy_schema(spark, tmp_path):
-    """Round-8 advisor finding: a rollup table written by the pre-micro-
-    unit code (double ``sum_value``) must fail loudly on resume — reading
-    it with the new schema would surface NULL micro-unit sums and corrupt
-    merged totals silently."""
+    """A rollup table with a double ``sum_value`` must fail loudly on
+    resume — reading it with the micro-unit schema would surface NULL
+    sums and corrupt merged totals silently.  The message names the
+    stored contract and the rebuild."""
     import pyspark.errors
     import pytest
 
@@ -512,7 +442,8 @@ def test_streaming_rollup_refuses_legacy_schema(spark, tmp_path):
 
     events.write.mode("append").parquet(landing)  # new arrivals
     with pytest.raises(
-        (pyspark.errors.PySparkException, Exception), match="micro-unit"
+        (pyspark.errors.PySparkException, Exception),
+        match="micro-units.*fresh path",
     ):
         _run_rollup(spark, landing, out, str(tmp_path / "ckpt2"))
 
@@ -611,68 +542,6 @@ def test_streaming_near_dup_store_check_is_engine_side(spark, tmp_path):
     assert accepted == [1]  # 2 near-dups the stored 1 — dropped
 
 
-def test_migrate_legacy_rollup_roundtrip(spark, tmp_path):
-    """The one-shot migration the guard's error message prescribes:
-    a legacy double-sum_value table converts to bigint micro-units,
-    the previously-refused stream then resumes cleanly, merged totals
-    equal the full recompute, and re-running the migration is a
-    no-op."""
-    import pytest
-
-    from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
-        migrate_legacy_rollup,
-    )
-
-    events = load_table(spark, "events", SF_SMOKE).select(
-        "ts", "event_type", "value"
-    )
-    first = events.where(F.col("event_type") != "purchase")
-    second = events.where(F.col("event_type") == "purchase")
-    landing = str(tmp_path / "landing")
-    out, ckpt = str(tmp_path / "rollup"), str(tmp_path / "ckpt")
-    first.write.mode("append").parquet(landing)
-    _run_rollup(spark, landing, out, ckpt)
-
-    # devolve the table to the LEGACY shape (double sum_value)
-    legacy = read_resolved(spark, out).select(
-        "hour", "event_type", "n_events",
-        (F.col("sum_value_micros") / 1e6).alias("sum_value"),
-    ).toPandas()
-    import shutil
-    shutil.rmtree(out)
-    spark.createDataFrame(legacy).write.parquet(out)
-
-    n = migrate_legacy_rollup(spark, out)
-    assert n == len(legacy) > 0
-    assert migrate_legacy_rollup(spark, out) == 0  # idempotent
-
-    second.write.mode("append").parquet(landing)
-    _run_rollup(spark, landing, out, ckpt)  # guard now passes
-
-    got = read_resolved(spark, out)
-    expect = events.groupBy(
-        F.date_trunc("hour", "ts").alias("hour"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(
-            F.round(F.col("value") * F.lit(1e6)).cast("long")
-        ).alias("sum_value_micros"),
-    )
-    diff = (
-        got.unionByName(expect)
-        .groupBy("hour", "event_type", "n_events", "sum_value_micros")
-        .count()
-        .where(F.col("count") != 2)
-    )
-    assert diff.count() == 0  # exact multiset match, values included
-
-    # neither contract on disk -> loud refusal
-    weird = str(tmp_path / "weird")
-    spark.range(3).write.parquet(weird)
-    with pytest.raises(ValueError, match="refusing to guess"):
-        migrate_legacy_rollup(spark, weird)
-
-
 def _near_dup_batch(spark, rows, batch_id, out, store, token="tok"):
     from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
         _near_dup_process_batch,
@@ -721,63 +590,37 @@ def test_streaming_near_dup_replay_is_idempotent(spark, tmp_path):
     assert _snapshot(spark, store, ["doc_id", "band_key"]) == before_store
 
 
-def test_incremental_silver_replay_is_idempotent(spark, tmp_path):
-    from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
-        _silver_process_batch,
-    )
+def test_migrate_legacy_silver_partitions_a_flat_table(
+    spark, tmp_path, monkeypatch
+):
+    """migrate_legacy_silver rebuilds a FLAT silver table (appended
+    part-files at the root) as the _commit_id layout: rows preserved,
+    legacy-0 lineage, idempotent.  Migrated with keep_last=2, the flat
+    payload stays at the root for one grace window while read_resolved
+    serves the migrated generation."""
+    import functools
+
+    from airflow_etl_minio_to_postgres_spark.streaming import pipeline as pl
 
     out = str(tmp_path / "silver")
-    df = spark.createDataFrame(
-        [("  House A ", "11111", 5)], "Property_Title string, zip string, HOA int"
-    )
-    _silver_process_batch(df, 0, out, "tok")
-    once = _snapshot(spark, out, ["property_title", "_commit_id"])
-    _silver_process_batch(df, 0, out, "tok")  # crash replay
-    assert _snapshot(spark, out, ["property_title", "_commit_id"]) == once
-    assert len(once) == 1
-
-
-def test_silver_legacy_layout_guard_and_migration(spark, tmp_path):
-    """A pre-round-11 FLAT silver table (appended part-files at the
-    root) must make the partitioned sink fail LOUDLY — a partitioned
-    write next to flat files leaves conflicting directory structures —
-    and migrate_legacy_silver must rebuild the _commit_id layout so the
-    stream can resume (rows preserved, legacy-0 lineage, idempotent)."""
-    import pytest
-
-    from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
-        _silver_process_batch,
-        migrate_legacy_silver,
-    )
-
-    out = str(tmp_path / "silver")
-    legacy = spark.createDataFrame(
+    spark.createDataFrame(
         [("house a", "11111", 5), ("house b", "22222", 7)],
         "property_title string, zip string, hoa int",
-    )
-    legacy.write.parquet(out)  # flat pre-round-11 layout
+    ).write.parquet(out)  # the flat layout
 
-    batch = spark.createDataFrame(
-        [("  House C ", "33333", 9)],
-        "Property_Title string, zip string, HOA int",
-    )
-    with pytest.raises(ValueError, match="migrate_legacy_silver"):
-        _silver_process_batch(batch, 0, out, "tok")
-
-    n = migrate_legacy_silver(spark, out)
-    assert n == 2
-    assert migrate_legacy_silver(spark, out) == 0  # idempotent
-    migrated = read_resolved(spark, out)
-    assert set(migrated.select("_commit_id").distinct().toPandas()["_commit_id"]) == {
-        "legacy-0"
-    }
-
-    # the sink now resumes cleanly and appends its own partition
-    _silver_process_batch(batch, 0, out, "tok")
-    after = read_resolved(spark, out)
-    assert after.count() == 3
-    commits = set(after.select("_commit_id").distinct().toPandas()["_commit_id"])
-    assert commits == {"legacy-0", "tok-0"}
+    with monkeypatch.context() as m:
+        m.setattr(
+            pl,
+            "commit_parquet_generation",
+            functools.partial(pl.commit_parquet_generation, keep_last=2),
+        )
+        assert pl.migrate_legacy_silver(spark, out) == 2
+    assert any(n.startswith("part-") for n in os.listdir(out))
+    assert pl.migrate_legacy_silver(spark, out) == 0  # idempotent
+    assert _snapshot(spark, out, ["property_title", "_commit_id"]) == [
+        ("house a", "legacy-0"),
+        ("house b", "legacy-0"),
+    ]
 
 
 def test_streaming_rollup_replay_is_a_noop(spark, tmp_path):
@@ -875,46 +718,33 @@ def test_near_dup_store_scan_is_partition_pruned(spark, tmp_path):
     assert near_dup_store_scan(spark, store, None, "tok-0").count() == 0
 
 
-def test_near_dup_legacy_store_guard_and_migration(spark, tmp_path):
-    """A pre-round-11 flat store must fail LOUDLY (silently treating it
-    as unreadable would skip the cross-batch screen — recall loss), and
-    migrate_legacy_near_dup_store must rebuild the banded layout so the
-    screen still drops near-dups of legacy-accepted docs."""
+def test_near_dup_store_readers_refuse_a_flat_layout(spark, tmp_path):
+    """A flat ``(doc_id, minhash, shingles)`` store must fail LOUDLY in
+    the screen's scan and in the compactor (silently treating it as
+    unreadable would skip the cross-batch screen — recall loss); both
+    messages name the expected layout and the rebuild."""
     import pytest
 
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
         _minhash_table,
     )
     from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
-        migrate_legacy_near_dup_store,
+        compact_near_dup_store,
         near_dup_store_scan,
     )
 
-    out, store = str(tmp_path / "out"), str(tmp_path / "store")
-    t = "the quick brown fox jumps over the lazy dog tonight"
-    legacy = spark.createDataFrame(
-        [(1, t)], "doc_id long, text string"
+    store = str(tmp_path / "store")
+    flat = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog tonight")],
+        "doc_id long, text string",
     )
-    _minhash_table(legacy, "text", "doc_id", 8, 3).write.parquet(store)
+    _minhash_table(flat, "text", "doc_id", 8, 3).write.parquet(store)
 
-    with pytest.raises(ValueError, match="migrate_legacy_near_dup_store"):
+    expected = "band_bucket/_commit_id partitioned layout.*fresh path"
+    with pytest.raises(ValueError, match=expected):
         near_dup_store_scan(spark, store)
-
-    n = migrate_legacy_near_dup_store(spark, store, store_partitions=8)
-    assert n == 4  # one row per band
-    assert migrate_legacy_near_dup_store(spark, store, store_partitions=8) == 4
-
-    # a near-dup of the legacy-accepted doc is still dropped
-    _near_dup_batch(
-        spark,
-        [(8, "fresh unrelated training data docs"), (9, t + " extra")],
-        0,
-        out,
-        store,
-    )
-    assert [
-        r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()
-    ] == [8]
+    with pytest.raises(ValueError, match=expected):
+        compact_near_dup_store(spark, store)
 
 
 def test_compact_near_dup_store_preserves_screen_and_merges_files(
@@ -1358,75 +1188,20 @@ def test_inverted_index_refused_merge_writes_no_postings(spark, tmp_path):
     )
 
 
-def test_silver_migrated_under_grace_window_resumes_into_generation(
-    spark, tmp_path, monkeypatch
-):
-    """A legacy silver table migrated with keep_last=2 keeps its flat
-    payload at the root for one grace window.  The resumed sink must
-    resolve the migrated generation: the legacy guard does not trip on
-    the retained payload, the batch lands in the generation (beside
-    the flat files no resolving reader would see it), and read_resolved
-    serves every row."""
-    import functools
-
-    from airflow_etl_minio_to_postgres_spark.streaming import pipeline as pl
-
-    out = str(tmp_path / "silver")
-    spark.createDataFrame(
-        [("house a", "11111", 5), ("house b", "22222", 7)],
-        "property_title string, zip string, hoa int",
-    ).write.parquet(out)
-    with monkeypatch.context() as m:
-        m.setattr(
-            pl,
-            "commit_parquet_generation",
-            functools.partial(pl.commit_parquet_generation, keep_last=2),
-        )
-        assert pl.migrate_legacy_silver(spark, out) == 2
-    assert any(n.startswith("part-") for n in os.listdir(out))
-
-    batch = spark.createDataFrame(
-        [("  House C ", "33333", 9)],
-        "Property_Title string, zip string, HOA int",
-    )
-    pl._silver_process_batch(batch, 0, out, "tok")
-    got = read_resolved(spark, out)
-    assert sorted(
-        (r.property_title, r._commit_id)
-        for r in got.select("property_title", "_commit_id").collect()
-    ) == [("house a", "legacy-0"), ("house b", "legacy-0"), ("house c", "tok-0")]
-
-
 def test_in_place_writers_run_on_file_uris(spark, tmp_path):
     """Every in-place writer commits through the filesystem of its own
     path, so each runs on a file:// URI as on a local path (the rollup
     sink, the index stats merge and the flat recluster have their own
     URI tests)."""
-    from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        _minhash_table,
-    )
     from airflow_etl_minio_to_postgres_spark.sources.files import (
-        compact_parquet,
         recluster_zorder_partitions,
-        upsert_parquet,
     )
     from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
-        migrate_legacy_near_dup_store,
-        migrate_legacy_rollup,
         migrate_legacy_silver,
     )
 
     def uri(name):
         return "file://" + str(tmp_path / name)
-
-    dim = uri("dim")
-    upsert_parquet(
-        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
-        dim, ["k"],
-    )
-    upsert_parquet(spark.createDataFrame([(2, "B")], "k int, v string"), dim, ["k"])
-    compact_parquet(spark, dim, target_files=1)
-    assert _snapshot(spark, dim, ["k", "v"]) == [(1, "a"), (2, "B")]
 
     fact = uri("fact")
     spark.createDataFrame(
@@ -1443,24 +1218,6 @@ def test_in_place_writers_run_on_file_uris(spark, tmp_path):
     ).write.parquet(silver)
     assert migrate_legacy_silver(spark, silver) == 1
     assert _snapshot(spark, silver, ["_commit_id"]) == [("legacy-0",)]
-
-    rollup = uri("rollup")
-    spark.sql(
-        "SELECT TIMESTAMP'2024-01-01 10:00:00' AS hour, 'view' AS event_type,"
-        " CAST(3 AS BIGINT) AS n_events, 4.5D AS sum_value"
-    ).write.parquet(rollup)
-    assert migrate_legacy_rollup(spark, rollup) == 1
-    assert _snapshot(spark, rollup, ["sum_value_micros"]) == [(4_500_000,)]
-
-    store = uri("store")
-    _minhash_table(
-        spark.createDataFrame(
-            [(1, "the quick brown fox jumps over the lazy dog")],
-            "doc_id long, text string",
-        ),
-        "text", "doc_id", 8, 3,
-    ).write.parquet(store)
-    assert migrate_legacy_near_dup_store(spark, store, store_partitions=8) == 4
 
 
 def test_compact_inverted_index_merges_files_and_serves_bit_equal(
@@ -1738,7 +1495,7 @@ def test_streaming_drift_monitor_matches_batch_psi(spark, tmp_path):
         assert got_cum[b] == want, f"cumulative batch {b}"
 
     # compaction: one commit, fewer files, sidecar carried, report
-    # bit-equal (a generic compact_parquet would destroy both)
+    # bit-equal (a generic flat rewrite would destroy both)
     import glob as _glob
 
     from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (

@@ -1,13 +1,13 @@
-"""The package's surface is its used surface.
+"""The package's surface is its called surface.
 
 Two static checks over the package source (no Spark session):
 
-* every public top-level ``def`` / ``class`` of the package is
-  referenced outside ``tests/`` — in the package itself, the benchmark
-  (``perfbench/``, ``bench.py``), ``scripts/`` or the driver contract
-  (``__spark_entry__.py``).  A function only tests use is test-only
-  code; it belongs in ``tests/`` or nowhere.  The one exception is the
-  reference pipeline's own surface, kept for parity with it;
+* every top-level ``def`` / ``class`` of the package, public or
+  private, has a code caller outside ``tests/`` — in the package
+  itself, the benchmark (``perfbench/``, ``bench.py``), ``scripts/`` or
+  the driver contract (``__spark_entry__.py``).  A definition only
+  tests run is test-only code; it belongs in ``tests/`` or nowhere.
+  The few exceptions are listed, each with its reason, in ``UNCALLED``;
 * the package computes no numpy dot product outside ``_fold``: no
   matmul operator, ``np.dot``, ``np.einsum`` or ``np.linalg``.  Their
   summation order is unspecified, so one of them would break the
@@ -17,18 +17,41 @@ Two static checks over the package source (no Spark session):
 from __future__ import annotations
 
 import ast
-import re
+from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "airflow_etl_minio_to_postgres_spark"
 
-# Public functions kept without a caller because they mirror the
-# reference ETL's surface: its ``re_order_df``, its target-table dedup
-# and its DB-API (psycopg2-style) JDBC sink.
-REFERENCE_SURFACE = frozenset(
-    {"reorder_first", "unique_targets", "dbapi_over_jvm"}
+_REFERENCE_DDL = (
+    "mirrors the reference's S6 postgres_table_creation "
+    "(dags/dag_etl_minio_to_postgres.py:110-121)"
 )
+
+# Definitions kept without a code caller: ``<module path>:<name>`` ->
+# why.  Each must still be a definition without a caller.
+UNCALLED = {
+    "operators/normalize.py:reorder_first": "mirrors the reference's re_order_df",
+    "operators/normalize.py:unique_targets": (
+        "mirrors the reference's target-table dedup"
+    ),
+    "sources/jdbc.py:dbapi_over_jvm": (
+        "mirrors the reference's DB-API (psycopg2-style) JDBC sink"
+    ),
+    "sources/jdbc.py:create_schema_sql": _REFERENCE_DDL,
+    "sources/jdbc.py:create_table_sql": _REFERENCE_DDL,
+    "sources/jdbc.py:execute_ddl": _REFERENCE_DDL,
+    "streaming/pipeline.py:compact_near_dup_store": (
+        "RUNBOOK section 5: the one maintenance step of the "
+        "streaming_near_dup_dedup sink"
+    ),
+    "streaming/pipeline.py:compact_drift_log": (
+        "RUNBOOK section 5: the one maintenance step of the "
+        "streaming_drift_monitor sink"
+    ),
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _sources(root: Path) -> list[Path]:
@@ -49,41 +72,58 @@ def _caller_files() -> list[Path]:
     ]
 
 
-def _public_defs() -> dict[str, Path]:
-    defs = {}
-    for path in _sources(PACKAGE):
-        for node in ast.parse(path.read_text()).body:
-            if isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) and not node.name.startswith("_"):
-                defs[node.name] = path
-    return defs
+def _loaded_names(node: ast.AST) -> set[str]:
+    """Names a statement reads as code: ``name`` and ``x.name`` loads.
+    Docstrings, messages, ``__all__`` strings and imports are not
+    loads, so they do not count."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+            out.add(n.attr)
+    return out
+
+
+def _registered(node: ast.AST) -> bool:
+    """Decorated with ``@register``: the registry the driver runs calls
+    it."""
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if isinstance(f, ast.Name) and f.id == "register":
+            return True
+    return False
+
+
+def _uncalled_definitions() -> list[str]:
+    """``<module path>:<name>`` of every top-level package definition
+    with no load outside its own body and no registering decorator."""
+    sites = defaultdict(set)  # name -> {(file, top-level statement index)}
+    defs = []
+    for path in _caller_files():
+        for i, stmt in enumerate(ast.parse(path.read_text()).body):
+            for name in _loaded_names(stmt):
+                sites[name].add((path, i))
+            if path.is_relative_to(PACKAGE) and isinstance(stmt, _DEFS):
+                defs.append((path, i, stmt))
+    return sorted(
+        f"{path.relative_to(PACKAGE)}:{stmt.name}"
+        for path, i, stmt in defs
+        if not _registered(stmt) and not sites[stmt.name] - {(path, i)}
+    )
 
 
 def test_every_public_definition_is_referenced_outside_tests():
-    """A reference is the name as a whole word anywhere in a caller file
-    except on its own ``def`` / ``class`` line: a call, an import, a
-    registry entry's name, or a cross-reference in another definition's
-    docs or messages."""
-    defs = _public_defs()
-    words = re.compile(r"\b(" + "|".join(map(re.escape, defs)) + r")\b")
-    own = re.compile(r"^\s*(?:async\s+)?(?:def|class)\s+(\w+)")
-    refs = set()
-    for path in _caller_files():
-        for line in path.read_text().splitlines():
-            found = set(words.findall(line))
-            m = own.match(line)
-            if m is not None:
-                found.discard(m.group(1))
-            refs |= found
-    orphans = sorted(
-        f"{path.relative_to(ROOT)}:{name}"
-        for name, path in defs.items()
-        if name not in refs and name not in REFERENCE_SURFACE
+    """Public and private definitions alike: a reference is a code load
+    of the name outside the definition's own body."""
+    uncalled = _uncalled_definitions()
+    orphans = [d for d in uncalled if d not in UNCALLED]
+    assert not orphans, "no code caller outside tests/:\n" + "\n".join(
+        orphans
     )
-    assert orphans == [], orphans
-    # every exception is still a real package definition
-    assert REFERENCE_SURFACE <= set(defs)
+    # every exception is still a definition without a caller
+    stale = sorted(set(UNCALLED) - set(uncalled))
+    assert not stale, "listed in UNCALLED but called:\n" + "\n".join(stale)
 
 
 def _numpy_dot_sites(tree: ast.Module) -> list[int]:

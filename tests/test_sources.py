@@ -28,8 +28,8 @@ from airflow_etl_minio_to_postgres_spark.sources.jdbc import (
     write_options,
 )
 from airflow_etl_minio_to_postgres_spark.sources.manifest import (
+    commit_parquet_generation,
     read_resolved,
-    resolve_data_root,
 )
 
 CFG = JdbcConfig(url="jdbc:postgresql://db:5432/gold", user="u", password="p")
@@ -273,32 +273,6 @@ def test_execute_ddl_single_txn():
     assert committed == [True] and closed == [True]
 
 
-def test_upsert_parquet(spark, tmp_path):
-    from airflow_etl_minio_to_postgres_spark.sources.files import upsert_parquet
-
-    path = str(tmp_path / "dim")
-    base = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    upsert_parquet(base, path, ["k"])
-    update = spark.createDataFrame([(2, "B2"), (3, "c")], ["k", "v"])
-    upsert_parquet(update, path, ["k"])
-    got = {r["k"]: r["v"] for r in read_resolved(spark, path).collect()}
-    assert got == {1: "a", 2: "B2", 3: "c"}  # incoming wins, others kept
-
-
-def test_compact_parquet(spark, tmp_path):
-    from airflow_etl_minio_to_postgres_spark.sources.files import compact_parquet
-
-    path = str(tmp_path / "frag")
-    for i in range(5):  # five appends -> many small files
-        spark.createDataFrame([(i,)], ["x"]).write.mode("append").parquet(path)
-    import glob
-    assert len(glob.glob(path + "/*.parquet")) >= 5
-    compact_parquet(spark, path, target_files=1)
-    gen = resolve_data_root(spark, path)
-    assert len(glob.glob(gen + "/*.parquet")) == 1
-    assert sorted(r["x"] for r in read_resolved(spark, path).collect()) == [0, 1, 2, 3, 4]
-
-
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, "b")], ["v", "kind"]
@@ -311,14 +285,15 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
 
 
 def test_rewrite_leaves_no_sibling_dirs(spark, tmp_path):
-    """Crash-safe rewrite: a successful upsert commits inside the table
-    directory and leaves nothing beside it, and the data is intact."""
-    from airflow_etl_minio_to_postgres_spark.sources.files import upsert_parquet
-
+    """Crash-safe rewrite: each committed generation lands inside the
+    table directory and leaves nothing beside it, and the data is
+    intact."""
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    upsert_parquet(df, path, ["k"])
-    upsert_parquet(spark.createDataFrame([(2, "B")], ["k", "v"]), path, ["k"])
+    commit_parquet_generation(spark, df, path)
+    commit_parquet_generation(
+        spark, spark.createDataFrame([(1, "a"), (2, "B")], ["k", "v"]), path
+    )
     got = {tuple(r) for r in read_resolved(spark, path).collect()}
     assert got == {(1, "a"), (2, "B")}
     siblings = sorted(p.name for p in tmp_path.iterdir())

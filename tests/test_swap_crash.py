@@ -118,9 +118,10 @@ def _rows(spark, path):
 def test_upsert_restart_after_any_crash_keeps_every_row(
     spark, monkeypatch, tmp_path
 ):
-    """A crash between moving the table aside and promoting the staged
-    copy used to make the restarted upsert treat the table as missing,
-    write only the incoming rows and delete the aside."""
+    """A keyed upsert (served rows anti-joined on the incoming keys,
+    unioned with the incoming rows) committed as the next generation:
+    the restarted upsert re-reads whichever generation the crash left
+    served, so it never treats the table as missing and loses rows."""
     work = str(tmp_path / "w")
     path = os.path.join(work, "t")
     spark.createDataFrame(
@@ -133,7 +134,13 @@ def test_upsert_restart_after_any_crash_keeps_every_row(
         assert os.listdir(work) == ["t"]
 
     def op():
-        sf.upsert_parquet(update, path, ["k"])
+        served = spark.read.schema(update.schema).parquet(
+            resolve_data_root(spark, path)
+        )
+        merged = served.join(
+            update.select("k"), on="k", how="left_anti"
+        ).unionByName(update)
+        mf.commit_parquet_generation(spark, merged, path)
 
     n = _every_crash_point(monkeypatch, work, op, check)
     assert n == 2  # generation staged; published, not yet collected
