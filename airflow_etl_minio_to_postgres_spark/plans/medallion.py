@@ -224,7 +224,7 @@ def write_medallion(
         audited, obs = observe_quality(
             df, f"{name}_audit", audit_null_cols.get(name)
         )
-        def _gate() -> None:
+        def _gate(_written: str) -> None:
             # The one QA gate for both paths.  On the committed path
             # it runs as pre_publish_validate — after the staged write
             # (obs has resolved) but before the manifest publish + GC,
@@ -248,7 +248,7 @@ def write_medallion(
             )
             return path
         out = write_parquet(audited, path, mode)
-        _gate()
+        _gate(out)
         return out
 
     paths["silver"] = _write("silver", result.silver, f"{base_path}/silver")

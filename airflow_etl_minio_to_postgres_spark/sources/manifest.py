@@ -1108,20 +1108,17 @@ def commit_parquet_generation(
     and NOTHING changed from a reader's point of view — the previous
     snapshot keeps serving and retention never ran, so a
     below-quality run can neither become the serving table nor
-    collect its predecessor.  Because any observation attached to
-    the frame (``observe_quality``) resolves during the staged
-    write's scan, a zero-arg hook can gate on observed metrics with
-    zero extra passes (this is ``write_medallion``'s ``min_rows``
-    path).  A hook that accepts one positional argument instead
-    receives the STAGED GENERATION PATH, enabling output-aware
-    validation — count or constraint-check what was actually written
-    (parquet counts are footer-metadata jobs) rather than re-deriving
-    it from the frame (``recluster_zorder_committed``'s row-count
-    guard; ``files.recluster_zorder_partitions`` uses the path to
-    carry the partition directories its write did not stage).  The
-    call shape is decided by signature inspection, never
-    by catching ``TypeError`` (which would swallow a TypeError raised
-    INSIDE the hook and mask the validation).  Returns the committed
+    collect its predecessor.  The hook is called with the STAGED
+    GENERATION PATH, enabling output-aware validation — count or
+    constraint-check what was actually written (parquet counts are
+    footer-metadata jobs) rather than re-deriving it from the frame
+    (``recluster_zorder_committed``'s row-count guard;
+    ``files.recluster_zorder_partitions`` uses the path to carry the
+    partition directories its write did not stage).  Because any
+    observation attached to the frame (``observe_quality``) resolves
+    during the staged write's scan, a hook may also ignore the path
+    and gate on observed metrics with zero extra passes (this is
+    ``write_medallion``'s ``min_rows`` path).  Returns the committed
     sequence number."""
     for name in extra_files or {}:
         if not name.startswith(("_", ".")):
@@ -1129,24 +1126,6 @@ def commit_parquet_generation(
                 f"extra file {name!r} must start with '_' or '.' so the "
                 "parquet reader ignores it"
             )
-    validate_takes_path = False
-    if pre_publish_validate is not None:
-        # Decide the hook's call shape UP FRONT (an uninspectable
-        # callable fails here, before any write — not after staging a
-        # generation it would then orphan).
-        import inspect
-
-        validate_takes_path = any(
-            p.kind
-            in (
-                inspect.Parameter.POSITIONAL_ONLY,
-                inspect.Parameter.POSITIONAL_OR_KEYWORD,
-                inspect.Parameter.VAR_POSITIONAL,
-            )
-            for p in inspect.signature(
-                pre_publish_validate
-            ).parameters.values()
-        )
     data_root, payload = _current_generation(spark, root)
     prev_cols: set = set()
     # a predecessor prefix that is gone (GC'd out from under a stale
@@ -1221,10 +1200,7 @@ def commit_parquet_generation(
         _write_text(spark, _join(root, gen, name), text)
     if pre_publish_validate is not None:
         try:
-            if validate_takes_path:
-                pre_publish_validate(_join(root, gen))
-            else:
-                pre_publish_validate()
+            pre_publish_validate(_join(root, gen))
         except BaseException:
             # Validation refused the staged generation: delete it so a
             # deliberate rejection leaves no orphan debt (a CRASH here

@@ -1,12 +1,17 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline engine queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line.
+``local[$SPARK_GRAFT_CPUS]`` and prints two JSON lines: a short summary,
+then the full per-query contract line.
 
-Each query is materialized via a count-collect of the full result (the
-driver-facing action that forces every operator in the plan) and timed
-wall-clock.  A warmup query amortizes JVM/session startup out of the
-per-query numbers; total session+warmup time is reported separately.
+Each query is materialized via a noop write of the full result (the
+action that forces every operator in the plan) and timed wall-clock.  A
+warmup query amortizes JVM/session startup out of the per-query numbers;
+total session+warmup time is reported separately.
+
+Every timed entry also runs inside a ``perfbench/spans.py`` span, and its
+layers (build vs. materialize time, jobs, tasks, executor CPU, shuffle,
+spill, Python-boundary figures) go to the ``bench_layers.json`` sidecar.
 """
 
 from __future__ import annotations
@@ -16,10 +21,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from airflow_etl_minio_to_postgres_spark import queries as registry
 from airflow_etl_minio_to_postgres_spark.session import get_spark
+from perfbench.spans import Tracer
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -32,15 +39,51 @@ def sf_from_dir(d: str) -> float:
         return -1.0
 
 
+def materialize(df) -> None:
+    # Full computation, no driver-side row transfer — the cluster-honest
+    # way to time a query (collect() measures the driver pipe instead).
+    df.write.format("noop").mode("overwrite").save()
+
+
+def measure(
+    spark, tracer: Tracer, name: str, fn, sf_dir: str
+) -> tuple[float, dict]:
+    """Time one registry entry: ``materialize(fn(spark, sf_dir))`` under
+    ``perf_counter``, with one more clock read between the build and the
+    write.  The entry's span encloses the timed region, and its counters
+    are read after the region closes: the status stores keep only the
+    last 1000 jobs, fewer than one suite runs.  Returns the timed wall
+    and the entry's layers."""
+    with tracer.span(name):
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        materialize(df)
+        t2 = time.perf_counter()
+    tracer.resolve()
+    layers = {
+        "build_s": t1 - t0,
+        "materialize_s": t2 - t1,
+        **tracer.spans[-1].counters,
+    }
+    return t2 - t0, {k: round(v, 6) for k, v in layers.items()}
+
+
+def write_sidecar(name: str, text: str) -> None:
+    """Harnesses that read stdout through a bounded tail have cut the
+    full line mid-JSON before; the file keeps it machine-readable."""
+    path = os.path.join(HERE, name)
+    try:
+        with open(path, "w") as fh:
+            fh.write(text + "\n")
+    except OSError as exc:
+        print(f"bench: could not write {path}: {exc}", file=sys.stderr)
+
+
 def main() -> None:
     t_start = time.perf_counter()
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def materialize(df) -> None:
-        # Full computation, no driver-side row transfer — the cluster-honest
-        # way to time a query (collect() measures the driver pipe instead).
-        df.write.format("noop").mode("overwrite").save()
 
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
         release_caches,
@@ -48,18 +91,13 @@ def main() -> None:
 
     all_queries = registry.queries()
     # Warmup: force session + parquet footer reads (q1), then the
-    # MinHash-LSH/graph codegen path — the first LSH-family execution
-    # in a session pays ~7 s of whole-stage-codegen JIT compilation,
-    # and alphabetical order would bill all of it to
-    # docs_canonical_per_cluster (measured: 12.9 s cold vs 5.7 s with
-    # warm codegen).  At the 100 TB target JIT compile time is noise;
-    # the suite should measure compute.  The carrier is
-    # docs_canonical_per_cluster ITSELF (round 11; previously
-    # docs_dup_clusters): the clusters entry only warms the
-    # connected-components plans, leaving the PageRank iteration plans
-    # cold — which kept docs_canonical_per_cluster the suite's
-    # noisiest entry (7.4 -> 12.1 s round-over-round on byte-identical
-    # code).  Running the superset entry warms both families.  The
+    # MinHash-LSH/graph codegen path.  The first LSH-family execution in
+    # a session pays ~7 s of whole-stage-codegen JIT, which alphabetical
+    # order would bill to docs_canonical_per_cluster (12.9 s cold vs
+    # 5.7 s warm); at scale JIT time is noise, and the suite should
+    # measure compute.  That entry is itself the carrier because it is the
+    # superset: it warms both the connected-components and the PageRank
+    # iteration plans, where docs_dup_clusters warms only the first.  The
     # warmup's persisted signature tables are released so only JIT
     # warmth carries over, never cached data.
     warmup_breakdown: dict[str, float] = {}
@@ -72,41 +110,35 @@ def main() -> None:
     release_caches()
     spark.catalog.clearCache()
     # The seven medallion_* entries are projections of ONE memoized
-    # pipeline build (queries._run_demo_medallion); alphabetical order
-    # billed the whole shared build (~4 s: surrogate-id localCheckpoint
-    # + count) to whichever medallion entry ran first
-    # (medallion_gold_hoa), which misled per-query round-over-round
-    # comparisons.  Build it in warmup — AFTER clearCache, so the
-    # memo's silver persist survives — and every medallion entry then
-    # times only its own projection, the number a user of the memoized
-    # pipeline actually experiences.
+    # pipeline build (queries._run_demo_medallion).  Alphabetical order
+    # would bill the whole shared build (~4 s) to whichever medallion
+    # entry ran first, so it is built here, after clearCache so the
+    # memo's silver persist survives, and each medallion entry times
+    # only its own projection.  The build's cost is reported as its own
+    # warmup_breakdown key.
     t_w = time.perf_counter()
     materialize(all_queries["medallion_silver"](spark, SF_DIR))
-    # r18 (VERDICT #9): the shared memoized medallion build's cost is
-    # now an explicit artifact number (below, additive key
-    # "warmup_breakdown") instead of an invisible slice of warmup_sec —
-    # the seven medallion_* entries keep timing only their projections,
-    # and round-over-round per-query comparability is untouched.
     warmup_breakdown["shared_medallion_build"] = round(
         time.perf_counter() - t_w, 4
     )
     warmup_sec = time.perf_counter() - t_start
 
+    tracer = Tracer(spark, enabled=True)
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
+    t_loop = time.perf_counter()
     for name in sorted(all_queries):
-        fn = all_queries[name]
-        t0 = time.perf_counter()
-        materialize(fn(spark, SF_DIR))
-        timings[name] = round(time.perf_counter() - t0, 4)
+        wall, layers[name] = measure(
+            spark, tracer, name, all_queries[name], SF_DIR
+        )
+        timings[name] = round(wall, 4)
+    loop_s = time.perf_counter() - t_loop
 
     total = round(sum(timings.values()), 4)
-    # Short summary line FIRST (r18, VERDICT item #2b): the driver
-    # captures stdout with a bounded tail that has truncated the full
-    # per-query line mid-JSON in past rounds (r16's prev_bench_ok=false),
-    # killing the round-over-round comparison.  This line is additive —
-    # the LAST line printed remains the full contract line with the
-    # per-query dict, unchanged — and carries the totals a truncated
-    # tail still needs.  No timing methodology changed.
+    # Short summary line first: a bounded tail of stdout has cut the full
+    # per-query line mid-JSON before, so this line carries the totals a
+    # truncated tail still needs.  The last line printed remains the full
+    # contract line.
     print(
         json.dumps(
             {
@@ -138,15 +170,14 @@ def main() -> None:
         }
     )
     print(line)
-    # Sidecar copy: the driver captures stdout with a bounded tail, which
-    # has truncated this line mid-JSON in past rounds — the file keeps the
-    # per-query timings machine-readable regardless.
-    out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out.json")
-    try:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
-    except OSError as exc:
-        print(f"bench: could not write {out_path}: {exc}", file=sys.stderr)
+    write_sidecar("bench_out.json", line)
+    write_sidecar("bench_layers.json", json.dumps(layers))
+    print(
+        f"bench: span set-up {tracer.overhead_s:.3f} s; "
+        f"{loop_s - total:.3f} s outside the timed regions, counter "
+        "reads included",
+        file=sys.stderr,
+    )
     spark.stop()
 
 

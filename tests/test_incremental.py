@@ -4315,7 +4315,9 @@ def test_pre_publish_validate_gates_before_publish_and_gc(spark, tmp_path):
     generation in the same call).  Pin: a raising hook leaves the
     previous snapshot serving with its values intact, the manifest
     sequence unchanged, and NO staged orphan; a passing hook commits
-    normally and observed it ran post-write."""
+    normally and observed it ran post-write.  A hook that takes no
+    argument cannot be called with the staged path, so it refuses the
+    same way."""
     import pytest as _pytest
 
     from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
@@ -4324,23 +4326,27 @@ def test_pre_publish_validate_gates_before_publish_and_gc(spark, tmp_path):
     good = spark.range(10).selectExpr("id as k")
     assert mf.commit_parquet_generation(spark, good, root, keep_last=1) == 1
 
-    def refuse():
+    def refuse(_staged):
         raise ValueError("QA gate: too few rows")
 
-    with _pytest.raises(ValueError, match="QA gate"):
-        mf.commit_parquet_generation(
-            spark,
-            good.where("k < 0"),
-            root,
-            keep_last=1,
-            pre_publish_validate=refuse,
-        )
-    # previous snapshot still serving, values intact, seq unchanged
-    assert mf.latest_manifest(spark, root)[0] == 1
-    assert mf.read_resolved(spark, root).count() == 10
-    # the refused staged generation left no orphan debt
-    assert not (tmp_path / "t" / "_gen-000002").exists()
-    assert mf.fsck_index(spark, root, keep_last=1)["issues"] == []
+    for hook, error, match in (
+        (refuse, ValueError, "QA gate"),
+        (lambda: None, TypeError, "positional argument"),
+    ):
+        with _pytest.raises(error, match=match):
+            mf.commit_parquet_generation(
+                spark,
+                good.where("k < 0"),
+                root,
+                keep_last=1,
+                pre_publish_validate=hook,
+            )
+        # previous snapshot still serving, values intact, seq unchanged
+        assert mf.latest_manifest(spark, root)[0] == 1
+        assert mf.read_resolved(spark, root).count() == 10
+        # the refused staged generation left no orphan debt
+        assert not (tmp_path / "t" / "_gen-000002").exists()
+        assert mf.fsck_index(spark, root, keep_last=1)["issues"] == []
 
     ran = []
     assert (
@@ -4349,7 +4355,7 @@ def test_pre_publish_validate_gates_before_publish_and_gc(spark, tmp_path):
             good.where("k < 5"),
             root,
             keep_last=1,
-            pre_publish_validate=lambda: ran.append(True),
+            pre_publish_validate=lambda _staged: ran.append(True),
         )
         == 2
     )
@@ -4497,10 +4503,9 @@ def test_committed_property_gold_rerun_ids_deterministic(spark, tmp_path):
 
 
 def test_pre_publish_validate_receives_staged_path(spark, tmp_path):
-    """A hook that accepts one positional argument receives the STAGED
-    generation path (signature-inspected, never TypeError-caught) —
-    output-aware validation: gate on what was actually written, not on
-    a re-derivation of the frame."""
+    """The hook receives the STAGED generation path — output-aware
+    validation: gate on what was actually written, not on a
+    re-derivation of the frame."""
     import pytest as _pytest
 
     from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
@@ -4520,8 +4525,8 @@ def test_pre_publish_validate_receives_staged_path(spark, tmp_path):
     )
     assert len(seen) == 1 and seen[0].endswith("_gen-000001")
 
-    # a TypeError raised INSIDE the hook must propagate as validation
-    # failure (staged gen deleted), never be mistaken for call-shape
+    # a TypeError raised INSIDE the hook propagates as a validation
+    # failure (staged gen deleted)
     with _pytest.raises(TypeError, match="inside"):
         mf.commit_parquet_generation(
             spark,

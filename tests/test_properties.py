@@ -1563,7 +1563,7 @@ def test_manifest_protocol_crash_model(spark, tmp_path_factory, ops, keep_last):
                 n for n in _os.listdir(root) if n.startswith("_gen-")
             )
 
-            def _refuse():
+            def _refuse(_staged):
                 raise ValueError("QA gate: rejected")
 
             try:
@@ -1593,7 +1593,7 @@ def test_manifest_protocol_crash_model(spark, tmp_path_factory, ops, keep_last):
                 ids.withColumn("g", F.lit(int(seq))),
                 root,
                 keep_last=keep_last,
-                pre_publish_validate=lambda: ran.append(1),
+                pre_publish_validate=lambda _staged: ran.append(1),
             )
             assert ran == [1]
             expected_stamp = seq
