@@ -30,8 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from airflow_etl_minio_to_postgres_spark.functions.text import words_expr
-
-HASH_LEN = 16
+from airflow_etl_minio_to_postgres_spark.schemas import HASH_LEN
 
 # Signature tables persisted by near_dup_pairs / simhash_near_dup_pairs.
 # The cache outlives the returned plan (Spark's ContextCleaner only collects
@@ -224,7 +223,6 @@ def _minhash_pairs(
     num_bands: int,
     rows_per_band: int,
     threshold: float,
-    max_bucket_size: int | None,
 ) -> DataFrame:
     """THE MinHash pair path over a signature table ``(id, shingles,
     minhash)`` (:func:`_minhash_table`): band keys, the
@@ -248,7 +246,6 @@ def _minhash_pairs(
         banded,
         id_col,
         ["_bks"],
-        max_bucket_size=max_bucket_size,
         n_bands=num_bands,
         band_differs=lambda b: F.element_at(F.col("_bks_a"), b + 1)
         != F.element_at(F.col("_bks_b"), b + 1),
@@ -294,7 +291,7 @@ def near_dup_pairs(
         _minhash_table(df, text_col, id_col, num_hashes, shingle_k)
     )
     return _minhash_pairs(
-        sig, id_col, num_bands, num_hashes // num_bands, threshold, None
+        sig, id_col, num_bands, num_hashes // num_bands, threshold
     )
 
 
@@ -854,8 +851,8 @@ def salted_band_sides(
 ) -> tuple[DataFrame, DataFrame, list[str]]:
     """Self-join sides over a banded signature fan-out, with hot band
     buckets split across salted sub-groups — the shared skew mechanism
-    of the banded dedup family (SimHash, aHash; any (id, band_key)
-    candidate generator).
+    of the banded dedup family (aHash, blocked linkage; any (id,
+    band_key) candidate generator).
 
     A band-key self-join puts a bucket of ``m`` rows into ONE hash-join
     group: ``m^2`` candidate comparisons on a single task.  Low-entropy
@@ -915,94 +912,6 @@ def salted_band_sides(
         "_salt", F.explode(F.sequence(F.lit(0), F.col("_ns") - 1))
     ).drop("_ns")
     return a_fan, b_fan, [key, "_salt"]
-
-
-def salted_join_sides(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    key: str = "band_key",
-    max_bucket_size: int | None = None,
-    *,
-    right_id: str,
-) -> tuple[DataFrame, DataFrame, list[str]]:
-    """Two-frame generalization of :func:`salted_band_sides`: join
-    sides for ``left JOIN right ON key`` with hot key buckets split
-    across salted sub-groups — the skew mechanism for banded joins
-    whose sides are DIFFERENT frames (a micro-batch vs a persistent
-    signature store; a query fan-out vs a corpus fan-out).
-
-    A bucket shared by ``l`` left rows and ``r`` right rows does
-    ``l * r`` comparisons in ONE hash-join group.  With
-    ``max_bucket_size`` set, hot buckets (``max(l, r) > cap``) split:
-    one side is SALTED into ``n_salt`` sub-groups by
-    ``pmod(xxhash64(id), n_salt)`` and the other side is REPLICATED
-    into every sub-group.  EXACT: every (left row, right row) pair of
-    a bucket meets in exactly one sub-group (the salted row's), so
-    downstream dropDuplicates / first-match logic behaves identically
-    and results are bit-identical to the unsalted join.
-
-    Hot buckets salt their LARGER side (per-bucket ``_swap`` flag,
-    ``n_salt = ceil(max(l, r)/cap)``; ``left_id``/``right_id`` are the
-    salt keys) and replicate the smaller — per-task work is
-    ``~cap * min(l, r)`` for EVERY hot shape, including right-heavy
-    ones (few batch rows vs a huge store bucket).  Both fan-outs carry
-    a one-element-or-sequence array explode.
-
-    The hot directory is built from BOTH sides' bucket counts (two
-    map-side-combined aggregates over the fan-outs, inner-joined —
-    only keys present on both sides can produce pairs) and broadcast.
-    Replication cost is ``min(l, r) * n_salt`` rows per hot bucket —
-    the exact-recall price, same trade as the self-join form.
-    ``None`` returns both fans untouched with the bare key — the
-    zero-overhead default.
-    """
-    if max_bucket_size is None:
-        return left, right, [key]
-    cap = int(max_bucket_size)
-    if cap < 1:
-        raise ValueError("max_bucket_size must be >= 1")
-    left = _persist_tracked(left)
-    right = _persist_tracked(right)
-    lc = left.groupBy(key).agg(F.count(F.lit(1)).alias("_lc"))
-    rc = right.groupBy(key).agg(F.count(F.lit(1)).alias("_rc"))
-    hot = lc.join(rc, key).where(
-        F.greatest(F.col("_lc"), F.col("_rc")) > cap
-    ).select(
-        key,
-        F.ceil(F.greatest(F.col("_lc"), F.col("_rc")) / F.lit(cap))
-        .cast("int")
-        .alias("_ns"),
-        (F.col("_rc") > F.col("_lc")).alias("_swap"),
-    )
-
-    def _fan(df: DataFrame, own_id: str, salts_when_swap: bool) -> DataFrame:
-        joined = (
-            df.join(F.broadcast(hot), key, "left")
-            .withColumn("_ns", F.coalesce(F.col("_ns"), F.lit(1)))
-            .withColumn("_swap", F.coalesce(F.col("_swap"), F.lit(False)))
-        )
-        salted_here = (
-            F.col("_swap") if salts_when_swap else ~F.col("_swap")
-        )
-        salts = F.when(
-            salted_here,
-            F.array(
-                F.pmod(F.xxhash64(F.col(own_id)), F.col("_ns")).cast("int")
-            ),
-        ).otherwise(
-            F.sequence(F.lit(0), F.col("_ns") - 1).cast("array<int>")
-        )
-        return (
-            joined.withColumn("_salt", F.explode(salts))
-            .drop("_ns", "_swap")
-        )
-
-    return (
-        _fan(left, left_id, salts_when_swap=False),
-        _fan(right, right_id, salts_when_swap=True),
-        [key, "_salt"],
-    )
 
 
 def bucket_pairs(
@@ -1128,7 +1037,6 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """SimHash near-duplicate pairs: banded candidate generation + exact
     Hamming verification.
@@ -1143,10 +1051,7 @@ def simhash_near_dup_pairs(
     ``hamming <= max_hamming``.
 
     Candidates come from :func:`bucket_pairs` with the first-match
-    rule over the shifted ``sig`` chunks; ``max_bucket_size`` bounds
-    hot-band-bucket skew through its :func:`salted_band_sides` salting
-    (exact — results are bit-identical to the unsalted plan; only
-    task-level work distribution changes).
+    rule over the shifted ``sig`` chunks.
     """
     chunk_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << chunk_bits) - 1
@@ -1178,7 +1083,6 @@ def simhash_near_dup_pairs(
         banded,
         id_col,
         ["sig"],
-        max_bucket_size=max_bucket_size,
         n_bands=SIMHASH_BANDS,
         band_differs=lambda b: chunk("sig_a", b) != chunk("sig_b", b),
     )

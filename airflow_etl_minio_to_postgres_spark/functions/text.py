@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airflow_etl_minio_to_postgres_spark.schemas import HASH_LEN
 from airflow_etl_minio_to_postgres_spark.session import local_relation
 
 # BPE-ish token pattern: runs of alphanumerics OR single non-space symbols —
@@ -185,11 +186,11 @@ def quality_lang_pred_expr(
     return F.exists(bound, _pred)
 
 
-def fingerprint_expr(text: Column, hash_len: int = 16) -> Column:
+def fingerprint_expr(text: Column) -> Column:
     """Whitespace-canonical sha256 fingerprint: two documents differing only
     in whitespace/case share a fingerprint."""
     normalized = F.regexp_replace(F.lower(F.trim(text)), WHITESPACE, " ")
-    return F.substring(F.sha2(normalized, 256), 1, hash_len)
+    return F.substring(F.sha2(normalized, 256), 1, HASH_LEN)
 
 
 def stratified_cap(
@@ -197,7 +198,6 @@ def stratified_cap(
     group_col: str,
     id_col: str,
     cap: int,
-    hash_len: int = 16,
 ) -> DataFrame:
     """Deterministic stratified downsampling: keep at most ``cap`` rows per
     group, chosen by sha256-of-id order (a seedless, partition-independent
@@ -207,7 +207,7 @@ def stratified_cap(
     from pyspark.sql import Window
 
     rank_key = F.substring(
-        F.sha2(F.col(id_col).cast("string"), 256), 1, hash_len
+        F.sha2(F.col(id_col).cast("string"), 256), 1, HASH_LEN
     )
     w = Window.partitionBy(group_col).orderBy(rank_key, F.col(id_col))
     return (
@@ -912,7 +912,6 @@ def unigram_logprob(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Corpus-unigram language-model scoring: ``(doc_id, n_tokens,
     avg_logprob)`` where avg_logprob is the mean ``ln p(word)`` of the
@@ -944,24 +943,15 @@ def unigram_logprob(
     containing it — WindowExec buffers (and spills) that partition
     through a single task.  Spark survives it (external sort), but on a
     multi-billion-document corpus the stop-word partitions become the
-    straggler tail; pass ``skew_safe=True`` there to trade one extra
-    shuffle for skew safety: ``groupBy("word").sum("tf")`` (map-side
-    partial combine flattens the skew) joined back on word under AQE
-    skew handling.  Same math, same oracle, identical results."""
+    straggler tail."""
+    from pyspark.sql import Window
+
     spark_words = words_expr(F.col(text_col))
     tokens = df.select(
         F.col(id_col), F.explode(spark_words).alias("word")
     ).where(F.col("word") != "")
     tf = tokens.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
-    if skew_safe:
-        vocab = tf.groupBy("word").agg(F.sum("tf").alias("cf"))
-        with_cf = tf.join(vocab, "word")
-    else:
-        from pyspark.sql import Window
-
-        with_cf = tf.withColumn(
-            "cf", F.sum("tf").over(Window.partitionBy("word"))
-        )
+    with_cf = tf.withColumn("cf", F.sum("tf").over(Window.partitionBy("word")))
     total = F.broadcast(
         tf.agg(F.sum("tf").cast("double").alias("_total"))
     )

@@ -10,7 +10,7 @@ free, riding the write's single scan.
 Usage::
 
     audited, obs = observe_quality(silver, "silver_audit", ["market"])
-    write_parquet(audited, path)          # action fires the metrics
+    commit_parquet_generation(spark, audited, path)  # fires the metrics
     obs.get  # {'n_rows': ..., 'n_null_market': ...}
 """
 

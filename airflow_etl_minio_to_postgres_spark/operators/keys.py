@@ -5,8 +5,9 @@ Reference semantics (``dags/dag_etl_minio_to_postgres.py``):
 
 * natural key (``:203-205``): ``'|'``-joined stringified columns.
 * hash key (``:209-212``): ``sha256(concat(str(v) for v in cols))`` hex,
-  truncated to 16 chars — applied per-row via ``df.apply`` there; here a
-  single codegen'd ``substring(sha2(concat_ws(...)))`` expression.
+  truncated to ``schemas.HASH_LEN`` (16) chars — applied per-row via
+  ``df.apply`` there; here a single codegen'd
+  ``substring(sha2(concat_ws(...)))`` expression.
 * dedup (``:216-219``): full-row ``drop_duplicates`` on the hash-keyed dims.
 * surrogate ids (``SERIAL`` DDL ``:415`` + ``RETURNING id`` capture
   ``:134-136``): Postgres insert-order ids, last-id-wins for duplicate keys.
@@ -32,42 +33,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from airflow_etl_minio_to_postgres_spark.schemas import HASH_LEN
+
 
 def _as_strings(cols: list[str]) -> list:
     return [F.col(c).cast("string") for c in cols]
 
 
-def natural_key_expr(cols: list[str], delimiter: str = "|"):
-    """``concat_ws(delimiter, cast(c as string)...)``.
+def natural_key_expr(cols: list[str]):
+    """``concat_ws('|', cast(c as string)...)``.
 
     Note ``concat_ws`` skips NULLs (both Spark and DuckDB), which replaces the
     pandas ``astype(str)`` quirk of rendering nulls as the literal ``'nan'``
     (SURVEY.md §7 hard-part 2) — cleaned inputs are null-free anyway.
     """
-    return F.concat_ws(delimiter, *_as_strings(cols))
+    return F.concat_ws("|", *_as_strings(cols))
 
 
-def add_natural_key(
-    df: DataFrame, cols: list[str], out: str = "natural_key", delimiter: str = "|"
-) -> DataFrame:
-    return df.withColumn(out, natural_key_expr(cols, delimiter))
+def add_natural_key(df: DataFrame, cols: list[str]) -> DataFrame:
+    return df.withColumn("natural_key", natural_key_expr(cols))
 
 
-def hash_key_expr(cols: list[str], hash_len: int = 16):
-    """``substring(sha2(concat_ws('', cast(c as string)...), 256), 1, hash_len)``.
+def hash_key_expr(cols: list[str]):
+    """``substring(sha2(concat_ws('', cast(c as string)...), 256), 1, HASH_LEN)``.
 
     ``concat_ws('')`` (NULL-skipping concatenation) matches both the
     reference's ``''.join`` over stringified values (``:210-212``) and
     DuckDB's ``concat`` semantics, so engine and oracle agree even if a NULL
     reaches a key column (the cleaned pipeline never feeds one).
     """
-    return F.substring(F.sha2(F.concat_ws("", *_as_strings(cols)), 256), 1, hash_len)
+    return F.substring(F.sha2(F.concat_ws("", *_as_strings(cols)), 256), 1, HASH_LEN)
 
 
-def add_hash_key(
-    df: DataFrame, cols: list[str], out: str, hash_len: int = 16
-) -> DataFrame:
-    return df.withColumn(out, hash_key_expr(cols, hash_len))
+def add_hash_key(df: DataFrame, cols: list[str], out: str) -> DataFrame:
+    return df.withColumn(out, hash_key_expr(cols))
 
 
 def dedup_rows(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
@@ -137,11 +136,10 @@ def resolve_key_to_id(
     id_map: DataFrame,
     key_col: str,
     id_col: str,
-    id_first: bool = True,
     drop_key: bool = True,
     broadcast: bool = False,
 ) -> DataFrame:
-    """Replace ``key_col`` with ``id_col`` via equi-join
+    """Replace ``key_col`` with ``id_col`` via equi-join, id first
     (reference ``replace_key_with_id`` ``:223-228`` + ``re_order_df``
     ``:232-240``).
 
@@ -159,7 +157,5 @@ def resolve_key_to_id(
     joined = child.join(right, on=key_col, how="left")
     if drop_key:
         joined = joined.drop(key_col)
-    if id_first:
-        rest = [c for c in joined.columns if c != id_col]
-        joined = joined.select(id_col, *rest)
-    return joined
+    rest = [c for c in joined.columns if c != id_col]
+    return joined.select(id_col, *rest)

@@ -25,6 +25,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airflow_etl_minio_to_postgres_spark.naming import standardize
+from airflow_etl_minio_to_postgres_spark.schemas import (
+    DIM_KEYS,
+    MAIN_KEY,
+    MAIN_TABLE,
+)
 
 
 def unique_targets(field_config: DataFrame) -> list[str]:
@@ -49,21 +54,17 @@ def columns_by_target(field_config: DataFrame) -> dict[str, list[str]]:
         out.setdefault(tgt, []).append(standardize(r["column_name"]))
     return out
 
-def key_columns_for(
-    target: str,
-    main_table: str = "property",
-    main_keys: list[str] | None = None,
-    dim_keys: dict[str, str] | None = None,
-    satellite_key: str = "property_key",
-) -> list[str]:
-    """Key columns prepended to each split (reference ``:166-183``)."""
-    main_keys = main_keys or ["natural_key", "property_key", "hoa_key", "taxes_key"]
-    dim_keys = dim_keys or {"hoa": "hoa_key", "taxes": "taxes_key"}
-    if target == main_table:
-        return list(main_keys)
-    if target in dim_keys:
-        return [dim_keys[target]]
-    return [satellite_key]
+
+def key_columns_for(target: str) -> list[str]:
+    """Key columns prepended to each split (reference ``:166-183``), from
+    the one key layout in ``schemas``: the main table gets
+    ``[natural_key, <main>_key, *dimension keys]``, a dimension its own
+    key, a satellite the main key."""
+    if target == MAIN_TABLE:
+        return ["natural_key", MAIN_KEY, *DIM_KEYS.values()]
+    if target in DIM_KEYS:
+        return [DIM_KEYS[target]]
+    return [MAIN_KEY]
 
 
 def reorder_first(wide: DataFrame, col: str) -> DataFrame:
@@ -74,38 +75,12 @@ def reorder_first(wide: DataFrame, col: str) -> DataFrame:
 
 
 def split_by_field_config(
-    wide: DataFrame,
-    field_config: DataFrame,
-    include_keys: bool = True,
-    main_table: str = "property",
-    dim_keys: dict[str, str] | None = None,
+    wide: DataFrame, field_config: DataFrame
 ) -> dict[str, DataFrame]:
     """Vertical split of ``wide`` into one lazy projection per target table
-    (reference ``get_individual_dfs_in_dict`` ``:193-199``).
-
-    With ``dim_keys`` given, the main table's prepended key list is derived
-    as ``[natural_key, <main>_key, *dim key columns]`` (reference
-    ``:166-170``); otherwise the reference's property defaults apply.
-    """
-    col_lists = columns_by_target(field_config)
-    main_key = f"{main_table}_key"
-    satellite_key = main_key
-    main_keys = None
-    if dim_keys is not None:
-        main_keys = ["natural_key", main_key, *dim_keys.values()]
-    out: dict[str, DataFrame] = {}
-    for target, cols in col_lists.items():
-        selected = (
-            key_columns_for(
-                target,
-                main_table,
-                main_keys=main_keys,
-                dim_keys=dim_keys,
-                satellite_key=satellite_key,
-            )
-            + cols
-            if include_keys
-            else list(cols)
-        )
-        out[target] = wide.select(*selected)
-    return out
+    (reference ``get_individual_dfs_in_dict`` ``:193-199``), each led by
+    its :func:`key_columns_for`."""
+    return {
+        target: wide.select(*key_columns_for(target), *cols)
+        for target, cols in columns_by_target(field_config).items()
+    }

@@ -107,14 +107,24 @@ FIELD_CONFIG_SCHEMA = T.StructType(
     ]
 )
 
-# Gold key columns (reference dags/dag_etl_minio_to_postgres.py:386-391):
+# Gold key layout (reference dags/dag_etl_minio_to_postgres.py:166-183,
+# 386-391): the natural key's columns and each hash key's columns.  The
+# main table carries the natural key and every hash key; each other hash
+# key is owned by the dimension it names (``hoa_key`` -> ``hoa``), which
+# carries only that key; every other table is a satellite carrying
+# ``MAIN_KEY``.
+MAIN_TABLE = "property"
 NATURAL_KEY_COLS = ["property_title", "zip"]
 HASH_KEY_DEFS: dict[str, list[str]] = {
     "hoa_key": ["hoa", "hoa_flag"],
     "taxes_key": ["taxes"],
     "property_key": ["property_title", "zip"],
 }
-HASH_LEN = 16  # hex chars kept from sha256 (reference :209-212)
+MAIN_KEY = f"{MAIN_TABLE}_key"
+DIM_KEYS: dict[str, str] = {
+    k.removesuffix("_key"): k for k in HASH_KEY_DEFS if k != MAIN_KEY
+}
+HASH_LEN = 16  # hex chars kept from every sha256 key (reference :209-212)
 
 # Silver -> gold rename at the leads sink (reference :559 vs :182).
 GOLD_RENAMES: dict[str, dict[str, str]] = {"leads": {"source": "lead_source"}}

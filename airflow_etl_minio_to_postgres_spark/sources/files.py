@@ -16,9 +16,8 @@ Reference surface (``dags/dag_etl_minio_to_postgres.py``):
   and bucket bootstrap.  ``df.write.csv`` handles both the local FS and
   ``s3a://`` URIs (object stores need no mkdir — keys imply their "folders";
   MinIO bucket creation itself is a one-time deployment step, not an engine
-  concern).  ``single_file=True`` mirrors the reference's one-object-per-
-  table layout; the default keeps one file per partition, which is the only
-  layout that scales.
+  concern).  The sink keeps one file per partition, the only layout that
+  scales, where the reference wrote one object per table.
 
 Paths may be local, ``file://``, or ``s3a://`` — the s3a endpoint for MinIO
 is configured on the session (``session.ObjectStoreConfig``).
@@ -46,6 +45,8 @@ EXCEL_EXTENSIONS = {".xlsx", ".xls"}
 PARQUET_EXTENSIONS = {".parquet"}
 JSONL_EXTENSIONS = {".jsonl", ".json", ".ndjson"}
 ORC_EXTENSIONS = {".orc"}
+# Where read_jsonl lands each malformed line.
+CORRUPT_COL = "_corrupt_record"
 
 
 def _extension(path: str) -> str:
@@ -53,20 +54,16 @@ def _extension(path: str) -> str:
 
 
 def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    header: bool = True,
-    infer_schema: bool | None = None,
+    spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
-    """Partitioned CSV scan (S1).  Prefer an explicit ``schema``; schema
-    inference costs a full extra pass over the data at scale."""
-    reader = spark.read.option("header", str(header).lower())
+    """Partitioned scan of a CSV with a header row (S1).  Prefer an
+    explicit ``schema``; without one, schema inference costs a full extra
+    pass over the data at scale."""
+    reader = spark.read.option("header", "true")
     if schema is not None:
         reader = reader.schema(schema)
     else:
-        infer = True if infer_schema is None else infer_schema
-        reader = reader.option("inferSchema", str(infer).lower())
+        reader = reader.option("inferSchema", "true")
     return reader.csv(path)
 
 
@@ -142,14 +139,12 @@ def _read_xlsx_minimal(path: str) -> tuple[list[str], list[list]]:
 
 
 def read_excel(
-    spark: SparkSession,
-    path: str,
-    sheet: int | str = 0,
-    schema: T.StructType | None = None,
+    spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
-    """Driver-side Excel parse -> DataFrame (S2).  Metadata-sized files only
-    (the field-config workbook is 66 rows).  Uses pandas+openpyxl when
-    available, else a dependency-free minimal xlsx parser."""
+    """Driver-side parse of a workbook's first sheet -> DataFrame (S2).
+    Metadata-sized files only (the field-config workbook is 66 rows).
+    Uses pandas+openpyxl when available, else a dependency-free minimal
+    xlsx parser."""
     try:
         import openpyxl  # noqa: F401 — pandas' xlsx engine
         has_engine = True
@@ -159,7 +154,7 @@ def read_excel(
     if has_engine:
         import pandas as pd
 
-        pdf = pd.read_excel(path, sheet_name=sheet)
+        pdf = pd.read_excel(path)
         if schema is not None:
             return spark.createDataFrame(pdf, schema=schema)
         return spark.createDataFrame(pdf.astype(object).where(pdf.notna(), None))
@@ -176,67 +171,51 @@ def read_excel(
 
 
 def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    corrupt_col: str | None = "_corrupt_record",
+    spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
     """Line-delimited JSON scan — THE interchange format of training-data
     pipelines (one document per line splits cleanly across executors).
 
     Always pass ``schema`` on a data path: without one Spark pays a full
     inference pre-scan of every file.  Malformed lines do not kill the
-    job (PERMISSIVE mode): with ``corrupt_col`` set, the raw offending
-    line lands in that column (add it to the schema to triage bad
-    records); set ``corrupt_col=None`` to silently null-row them.
-    Multi-line (pretty-printed array) JSON is deliberately unsupported —
-    it is non-splittable and has no place at scale.
+    job (PERMISSIVE mode): the raw offending line lands in a
+    ``_corrupt_record`` column, appended to a given ``schema``, to
+    triage bad records.  Multi-line (pretty-printed array) JSON is
+    deliberately unsupported — it is non-splittable and has no place at
+    scale.
     """
-    reader = spark.read.option("mode", "PERMISSIVE")
-    if corrupt_col is not None:
-        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
-        if schema is not None and corrupt_col not in schema.fieldNames():
-            schema = T.StructType(
-                [*schema.fields, T.StructField(corrupt_col, T.StringType())]
-            )
+    reader = spark.read.option("mode", "PERMISSIVE").option(
+        "columnNameOfCorruptRecord", CORRUPT_COL
+    )
     if schema is not None:
+        if CORRUPT_COL not in schema.fieldNames():
+            schema = T.StructType(
+                [*schema.fields, T.StructField(CORRUPT_COL, T.StringType())]
+            )
         reader = reader.schema(schema)
     return reader.json(path)
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compression: str | None = None,
-    single_file: bool = False,
-) -> str:
-    """JSONL sink (one object per partition; optionally gzip'd).  NULL
-    fields are omitted per line (JSON convention) — lossless only under a
-    declared read schema, which :func:`read_jsonl` demands anyway."""
-    out = df.coalesce(1) if single_file else df
-    writer = out.write.mode(mode)
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
+def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> str:
+    """JSONL sink (one object per partition).  NULL fields are omitted per
+    line (JSON convention) — lossless only under a declared read schema,
+    which :func:`read_jsonl` demands anyway."""
+    df.write.mode(mode).json(path)
     return path
 
 
 def read_file(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    **kwargs,
+    spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
     """Extension dispatch (S3): CSV / Excel / parquet / JSONL / ORC, raise
     on unsupported (reference raises at ``:46-47``)."""
     ext = _extension(path)
     if ext in CSV_EXTENSIONS:
-        return read_csv(spark, path, schema=schema, **kwargs)
+        return read_csv(spark, path, schema=schema)
     if ext in EXCEL_EXTENSIONS:
-        return read_excel(spark, path, schema=schema, **kwargs)
+        return read_excel(spark, path, schema=schema)
     if ext in JSONL_EXTENSIONS:
-        return read_jsonl(spark, path, schema=schema, **kwargs)
+        return read_jsonl(spark, path, schema=schema)
     if ext in PARQUET_EXTENSIONS or ext in ORC_EXTENSIONS:
         reader = spark.read
         if schema is not None:
@@ -246,48 +225,17 @@ def read_file(
     raise ValueError(f"unsupported file type {ext!r} for {path!r}")
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    header: bool = True,
-    single_file: bool = False,
-) -> str:
-    """CSV sink with overwrite semantics (S4).  ``single_file`` coalesces to
-    one output object (the reference's layout, ``:66``) — only for small
-    tables; the partitioned default is the layout that scales."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode(mode).option("header", str(header).lower()).csv(path)
+def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> str:
+    """CSV sink with a header row and overwrite semantics (S4), one file
+    per partition."""
+    df.write.mode(mode).option("header", "true").csv(path)
     return path
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> str:
+def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> str:
     """ORC columnar sink — parquet's sibling for warehouses standardized on
     ORC (Hive/Trino estates); same Spark-native vectorized reader."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-    return path
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> str:
-    """Engine-native columnar sink — the store the 100 TB path lands in
-    (Postgres stays a serving sink only, SURVEY.md §7 hard-part 5)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    df.write.mode(mode).orc(path)
     return path
 
 
@@ -349,7 +297,6 @@ def recluster_zorder_committed(
     keep_last: int = 1,
     zone_map_cols: tuple[str, ...] = (),
     bloom_cols: tuple[str, ...] = (),
-    verify_row_count: bool = True,
 ) -> int:
     """Re-cluster an EXISTING parquet table onto the Z-order curve —
     the OPTIMIZE-after-ingest half of the data-skipping story (Delta's
@@ -394,9 +341,9 @@ def recluster_zorder_committed(
     skipping from the layout, key skipping from the filters, one
     atomic flip.
 
-    ``verify_row_count`` (default ON): a re-cluster is row-preserving
-    BY DEFINITION, so the commit validates the STAGED generation's
-    row count against the source generation's before the publish
+    Row-count guard: a re-cluster is row-preserving BY DEFINITION, so
+    the commit validates the STAGED generation's row count against
+    the source generation's before the publish
     (``pre_publish_validate`` with the staged path — two
     footer-metadata count jobs, no data read) and refuses to serve a
     row-dropping rewrite: the compaction-bug class where an OPTIMIZE
@@ -424,20 +371,18 @@ def recluster_zorder_committed(
     # AnalysisException is the canonical missing-input error
     df = spark.read.parquet(data_root)
     staged = _zorder_staged(df, zorder_cols, bits, n_files)
-    guard = None
-    if verify_row_count:
-        expected = df.count()  # footer-metadata job over the source gen
+    expected = df.count()  # footer-metadata job over the source gen
 
-        def guard(staged_path: str) -> None:
-            got = spark.read.parquet(staged_path).count()
-            if got != expected:
-                raise RuntimeError(
-                    f"recluster_zorder_committed: staged generation at "
-                    f"{staged_path!r} holds {got} rows but the source "
-                    f"generation holds {expected} — a re-cluster is "
-                    "row-preserving by definition; refusing to publish "
-                    "(previous generation keeps serving)"
-                )
+    def guard(staged_path: str) -> None:
+        got = spark.read.parquet(staged_path).count()
+        if got != expected:
+            raise RuntimeError(
+                f"recluster_zorder_committed: staged generation at "
+                f"{staged_path!r} holds {got} rows but the source "
+                f"generation holds {expected} — a re-cluster is "
+                "row-preserving by definition; refusing to publish "
+                "(previous generation keeps serving)"
+            )
 
     return commit_parquet_generation(
         spark, staged, root, keep_last=keep_last,
@@ -516,10 +461,10 @@ def recluster_zorder_partitions(
     return rewritten
 
 
-def bronze_path(base: str, file_name: str, folder: str = "bronze-files") -> str:
+def bronze_path(base: str, file_name: str) -> str:
     """Normalized bronze object path (S4/S5: reference lowers + de-spaces the
     object key at ``:60``)."""
-    return os.path.join(base, folder, normalize_filename(file_name))
+    return os.path.join(base, "bronze-files", normalize_filename(file_name))
 
 
 def ingest_bronze(
@@ -527,15 +472,14 @@ def ingest_bronze(
     raw_path: str,
     bronze_base: str,
     schema: T.StructType | None = None,
-    **kwargs,
 ) -> tuple[DataFrame, str]:
     """O1 bronze stage: read raw CSV/Excel, land as CSV under the bronze
     prefix (reference ``:253-265``), return (frame, bronze path).  The
     returned frame is the *read* lineage — downstream stages compose on it
     lazily instead of re-reading bronze (collapses the reference's double
     read, ``:277,287``)."""
-    df = read_file(spark, raw_path, schema=schema, **kwargs)
+    df = read_file(spark, raw_path, schema=schema)
     name = os.path.splitext(os.path.basename(raw_path))[0] + ".csv"
     out = bronze_path(bronze_base, name)
-    write_csv(df, out, mode="overwrite", single_file=False)
+    write_csv(df, out)
     return df, out

@@ -15,8 +15,12 @@ Design notes for scale:
 * ``applyInPandasWithState`` holds one small state blob per group key —
   the distributed, fault-tolerant replacement for the reference's global
   mutable ``id_mapping`` dict (``:28``), which only worked single-process.
-* Sinks here are the in-memory table (tests) — production swaps in
-  ``foreachBatch`` -> parquet/JDBC upsert without touching the plan.
+* Two kinds of sink.  :func:`run_available_now` drains a streaming
+  frame into an in-memory table and returns it; the ``streaming_*``
+  operators are ``foreachBatch`` sinks started by :func:`_start_sink`.
+  Each micro-batch lands replay-safe: as ``_commit_id`` parquet
+  partitions (:func:`_write_batch_commit`) or, for the rollup, as a
+  committed manifest generation.
 """
 
 from __future__ import annotations
@@ -590,7 +594,6 @@ def streaming_near_dup_dedup(
     num_bands: int = 4,
     shingle_k: int = 3,
     store_partitions: int = 64,
-    max_bucket_size: int | None = None,
 ):
     """Cross-batch NEAR-duplicate dedup — accept-on-first-sight MinHash
     LSH over a continuously ingested corpus: each micro-batch drops
@@ -660,13 +663,12 @@ def streaming_near_dup_dedup(
         out_path=out_path,
         store_path=store_path,
         text_col=text_col,
-            id_col=id_col,
-            threshold=threshold,
-            num_hashes=num_hashes,
-            num_bands=num_bands,
-            shingle_k=shingle_k,
+        id_col=id_col,
+        threshold=threshold,
+        num_hashes=num_hashes,
+        num_bands=num_bands,
+        shingle_k=shingle_k,
         store_partitions=store_partitions,
-        max_bucket_size=max_bucket_size,
     )
 
 
@@ -723,7 +725,6 @@ def _near_dup_drops(
     num_bands: int,
     threshold: float,
     store_partitions: int,
-    max_bucket_size: int | None,
     exclude_commit: str | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """THE near-dup screen over a signature table ``sig``:
@@ -744,7 +745,6 @@ def _near_dup_drops(
         _minhash_pairs,
         band_keys_expr,
         jaccard_expr,
-        salted_join_sides,
     )
 
     spark = sig.sparkSession
@@ -757,7 +757,7 @@ def _near_dup_drops(
     )
     sets = sig.select(id_col, "shingles")
     dropped = _minhash_pairs(
-        sig, id_col, num_bands, rows_per_band, threshold, max_bucket_size
+        sig, id_col, num_bands, rows_per_band, threshold
     ).select(F.col("id_b").alias(id_col))
     if not _exists(spark, store_path):
         return banded, sets, dropped.distinct()
@@ -774,21 +774,8 @@ def _near_dup_drops(
         "band_key",
         F.col("shingles").alias("sh_s"),
     )
-    # two-frame salting: a hot band bucket shared by l batch rows and r
-    # store rows does l*r comparisons on one task; with max_bucket_size
-    # set each hot bucket salts its LARGER side and replicates the
-    # smaller (right_id enables the per-bucket swap — a store bucket
-    # far bigger than the batch's can split below r comparisons/task)
-    l_fan, r_fan, cross_keys = salted_join_sides(
-        banded,
-        store_banded,
-        id_col,
-        "band_key",
-        max_bucket_size,
-        right_id="_sid",
-    )
     cross = (
-        l_fan.join(r_fan, cross_keys)
+        banded.join(store_banded, ["band_key"])
         # each store row carries one band key, so first-match cannot
         # apply: a (batch doc, stored doc) pair meets once per shared
         # band (sh_s is a function of _sid, so keeping one is exact)
@@ -813,7 +800,6 @@ def near_dup_against_store(
     num_bands: int = 4,
     shingle_k: int = 3,
     store_partitions: int = 64,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """BATCH face of :func:`streaming_near_dup_dedup`'s screen: dedup a
     new delivery against the accepted corpus (and within itself)
@@ -859,7 +845,6 @@ def near_dup_against_store(
         num_bands=num_bands,
         threshold=threshold,
         store_partitions=store_partitions,
-        max_bucket_size=max_bucket_size,
     )
     return df.join(dropped, id_col, "left_anti")
 
@@ -878,7 +863,6 @@ def _near_dup_process_batch(
     num_bands: int = 4,
     shingle_k: int = 3,
     store_partitions: int = 64,
-    max_bucket_size: int | None = None,
 ) -> None:
     """One :func:`streaming_near_dup_dedup` micro-batch — module-level
     so the replay contract (same batch twice == once) is directly
@@ -887,17 +871,7 @@ def _near_dup_process_batch(
     The INTRA-batch screen is :func:`near_dup_pairs`' own pair path
     (``functions/dedup.py _minhash_pairs``: the ``bucket_pairs``
     self-join with the first-match rule) over the batch signature
-    table.  ``max_bucket_size`` wires the dedup family's shared
-    hot-bucket salting (``salted_band_sides`` — exact by construction)
-    into that self-join: low-entropy batches (shared boilerplate)
-    concentrate whole bands into hot buckets whose m^2 pairwise
-    comparisons land on single tasks (measured: a 50k-doc
-    boilerplate-heavy batch spends its wall-clock almost entirely
-    there).  None = unsalted, the zero-overhead default, same posture
-    as the batch operators.  The batch-vs-STORE join gets the
-    two-frame form (``salted_join_sides``) under the same knob: each
-    hot bucket salts its LARGER side and replicates the smaller into
-    the sub-groups."""
+    table."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
         _minhash_table,
     )
@@ -917,7 +891,6 @@ def _near_dup_process_batch(
         num_bands=num_bands,
         threshold=threshold,
         store_partitions=store_partitions,
-        max_bucket_size=max_bucket_size,
         exclude_commit=commit_id,
     )
     # Materialize the drop set BEFORE any write: its plan reads the
@@ -946,15 +919,6 @@ def _near_dup_process_batch(
     )
     dropped_ids.unpersist()
     sig.unpersist()
-    if max_bucket_size is not None:
-        # the salting helpers persist their fan-outs via the family's
-        # tracked-cache list; a long-running stream would accumulate
-        # one set per micro-batch — free them with the batch
-        from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-            release_caches,
-        )
-
-        release_caches()
 
 
 def streaming_ivf_index_upsert(

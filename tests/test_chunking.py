@@ -104,23 +104,6 @@ def test_quantize_int8_roundtrip_and_zero_vector(spark):
     assert rows[2].qvec == [0, 0, 0]
 
 
-def test_unigram_logprob_skew_safe_path_identical(spark):
-    from airflow_etl_minio_to_postgres_spark.functions.text import (
-        unigram_logprob,
-    )
-
-    docs = _docs(spark, ["a a b c", "a b b", "c c c a"])
-    base = {
-        r.doc_id: (r.n_tokens, round(r.avg_logprob, 12))
-        for r in unigram_logprob(docs).collect()
-    }
-    safe = {
-        r.doc_id: (r.n_tokens, round(r.avg_logprob, 12))
-        for r in unigram_logprob(docs, skew_safe=True).collect()
-    }
-    assert base == safe  # window path == groupBy+join path, exactly
-
-
 def test_assign_splits_deterministic_disjoint_and_stable(spark):
     """assign_splits: every row gets exactly one split; proportions
     track the weights; assignment is a pure function of (id, salt) —

@@ -1145,11 +1145,8 @@ def test_ahash_and_simhash_salted_results_bit_identical(spark):
     """max_bucket_size changes task-level distribution ONLY: on a
     low-entropy fixture (120 identical payloads — every band bucket
     hot) the salted aHash pair join returns the identical pair set,
-    including all m(m-1)/2 hamming-0 pairs; same for SimHash over
-    repeated texts."""
-    from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        simhash_near_dup_pairs,
-    )
+    including all m(m-1)/2 hamming-0 pairs.  SimHash has no salting
+    knob; its pair join is always the unsalted one."""
     from airflow_etl_minio_to_postgres_spark.functions.multimodal import (
         add_image_ahash,
         ahash_near_dup_pairs,
@@ -1175,21 +1172,6 @@ def test_ahash_and_simhash_salted_results_bit_identical(spark):
     )
     assert exact == salted
     assert len([p for p in exact if p[2] == 0]) >= m * (m - 1) // 2
-
-    texts = [(i, "the same repeated sentence again and again") for i in range(40)]
-    texts += [(100 + i, f"unique document number {i} with its own words") for i in range(4)]
-    docs = spark.createDataFrame(texts, "doc_id long, text string")
-    s_exact = sorted(
-        tuple(r) for r in simhash_near_dup_pairs(docs, max_hamming=3).collect()
-    )
-    s_salted = sorted(
-        tuple(r)
-        for r in simhash_near_dup_pairs(
-            docs, max_hamming=3, max_bucket_size=8
-        ).collect()
-    )
-    assert s_exact == s_salted
-    assert len(s_exact) >= 40 * 39 // 2
 
 
 def test_image_ahash_large_payload_no_overflow(spark):

@@ -822,54 +822,6 @@ def test_compact_near_dup_store_preserves_screen_and_merges_files(
     assert accepted == [1, 2, 3, 8]  # 9 near-dups compacted doc 1
 
 
-def test_near_dup_batch_salting_is_bit_identical(spark, tmp_path):
-    """max_bucket_size wires the shared hot-bucket salting into BOTH
-    candidate joins — the intra-batch self-join (salted_band_sides)
-    and the batch-vs-store two-frame join (salted_join_sides): on a
-    boilerplate-heavy corpus (hot band buckets by construction) the
-    salted run must accept exactly the same documents and write
-    exactly the same store as the unsalted one, across BOTH batches."""
-    from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
-        _near_dup_process_batch,
-    )
-
-    b0 = spark.createDataFrame(
-        [
-            (i, f"shared boilerplate header text common to all docs body {i}")
-            for i in range(60)
-        ],
-        "doc_id long, text string",
-    )
-    # batch 1 shares the boilerplate, so the batch-vs-store join sees
-    # the same hot buckets the intra-batch join did
-    b1 = spark.createDataFrame(
-        [
-            (100 + i, f"shared boilerplate header text common to all docs body {i}")
-            for i in range(30)
-        ]
-        + [(500, "an entirely different fresh document with new words")],
-        "doc_id long, text string",
-    )
-    results = {}
-    for label, cap in (("plain", None), ("salted", 4)):
-        out = str(tmp_path / f"out_{label}")
-        store = str(tmp_path / f"store_{label}")
-        for bid, df in ((0, b0), (1, b1)):
-            _near_dup_process_batch(
-                df, bid, out_path=out, store_path=store, token="tok",
-                max_bucket_size=cap,
-            )
-        results[label] = (
-            _snapshot(spark, out, ["doc_id"]),
-            _snapshot(spark, store, ["doc_id", "band_key"]),
-        )
-    assert results["plain"] == results["salted"]
-    assert len(results["plain"][0]) > 0
-    # the fresh doc survived; batch-1 near-dups of stored docs dropped
-    out_ids = {t[0] for t in results["plain"][0]}
-    assert 500 in out_ids and not any(100 <= i < 130 for i in out_ids)
-
-
 def test_streaming_ivf_index_upsert_serves_like_batch_build(spark, tmp_path):
     """The streamed index must be serving-equivalent to a one-shot
     write_ivf_index over the same vectors: identical ivf_topk_indexed
@@ -4158,15 +4110,17 @@ def test_maintenance_cycle_keeps_sidecars_current(spark, tmp_path):
 
 
 def test_write_medallion_committed_rerun_idempotent(spark, tmp_path):
-    """write_medallion(commit_keep_last=) — the reference's own gold
-    through the manifest protocol (r15 verdict item 5): tables land as
-    generations behind the atomic publish, values identical to the
-    plain-write path, QA audits still collect, and the RERUN proves
-    itself idempotent with an empty snapshot_diff(1, 2) — the audit
-    the reference's append-only gold could never run."""
+    """write_medallion — the reference's own gold through the manifest
+    protocol (r15 verdict item 5): tables land as generations behind
+    the atomic publish, values identical to the in-memory frames, QA
+    audits still collect, and the RERUN proves itself idempotent with
+    an empty snapshot_diff(1, 2) — the audit the reference's
+    append-only gold could never run."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.plans.medallion import (
+        MedallionResult,
+        build_silver,
         run_medallion,
         write_medallion,
     )
@@ -4195,19 +4149,16 @@ def test_write_medallion_committed_rerun_idempotent(spark, tmp_path):
         ["column_name", "target_table"],
     )
     res = run_medallion(raw, fc)
-    plain = str(tmp_path / "plain")
     committed = str(tmp_path / "committed")
-    write_medallion(res, plain)
-    res2 = run_medallion(raw, fc)
-    paths = write_medallion(res2, committed, commit_keep_last=2)
+    paths = write_medallion(res, committed, commit_keep_last=2)
 
     # audits collected on the committed path too
-    assert res2.audits["silver"]["n_rows"] == 3
-    # values identical to the plain path, table by table
+    assert res.audits["silver"]["n_rows"] == 3
+    # values identical to the in-memory frames, table by table
+    frames = {"silver": res.silver, **res.gold}
+    assert set(paths) == set(frames)
     for name, root in paths.items():
-        a = spark.read.parquet(
-            f"{plain}/{name if name == 'silver' else 'gold/' + name}"
-        )
+        a = frames[name]
         b = mf.read_resolved(spark, root)
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, name
 
@@ -4220,7 +4171,9 @@ def test_write_medallion_committed_rerun_idempotent(spark, tmp_path):
     # min_rows gate still fires through the committed path
     import pytest as _pytest
 
-    empty = run_medallion(raw.where(F.lit(False)), fc, targets=set())
+    empty = MedallionResult(
+        silver=build_silver(raw.where(F.lit(False))), field_config=fc
+    )
     with _pytest.raises(ValueError, match="required minimum"):
         write_medallion(
             empty, str(tmp_path / "gated"), commit_keep_last=2, min_rows=1
@@ -4375,7 +4328,8 @@ def test_write_medallion_min_rows_gates_before_commit_publish(
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.plans.medallion import (
-        run_medallion,
+        MedallionResult,
+        build_silver,
         write_medallion,
     )
     from airflow_etl_minio_to_postgres_spark.sources import manifest as mf
@@ -4389,11 +4343,13 @@ def test_write_medallion_min_rows_gates_before_commit_publish(
         ["column_name", "target_table"],
     )
     base = str(tmp_path / "lake")
-    good = run_medallion(raw, fc, targets=set())
+    good = MedallionResult(silver=build_silver(raw), field_config=fc)
     write_medallion(good, base, commit_keep_last=1, min_rows=1)
     assert mf.read_resolved(spark, f"{base}/silver").count() == 2
 
-    bad = run_medallion(raw.where(F.lit(False)), fc, targets=set())
+    bad = MedallionResult(
+        silver=build_silver(raw.where(F.lit(False))), field_config=fc
+    )
     with _pytest.raises(ValueError, match="required minimum"):
         write_medallion(bad, base, commit_keep_last=1, min_rows=1)
     # the good generation was neither replaced nor GC'd
@@ -4543,7 +4499,7 @@ def test_pre_publish_validate_receives_staged_path(spark, tmp_path):
 def test_recluster_committed_refuses_row_dropping_rewrite(
     spark, tmp_path, monkeypatch
 ):
-    """verify_row_count (default ON): a re-cluster is row-preserving by
+    """The row-count guard: a re-cluster is row-preserving by
     definition, so a buggy staging that loses rows is refused BEFORE
     the publish — yesterday's generation keeps serving, no GC ran —
     instead of being caught by a later snapshot_diff audit after the

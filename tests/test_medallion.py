@@ -134,7 +134,6 @@ def test_split_by_field_config_derived_dim_keys(spark, result):
             }
         ),
         fc,
-        dim_keys={"hoa": "hoa_key", "taxes": "taxes_key"},
     )
     assert splits["property"].columns[:4] == [
         "natural_key", "property_key", "hoa_key", "taxes_key",
@@ -145,21 +144,22 @@ def test_split_by_field_config_derived_dim_keys(spark, result):
 
 def test_write_medallion_idempotent(spark, tmp_path_factory, result):
     from airflow_etl_minio_to_postgres_spark.plans.medallion import write_medallion
+    from airflow_etl_minio_to_postgres_spark.sources.manifest import read_resolved
 
     base = str(tmp_path_factory.mktemp("medallion"))
     paths = write_medallion(
         result, base, audit_null_cols={"property": ["property_key"]}
     )
     assert set(paths) == {"silver", "property", "hoa", "taxes", "leads", "valuation"}
-    first = spark.read.parquet(paths["property"]).count()
+    first = read_resolved(spark, paths["property"]).count()
     # The audit rides every write: metrics observed during the sink scan.
     assert set(result.audits) == set(paths)
     assert result.audits["property"]["n_rows"] == first == 4
     assert result.audits["property"]["n_null_property_key"] == 0
     assert result.audits["silver"]["n_rows"] > 0
-    # Rerun must overwrite, not append (reference is NOT rerun-safe).
+    # Rerun must replace, not append (reference is NOT rerun-safe).
     write_medallion(result, base)
-    assert spark.read.parquet(paths["property"]).count() == first == 4
+    assert read_resolved(spark, paths["property"]).count() == first == 4
 
 
 def test_write_medallion_gates_on_collapsed_feed(spark, tmp_path_factory, result):

@@ -1,6 +1,6 @@
 """The package's surface is its called surface.
 
-Two static checks over the package source (no Spark session):
+Three static checks over the package source (no Spark session):
 
 * every top-level ``def`` / ``class`` of the package, public or
   private, has a code caller outside ``tests/`` — in the package
@@ -8,6 +8,12 @@ Two static checks over the package source (no Spark session):
   the driver contract (``__spark_entry__.py``).  A definition only
   tests run is test-only code; it belongs in ``tests/`` or nowhere.
   The few exceptions are listed, each with its reason, in ``UNCALLED``;
+* every option of a package function outside ``queries.py`` — a
+  parameter with a ``True`` / ``False`` default, or a ``**kwargs``
+  catch-all — is set by some call outside ``tests/``: a call passes the
+  flag a value other than its default, or passes the catch-all a
+  keyword.  An option only tests set is a test-only code path.  The
+  exceptions are listed, each with its reason, in ``UNSET_OPTIONS``;
 * the package computes no numpy dot product outside ``_fold``: no
   matmul operator, ``np.dot``, ``np.einsum`` or ``np.linalg``.  Their
   summation order is unspecified, so one of them would break the
@@ -51,7 +57,24 @@ UNCALLED = {
     ),
 }
 
-_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+# Options kept although no call outside tests sets them:
+# ``<module path>:<function>.<parameter>`` -> why.  Each must still be
+# unset.
+UNSET_OPTIONS = {
+    "sources/jdbc.py:write_options.rewrite_batched_inserts": (
+        "JDBC sink setting of a deployment, not of the engine"
+    ),
+    "sources/jdbc.py:write_options.truncate": (
+        "JDBC sink setting of a deployment, not of the engine"
+    ),
+    "sources/jdbc.py:create_table_sql.if_not_exists": _REFERENCE_DDL,
+    "sources/manifest.py:restore_snapshot.allow_column_drop": (
+        "the one escape from restore's drop-column safety guard"
+    ),
+}
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+_DEFS = (*_FUNCS, ast.ClassDef)
 
 
 def _sources(root: Path) -> list[Path]:
@@ -124,6 +147,91 @@ def test_every_public_definition_is_referenced_outside_tests():
     # every exception is still a definition without a caller
     stale = sorted(set(UNCALLED) - set(uncalled))
     assert not stale, "listed in UNCALLED but called:\n" + "\n".join(stale)
+
+
+def _calls_by_name() -> dict[str, list[ast.Call]]:
+    """Every call outside ``tests/``, keyed by the called bare name
+    (``f(...)`` and ``x.f(...)`` alike)."""
+    calls = defaultdict(list)
+    for path in _caller_files():
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.Call):
+                f = n.func
+                if isinstance(f, ast.Name):
+                    calls[f.id].append(n)
+                elif isinstance(f, ast.Attribute):
+                    calls[f.attr].append(n)
+    return calls
+
+
+def _sets(call: ast.Call, name: str, index: int | None, default) -> bool:
+    """``call`` passes parameter ``name`` (by keyword, or at positional
+    ``index``) something other than the literal ``default``."""
+    given = [k.value for k in call.keywords if k.arg == name]
+    if index is not None and len(call.args) > index:
+        given.append(call.args[index])
+    return any(
+        not (isinstance(v, ast.Constant) and v.value is default)
+        for v in given
+    )
+
+
+def _unset_options() -> list[str]:
+    """``<module path>:<function>.<parameter>`` of every bool-default
+    parameter no call outside tests sets to another value, and
+    ``...:<function>.**<name>`` of every ``**kwargs`` no such call
+    passes a keyword, over the package's functions outside
+    ``queries.py``."""
+    calls = _calls_by_name()
+    unset = []
+    for path in _sources(PACKAGE):
+        if path.name == "queries.py":
+            continue
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, _FUNCS):
+                continue
+            where = f"{path.relative_to(PACKAGE)}:{fn.name}"
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            defaults = [
+                (p.arg, i, d)
+                for i, (p, d) in enumerate(
+                    zip(pos[first:], a.defaults), first
+                )
+            ] + [
+                (p.arg, None, d)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None
+            ]
+            for name, index, d in defaults:
+                if not isinstance(getattr(d, "value", None), bool):
+                    continue
+                if not any(
+                    _sets(c, name, index, d.value) for c in calls[fn.name]
+                ):
+                    unset.append(f"{where}.{name}")
+            if a.kwarg is not None:
+                named = {p.arg for p in (*pos, *a.kwonlyargs)}
+                if not any(
+                    k.arg is not None and k.arg not in named
+                    for c in calls[fn.name]
+                    for k in c.keywords
+                ):
+                    unset.append(f"{where}.**{a.kwarg.arg}")
+    return sorted(unset)
+
+
+def test_every_option_is_set_outside_tests():
+    """A flag only tests flip, or a catch-all only tests fill, selects a
+    code path no caller runs: a constant with a fork, not an option."""
+    unset = _unset_options()
+    orphans = [o for o in unset if o not in UNSET_OPTIONS]
+    assert not orphans, "set by no call outside tests/:\n" + "\n".join(
+        orphans
+    )
+    stale = sorted(set(UNSET_OPTIONS) - set(unset))
+    assert not stale, "listed in UNSET_OPTIONS but set:\n" + "\n".join(stale)
 
 
 def _numpy_dot_sites(tree: ast.Module) -> list[int]:

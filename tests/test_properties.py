@@ -776,85 +776,6 @@ def test_ivf_assign_nprobe_matches_python_model(spark, vecs, nprobe):
     assert all(n == min(nprobe, n_cells) for n in per_id.values())
 
 
-@given(
-    lkeys=st.lists(st.integers(0, 3), min_size=0, max_size=25),
-    rkeys=st.lists(st.integers(0, 3), min_size=0, max_size=25),
-    cap=st.integers(1, 6),
-)
-@SPARK_SETTINGS
-def test_salted_join_sides_every_pair_exactly_once(
-    spark, lkeys, rkeys, cap
-):
-    """salted_join_sides exactness under arbitrary two-frame bucket
-    shapes (per-bucket swap: the larger side salts): for ANY left/right
-    key multisets and ANY cap, the salted join yields every in-bucket
-    (left id, right id) pair EXACTLY once — bit-identical downstream
-    behavior to the unsalted join."""
-    from pyspark.sql import functions as F
-
-    from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        salted_join_sides,
-    )
-
-    left = spark.createDataFrame(
-        [(i, f"k{k}") for i, k in enumerate(lkeys)] or [(None, None)],
-        "lid long, band_key string",
-    ).where(F.col("lid").isNotNull())
-    right = spark.createDataFrame(
-        [(i, f"k{k}") for i, k in enumerate(rkeys)] or [(None, None)],
-        "rid long, band_key string",
-    ).where(F.col("rid").isNotNull())
-
-    l_fan, r_fan, jk = salted_join_sides(
-        left,
-        right,
-        "lid",
-        "band_key",
-        cap,
-        right_id="rid",
-    )
-    got = sorted(
-        (r.lid, r.rid) for r in l_fan.join(r_fan, jk).collect()
-    )
-    expected = sorted(
-        (li, ri)
-        for li, lk in enumerate(lkeys)
-        for ri, rk in enumerate(rkeys)
-        if lk == rk
-    )
-    assert got == expected  # exactly once, none lost, none extra
-
-
-def test_salted_join_sides_right_heavy_splits(spark):
-    """The per-bucket swap's reason to exist: a bucket hot ONLY on the
-    right (1 left row x 200 store rows, cap 10) must salt the RIGHT
-    side into ceil(200/10)=20 sub-groups — salting the left could not
-    split below r comparisons per task (n_salt <= l = 1)."""
-    from pyspark.sql import functions as F
-
-    from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        salted_join_sides,
-    )
-
-    left = spark.createDataFrame([(0, "k")], "lid long, band_key string")
-    right = spark.createDataFrame(
-        [(i, "k") for i in range(200)], "rid long, band_key string"
-    )
-
-    # right salts into ceil(200/10)=20 sub-groups of ~10,
-    # left replicates into all 20 — and the pair set is still exact
-    l_fan, r_fan, jk = salted_join_sides(
-        left, right, "lid", "band_key", 10, right_id="rid"
-    )
-    swap_groups = (
-        r_fan.groupBy(*jk).agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    assert len(swap_groups) == 20
-    assert max(g.n for g in swap_groups) <= 20  # ~10 expected, hash spread
-    got = sorted((r.lid, r.rid) for r in l_fan.join(r_fan, jk).collect())
-    assert got == [(0, i) for i in range(200)]
-
-
 # ---- round-11 continuation: splits / z-order / recall models ----
 
 _weight_names = st.lists(

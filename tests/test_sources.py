@@ -16,7 +16,6 @@ from airflow_etl_minio_to_postgres_spark.sources.files import (
     read_csv,
     read_file,
     write_csv,
-    write_parquet,
 )
 from airflow_etl_minio_to_postgres_spark.sources.jdbc import (
     JdbcConfig,
@@ -51,8 +50,9 @@ def test_csv_roundtrip(spark, tmp_path):
 
 def test_parquet_roundtrip_partitioned(spark, tmp_path):
     df = spark.createDataFrame([(1, "x"), (2, "y")], ["k", "part"])
-    path = write_parquet(df, str(tmp_path / "p"), partition_by=["part"])
-    back = spark.read.parquet(path)
+    path = str(tmp_path / "p")
+    commit_parquet_generation(spark, df, path, partition_by=("part",))
+    back = read_resolved(spark, path)
     assert back.count() == 2
     assert set(back.columns) == {"k", "part"}
 
@@ -162,14 +162,19 @@ def test_bronze_to_gold_from_real_inputs(spark, tmp_path):
     bronze -> medallion gold (reference O1-O3 end to end)."""
     from airflow_etl_minio_to_postgres_spark.plans.medallion import run_medallion
 
+    # the raw frame carries every column the schemas key layout hashes
     raw_schema = T.StructType(
         [
             T.StructField("Property_Title", T.StringType()),
             T.StructField("Zip", T.StringType()),
+            T.StructField("HOA", T.LongType()),
+            T.StructField("HOA_Flag", T.StringType()),
+            T.StructField("Taxes", T.LongType()),
         ]
     )
     spark.createDataFrame(
-        [("House A", "11111"), ("House B", "22222")], raw_schema
+        [("House A", "11111", 100, "yes", 5), ("House B", "22222", 0, "no", 7)],
+        raw_schema,
     ).coalesce(1).write.option("header", True).csv(str(tmp_path / "Fake Data.csv"))
     _make_minimal_xlsx(str(tmp_path / "Field Config.xlsx"))
 
@@ -183,11 +188,7 @@ def test_bronze_to_gold_from_real_inputs(spark, tmp_path):
         fc_df["Target Table"].cast("string").alias("target_table"),
     ).where(fc_df["Target Table"].cast("string") == "property")
 
-    result = run_medallion(
-        raw_df, fc_df,
-        natural_key_cols=["property_title", "zip"],
-        hash_key_defs={"property_key": ["property_title", "zip"]},
-    )
+    result = run_medallion(raw_df, fc_df)
     prop = result.gold["property"]
     assert prop.count() == 2
     assert "property_id" in prop.columns
@@ -277,8 +278,9 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, "b")], ["v", "kind"]
     )
-    path = write_parquet(df, str(tmp_path / "p"), partition_by=["kind"])
-    scan = spark.read.parquet(path).where("kind = 'a'")
+    path = str(tmp_path / "p")
+    commit_parquet_generation(spark, df, path, partition_by=("kind",))
+    scan = read_resolved(spark, path).where("kind = 'a'")
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(kind" in plan
     assert scan.count() == 2
